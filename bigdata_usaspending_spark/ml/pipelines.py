@@ -8,7 +8,7 @@ Reproduced semantics (SURVEY.md §2.11):
 - the dynamic categorical guard: categorical columns with < 2 distinct
   values are dropped before pipeline construction (:159-167) — the real
   dataset had a single awarding_agency value, so the saved pipelines carry
-  4 StringIndexers, not 5;
+  one StringIndexer over 4 columns, not 5;
 - StringIndexer(handleInvalid="skip") -> OneHotEncoder -> VectorAssembler;
 - LinearRegression on one-hot cats + month + year (:229-235);
 - LogisticRegression (maxIter=20) on the binary high/low-vs-median label
@@ -25,13 +25,21 @@ Fixes vs the reference (SURVEY.md §4):
   Spark job per column;
 - the prepared DataFrame is cached once and shared by all three pipelines
   (the reference re-fit StringIndexers twice and split twice);
-- df.isEmpty() instead of rdd.isEmpty() probes.
+- shared indexer fit per training frame; concurrent branches: one
+  multi-column StringIndexer + OneHotEncoder, fit once on the full frame
+  (correlation + KMeans) and once on the single 80% split (regression +
+  classification); the four independent branches run on driver threads
+  that keep the caller's job group;
+- single-row inference runs one take(1) action instead of rdd.isEmpty()
+  probes followed by first().
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.ml import Pipeline, PipelineModel
@@ -102,89 +110,124 @@ def usable_categoricals(df: DataFrame, candidates=DEFAULT_CATEGORICAL) -> tuple[
     return keep, dropped
 
 
-def _feature_stages(cats: list[str], extra_numeric: list[str], features_col: str):
-    indexers = [
-        StringIndexer(inputCol=c, outputCol=f"{c}_index", handleInvalid="skip")
-        for c in cats
-    ]
-    encoder = OneHotEncoder(
-        inputCols=[f"{c}_index" for c in cats],
-        outputCols=[f"{c}_vec" for c in cats],
+def _features(cats: list[str]) -> Pipeline:
+    """The shared feature helper: one StringIndexer over every usable
+    categorical, then its one-hot encoder. Fit once per training frame and
+    shared by every model trained on that frame."""
+    indexed = [f"{c}_index" for c in cats]
+    return Pipeline(
+        stages=[
+            StringIndexer(inputCols=list(cats), outputCols=indexed, handleInvalid="skip"),
+            OneHotEncoder(inputCols=indexed, outputCols=[f"{c}_vec" for c in cats]),
+        ]
     )
-    assembler = VectorAssembler(
-        inputCols=[f"{c}_vec" for c in cats] + extra_numeric, outputCol=features_col
-    )
-    return [*indexers, encoder, assembler]
 
 
-def correlation_matrix(df: DataFrame, cats: list[str], numerics=("award_amount", "month", "year")):
-    """Pearson correlation over indexed categoricals + numerics
-    (reference :174-191)."""
-    indexed = df
-    for c in cats:
-        indexed = (
-            StringIndexer(inputCol=c, outputCol=f"{c}_index", handleInvalid="skip")
-            .fit(indexed)
-            .transform(indexed)
-        )
+def _assembler(cats: list[str], extra_numeric, features_col: str) -> VectorAssembler:
+    return VectorAssembler(
+        inputCols=[f"{c}_vec" for c in cats] + list(extra_numeric), outputCol=features_col
+    )
+
+
+def _feature_stages(cats: list[str], extra_numeric, features_col: str):
+    return [*_features(cats).getStages(), _assembler(cats, extra_numeric, features_col)]
+
+
+def _fit_head(features: PipelineModel, encoded: DataFrame, assembler, estimator) -> PipelineModel:
+    """Fit ``estimator`` on a frame the fitted ``features`` already encoded;
+    the result is the same PipelineModel a full Pipeline.fit would return.
+    The feature stages are copied: every transform writes the model's params
+    into its JVM object, so models used from concurrent branches must not
+    share stage objects."""
+    model = estimator.fit(assembler.transform(encoded))
+    return PipelineModel(stages=[*features.copy().stages, assembler, model])
+
+
+def _correlation(
+    indexed: DataFrame, cats: list[str], numerics=("award_amount", "month", "year")
+) -> tuple[list[list[float]], list[str]]:
     cols = [f"{c}_index" for c in cats] + list(numerics)
     assembled = VectorAssembler(inputCols=cols, outputCol="corr_features").transform(indexed)
     matrix = Correlation.corr(assembled, "corr_features", method="pearson").head()[0]
     return [list(row) for row in matrix.toArray().tolist()], cols
 
 
+def correlation_matrix(df: DataFrame, cats: list[str], numerics=("award_amount", "month", "year")):
+    """Pearson correlation over indexed categoricals + numerics
+    (reference :174-191)."""
+    return _correlation(_features(cats).fit(df).transform(df), cats, numerics)
+
+
 def train_all(df: DataFrame, amount_col: str = "award_amount") -> TrainingResult:
-    """Fit the three pipelines on a prepared awards-shaped DataFrame."""
+    """Fit the three pipelines on a prepared awards-shaped DataFrame.
+
+    Four independent branches run on their own driver threads: correlation
+    + KMeans (sharing one feature fit on the full frame), regression,
+    classification (sharing one feature fit on the 80% split), describe.
+    Their Spark jobs keep the caller's job group and description."""
     prepared = prepare(df, amount_col=amount_col)
     prepared.cache()
-    cats, dropped = usable_categoricals(prepared)
+    try:
+        cats, dropped = usable_categoricals(prepared)
 
-    corr, corr_cols = correlation_matrix(prepared, cats)
+        def correlate_and_cluster():
+            features = _features(cats).fit(prepared)
+            encoded = features.transform(prepared)
+            corr = _correlation(encoded, cats)
+            # KMeans k=5 seed=42, amount included (:251-258)
+            clu_model = _fit_head(
+                features, encoded,
+                _assembler(cats, ["month", "year", amount_col], "features_clu"),
+                KMeans(featuresCol="features_clu", k=5, seed=SEED),
+            )
+            return corr, clu_model
 
-    # regression: predict amount from one-hot cats + month + year (:229-235)
-    reg_pipeline = Pipeline(
-        stages=[
-            *_feature_stages(cats, ["month", "year"], "features_reg"),
-            LinearRegression(featuresCol="features_reg", labelCol=amount_col),
-        ]
-    )
-    train, test = prepared.randomSplit([0.8, 0.2], seed=SEED)
-    reg_model = reg_pipeline.fit(train)
-    rmse = RegressionEvaluator(
-        labelCol=amount_col, predictionCol="prediction", metricName="rmse"
-    ).evaluate(reg_model.transform(test))
+        def describe():
+            return prepared.select(amount_col, "month", "year").describe().collect()
 
-    # classification: high/low vs approx median threshold (:237-250)
-    median = prepared.approxQuantile(amount_col, [0.5], 0.001)[0]
-    labeled = prepared.withColumn("label", binary_label(amount_col, float(median)))
-    cls_pipeline = Pipeline(
-        stages=[
-            *_feature_stages(cats, ["month", "year"], "features_cls"),
-            LogisticRegression(featuresCol="features_cls", labelCol="label", maxIter=20),
-        ]
-    )
-    ctrain, ctest = labeled.randomSplit([0.8, 0.2], seed=SEED)
-    cls_model = cls_pipeline.fit(ctrain)
-    auc = BinaryClassificationEvaluator(
-        labelCol="label", metricName="areaUnderROC"
-    ).evaluate(cls_model.transform(ctest))
+        def fit_and_score(features, encoded, test, features_col, estimator, evaluator):
+            model = _fit_head(
+                features, encoded, _assembler(cats, ["month", "year"], features_col), estimator
+            )
+            return model, evaluator.evaluate(model.transform(test))
 
-    # clustering: KMeans k=5 seed=42, amount included (:251-258)
-    clu_pipeline = Pipeline(
-        stages=[
-            *_feature_stages(cats, ["month", "year", amount_col], "features_clu"),
-            KMeans(featuresCol="features_clu", k=5, seed=SEED),
-        ]
-    )
-    clu_model = clu_pipeline.fit(prepared)
-    centers = [list(map(float, c)) for c in clu_model.stages[-1].clusterCenters()]
-
-    describe = prepared.select(amount_col, "month", "year").describe().collect()
-
-    # every consumer of the prepared frame has materialized by now; release
-    # the cached blocks so repeated train_all calls in a long-lived driver
-    # don't accumulate storage
-    prepared.unpersist()
+        in_caller_group = inheritable_thread_target(prepared.sparkSession)
+        # leaving the block waits for every branch, failed or not
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            clustered = pool.submit(in_caller_group(correlate_and_cluster))
+            described = pool.submit(in_caller_group(describe))
+            # high/low label vs approx median threshold (:237-250)
+            median = prepared.approxQuantile(amount_col, [0.5], 0.001)[0]
+            labeled = prepared.withColumn("label", binary_label(amount_col, float(median)))
+            # one 80/20 split serves both supervised models: randomSplit
+            # sorts within partitions by every orderable column, and label
+            # is a function of amount, so these are the rows
+            # prepared.randomSplit would pick
+            train, test = labeled.randomSplit([0.8, 0.2], seed=SEED)
+            features = _features(cats).fit(train)
+            encoded = features.transform(train)
+            # predict amount from one-hot cats + month + year (:229-235)
+            regressed = pool.submit(
+                in_caller_group(fit_and_score), features, encoded, test, "features_reg",
+                LinearRegression(featuresCol="features_reg", labelCol=amount_col),
+                RegressionEvaluator(
+                    labelCol=amount_col, predictionCol="prediction", metricName="rmse"
+                ),
+            )
+            classified = pool.submit(
+                in_caller_group(fit_and_score), features, encoded, test, "features_cls",
+                LogisticRegression(featuresCol="features_cls", labelCol="label", maxIter=20),
+                BinaryClassificationEvaluator(labelCol="label", metricName="areaUnderROC"),
+            )
+        # the first failure in branch order re-raises here
+        (corr, corr_cols), clu_model = clustered.result()
+        reg_model, rmse = regressed.result()
+        cls_model, auc = classified.result()
+        stats = described.result()
+    finally:
+        # release the cached blocks even when a fit fails, so repeated
+        # train_all calls in a long-lived driver don't accumulate storage
+        prepared.unpersist()
 
     return TrainingResult(
         feature_categoricals=cats,
@@ -195,10 +238,10 @@ def train_all(df: DataFrame, amount_col: str = "award_amount") -> TrainingResult
         classification_auc=float(auc),
         classification_threshold=float(median),
         clustering_model=clu_model,
-        cluster_centers=centers,
+        cluster_centers=[list(map(float, c)) for c in clu_model.stages[-1].clusterCenters()],
         correlation=corr,
         correlation_cols=corr_cols,
-        describe=describe,
+        describe=stats,
     )
 
 
@@ -227,10 +270,8 @@ def infer_single(model: PipelineModel, row_df: DataFrame) -> Row | None:
     derivation the training prep used."""
     if "month" not in row_df.columns and "start_date" in row_df.columns:
         row_df = with_month_year(row_df, "start_date")
-    out = model.transform(row_df)
-    if out.isEmpty():
-        return None
-    return out.first()
+    rows = model.transform(row_df).take(1)
+    return rows[0] if rows else None
 
 
 def classify_with_confidence(model: PipelineModel, row_df: DataFrame) -> tuple[str, float] | None:

@@ -1,6 +1,8 @@
 """ML pipeline tests (SURVEY.md §5.4): seeded determinism, the dynamic
-categorical guard (4-vs-5-indexer branches), handleInvalid=skip inference
-semantics, persistence round-trip."""
+categorical guard (one StringIndexer over 4 or 5 columns), handleInvalid=skip
+inference semantics, persistence round-trip, caller job group kept by the
+concurrent branches, value-exact pin against the sequential reference
+composition (tests/_ml_reference.py)."""
 
 from __future__ import annotations
 
@@ -63,7 +65,8 @@ def test_guard_candidates_match_reference():
 
 def test_guard_drops_single_value_column(spark):
     # the reference's real dataset hit exactly this branch (single awarding
-    # agency -> saved pipelines carry 4 StringIndexers, not 5; SURVEY §2.11)
+    # agency -> saved pipelines carry one StringIndexer over 4 columns, not
+    # 5; SURVEY §2.11)
     df = _guard_df(spark, lambda i: "ONLY_ONE", lambda i: f"fs{i % 2}")
     keep, dropped = ml.usable_categoricals(df)
     assert dropped == ["awarding_agency"]
@@ -74,7 +77,7 @@ def test_guard_drops_single_value_column(spark):
 
 
 def test_guard_drops_single_value_funding_column(spark):
-    # 4-vs-5-indexer branch on the funding side
+    # 4-vs-5-column indexer branch on the funding side
     df = _guard_df(spark, lambda i: f"ag{i % 2}", lambda i: "ONLY_ONE")
     keep, dropped = ml.usable_categoricals(df)
     assert dropped == ["funding_sub_agency"]
@@ -193,3 +196,74 @@ def test_tune_classifier_selects_deterministic_winner(spark, awards):
     # determinism: same seed, same folds, same winner
     _, params2, metrics2 = tune_classifier(awards, num_folds=2, parallelism=2)
     assert params2 == params and metrics2 == metrics
+
+
+def test_train_all_jobs_keep_caller_job_group(spark):
+    """train_all's branches run on driver threads; every job they submit
+    must carry the caller's job group (per-layer job attribution reads it),
+    so no job lands outside the group. Same audit as test_plans'
+    plan-construction check."""
+    df = _guard_df(spark, lambda i: "ONLY_ONE", lambda i: f"fs{i % 2}")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = "train-all-job-group-audit"
+    sc.setJobGroup(group, "audit: train_all jobs keep the caller's group")
+    try:
+        result = ml.train_all(df)
+        jobs = tracker.getJobIdsForGroup(group)
+        leaked = set(tracker.getJobIdsForGroup(None)) - ungrouped
+    finally:
+        sc.setJobGroup("", "")
+    assert result.feature_categoricals == [
+        "awarding_sub_agency", "contract_award_type",
+        "funding_agency", "funding_sub_agency",
+    ]
+    assert jobs, "train_all ran no job inside the caller's group"
+    assert not leaked, f"train_all jobs outside the caller's group: {sorted(leaked)}"
+    # each saved pipeline: one StringIndexer over the 4 usable columns,
+    # encoder, assembler, model
+    for model in (result.regression_model, result.classification_model, result.clustering_model):
+        assert len(model.stages) == 4
+        assert model.stages[0].getInputCols() == result.feature_categoricals
+
+
+def _model_outputs(model, frame, cols):
+    return [tuple(r) for r in model.transform(frame).select(*cols).collect()]
+
+
+def _assert_same_training(got, want, frame):
+    for name in (
+        "feature_categoricals", "dropped_categoricals", "regression_rmse",
+        "classification_auc", "classification_threshold", "cluster_centers",
+        "correlation", "correlation_cols", "describe",
+    ):
+        assert getattr(got, name) == getattr(want, name), name
+    for name, cols in (
+        ("regression_model", ["prediction"]),
+        ("classification_model", ["prediction", "probability"]),
+        ("clustering_model", ["prediction"]),
+    ):
+        assert _model_outputs(getattr(got, name), frame, cols) == _model_outputs(
+            getattr(want, name), frame, cols
+        ), name
+
+
+@pytest.mark.slow
+def test_train_all_matches_sequential_reference(result, awards):
+    """Shared indexer fits + concurrent branches are value-exact against the
+    sequential per-column composition: every TrainingResult field and the
+    per-row outputs of all three models."""
+    import _ml_reference as ref
+
+    _assert_same_training(result, ref.train_all(awards), ml.prepare(awards))
+
+
+@pytest.mark.slow
+def test_tune_metrics_match_sequential_reference(awards):
+    import _ml_reference as ref
+
+    _, _, reg = ml.tune_regression(awards, num_folds=2, parallelism=2)
+    assert reg == ref.tune_regression_metrics(awards, num_folds=2, parallelism=2)
+    _, _, cls = ml.tune_classifier(awards, num_folds=2, parallelism=2)
+    assert cls == ref.tune_classifier_metrics(awards, num_folds=2, parallelism=2)
