@@ -668,14 +668,15 @@ def main(argv: list[str] | None = None) -> int:
 
         from pyspark.sql import functions as F
 
+        from . import index_store
         from .io import local_frame
         from .operators import similarity
         from .session import apply_runtime_confs
 
         apply_runtime_confs(spark)
         # Hadoop-FS existence check: layout autodetection must work on
-        # whatever filesystem the index lives on (similarity._index_has)
-        is_pq = similarity._index_has(spark, args.index, "codebooks.parquet")
+        # whatever filesystem the index lives on
+        is_pq = index_store.has(spark, args.index, "codebooks.parquet")
         if args.action in ("build", "add", "stream-add") and not args.vectors:
             raise SystemExit(f"ann-index {args.action} needs --vectors")
         if args.action == "stream-search":
@@ -731,7 +732,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.action == "remove":
             ids = _cli_remove_ids(
                 spark, args,
-                spark.read.parquet(f"{args.index}/vectors.parquet")
+                index_store.read(spark, args.index, "vectors.parquet")
                 .schema[args.id_col].dataType.simpleString(),
             )
             rep = similarity.ann_index_remove(
@@ -821,9 +822,7 @@ def main(argv: list[str] | None = None) -> int:
                 # that file and would probe a codes-less vectors layout.
                 # Hadoop FS, not a local rmtree: a local os-path delete
                 # silently no-ops on s3a/hdfs and the stale file survives.
-                similarity._delete_index_component(
-                    spark, args.index, "codebooks.parquet"
-                )
+                index_store.delete(spark, args.index, "codebooks.parquet")
                 similarity.ivf_index_write(
                     df, cents, args.index,
                     id_col=args.id_col, vec_col=args.vec_col,
@@ -836,9 +835,7 @@ def main(argv: list[str] | None = None) -> int:
                 # store a driver-local rmtree silently no-ops and every
                 # subsequent probe would rotate queries against
                 # un-rotated vectors.
-                similarity._delete_index_component(
-                    spark, args.index, "rotation.parquet"
-                )
+                index_store.delete(spark, args.index, "rotation.parquet")
             n = similarity._read_index_vectors(spark, args.index).count()
             kind = "OPQ-IVF-PQ" if args.opq else (
                 "IVF-PQ" if args.pq else "IVF"
@@ -973,6 +970,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.job == "winnow-index":
+        from . import index_store
         from .operators import dedup as dd
         from .session import apply_runtime_confs
 
@@ -990,7 +988,7 @@ def main(argv: list[str] | None = None) -> int:
             print(_json.dumps(dd.winnow_index_stats(spark, args.index)))
             return 0
         if args.action == "remove":
-            meta = dd._winnow_index_meta(spark, args.index)
+            meta = index_store.read_meta(spark, args.index)
             ids = _cli_remove_ids(spark, args, meta["id_type"])
             rep = dd.winnow_index_remove(
                 spark, args.index, ids, id_col=args.id_col

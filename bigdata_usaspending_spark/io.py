@@ -93,6 +93,19 @@ def local_rows_of(df: DataFrame) -> "list | None":
 # any-filesystem contract of the index layout is unchanged.
 
 
+def _arrow_fallback_errors() -> tuple:
+    """The failures a driver-side pyarrow fast path below falls back to
+    Spark on: pyarrow missing, an unreadable/unwritable file, or a type
+    or layout one side of the arrow <-> Spark conversion does not
+    support. Anything else is a bug and propagates."""
+    errors = (ImportError, OSError, TypeError, ValueError, NotImplementedError)
+    try:
+        import pyarrow as pa
+    except ImportError:
+        return errors
+    return errors + (pa.ArrowException,)
+
+
 def _driver_local_path(path: str) -> "str | None":
     """The driver-local filesystem path for ``path``, or None when the
     scheme is not the local filesystem (then callers use Spark I/O)."""
@@ -139,7 +152,7 @@ def read_model_rows(spark: SparkSession, path: str, what: str, max_rows: int):
             cls = Row(*table.schema.names)
             cols = [table.column(i).to_pylist() for i in range(table.num_columns)]
             parsed = ([cls(*vals) for vals in zip(*cols)], schema)
-        except Exception:
+        except _arrow_fallback_errors():
             parsed = None  # unsupported type/layout: use the Spark path
         if parsed is not None:
             rows, schema = parsed
@@ -173,7 +186,7 @@ def model_row_count(spark: SparkSession, path: str) -> int:
                 pq.ParquetFile(f).metadata.num_rows
                 for f in _arrow_table_files(local)
             )
-        except Exception:
+        except _arrow_fallback_errors():
             pass
     return spark.read.parquet(path).count()
 
@@ -191,7 +204,7 @@ def model_distinct_count(spark: SparkSession, path: str) -> int:
                 t = pq.read_table(f)
                 vals.update(zip(*(c.to_pylist() for c in t.columns)))
             return len(vals)
-        except Exception:
+        except _arrow_fallback_errors():
             pass
     return spark.read.parquet(path).distinct().count()
 
@@ -243,9 +256,9 @@ def write_model_parquet(
             with open(os.path.join(local, "_SUCCESS"), "w"):
                 pass
             return
-        except Exception:
-            # fall through to the Spark writer on any fast-path failure
-            # (unsupported arrow type, permission error, …)
+        except _arrow_fallback_errors():
+            # fall through to the Spark writer (unsupported arrow type,
+            # permission error, …)
             pass
     local_frame(spark, rows, schema).write.mode(mode).parquet(path)
 
@@ -539,6 +552,31 @@ def hadoop_staged_append(
     sfs.delete(spath, True)
 
 
+def _swap_old_copies(fs, t_path) -> list:
+    """The ``{target}__old_*`` statuses beside ``target``: what a swap
+    leaves between its two renames, or after them until its delete."""
+    prefix = f"{t_path.getName()}__old_"
+    return [
+        st
+        for st in fs.listStatus(t_path.getParent())
+        if st.getPath().getName().startswith(prefix)
+    ]
+
+
+def hadoop_swap_leftover(spark: SparkSession, target: str) -> "str | None":
+    """The copy the next hadoop_swap_rewrite entry restores: the newest
+    ``{target}__old_*`` when ``target`` itself is missing (a swap
+    stopped between its two renames); None otherwise."""
+    t_path = spark._jvm.org.apache.hadoop.fs.Path(target)
+    fs = t_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(t_path) or not fs.exists(t_path.getParent()):
+        return None
+    old = _swap_old_copies(fs, t_path)
+    if not old:
+        return None
+    return str(max(old, key=lambda st: st.getModificationTime()).getPath())
+
+
 def hadoop_swap_rewrite(spark: SparkSession, target: str, write_tmp, op: str) -> None:
     """Crash-bounded in-place rewrite of one parquet component: stage the
     rewritten copy aside, rename the live directory aside, rename the
@@ -577,11 +615,7 @@ def hadoop_swap_rewrite(spark: SparkSession, target: str, write_tmp, op: str) ->
     parent = t_path.getParent()
     base = t_path.getName()
     if fs.exists(parent):
-        leftovers = [
-            st
-            for st in fs.listStatus(parent)
-            if st.getPath().getName().startswith(f"{base}__old_")
-        ]
+        leftovers = _swap_old_copies(fs, t_path)
         if leftovers and not fs.exists(t_path):
             # Crash landed between rename-aside and rename-in: the
             # newest __old_* IS the live component — restore it.

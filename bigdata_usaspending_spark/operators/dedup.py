@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..io import local_frame
+from .. import index_store
 from .text import fingerprint, ngram_occurrences, tokens
 
 # Mersenne prime 2^31-1 for the minhash affine family; base hashes are < p
@@ -1044,57 +1044,24 @@ def winnow_pos_index_write(
         "id_col": id_col,
         "id_type": dict(df.dtypes)[id_col],
     }
-    _winnow_meta_write(df.sparkSession, path, meta)
-    # a rebuild over a former index directory must not inherit its
-    # pending deletes (a stale tombstone set would silently hide any
-    # rebuilt doc sharing a removed id)…
-    _winnow_delete_component(df.sparkSession, path, _WINNOW_TOMBSTONES)
-    # …nor a stale streaming add-manifest: a fresh stream over the
-    # rebuilt index restarts batch_id at 0 and winnow_index_add_batch's
-    # replay guard (batch_id <= manifest) would silently discard its
-    # early batches
-    _winnow_delete_component(df.sparkSession, path, _WINNOW_ADD_MANIFEST)
+    # through the Hadoop FS API, beside fps.parquet: a driver-local
+    # write would land in a bogus local directory for an s3a/hdfs index
+    index_store.write_meta(df.sparkSession, path, meta)
+    index_store.clear_on_rebuild(df.sparkSession, path)
 
 
-def _winnow_meta_path(spark, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/meta.json")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
-def _winnow_meta_write(spark, path: str, meta: dict) -> None:
-    """Write the index meta through the Hadoop FileSystem API — the same
-    any-filesystem contract as the parquet components and the ann-index
-    layout helpers (similarity._index_has).  A driver-local open() would
-    land the meta in a bogus local directory when the index path is
-    s3a/hdfs, after which every probe/add from another driver fails with
-    'no winnow index meta' while fps.parquet sits correctly remote."""
-    import json
-
-    fs, hpath = _winnow_meta_path(spark, path)
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(json.dumps(meta).encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _winnow_index_meta(spark, path: str) -> dict:
-    import json
-
-    fs, hpath = _winnow_meta_path(spark, path)
-    if not fs.exists(hpath):
+def _checked_add_meta(spark, path: str, df: DataFrame, id_col: str) -> dict:
+    """The index meta, after the add surfaces' guards: the batch's id
+    type must match the index's, and no batch id may be tombstoned."""
+    meta = index_store.read_meta(spark, path)
+    id_type = dict(df.dtypes)[id_col]
+    if id_type != meta["id_type"]:
         raise ValueError(
-            f"no winnow index meta at {path!r}/meta.json — the directory "
-            "was not written by winnow_pos_index_write"
+            f"batch id column {id_col!r} has type {id_type} but the "
+            f"index was built with {meta['id_type']}; cast the batch ids"
         )
-    stream = fs.open(hpath)
-    try:
-        data = spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-    finally:
-        stream.close()
-    return json.loads(bytes(data).decode("utf-8"))
+    index_store.refuse_tombstoned(spark, path, df, id_col, "winnow_index_compact")
+    return meta
 
 
 def winnow_pos_index_add(
@@ -1110,14 +1077,7 @@ def winnow_pos_index_add(
     miss) and appended to the same layout. Mirrors ``ivf_pq_index_add``,
     including the id-type guard (appending a second id type writes a
     mixed-schema parquet that later probes surface as nulls)."""
-    meta = _winnow_index_meta(spark, path)
-    id_type = dict(df.dtypes)[id_col]
-    if id_type != meta["id_type"]:
-        raise ValueError(
-            f"batch id column {id_col!r} has type {id_type} but the "
-            f"index was built with {meta['id_type']}; cast the batch ids"
-        )
-    _winnow_refuse_tombstoned(spark, path, df, id_col)
+    meta = _checked_add_meta(spark, path, df, id_col)
     pfps = winnow_pos_index(
         df, id_col, text_col,
         k=meta["k"], w=meta["w"], portable=meta["portable"],
@@ -1128,8 +1088,8 @@ def winnow_pos_index_add(
 def winnow_index_compact(
     spark, path: str, target_file_bytes: int = 128 << 20
 ) -> dict:
-    """Compact a persisted positioned winnow index — the text-side twin
-    of similarity.ann_index_compact (VERDICT r12 #6): each
+    """Compact a persisted positioned winnow index through
+    index_store.compact, the lifecycle the ANN index shares: each
     ``winnow_pos_index_add`` appends its own files to ``fps.parquet``,
     so after N small adds every probe's scan schedules ~N tiny tasks.
     Rewrites the layout into ``ceil(bytes / target_file_bytes)``
@@ -1137,71 +1097,21 @@ def winnow_index_compact(
     of it by design, so file COUNT is the only knob); ``meta.json`` is
     untouched. Probe results are bit-identical before and after (the
     span/dedup probes aggregate over the whole index — row order never
-    reaches the output; tested). Crash-bounded swap + row-count verify
-    via io.hadoop_swap_rewrite, same filesystem contract.
+    reaches the output; tested). Crash-bounded swap + row-count verify,
+    and the physical delete of tombstoned docs.
 
-    Returns ``{"files_before", "files_after", "rows"}``."""
-    from ..io import (
-        hadoop_data_file_stats,
-        hadoop_swap_rewrite,
-        require_atomic_rename,
-    )
+    Returns ``{"files_before", "files_after", "rows", "removed_rows"}``."""
 
-    require_atomic_rename(path, "winnow_index_compact")
-    target = f"{path}/fps.parquet"
-    files_before, n_bytes = hadoop_data_file_stats(spark, target)
-    # compaction doubles as the PHYSICAL delete for tombstoned docs
-    # (winnow_index_remove): the rewrite reads the LIVE set, removed
-    # rows leave the disk here, and the tombstone file clears after the
-    # swap. One pass for both counts (round 15): no tombstones → live ==
-    # physical; otherwise one left-join aggregate replaces two counts.
-    if not _winnow_index_has(spark, path, _WINNOW_TOMBSTONES):
-        # footer-stats count, driver-side on local filesystems (round 16)
-        from ..io import model_row_count
-
-        n_physical = model_row_count(spark, target)
-        n_rows = n_physical
-    else:
-        fps = spark.read.parquet(target)
-        tomb = spark.read.parquet(f"{path}/{_WINNOW_TOMBSTONES}")
-        marked = fps.join(
-            tomb.select("_id").distinct().withColumn("_t", F.lit(1)),
-            on="_id", how="left",
-        )
-        row = marked.agg(
-            F.count(F.lit(1)).alias("physical"),
-            F.count(F.when(F.col("_t").isNull(), F.lit(1))).alias("live"),
-        ).collect()[0]
-        n_physical, n_rows = int(row["physical"]), int(row["live"])
-    # size the rewrite from the LIVE bytes, not the physical bytes — a
-    # compact right after a large removal would otherwise over-shard the
-    # surviving rows far below target_file_bytes (round-14 ADVICE)
-    live_bytes = (
-        n_bytes if n_physical == 0 else (n_bytes * n_rows) // n_physical
-    )
-    n_files = max(1, -(-live_bytes // max(1, int(target_file_bytes))))
-
-    def write_tmp(tmp: str) -> None:
-        from ..io import model_row_count
-
+    def rewrite(tmp: str, live_bytes: int) -> None:
+        # sized from the LIVE bytes, not the physical bytes — a compact
+        # right after a large removal would otherwise over-shard the
+        # surviving rows far below target_file_bytes
+        n_files = max(1, -(-live_bytes // max(1, int(target_file_bytes))))
         _read_index_fps(spark, path).repartition(n_files).write.parquet(tmp)
-        staged = model_row_count(spark, tmp)
-        if staged != n_rows:
-            raise IOError(
-                f"winnow_index_compact: staged rewrite holds {staged} "
-                f"rows, expected {n_rows}; aborting before touching the "
-                "live layout"
-            )
 
-    hadoop_swap_rewrite(spark, target, write_tmp, "winnow_index_compact")
-    _winnow_delete_component(spark, path, _WINNOW_TOMBSTONES)
-    files_after, _ = hadoop_data_file_stats(spark, target)
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "rows": n_rows,
-        "removed_rows": n_physical - n_rows,
-    }
+    return index_store.compact(
+        spark, path, "fps.parquet", "winnow_index_compact", rewrite
+    )
 
 
 def winnow_index_add_batch(
@@ -1217,12 +1127,12 @@ def winnow_index_add_batch(
     index — the exactly-once form of ``winnow_pos_index_add`` (which is
     plain at-least-once: a replayed foreachBatch append would duplicate
     its fingerprint rows, double-counting every future probe's document
-    frequencies). Same mechanism as similarity.ann_index_add_batch:
-    stage the batch's pfps, rename the staged files into ``fps.parquet``
-    under a ``b{batch_id}-`` prefix, advance ``_ADD_MANIFEST.json``
-    LAST; replays of committed batches skip, crashed batches self-clean
-    their prefix files on redo. Fingerprints use the SAVED parameters,
-    with the id-type guard.
+    frequencies). The mechanism is index_store.add_batch, shared with
+    the ANN index: stage the batch's pfps, rename the staged files into
+    ``fps.parquet`` under a ``b{batch_id}-`` prefix, advance the add
+    manifest LAST; replays of committed batches skip, crashed batches
+    self-clean their prefix files on redo. Fingerprints use the SAVED
+    parameters, with the id-type guard.
 
     ``pfps_df`` (optional): a precomputed positioned frame (the
     ``(_id, pfps)`` shape) so a caller that already fingerprinted the
@@ -1230,61 +1140,20 @@ def winnow_index_add_batch(
     decision tiers — skips the re-hash. MUST have been computed with the
     index's saved parameters (callers read them from the same meta);
     empty-set rows are filtered here either way."""
-    from ..io import (
-        hadoop_delete_prefixed,
-        hadoop_read_json,
-        hadoop_staged_append,
-        hadoop_write_json,
-    )
 
-    manifest = hadoop_read_json(spark, f"{path}/{_WINNOW_ADD_MANIFEST}")
-    if manifest is not None and batch_id <= manifest["batch_id"]:
-        return False
-    meta = _winnow_index_meta(spark, path)
-    id_type = dict(batch_df.dtypes)[id_col]
-    if id_type != meta["id_type"]:
-        raise ValueError(
-            f"batch id column {id_col!r} has type {id_type} but the "
-            f"index was built with {meta['id_type']}; cast the batch ids"
+    def stage(staging: str) -> None:
+        meta = _checked_add_meta(spark, path, batch_df, id_col)
+        pfps = (
+            pfps_df.filter(F.size("pfps") > 0)
+            if pfps_df is not None
+            else winnow_pos_index(
+                batch_df, id_col, text_col,
+                k=meta["k"], w=meta["w"], portable=meta["portable"],
+            )
         )
-    _winnow_refuse_tombstoned(spark, path, batch_df, id_col)
-    prefix = f"b{batch_id}-"
-    target = f"{path}/fps.parquet"
-    hadoop_delete_prefixed(spark, target, prefix)
-    staging = f"{path}/.staging-b{batch_id}"
-    pfps = (
-        pfps_df.filter(F.size("pfps") > 0)
-        if pfps_df is not None
-        else winnow_pos_index(
-            batch_df, id_col, text_col,
-            k=meta["k"], w=meta["w"], portable=meta["portable"],
-        )
-    )
-    pfps.write.mode("overwrite").parquet(staging)
-    hadoop_staged_append(spark, staging, target, prefix)
-    hadoop_write_json(
-        spark, f"{path}/{_WINNOW_ADD_MANIFEST}", {"batch_id": int(batch_id)}
-    )
-    return True
+        pfps.write.mode("overwrite").parquet(staging)
 
-
-_WINNOW_TOMBSTONES = "tombstones.parquet"
-_WINNOW_ADD_MANIFEST = "_ADD_MANIFEST.json"
-
-
-def _winnow_index_has(spark, path: str, name: str) -> bool:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{name}")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
-def _winnow_delete_component(spark, path: str, name: str) -> None:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{name}")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
+    return index_store.add_batch(spark, path, "fps.parquet", batch_id, stage)
 
 
 def _read_index_fps(spark, path: str) -> DataFrame:
@@ -1303,52 +1172,20 @@ def _read_index_fps(spark, path: str) -> DataFrame:
     decade, the probe over a one-file compacted index serialized to
     15.7 s vs 3.9 s fragmented; the spread restores the fan-out and is
     a no-op once files outnumber cores (the production case)."""
-    fps = _ensure_parallelism(spark.read.parquet(f"{path}/fps.parquet"))
-    if not _winnow_index_has(spark, path, _WINNOW_TOMBSTONES):
-        return fps
-    tomb = (
-        spark.read.parquet(f"{path}/{_WINNOW_TOMBSTONES}")
-        .select("_id")
-        .distinct()
+    return index_store.read_live(
+        spark, path, "fps.parquet", prepare=_ensure_parallelism
     )
-    return fps.join(tomb, on="_id", how="left_anti")
-
-
-def _winnow_refuse_tombstoned(spark, path: str, df: DataFrame, id_col: str) -> None:
-    """Shared add-surface guard: a tombstoned doc id cannot be re-added
-    until compaction physically drops it — the live-read anti-join would
-    suppress the NEW row too, silently losing the re-add."""
-    if not _winnow_index_has(spark, path, _WINNOW_TOMBSTONES):
-        return
-    tomb = (
-        spark.read.parquet(f"{path}/{_WINNOW_TOMBSTONES}")
-        .select("_id")
-        .distinct()
-    )
-    n_hit = (
-        df.select(F.col(id_col).alias("_id"))
-        .join(tomb, on="_id", how="semi")
-        .count()
-    )
-    if n_hit:
-        raise ValueError(
-            f"{n_hit} id(s) in the batch are tombstoned in the index at "
-            f"{path!r} — run winnow_index_compact first (it physically "
-            "drops removed rows and clears the tombstone set), then "
-            "re-add"
-        )
 
 
 def winnow_index_remove(spark, path: str, ids, id_col: "str | None" = None) -> dict:
-    """Remove documents from a persisted positioned winnow index — the
-    text-side twin of similarity.ann_index_remove (the takedown leg):
+    """Remove documents from a persisted positioned winnow index (the
+    takedown leg) through index_store.remove, shared with the ANN index:
     logical O(removed) tombstone append now, physical delete folded into
     the next winnow_index_compact. A removed doc immediately stops
     matching in every probe AND stops suppressing near-dups in the
     incremental dedup tiers — exactly what honoring a takedown requires
     (its content is no longer in the corpus, so it must not veto a
-    re-crawl). Idempotent: duplicate tombstones are ignored by the
-    distinct anti-join. Until the next compact a tombstoned id cannot be
+    re-crawl). Idempotent. Until the next compact a tombstoned id cannot be
     re-added (the add surfaces refuse — the anti-join would suppress the
     new row too).
 
@@ -1356,50 +1193,14 @@ def winnow_index_remove(spark, path: str, ids, id_col: "str | None" = None) -> d
     defaults to the saved meta's), or a plain iterable of id values.
 
     Returns ``{"requested", "matched_live", "tombstoned_total"}``."""
-    meta = _winnow_index_meta(spark, path)
-    id_col = id_col or meta.get("id_col", "doc_id")
-    if isinstance(ids, DataFrame):
-        if id_col not in ids.columns:
-            raise ValueError(
-                f"winnow_index_remove: ids frame has no {id_col!r} column"
-            )
-        got = dict(ids.dtypes)[id_col]
-        if got != meta["id_type"]:
-            raise ValueError(
-                f"winnow_index_remove: ids column {id_col!r} has type "
-                f"{got} but the index stores {meta['id_type']}; cast"
-            )
-        ids_df = ids.select(F.col(id_col).alias("_id"))
-        requested = ids_df.count()
-    else:
-        rows = [(i,) for i in ids]
-        requested = len(rows)
-        ids_df = local_frame(spark, rows, f"_id {meta['id_type']}")
-    matched_live = (
-        _read_index_fps(spark, path)
-        .join(ids_df.distinct(), on="_id", how="semi")
-        .count()
+    meta = index_store.read_meta(spark, path)
+    return index_store.remove(
+        spark, path, ids, _read_index_fps(spark, path),
+        id_col=id_col or meta.get("id_col", "doc_id"),
+        id_type=meta["id_type"],
+        tomb_col="_id",
+        verb="winnow_index_remove",
     )
-    tomb_path = f"{path}/{_WINNOW_TOMBSTONES}"
-    # iterable-sourced ids append driver-side (the value SET is what the
-    # anti-joins read — round 16, guide §5); DataFrame ids keep the
-    # Spark write (they may be corpus-scale)
-    from ..io import local_rows_of, model_distinct_count, write_model_parquet
-
-    local_ids = local_rows_of(ids_df)
-    if local_ids is not None:
-        uniq = list(dict.fromkeys(tuple(r) for r in local_ids))
-        write_model_parquet(
-            spark, uniq, ids_df.schema, tomb_path, mode="append"
-        )
-    else:
-        ids_df.distinct().coalesce(1).write.mode("append").parquet(tomb_path)
-    total = model_distinct_count(spark, tomb_path)
-    return {
-        "requested": int(requested),
-        "matched_live": int(matched_live),
-        "tombstoned_total": int(total),
-    }
 
 
 def winnow_index_stats(spark, path: str) -> dict:
@@ -1410,16 +1211,10 @@ def winnow_index_stats(spark, path: str) -> dict:
     winnow_index_compact)."""
     from ..io import hadoop_data_file_stats
 
-    meta = _winnow_index_meta(spark, path)
+    meta = index_store.read_meta(spark, path)
     target = f"{path}/fps.parquet"
     n_files, n_bytes = hadoop_data_file_stats(spark, target)
-    from ..io import model_distinct_count
-
-    n_tomb = (
-        model_distinct_count(spark, f"{path}/{_WINNOW_TOMBSTONES}")
-        if _winnow_index_has(spark, path, _WINNOW_TOMBSTONES)
-        else 0
-    )
+    n_tomb = index_store.pending_tombstones(spark, path)
     return {
         "k": meta["k"], "w": meta["w"], "portable": meta["portable"],
         "id_type": meta["id_type"],
@@ -1443,7 +1238,7 @@ def winnow_index_spans(
     positioned winnow index (winnow_spans_against_index over the saved
     layout, fingerprint parameters loaded from the index meta). The
     index parquet is scan-only; the batch broadcasts."""
-    meta = _winnow_index_meta(spark, path)
+    meta = index_store.read_meta(spark, path)
     index = _read_index_fps(spark, path)
     return winnow_spans_against_index(
         batch, index, id_col, text_col,
@@ -1463,7 +1258,7 @@ def winnow_index_scrub(
 ) -> DataFrame:
     """Passage-level decontamination against a persisted positioned
     winnow index (winnow_scrub_against_index over the saved layout)."""
-    meta = _winnow_index_meta(spark, path)
+    meta = index_store.read_meta(spark, path)
     index = _read_index_fps(spark, path)
     return winnow_scrub_against_index(
         batch, index, id_col, text_col,
@@ -1486,7 +1281,7 @@ def winnow_index_dedup(
     (distinct fp — provably the plain winnowed set), so the drop tier
     (winnow_dedup_against_index) runs over the same index the span
     tiers probe — one persisted artifact serves all three actions."""
-    meta = _winnow_index_meta(spark, path)
+    meta = index_store.read_meta(spark, path)
     index = _read_index_fps(spark, path).select(
         "_id", _pos_vals("pfps").alias("fps")
     )

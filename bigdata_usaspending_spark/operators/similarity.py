@@ -43,7 +43,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..io import local_frame, model_row_count
+from .. import index_store
+from ..io import local_frame
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -561,15 +562,7 @@ def ivf_index_write(
         .partitionBy("cell")
         .parquet(f"{path}/vectors.parquet")
     )
-    # a rebuild over a former index directory must not inherit its
-    # pending deletes: a stale tombstone set would silently hide any
-    # rebuilt vector sharing a removed id (the stale-rotation hazard's
-    # twin on the delete path)
-    _delete_index_component(df.sparkSession, path, _TOMBSTONES)
-    # …nor a stale streaming add-manifest: a fresh stream over the
-    # rebuilt index restarts batch_id at 0 and the replay guard
-    # (batch_id <= manifest) would silently discard its early batches
-    _delete_index_component(df.sparkSession, path, _ADD_MANIFEST)
+    index_store.clear_on_rebuild(df.sparkSession, path)
 
 
 def ivf_index_add(
@@ -624,7 +617,7 @@ def ivf_index_topk(
     stale matrix over un-rotated vectors must fail loudly, not probe
     wrong (the ann_index_search_many guard, kept in agreement so both
     probe surfaces of one index behave identically)."""
-    if _index_has(spark, path, "rotation.parquet"):
+    if index_store.has(spark, path, "rotation.parquet"):
         raise ValueError(
             f"index at {path!r} has rotation.parquet but is probed as "
             "plain IVF — a rotation is only valid on the IVF-PQ layout; "
@@ -2558,31 +2551,6 @@ def _write_index_rotation(spark, rotation, path: str) -> None:
     )
 
 
-def _index_has(spark, path: str, name: str) -> bool:
-    """Existence check for an index-layout component through the Hadoop
-    FileSystem API, so layout autodetection works on ANY filesystem the
-    index was written to (s3a/hdfs/local alike) — a driver-local
-    os.path probe would silently miss components on object stores,
-    which for the rotation means silently WRONG probes, not an error."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{name}")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
-def _delete_index_component(spark, path: str, name: str) -> None:
-    """Remove an index-layout component if present (Hadoop FS — works on
-    any filesystem the index lives on)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{path}/{name}")
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
-
-
-_TOMBSTONES = "tombstones.parquet"
-
-
 def _write_model_component(df: DataFrame, path: str) -> None:
     """Overwrite one bounded model component (centroids/codebooks). A
     local_frame's rows are written DRIVER-SIDE on local filesystems (no
@@ -2603,31 +2571,19 @@ def _read_index_vectors(spark, path: str) -> DataFrame:
     minus any tombstoned ids (``ann_index_remove``). Every probe/stat
     surface reads through here so a removed vector disappears from
     results immediately, before the physical delete that the next
-    ``ann_index_compact`` performs. When no tombstones exist this is the
-    plain scan — zero overhead on the steady-state path; with tombstones
-    the anti-join is AQE-sized (the set is bounded by the compaction
-    cadence, so it plans as a broadcast in practice) and Catalyst still
-    pushes the callers' ``cell IN (...)`` partition predicate below the
-    join to the scan."""
-    vec = spark.read.parquet(f"{path}/vectors.parquet")
-    if not _index_has(spark, path, _TOMBSTONES):
-        return vec
-    tomb = spark.read.parquet(f"{path}/{_TOMBSTONES}")
-    tcol = tomb.columns[0]
-    return vec.join(tomb.select(tcol).distinct(), on=tcol, how="left_anti")
+    ``ann_index_compact`` performs (index_store.read_live)."""
+    return index_store.read_live(spark, path, "vectors.parquet")
 
 
 def ann_index_remove(spark, path: str, ids, id_col: str = "vec_id") -> dict:
     """Remove vectors from a persisted IVF / IVF-PQ index — the faiss
     ``remove_ids`` analog, the takedown leg a training-data pipeline
-    must honor. Deletion is LOGICAL and O(removed ids): the ids append
-    to ``{path}/tombstones.parquet`` and every probe surface anti-joins
-    them out (``_read_index_vectors``); the next ``ann_index_compact``
-    physically drops the rows and clears the tombstone set — the
-    merge-on-read delete-vector pattern (Iceberg/Delta deletion vectors)
-    without a table format. Idempotent by construction: re-removing an
-    id appends a duplicate tombstone that the distinct anti-join
-    ignores, so replays are harmless.
+    must honor. Deletion is LOGICAL and O(removed ids)
+    (index_store.remove): the ids append to the index's tombstone set
+    and every probe surface anti-joins them out
+    (``_read_index_vectors``); the next ``ann_index_compact`` physically
+    drops the rows and clears the set. Idempotent: re-removing an id is
+    harmless.
 
     ``ids``: a DataFrame carrying ``id_col`` (the scale path) or a
     plain iterable of id values. The id column must exist in the vector
@@ -2641,63 +2597,29 @@ def ann_index_remove(spark, path: str, ids, id_col: str = "vec_id") -> dict:
     Returns ``{"requested", "matched_live", "tombstoned_total"}`` —
     ``matched_live`` is the exact witness count of ids that were
     actually present (and visible) in the index at remove time."""
-    vec_schema = spark.read.parquet(f"{path}/vectors.parquet").schema
+    vec_schema = index_store.read(spark, path, "vectors.parquet").schema
     if id_col not in vec_schema.names:
         raise ValueError(
             f"ann_index_remove: id column {id_col!r} is not in the "
             f"index's vector layout {vec_schema.names}; pass the id_col "
             "the index was built with"
         )
-    id_type = vec_schema[id_col].dataType.simpleString()
-    if isinstance(ids, DataFrame):
-        if id_col not in ids.columns:
-            raise ValueError(
-                f"ann_index_remove: ids frame has no {id_col!r} column"
-            )
-        got = dict(ids.dtypes)[id_col]
-        if got != id_type:
-            raise ValueError(
-                f"ann_index_remove: ids column {id_col!r} has type "
-                f"{got} but the index stores {id_type}; cast the ids"
-            )
-        ids_df = ids.select(id_col)
-        requested = ids_df.count()
-    else:
-        rows = [(i,) for i in ids]
-        requested = len(rows)
-        ids_df = local_frame(spark, rows, f"{id_col} {id_type}")
-    tomb_path = f"{path}/{_TOMBSTONES}"
-    if _index_has(spark, path, _TOMBSTONES):
-        existing_col = spark.read.parquet(tomb_path).columns[0]
+    if index_store.has(spark, path, index_store.TOMBSTONES):
+        existing_col = spark.read.parquet(
+            f"{path}/{index_store.TOMBSTONES}"
+        ).columns[0]
         if existing_col != id_col:
             raise ValueError(
                 f"ann_index_remove: existing tombstones use id column "
                 f"{existing_col!r}, not {id_col!r}"
             )
-    matched_live = (
-        _read_index_vectors(spark, path)
-        .join(ids_df.distinct(), on=id_col, how="semi")
-        .count()
+    return index_store.remove(
+        spark, path, ids, _read_index_vectors(spark, path),
+        id_col=id_col,
+        id_type=vec_schema[id_col].dataType.simpleString(),
+        tomb_col=id_col,
+        verb="ann_index_remove",
     )
-    # iterable-sourced ids append driver-side (dedup in Python — the
-    # value SET is what every consumer reads; round 16, guide §5); the
-    # DataFrame path keeps the Spark write (ids may be corpus-scale)
-    from ..io import local_rows_of, model_distinct_count, write_model_parquet
-
-    local_ids = local_rows_of(ids_df)
-    if local_ids is not None:
-        uniq = list(dict.fromkeys(tuple(r) for r in local_ids))
-        write_model_parquet(
-            spark, uniq, ids_df.schema, tomb_path, mode="append"
-        )
-    else:
-        ids_df.distinct().coalesce(1).write.mode("append").parquet(tomb_path)
-    total = model_distinct_count(spark, tomb_path)
-    return {
-        "requested": int(requested),
-        "matched_live": int(matched_live),
-        "tombstoned_total": int(total),
-    }
 
 
 def _read_index_rotation(spark, path: str, max_dim: int = 8192):
@@ -2705,7 +2627,7 @@ def _read_index_rotation(spark, path: str, max_dim: int = 8192):
     otherwise) — the probe/add-side half of the faiss IndexPreTransform
     contract: raw inputs are mapped into the index's rotated space
     before any other math."""
-    if not _index_has(spark, path, "rotation.parquet"):
+    if not index_store.has(spark, path, "rotation.parquet"):
         return None
     rows = sorted(
         (r["i"], list(r["vals"]))
@@ -2797,14 +2719,8 @@ def _ivf_pq_index_write_encoded(
     # rotation behind — probes apply it automatically when present, so
     # a leftover matrix over an un-rotated layout means silently wrong
     # neighbors (callers that DO pass a rotation re-write it after this)
-    _delete_index_component(encoded.sparkSession, path, "rotation.parquet")
-    # …nor a stale tombstone set (it would silently hide rebuilt
-    # vectors that share a removed id)…
-    _delete_index_component(encoded.sparkSession, path, _TOMBSTONES)
-    # …nor a stale streaming add-manifest (a fresh stream over the
-    # rebuild restarts batch_id at 0; the replay guard would silently
-    # discard its early batches)
-    _delete_index_component(encoded.sparkSession, path, _ADD_MANIFEST)
+    index_store.delete(encoded.sparkSession, path, "rotation.parquet")
+    index_store.clear_on_rebuild(encoded.sparkSession, path)
 
 
 def ivf_pq_index_add(
@@ -2855,7 +2771,7 @@ def _prepare_add_frame(
     is refused HERE too, so the corrupt layout fails at the write
     surface instead of silently appending raw un-rotated vectors that
     only blow up at probe time."""
-    if _index_has(spark, path, "rotation.parquet") and not _index_has(
+    if index_store.has(spark, path, "rotation.parquet") and not index_store.has(
         spark, path, "codebooks.parquet"
     ):
         raise ValueError(
@@ -2864,28 +2780,11 @@ def _prepare_add_frame(
             "layout; refusing to append into the corrupt layout "
             "(rebuild the index, or delete the stale rotation.parquet)"
         )
-    if _index_has(spark, path, _TOMBSTONES):
-        # a tombstoned id cannot be re-added until compaction physically
-        # drops it: the probe-side anti-join would suppress the NEW row
-        # too, silently losing the re-add (ann_index_remove's contract)
-        tomb = spark.read.parquet(f"{path}/{_TOMBSTONES}")
-        tcol = tomb.columns[0]
-        n_hit = (
-            df.select(F.col(id_col).alias(tcol))
-            .join(tomb.select(tcol).distinct(), on=tcol, how="semi")
-            .count()
-        )
-        if n_hit:
-            raise ValueError(
-                f"{n_hit} id(s) in the batch are tombstoned in the index "
-                f"at {path!r} — run ann_index_compact first (it "
-                "physically drops removed rows and clears the tombstone "
-                "set), then re-add"
-            )
+    index_store.refuse_tombstoned(spark, path, df, id_col, "ann_index_compact")
     local_cents = _localized_model(
         spark, f"{path}/centroids.parquet", "cell", max_cells
     )
-    if _index_has(spark, path, "codebooks.parquet"):
+    if index_store.has(spark, path, "codebooks.parquet"):
         local_cb = _localized_model(
             spark, f"{path}/codebooks.parquet", "codebook", max_cells
         )
@@ -2900,7 +2799,7 @@ def _prepare_add_frame(
         out = ivf_assign(df, local_cents, id_col=id_col, vec_col=vec_col)
     saved = {
         f.name: f.dataType.simpleString()
-        for f in spark.read.parquet(f"{path}/vectors.parquet").schema.fields
+        for f in index_store.read(spark, path, "vectors.parquet").schema.fields
     }
     adding = {f.name: f.dataType.simpleString() for f in out.schema.fields}
     if saved != adding:
@@ -2910,29 +2809,6 @@ def _prepare_add_frame(
             "id_col/vec_col the index was built with"
         )
     return out
-
-
-_ADD_MANIFEST = "_ADD_MANIFEST.json"
-
-
-def _index_fs(spark, p: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(p)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
-
-
-def _read_add_manifest(spark, path: str) -> "dict | None":
-    from ..io import hadoop_read_json
-
-    return hadoop_read_json(spark, f"{path}/{_ADD_MANIFEST}")
-
-
-def _write_add_manifest(spark, path: str, batch_id: int) -> None:
-    from ..io import hadoop_write_json
-
-    hadoop_write_json(spark, f"{path}/{_ADD_MANIFEST}", {
-        "batch_id": int(batch_id),
-    })
 
 
 def ann_index_add_batch(
@@ -2949,15 +2825,11 @@ def ann_index_add_batch(
     of ``*_index_add`` (which is plain at-least-once: a replayed
     foreachBatch append would duplicate its vectors).
 
-    Mechanism (no table format needed): the batch's encoded rows are
-    staged under ``.staging-b{batch_id}``, every staged data file is
-    RENAMED into its live cell directory under a ``b{batch_id}-`` name
-    prefix, and only then does ``_ADD_MANIFEST.json`` advance. Replays
-    of a committed batch_id skip; a replay after a crash anywhere in the
-    middle first DELETES every live file carrying this batch's prefix
-    (the partial leftovers) and redoes the whole move — append
-    idempotence from file naming alone. ``ann_index_compact`` drops the
-    prefixes, which is safe: committed batches are never replayed.
+    Mechanism: index_store.add_batch — the batch's encoded rows are
+    staged, renamed into their live cell directories under a
+    ``b{batch_id}-`` prefix, and only then does the add manifest
+    advance; replays of a committed batch_id skip, and a replay after a
+    crash first deletes the batch's partial files and redoes the move.
 
     Returns True if the batch was applied, False if skipped as a replay.
     The manifest tracks ONE monotone batch_id sequence per index:
@@ -2969,22 +2841,16 @@ def ann_index_add_batch(
     100-TB shape: one bounded model read + broadcast assign/encode + one
     partitioned write per trigger; the moves are O(files in the batch)
     namenode RPCs, no data copy."""
-    from ..io import hadoop_delete_prefixed, hadoop_staged_append
 
-    manifest = _read_add_manifest(spark, path)
-    if manifest is not None and batch_id <= manifest["batch_id"]:
-        return False
-    prefix = f"b{batch_id}-"
-    vectors = f"{path}/vectors.parquet"
-    hadoop_delete_prefixed(spark, vectors, prefix)
-    staging = f"{path}/.staging-b{batch_id}"
-    frame = _prepare_add_frame(
-        spark, path, batch_df, id_col, vec_col, max_cells
-    )
-    frame.write.mode("overwrite").partitionBy("cell").parquet(staging)
-    hadoop_staged_append(spark, staging, vectors, prefix)
-    _write_add_manifest(spark, path, batch_id)
-    return True
+    def stage(staging: str) -> None:
+        (
+            _prepare_add_frame(spark, path, batch_df, id_col, vec_col, max_cells)
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(staging)
+        )
+
+    return index_store.add_batch(spark, path, "vectors.parquet", batch_id, stage)
 
 
 def ann_index_compact(spark, path: str) -> dict:
@@ -3011,65 +2877,18 @@ def ann_index_compact(spark, path: str) -> dict:
     Returns ``{"files_before", "files_after", "rows"}``. 100-TB shape:
     one shuffle sized by the cell count — run it periodically (every ~N
     adds), exactly like the rollup sink's compact_versions cadence."""
-    from ..io import (
-        hadoop_data_file_stats,
-        hadoop_swap_rewrite,
-        require_atomic_rename,
-    )
 
-    require_atomic_rename(path, "ann_index_compact")
-    target = f"{path}/vectors.parquet"
-    files_before, _ = hadoop_data_file_stats(spark, target)
-    # compaction is also the PHYSICAL delete for tombstoned ids
-    # (ann_index_remove): the rewrite reads the LIVE set (anti-joined),
-    # so removed rows vanish from disk here and the tombstone file
-    # clears after the swap — the merge-on-read delete's merge step.
-    # One pass for both counts (round 15): with no tombstone component
-    # live == physical (skip the second scan outright); with one, a
-    # single left-join aggregate replaces the two count jobs.
-    if not _index_has(spark, path, _TOMBSTONES):
-        # parquet count() is footer-stats only — read the footers
-        # driver-side (no job) on local filesystems (round 16)
-        n_physical = model_row_count(spark, target)
-        n_rows = n_physical
-    else:
-        vec = spark.read.parquet(target)
-        tomb = spark.read.parquet(f"{path}/{_TOMBSTONES}")
-        tcol = tomb.columns[0]
-        marked = vec.join(
-            tomb.select(tcol).distinct().withColumn("_t", F.lit(1)),
-            on=tcol, how="left",
-        )
-        row = marked.agg(
-            F.count(F.lit(1)).alias("physical"),
-            F.count(F.when(F.col("_t").isNull(), F.lit(1))).alias("live"),
-        ).collect()[0]
-        n_physical, n_rows = int(row["physical"]), int(row["live"])
-
-    def write_tmp(tmp: str) -> None:
+    def rewrite(tmp: str, live_bytes: int) -> None:
         (
             _read_index_vectors(spark, path)
             .repartition("cell")
             .write.partitionBy("cell")
             .parquet(tmp)
         )
-        staged = model_row_count(spark, tmp)
-        if staged != n_rows:
-            raise IOError(
-                f"ann_index_compact: staged rewrite holds {staged} rows, "
-                f"expected {n_rows}; aborting before touching the live "
-                "layout"
-            )
 
-    hadoop_swap_rewrite(spark, target, write_tmp, "ann_index_compact")
-    _delete_index_component(spark, path, _TOMBSTONES)
-    files_after, _ = hadoop_data_file_stats(spark, target)
-    return {
-        "files_before": files_before,
-        "files_after": files_after,
-        "rows": n_rows,
-        "removed_rows": n_physical - n_rows,
-    }
+    return index_store.compact(
+        spark, path, "vectors.parquet", "ann_index_compact", rewrite
+    )
 
 
 def ann_index_stats(spark, path: str) -> dict:
@@ -3083,7 +2902,7 @@ def ann_index_stats(spark, path: str) -> dict:
     logical-delete backlog the next compact will physically drop. All
     reads are metadata/model-bounded except the counts (parquet count()
     is rowgroup-stats only)."""
-    from ..io import hadoop_data_file_stats
+    from ..io import hadoop_data_file_stats, model_row_count
 
     vectors = f"{path}/vectors.parquet"
     vec = _read_index_vectors(spark, path)
@@ -3095,19 +2914,13 @@ def ann_index_stats(spark, path: str) -> dict:
         F.count_distinct("cell").alias("cells"),
     ).collect()[0]
     n_cell_dirs = int(live["cells"])
-    from ..io import model_distinct_count
-
-    n_tomb = (
-        model_distinct_count(spark, f"{path}/{_TOMBSTONES}")
-        if _index_has(spark, path, _TOMBSTONES)
-        else 0
-    )
+    n_tomb = index_store.pending_tombstones(spark, path)
     return {
         "layout": (
-            "ivf-pq" if _index_has(spark, path, "codebooks.parquet")
+            "ivf-pq" if index_store.has(spark, path, "codebooks.parquet")
             else "ivf"
         ),
-        "rotation": _index_has(spark, path, "rotation.parquet"),
+        "rotation": index_store.has(spark, path, "rotation.parquet"),
         "cells": model_row_count(spark, f"{path}/centroids.parquet"),
         "populated_cells": n_cell_dirs,
         "vectors": int(live["n"]),
@@ -3160,7 +2973,7 @@ def ann_index_drift(
     broadcast-centroid kernel map + the same bounded aggregate; the
     join, totals, and fold all touch ≤ cells rows. Nothing scans twice,
     no driver state beyond the cap-guarded model load."""
-    if _index_has(spark, path, "rotation.parquet") and not _index_has(
+    if index_store.has(spark, path, "rotation.parquet") and not index_store.has(
         spark, path, "codebooks.parquet"
     ):
         raise ValueError(
@@ -3173,7 +2986,7 @@ def ann_index_drift(
     )
     rotation = (
         _read_index_rotation(spark, path)
-        if _index_has(spark, path, "codebooks.parquet")
+        if index_store.has(spark, path, "codebooks.parquet")
         else None
     )
     if rotation is not None:
@@ -3410,7 +3223,7 @@ def ann_index_search_many(
             "adaptive_nprobe subsumes adc_prune — pass one or the other"
         )
 
-    is_pq = _index_has(spark, path, "codebooks.parquet")
+    is_pq = index_store.has(spark, path, "codebooks.parquet")
     if adaptive_nprobe and not is_pq:
         raise ValueError(
             "adaptive_nprobe needs the IVF-PQ layout — the Best-Bin-First "

@@ -47,94 +47,40 @@ _VERIFY_FIRST = [
 ]
 
 
+# Plan modules in merge order (a later module's entry wins a name clash).
+_MODULES = (
+    "corpus", "corpus_ext", "corpus_more", "corpus_llm", "corpus_ts",
+    "corpus_r5", "corpus_r6", "corpus_r7", "corpus_r8", "corpus_r9",
+    "corpus_r10", "corpus_r11", "corpus_r12", "corpus_r13", "corpus_r14",
+    "corpus_r15", "corpus_tpch2", "corpus_tpch3",
+)
+
+
+def _merged(attr: str) -> dict:
+    """Every plan module's ``attr`` merged in ``_MODULES`` order (a set
+    such as ROWS_ONLY_QUERIES merges as dict keys)."""
+    from importlib import import_module
+
+    merged: dict = {}
+    for name in _MODULES:
+        part = getattr(import_module(f"{__name__}.{name}"), attr)
+        merged.update(part if isinstance(part, dict) else dict.fromkeys(part))
+    return merged
+
+
 def all_queries():
     """Merged registry: reference-parity corpus + training-data extensions
     + the generalized operator surface, ordered so the external gate's
     50-entry verification window rotates over not-yet-checked queries."""
-    from . import (
-        corpus, corpus_ext, corpus_llm, corpus_more, corpus_r5, corpus_r6,
-        corpus_r7, corpus_r8, corpus_r9, corpus_r10, corpus_r11, corpus_r12,
-        corpus_r13, corpus_r14, corpus_r15, corpus_tpch2, corpus_tpch3,
-        corpus_ts,
-    )
-
-    merged = dict(corpus.QUERIES)
-    merged.update(corpus_ext.QUERIES)
-    merged.update(corpus_more.QUERIES)
-    merged.update(corpus_llm.QUERIES)
-    merged.update(corpus_ts.QUERIES)
-    merged.update(corpus_r5.QUERIES)
-    merged.update(corpus_r6.QUERIES)
-    merged.update(corpus_r7.QUERIES)
-    merged.update(corpus_r8.QUERIES)
-    merged.update(corpus_r9.QUERIES)
-    merged.update(corpus_r10.QUERIES)
-    merged.update(corpus_r11.QUERIES)
-    merged.update(corpus_r12.QUERIES)
-    merged.update(corpus_r13.QUERIES)
-    merged.update(corpus_r14.QUERIES)
-    merged.update(corpus_r15.QUERIES)
-    merged.update(corpus_tpch2.QUERIES)
-    merged.update(corpus_tpch3.QUERIES)
+    merged = _merged("QUERIES")
     ordered = {name: merged.pop(name) for name in _VERIFY_FIRST if name in merged}
     ordered.update(merged)
     return ordered
 
 
 def all_oracles():
-    from . import (
-        corpus, corpus_ext, corpus_llm, corpus_more, corpus_r5, corpus_r6,
-        corpus_r7, corpus_r8, corpus_r9, corpus_r10, corpus_r11, corpus_r12,
-        corpus_r13, corpus_r14, corpus_r15, corpus_tpch2, corpus_tpch3,
-        corpus_ts,
-    )
-
-    merged = dict(corpus.ORACLE_SQL)
-    merged.update(corpus_ext.ORACLE_SQL)
-    merged.update(corpus_more.ORACLE_SQL)
-    merged.update(corpus_llm.ORACLE_SQL)
-    merged.update(corpus_ts.ORACLE_SQL)
-    merged.update(corpus_r5.ORACLE_SQL)
-    merged.update(corpus_r6.ORACLE_SQL)
-    merged.update(corpus_r7.ORACLE_SQL)
-    merged.update(corpus_r8.ORACLE_SQL)
-    merged.update(corpus_r9.ORACLE_SQL)
-    merged.update(corpus_r10.ORACLE_SQL)
-    merged.update(corpus_r11.ORACLE_SQL)
-    merged.update(corpus_r12.ORACLE_SQL)
-    merged.update(corpus_r13.ORACLE_SQL)
-    merged.update(corpus_r14.ORACLE_SQL)
-    merged.update(corpus_r15.ORACLE_SQL)
-    merged.update(corpus_tpch2.ORACLE_SQL)
-    merged.update(corpus_tpch3.ORACLE_SQL)
-    return merged
+    return _merged("ORACLE_SQL")
 
 
 def rows_only_queries():
-    from . import (
-        corpus, corpus_ext, corpus_llm, corpus_more, corpus_r5, corpus_r6,
-        corpus_r7, corpus_r8, corpus_r9, corpus_r10, corpus_r11, corpus_r12,
-        corpus_r13, corpus_r14, corpus_r15, corpus_tpch2, corpus_tpch3,
-        corpus_ts,
-    )
-
-    return (
-        set(corpus.ROWS_ONLY_QUERIES)
-        | set(corpus_ext.ROWS_ONLY_QUERIES)
-        | set(corpus_more.ROWS_ONLY_QUERIES)
-        | set(corpus_llm.ROWS_ONLY_QUERIES)
-        | set(corpus_ts.ROWS_ONLY_QUERIES)
-        | set(corpus_r5.ROWS_ONLY_QUERIES)
-        | set(corpus_r6.ROWS_ONLY_QUERIES)
-        | set(corpus_r7.ROWS_ONLY_QUERIES)
-        | set(corpus_r8.ROWS_ONLY_QUERIES)
-        | set(corpus_r9.ROWS_ONLY_QUERIES)
-        | set(corpus_r10.ROWS_ONLY_QUERIES)
-        | set(corpus_r11.ROWS_ONLY_QUERIES)
-        | set(corpus_r12.ROWS_ONLY_QUERIES)
-        | set(corpus_r13.ROWS_ONLY_QUERIES)
-        | set(corpus_r14.ROWS_ONLY_QUERIES)
-        | set(corpus_r15.ROWS_ONLY_QUERIES)
-        | set(corpus_tpch2.ROWS_ONLY_QUERIES)
-        | set(corpus_tpch3.ROWS_ONLY_QUERIES)
-    )
+    return set(_merged("ROWS_ONLY_QUERIES"))

@@ -155,9 +155,9 @@ def build_corpus(
             "against-index verify threshold"
         )
     if dedup_index is not None:
-        from ..operators.dedup import _winnow_index_meta
+        from ..index_store import read_meta
 
-        meta = _winnow_index_meta(docs.sparkSession, dedup_index)
+        meta = read_meta(docs.sparkSession, dedup_index)
         want = (cfg.winnow_k, cfg.winnow_w, cfg.portable)
         have = (meta["k"], meta["w"], meta["portable"])
         if have != want:

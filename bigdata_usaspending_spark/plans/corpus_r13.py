@@ -435,7 +435,7 @@ def q_winnow_index_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
     ``replay_skipped`` (re-applying batch 0 is a no-op), and
     ``saved_params_ok`` (the probe ran with the index's saved
     fingerprint parameters)."""
-    from ..io import hadoop_read_json
+    from .. import index_store
     from ..operators import dedup
     from .oracle_lib import _ROBUST_K, _ROBUST_W, _SPAN_MAX_DF, _SPAN_THRESHOLD
 
@@ -461,8 +461,8 @@ def q_winnow_index_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
             spark, tmp, variants,
             threshold=_SPAN_THRESHOLD, max_fingerprint_df=_SPAN_MAX_DF,
         )
-        meta = dedup._winnow_index_meta(spark, tmp)
-        manifest = hadoop_read_json(spark, f"{tmp}/_ADD_MANIFEST.json")
+        meta = index_store.read_meta(spark, tmp)
+        manifest = index_store.read_manifest(spark, tmp)
         add_committed = bool(applied) and manifest == {"batch_id": 0}
         saved_params_ok = (
             meta["k"], meta["w"], meta["portable"],

@@ -75,8 +75,8 @@ def q_ann_index_rebuild(spark: SparkSession, sf: str) -> DataFrame:
     clearing the stale components is two O(1) file deletes — rebuild
     cost is the build cost, never a function of accumulated maintenance
     history."""
+    from .. import index_store
     from ..operators import similarity
-    from ..operators.similarity import _read_add_manifest
     from .corpus_ext import _ivf_centroids, _query_vec_list
 
     emb = load(_prep(spark), sf, "embeddings")
@@ -105,7 +105,7 @@ def q_ann_index_rebuild(spark: SparkSession, sf: str) -> DataFrame:
         stale_tombstones_cleared = (
             stats["tombstones"] == 0 and stats["vectors"] == n_data
         )
-        stale_manifest_cleared = _read_add_manifest(spark, tmp) is None
+        stale_manifest_cleared = index_store.read_manifest(spark, tmp) is None
         # a fresh stream over the rebuilt index restarts at batch 0 —
         # it must APPLY, not replay-skip against the dead stream's
         # manifest (this round's fix)
@@ -170,7 +170,7 @@ def q_winnow_index_rebuild(spark: SparkSession, sf: str) -> DataFrame:
     replay-skip against the dead stream's manifest), and the
     against-index decision must see exactly committed ∪ batch-0 docs —
     no stale suppression, no lost adds."""
-    from ..io import hadoop_read_json
+    from .. import index_store
     from ..operators import dedup
     from .oracle_lib import (
         _ROBUST_K,
@@ -213,7 +213,7 @@ def q_winnow_index_rebuild(spark: SparkSession, sf: str) -> DataFrame:
         docs_committed = stats0["docs"]
         stale_tombstones_cleared = stats0["tombstones"] == 0
         stale_manifest_cleared = (
-            hadoop_read_json(spark, f"{tmp}/_ADD_MANIFEST.json") is None
+            index_store.read_manifest(spark, tmp) is None
         )
         fresh_stream_applied = bool(
             dedup.winnow_index_add_batch(spark, tmp, added, 0)

@@ -1925,6 +1925,7 @@ def ann_search_batch(
     index is never re-read whole, never shuffled. Per-query results are
     bit-identical to the batch probes (ivf_index_topk /
     ivf_pq_index_topk) over the same index."""
+    from .. import index_store
     from ..operators.similarity import ann_index_search_many
 
     spark = batch_df.sparkSession
@@ -1953,8 +1954,8 @@ def ann_search_batch(
 
     # the hit-id field keeps the INDEX's id name and type (one metadata
     # read per trigger — string/long/whatever the index was built with)
-    hit_id_field = spark.read.parquet(
-        f"{index_path}/vectors.parquet"
+    hit_id_field = index_store.read(
+        spark, index_path, "vectors.parquet"
     ).schema[index_id_col]
     schema = StructType(
         [
@@ -2052,43 +2053,19 @@ def stream_ann_index_add(
     ``checkpoint`` is REQUIRED once the add manifest exists (the
     stream_build_corpus rationale: a fresh query restarts batch_id at 0
     and the replay guard would silently discard every new batch)."""
+    from .. import index_store
     from ..operators import similarity
 
-    if not checkpoint:
-        manifest = similarity._read_add_manifest(
-            vectors.sparkSession, index_path
-        )
-        if manifest is not None:
-            raise ValueError(
-                f"stream_ann_index_add: index at {index_path!r} already "
-                f"has a committed add manifest "
-                f"(batch_id={manifest['batch_id']}) but no "
-                "checkpointLocation was given — a fresh query restarts "
-                "batch_id at 0 and the exactly-once replay guard would "
-                "silently discard every new batch. Pass the original "
-                "checkpoint to resume."
-            )
-
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        applied = similarity.ann_index_add_batch(
+    def add(batch_df: DataFrame, batch_id: int) -> bool:
+        return similarity.ann_index_add_batch(
             batch_df.sparkSession, index_path, batch_df, batch_id,
             id_col=id_col, vec_col=vec_col,
         )
-        if (
-            applied
-            and compact_every
-            and (batch_id + 1) % int(compact_every) == 0
-        ):
-            similarity.ann_index_compact(batch_df.sparkSession, index_path)
 
-    writer = vectors.writeStream.foreachBatch(append).trigger(
-        availableNow=True
+    return index_store.run_add_stream(
+        vectors, index_path, add, similarity.ann_index_compact,
+        checkpoint, compact_every, "stream_ann_index_add",
     )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.start()
-    query.awaitTermination()
-    return query
 
 
 def winnow_index_dedup_batch(
@@ -2139,18 +2116,15 @@ def winnow_index_dedup_batch(
     needs, so the append side is unchanged; decisions then derive from
     the span pair frames (equal to the value tiers' at cap=None;
     tested bit-equal to the evidence ledger over the same feed)."""
-    from ..io import hadoop_delete_prefixed, hadoop_read_json
+    from .. import index_store
     from ..operators import dedup as dd
     from ..operators.text import winnow_fingerprints
 
     spark = batch_df.sparkSession
-    manifest = hadoop_read_json(spark, f"{index_path}/_ADD_MANIFEST.json")
-    if manifest is not None and batch_id <= manifest["batch_id"]:
+    if index_store.batch_committed(spark, index_path, batch_id):
         return False
-    hadoop_delete_prefixed(
-        spark, f"{index_path}/fps.parquet", f"b{batch_id}-"
-    )
-    meta = dd._winnow_index_meta(spark, index_path)
+    index_store.drop_partial_batch(spark, index_path, "fps.parquet", batch_id)
+    meta = index_store.read_meta(spark, index_path)
     bpf = batch_df.select(
         F.col(id_col).alias("_id"),
         winnow_fingerprints(
@@ -2249,43 +2223,20 @@ def stream_winnow_index_dedup(
 
     ``checkpoint`` is REQUIRED once the index's add manifest exists (the
     stream_build_corpus rationale)."""
-    from ..io import hadoop_read_json
+    from .. import index_store
     from ..operators import dedup as dd
 
-    if not checkpoint:
-        manifest = hadoop_read_json(
-            docs.sparkSession, f"{index_path}/_ADD_MANIFEST.json"
-        )
-        if manifest is not None:
-            raise ValueError(
-                f"stream_winnow_index_dedup: index at {index_path!r} "
-                f"already has a committed add manifest "
-                f"(batch_id={manifest['batch_id']}) but no "
-                "checkpointLocation was given — a fresh query restarts "
-                "batch_id at 0 and the exactly-once replay guard would "
-                "silently discard every new batch. Pass the original "
-                "checkpoint to resume."
-            )
-
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        applied = winnow_index_dedup_batch(
+    def add(batch_df: DataFrame, batch_id: int) -> bool:
+        return winnow_index_dedup_batch(
             batch_df, index_path, sink_path, batch_id,
             threshold=threshold, max_fingerprint_df=max_fingerprint_df,
             id_col=id_col, text_col=text_col, evidence=evidence,
         )
-        if (
-            applied
-            and compact_every
-            and (batch_id + 1) % int(compact_every) == 0
-        ):
-            dd.winnow_index_compact(batch_df.sparkSession, index_path)
 
-    writer = docs.writeStream.foreachBatch(append).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.start()
-    query.awaitTermination()
-    return query
+    return index_store.run_add_stream(
+        docs, index_path, add, dd.winnow_index_compact,
+        checkpoint, compact_every, "stream_winnow_index_dedup",
+    )
 
 
 def decontaminate_spans_batch(

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from bigdata_usaspending_spark import index_store
 from bigdata_usaspending_spark.operators import dedup
 
 
@@ -1033,7 +1034,7 @@ def test_winnow_index_compact_bit_identical_probes(spark, tmp_path):
     b_dedup = sorted(
         map(tuple, dd.winnow_index_dedup(spark, path, batch).collect())
     )
-    meta_before = dd._winnow_index_meta(spark, path)
+    meta_before = index_store.read_meta(spark, path)
 
     stats = dd.winnow_index_compact(spark, path)
     assert stats["files_before"] == frag
@@ -1046,7 +1047,7 @@ def test_winnow_index_compact_bit_identical_probes(spark, tmp_path):
     assert sorted(
         map(tuple, dd.winnow_index_dedup(spark, path, batch).collect())
     ) == b_dedup
-    assert dd._winnow_index_meta(spark, path) == meta_before
+    assert index_store.read_meta(spark, path) == meta_before
 
     # object-store scheme refused up front (no atomic rename)
     import pytest
@@ -1196,13 +1197,13 @@ def test_winnow_index_remove_lifecycle(spark, tmp_path):
     from bigdata_usaspending_spark.io import hadoop_read_json
 
     assert hadoop_read_json(
-        spark, f"{path}/{dd._WINNOW_ADD_MANIFEST}"
+        spark, f"{path}/{index_store.ADD_MANIFEST}"
     )["batch_id"] == 7
     dd.winnow_pos_index_write(committed, path, portable=True)
     st3 = dd.winnow_index_stats(spark, path)
     assert st3["tombstones"] == 0 and st3["docs"] == 2
     assert hadoop_read_json(
-        spark, f"{path}/{dd._WINNOW_ADD_MANIFEST}"
+        spark, f"{path}/{index_store.ADD_MANIFEST}"
     ) is None
     # batch_id 0 from the fresh stream is APPLIED, not replay-skipped
     assert dd.winnow_index_add_batch(spark, path, batch, 0)

@@ -387,3 +387,36 @@ def test_model_distinct_count_scalar_fast_path(spark, tmp_path):
         == spark.read.parquet(p).distinct().count()
         == 3
     )
+
+
+def test_model_io_falls_back_to_spark_on_arrow_unsupported_layout(
+    spark, tmp_path, monkeypatch
+):
+    """The driver-side pyarrow paths fall back to Spark on the failures
+    arrow can raise — here an unsigned column that Spark's arrow type
+    mapping refuses (Spark reads it as bigint) and an array column the
+    driver-side distinct cannot hash — and let any other error through."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = f"{tmp_path}/unsigned.parquet"
+    os.makedirs(p)
+    pq.write_table(
+        pa.table({"x": pa.array([3, 1, 2], pa.uint32())}), f"{p}/part-0.parquet"
+    )
+    rows, schema = io.read_model_rows(spark, p, "row", 10)
+    assert sorted(r["x"] for r in rows) == [1, 2, 3]
+    assert schema.simpleString() == spark.read.parquet(p).schema.simpleString()
+
+    arrays = f"{tmp_path}/arrays.parquet"
+    io.local_frame(
+        spark, [([1, 2],), ([1, 2],), ([3],)], "v array<int>"
+    ).write.parquet(arrays)
+    assert io.model_distinct_count(spark, arrays) == 2
+
+    def broken(local):
+        raise RuntimeError("not a fast-path failure")
+
+    monkeypatch.setattr(io, "_arrow_table_files", broken)
+    with pytest.raises(RuntimeError, match="not a fast-path failure"):
+        io.model_row_count(spark, p)

@@ -7,6 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from bigdata_usaspending_spark import index_store
 from bigdata_usaspending_spark.operators import similarity
 
 
@@ -1596,11 +1597,11 @@ def test_ann_index_remove_lifecycle(spark, sf_small, tmp_path):
     similarity.ann_index_remove(spark, path, victims)
     fresh0 = emb.filter(F.col("vec_id") == 0)
     assert similarity.ann_index_add_batch(spark, path, fresh0, 7)
-    assert similarity._read_add_manifest(spark, path)["batch_id"] == 7
+    assert index_store.read_manifest(spark, path)["batch_id"] == 7
     similarity.ivf_index_write(data, centroids, path)
     st3 = similarity.ann_index_stats(spark, path)
     assert st3["tombstones"] == 0 and st3["vectors"] == data.count()
-    assert similarity._read_add_manifest(spark, path) is None
+    assert index_store.read_manifest(spark, path) is None
     # batch_id 0 from the fresh stream is APPLIED, not replay-skipped
     assert similarity.ann_index_add_batch(spark, path, fresh0, 0)
     assert similarity.ann_index_stats(spark, path)["vectors"] == (
