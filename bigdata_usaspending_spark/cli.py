@@ -271,8 +271,8 @@ def _parser() -> argparse.ArgumentParser:
     )
     ai.add_argument(
         "--checkpoint", default=None,
-        help="stream-add: streaming checkpoint location (REQUIRED once "
-        "the add manifest exists)",
+        help="stream-add / stream-search: streaming checkpoint location "
+        "(REQUIRED once the add manifest exists / the sink holds output)",
     )
     ai.add_argument(
         "--compact-every", type=int, default=None,
@@ -310,8 +310,8 @@ def _parser() -> argparse.ArgumentParser:
     )
     wi.add_argument(
         "--checkpoint", default=None,
-        help="stream-dedup: streaming checkpoint location (REQUIRED "
-        "once the add manifest exists)",
+        help="stream-dedup / stream-scrub: streaming checkpoint location "
+        "(REQUIRED once the add manifest exists / the sink holds output)",
     )
     wi.add_argument(
         "--compact-every", type=int, default=None,

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from .io import (
     hadoop_data_file_stats,
     hadoop_delete_prefixed,
+    hadoop_fs,
     hadoop_read_json,
     hadoop_staged_append,
     hadoop_swap_leftover,
@@ -53,20 +54,15 @@ ADD_MANIFEST = "_ADD_MANIFEST.json"
 META = "meta.json"
 
 
-def _hadoop_path(spark, path: str):
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
-
-
 def has(spark, path: str, name: str) -> bool:
     """Whether the index at ``path`` has the component ``name``."""
-    fs, hpath = _hadoop_path(spark, f"{path}/{name}")
+    fs, hpath = hadoop_fs(spark, f"{path}/{name}")
     return bool(fs.exists(hpath))
 
 
 def delete(spark, path: str, name: str) -> None:
     """Remove the component ``name`` of the index at ``path`` if present."""
-    fs, hpath = _hadoop_path(spark, f"{path}/{name}")
+    fs, hpath = hadoop_fs(spark, f"{path}/{name}")
     if fs.exists(hpath):
         fs.delete(hpath, True)
 
@@ -341,49 +337,3 @@ def read_meta(spark, path: str) -> dict:
 def write_meta(spark, path: str, meta: dict) -> None:
     hadoop_write_json(spark, f"{path}/{META}", meta)
 
-
-# --------------------------------------------------------------------------
-# streaming ingestion
-# --------------------------------------------------------------------------
-
-def run_add_stream(
-    stream: DataFrame,
-    path: str,
-    add,
-    compact_index,
-    checkpoint: "str | None",
-    compact_every: "int | None",
-    job: str,
-):
-    """Run ``stream`` to completion (availableNow) into the index at
-    ``path``: ``add(batch_df, batch_id)`` applies each micro-batch and
-    returns whether it was applied (False for a replay), and
-    ``compact_index(spark, path)`` runs after every ``compact_every``-th
-    applied batch so fragmentation stays bounded at that many batches.
-    Returns the finished query.
-
-    ``checkpoint`` is REQUIRED once the index has a committed add
-    manifest: a fresh query restarts batch_id at 0, and the replay guard
-    would silently discard every new batch."""
-    manifest = None if checkpoint else read_manifest(stream.sparkSession, path)
-    if manifest is not None:
-        raise ValueError(
-            f"{job}: index at {path!r} already has a committed add "
-            f"manifest (batch_id={manifest['batch_id']}) but no "
-            "checkpointLocation was given — a fresh query restarts "
-            "batch_id at 0 and the exactly-once replay guard would "
-            "silently discard every new batch. Pass the original "
-            "checkpoint to resume."
-        )
-
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        applied = add(batch_df, batch_id)
-        if applied and compact_every and (batch_id + 1) % int(compact_every) == 0:
-            compact_index(batch_df.sparkSession, path)
-
-    writer = stream.writeStream.foreachBatch(append).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.start()
-    query.awaitTermination()
-    return query

@@ -432,15 +432,33 @@ def require_atomic_rename(path: str, op: str) -> None:
         )
 
 
+def hadoop_fs(spark: SparkSession, path: str, *more: str) -> tuple:
+    """``(fs, hpath, *more_hpaths)``: the Hadoop FileSystem that holds
+    ``path``, resolved through the session's Hadoop configuration, then a
+    Hadoop Path for ``path`` and for each of ``more`` (paths on the same
+    filesystem). The one place the package reaches the JVM for a
+    filesystem handle."""
+    make = spark._jvm.org.apache.hadoop.fs.Path
+    paths = [make(p) for p in (path, *more)]
+    return (paths[0].getFileSystem(spark._jsc.hadoopConfiguration()), *paths)
+
+
+def hadoop_child_names(spark: SparkSession, path: str) -> "list[str]":
+    """Names of the entries directly under the directory ``path`` (empty
+    when it does not exist) — one driver-side listing, no Spark job."""
+    fs, hpath = hadoop_fs(spark, path)
+    if not fs.exists(hpath):
+        return []
+    return [str(st.getPath().getName()) for st in fs.listStatus(hpath)]
+
+
 def hadoop_data_file_stats(spark: SparkSession, path: str) -> "tuple[int, int]":
     """``(n_files, n_bytes)`` of the DATA files under a parquet directory
     (recursively, through the Hadoop FS API so it works on any
     filesystem), skipping markers (_SUCCESS) and hidden files — the
     fragmentation metric the index compactors report and size their
     rewrites from."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return 0, 0
     it = fs.listFiles(hpath, True)
@@ -463,23 +481,19 @@ def hadoop_read_json(spark: SparkSession, path: str) -> "dict | None":
     absent) — manifests and metas must live on the SAME filesystem as
     the data they describe (the winnow-meta lesson: a driver-local read
     of a remote index fails from every other driver)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return None
     stream = fs.open(hpath)
     try:
-        data = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+        data = spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
     finally:
         stream.close()
     return json.loads(bytes(data).decode("utf-8"))
 
 
 def hadoop_write_json(spark: SparkSession, path: str, obj: dict) -> None:
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_fs(spark, path)
     out = fs.create(hpath, True)
     try:
         out.write(bytearray(json.dumps(obj).encode("utf-8")))
@@ -492,9 +506,7 @@ def hadoop_delete_prefixed(spark: SparkSession, target: str, prefix: str) -> Non
     starts with ``prefix`` — the self-clean step of the idempotent
     batch-append: a crashed attempt's partial moves are identified by
     the batch's name prefix alone."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(target)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_fs(spark, target)
     if not fs.exists(hpath):
         return
     stale = []
@@ -517,15 +529,10 @@ def hadoop_staged_append(
     step of the exactly-once append: the caller cleans prefix files
     first (hadoop_delete_prefixed), writes the staging dir, calls this,
     and advances its manifest LAST."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    spath = jvm.org.apache.hadoop.fs.Path(staging)
-    sfs = spath.getFileSystem(conf)
-    tpath = jvm.org.apache.hadoop.fs.Path(target)
-    tfs = tpath.getFileSystem(conf)
-    s_uri = str(sfs.makeQualified(spath).toUri().getPath())
+    fs, spath = hadoop_fs(spark, staging)
+    s_uri = str(fs.makeQualified(spath).toUri().getPath())
     moves = []
-    it = sfs.listFiles(spath, True)
+    it = fs.listFiles(spath, True)
     while it.hasNext():
         f = it.next().getPath()
         name = f.getName()
@@ -535,21 +542,17 @@ def hadoop_staged_append(
         rel = parent[len(s_uri):].strip("/")
         moves.append((f, rel, name))
     for f, rel, name in moves:
-        dest_dir = jvm.org.apache.hadoop.fs.Path(
-            f"{target}/{rel}" if rel else target
+        dest_dir = f"{target}/{rel}" if rel else target
+        tfs, dest_hdir, dest = hadoop_fs(
+            spark, dest_dir, f"{dest_dir}/{prefix}{name}"
         )
-        tfs.mkdirs(dest_dir)
-        dest = jvm.org.apache.hadoop.fs.Path(
-            f"{target}/{rel}/{prefix}{name}"
-            if rel
-            else f"{target}/{prefix}{name}"
-        )
+        tfs.mkdirs(dest_hdir)
         if not tfs.rename(f, dest):
             raise IOError(
                 f"staged append: rename {f} -> {dest} failed; replaying "
                 "the batch cleans its prefix files and redoes the move"
             )
-    sfs.delete(spath, True)
+    fs.delete(spath, True)
 
 
 def _swap_old_copies(fs, t_path) -> list:
@@ -567,8 +570,7 @@ def hadoop_swap_leftover(spark: SparkSession, target: str) -> "str | None":
     """The copy the next hadoop_swap_rewrite entry restores: the newest
     ``{target}__old_*`` when ``target`` itself is missing (a swap
     stopped between its two renames); None otherwise."""
-    t_path = spark._jvm.org.apache.hadoop.fs.Path(target)
-    fs = t_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, t_path = hadoop_fs(spark, target)
     if fs.exists(t_path) or not fs.exists(t_path.getParent()):
         return None
     old = _swap_old_copies(fs, t_path)
@@ -608,10 +610,7 @@ def hadoop_swap_rewrite(spark: SparkSession, target: str, write_tmp, op: str) ->
     token = uuid.uuid4().hex[:8]
     tmp = f"{target}__compact_{token}"
     old = f"{target}__old_{token}"
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    t_path = jvm.org.apache.hadoop.fs.Path(target)
-    fs = t_path.getFileSystem(conf)
+    fs, t_path, tmp_path, old_path = hadoop_fs(spark, target, tmp, old)
     parent = t_path.getParent()
     base = t_path.getName()
     if fs.exists(parent):
@@ -638,14 +637,14 @@ def hadoop_swap_rewrite(spark: SparkSession, target: str, write_tmp, op: str) ->
             ):
                 fs.delete(st.getPath(), True)
     write_tmp(tmp)
-    if not fs.rename(t_path, jvm.org.apache.hadoop.fs.Path(old)):
+    if not fs.rename(t_path, old_path):
         raise IOError(f"{op}: rename {target} -> {old} failed")
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), t_path):
+    if not fs.rename(tmp_path, t_path):
         raise IOError(
             f"{op}: rename {tmp} -> {target} failed; previous component "
             f"preserved at {old}"
         )
-    fs.delete(jvm.org.apache.hadoop.fs.Path(old), True)
+    fs.delete(old_path, True)
 
 
 def read_state_manifest(path: str) -> dict | None:
@@ -680,6 +679,25 @@ def commit_versioned_state(df: DataFrame, path: str, batch_id: int) -> None:
     for name in os.listdir(path):
         if name.startswith("v=") and int(name[2:]) < version - 1:
             shutil.rmtree(os.path.join(path, name), ignore_errors=True)
+
+
+def apply_versioned_batch(
+    spark: SparkSession, path: str, batch_id: int, step
+) -> bool:
+    """Apply micro-batch ``batch_id`` to the versioned state at ``path``
+    exactly once. A replay (``batch_id`` at or below the committed one)
+    returns False and changes nothing. Otherwise ``step(cur)`` maps the
+    committed state (None before the first commit) to the new full
+    state, which is committed as the next version; returns True. A
+    ``step`` that raises, or a crash before the manifest flip, leaves
+    the previous version committed."""
+    manifest = read_state_manifest(path)
+    if manifest is not None and batch_id <= manifest["batch_id"]:
+        return False
+    commit_versioned_state(
+        step(read_versioned_state(spark, path)), path, batch_id
+    )
+    return True
 
 
 def write_bucketed(

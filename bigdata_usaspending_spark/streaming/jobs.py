@@ -1,26 +1,33 @@
 """Structured Streaming jobs.
 
 The reference has no streaming engine (SURVEY.md §2.9): its "monthly"
-aggregate is calendar bucketing of a batch table re-run on demand. These jobs
-are the incremental equivalents, built on readStream + event-time windows +
-watermarks, so the rollups the dashboard reads stay fresh without re-scanning
-history:
+aggregate is calendar bucketing of a batch table re-run on demand. These
+jobs are the incremental equivalents, so rollups, ledgers, sinks and
+persisted indexes stay fresh without re-scanning history. Each job has
+one of three shapes:
 
-- stream_windowed_rollup: tumbling event-time window SUM/COUNT with late-data
-  handling — the streaming twin of plans/corpus_ext.q_window_tumbling and of
-  the reference's month rollup (app/spark_cassandra_groupby_month.py:25-32).
-- stream_keyed_rollup: running total_award_amount by key — the streaming twin
-  of the flagship aggregator (app/spark_cassandra_etl_award_amount_
-  aggregator.py:83-85).
-- stream_exact_dedup: stateful exact dedup by fingerprint within the
-  watermark horizon — the streaming member of the dedup family
-  (operators/dedup.py).
-- stream_url_dedup: the crawl URL tier live — canonical-URL keyed
-  dropDuplicatesWithinWatermark (sources/warc.canonicalize_url), null
-  URLs passing through.
+- Declarative stateful: the ``stream_*`` functions that RETURN a
+  streaming DataFrame (windowed/keyed/enriched rollups, the exact / URL /
+  SimHash / MinHash-LSH dedup tiers, sessionization, heavy hitters,
+  quantile and count-min monitors, the interval join, BM25 hits). State
+  lives in Spark's state store, bounded by the watermark; the caller
+  picks the sink and the checkpoint (``run_to_memory`` in tests).
+- Versioned ledger: one ``*_batch`` function per job maps the committed
+  state to the next full state (merge_rollup_batch, scd2_merge_batch,
+  corpus_append_batch, winnow_dedup_append_batch,
+  winnow_scrub_append_batch, semantic_dedup_append_batch), and
+  ``io.apply_versioned_batch`` owns the replay check and the atomic
+  version commit.
+- Batch-partition sink or index add: each micro-batch lands in the sink's
+  ``_batch_id=`` partition through ``_write_batch_partition``
+  (decontaminate_batch, ann_search_batch, decontaminate_spans_batch), or
+  appends to a persisted index through ``index_store.add_batch``'s add
+  manifest (stream_ann_index_add, stream_winnow_index_dedup, whose
+  ``compact_every`` cadence lives in ``_run_index_add``).
 
-At scale: state is bounded by the watermark; the shuffle key is the
-window/group key, same partitioning discipline as the batch jobs.
+Every foreachBatch job runs through ``_run_micro_batches``: the one
+runner, and the one place that refuses to start a checkpoint-less query
+over output an earlier run already committed.
 """
 
 from __future__ import annotations
@@ -28,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import index_store
+from ..io import apply_versioned_batch, hadoop_child_names, read_state_manifest
 from ..operators.text import fingerprint
 
 
@@ -807,6 +816,102 @@ def stream_stream_interval_join(
     return lw.join(rw, on=cond, how=how)
 
 
+# --------------------------------------------------------------------------
+# the foreachBatch protocol: one runner, one checkpoint guard, one sink write
+# --------------------------------------------------------------------------
+
+_BATCH_COL = "_batch_id"
+
+
+def _run_micro_batches(
+    stream: DataFrame, per_batch, checkpoint: "str | None",
+    committed: "str | None", job: str,
+):
+    """Run ``stream`` to completion (``availableNow``), handing each
+    micro-batch to ``per_batch(batch_df, batch_id)``; returns the
+    finished query.
+
+    ``committed`` describes what an earlier run already committed at the
+    job's target, or is None when nothing is. A query without a
+    checkpoint numbers its batches from 0 again, so every batch would be
+    skipped as a replay of a committed one or overwrite a committed sink
+    partition: with committed output and no ``checkpoint`` this raises
+    before the query starts."""
+    if committed is not None and not checkpoint:
+        raise ValueError(
+            f"{job}: {committed} but no checkpointLocation was given — a "
+            "fresh query restarts batch_id at 0, so its batches would be "
+            "discarded as replays or overwrite the committed output. Pass "
+            "the original checkpoint to resume, or a new target to start "
+            "over."
+        )
+    writer = stream.writeStream.foreachBatch(per_batch).trigger(availableNow=True)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    query = writer.start()
+    query.awaitTermination()
+    return query
+
+
+def _ledger_committed(state_path: str) -> "str | None":
+    """The ``committed`` description of a versioned ledger."""
+    manifest = read_state_manifest(state_path)
+    if manifest is None:
+        return None
+    return (
+        f"state at {state_path!r} already has a committed manifest "
+        f"(batch_id={manifest['batch_id']})"
+    )
+
+
+def _sink_committed(spark, sink_path: str) -> "str | None":
+    """The ``committed`` description of a batch-partition sink: its
+    ``_batch_id=`` partitions, listed on the driver (no Spark job)."""
+    if any(
+        name.startswith(f"{_BATCH_COL}=")
+        for name in hadoop_child_names(spark, sink_path)
+    ):
+        return f"sink {sink_path!r} already holds {_BATCH_COL} partitions"
+    return None
+
+
+def _write_batch_partition(df: DataFrame, sink_path: str, batch_id: int) -> None:
+    """Land micro-batch ``batch_id``'s rows in the sink's ``_batch_id=``
+    partition. Dynamic partition overwrite replaces only that partition,
+    so a replayed batch rewrites its own output instead of appending
+    duplicates. Readers ignore the partition column."""
+    (
+        df.withColumn(_BATCH_COL, F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(_BATCH_COL)
+        .parquet(sink_path)
+    )
+
+
+def _run_index_add(
+    stream: DataFrame, index_path: str, add, compact_index,
+    checkpoint: "str | None", compact_every: "int | None", job: str,
+):
+    """Run an index-add stream: ``add(batch_df, batch_id)`` applies each
+    micro-batch through the index's add manifest and returns whether it
+    was applied (False for a replay); ``compact_index(spark, path)`` runs
+    after every ``compact_every``-th applied batch, so fragmentation
+    stays bounded at that many batches."""
+    manifest = index_store.read_manifest(stream.sparkSession, index_path)
+    committed = None if manifest is None else (
+        f"index at {index_path!r} already has a committed add manifest "
+        f"(batch_id={manifest['batch_id']})"
+    )
+
+    def append(batch_df: DataFrame, batch_id: int) -> None:
+        applied = add(batch_df, batch_id)
+        if applied and compact_every and (batch_id + 1) % int(compact_every) == 0:
+            compact_index(batch_df.sparkSession, index_path)
+
+    return _run_micro_batches(stream, append, checkpoint, committed, job)
+
+
 def merge_rollup_batch(
     batch_df: DataFrame,
     state_path: str,
@@ -819,18 +924,14 @@ def merge_rollup_batch(
     totals are not merged a second time. The commit is the manifest flip in
     io.commit_versioned_state, so a crash anywhere before it leaves the
     previous state intact."""
-    from ..io import commit_versioned_state, read_state_manifest, read_versioned_state
     from ..plans.rollups import merge_rollup, partial_rollup
 
-    manifest = read_state_manifest(state_path)
-    if manifest is not None and batch_id <= manifest["batch_id"]:
-        return False  # replayed batch — already merged and committed
-    spark = batch_df.sparkSession
-    delta = partial_rollup(batch_df, [key_col], amount_col)
-    existing = read_versioned_state(spark, state_path)
-    merged = merge_rollup(existing, delta, [key_col])
-    commit_versioned_state(merged, state_path, batch_id)
-    return True
+    return apply_versioned_batch(
+        batch_df.sparkSession, state_path, batch_id,
+        lambda existing: merge_rollup(
+            existing, partial_rollup(batch_df, [key_col], amount_col), [key_col]
+        ),
+    )
 
 
 def stream_incremental_rollup(
@@ -856,23 +957,15 @@ def stream_incremental_rollup(
     This is the engine's answer to the reference's "freshness by re-running
     the batch job" (SURVEY.md §1.1): per batch O(batch + |keys|).
 
-    ``checkpoint`` is REQUIRED once state exists (the replay guard keys
-    on Spark's monotone batch_id — a fresh query without a checkpoint
-    restarts it at 0 and silently discards every new batch)."""
-    _require_checkpoint_for_committed_state(
-        events.sparkSession, state_path, checkpoint,
-        "stream_incremental_rollup",
-    )
+    ``checkpoint``: required once state exists (see _run_micro_batches)."""
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         merge_rollup_batch(batch_df, state_path, key_col, amount_col, batch_id)
 
-    writer = events.writeStream.foreachBatch(merge_batch).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.start()
-    query.awaitTermination()
-    return query
+    return _run_micro_batches(
+        events, merge_batch, checkpoint, _ledger_committed(state_path),
+        "stream_incremental_rollup",
+    )
 
 
 def scd2_merge_batch(
@@ -893,35 +986,30 @@ def scd2_merge_batch(
     history intact."""
     from pyspark.sql import types as T
 
-    from ..io import (
-        commit_versioned_state,
-        read_state_manifest,
-        read_versioned_state,
-        scd2_apply,
-    )
+    from ..io import scd2_apply
 
-    manifest = read_state_manifest(state_path)
-    if manifest is not None and batch_id <= manifest["batch_id"]:
-        return False
     spark = batch_df.sparkSession
-    latest = (
-        batch_df.groupBy(key)
-        .agg(F.max(F.struct(eff_date_col, *tracked)).alias("_m"))
-        .select(key, *[F.col(f"_m.{c}").alias(c) for c in [*tracked, eff_date_col]])
-    )
-    cur = read_versioned_state(spark, state_path)
-    if cur is None:
-        key_type = batch_df.schema[key].dataType
-        fields = [T.StructField(key, key_type)]
-        fields += [T.StructField(c, batch_df.schema[c].dataType) for c in tracked]
-        fields += [
-            T.StructField("eff_from", batch_df.schema[eff_date_col].dataType),
-            T.StructField("eff_to", batch_df.schema[eff_date_col].dataType),
-        ]
-        cur = spark.createDataFrame([], T.StructType(fields))
-    hist = scd2_apply(cur, latest, key, tracked, eff_date_col)
-    commit_versioned_state(hist, state_path, batch_id)
-    return True
+
+    def step(cur: "DataFrame | None") -> DataFrame:
+        latest = (
+            batch_df.groupBy(key)
+            .agg(F.max(F.struct(eff_date_col, *tracked)).alias("_m"))
+            .select(
+                key, *[F.col(f"_m.{c}").alias(c) for c in [*tracked, eff_date_col]]
+            )
+        )
+        if cur is None:
+            key_type = batch_df.schema[key].dataType
+            fields = [T.StructField(key, key_type)]
+            fields += [T.StructField(c, batch_df.schema[c].dataType) for c in tracked]
+            fields += [
+                T.StructField("eff_from", batch_df.schema[eff_date_col].dataType),
+                T.StructField("eff_to", batch_df.schema[eff_date_col].dataType),
+            ]
+            cur = spark.createDataFrame([], T.StructType(fields))
+        return scd2_apply(cur, latest, key, tracked, eff_date_col)
+
+    return apply_versioned_batch(spark, state_path, batch_id, step)
 
 
 def stream_scd2(
@@ -938,22 +1026,14 @@ def stream_scd2(
     foreachBatch + versioned-state commits give exactly-once history
     evolution under the at-least-once replay contract.
 
-    ``checkpoint`` is REQUIRED once state exists (see
-    stream_incremental_rollup: a fresh query restarts batch_id at 0 and
-    the replay guard would silently discard new updates)."""
-    _require_checkpoint_for_committed_state(
-        updates.sparkSession, state_path, checkpoint, "stream_scd2"
-    )
+    ``checkpoint``: required once state exists (see _run_micro_batches)."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         scd2_merge_batch(batch_df, state_path, key, tracked, eff_date_col, batch_id)
 
-    writer = updates.writeStream.foreachBatch(merge).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.start()
-    query.awaitTermination()
-    return query
+    return _run_micro_batches(
+        updates, merge, checkpoint, _ledger_committed(state_path), "stream_scd2"
+    )
 
 
 def decontaminate_batch(
@@ -973,13 +1053,8 @@ def decontaminate_batch(
     foreachBatch's at-least-once contract."""
     from ..operators.dedup import decontaminate
 
-    clean = decontaminate(batch_df, benchmark, id_col, text_col, n)
-    (
-        clean.withColumn("_batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(sink_path)
+    _write_batch_partition(
+        decontaminate(batch_df, benchmark, id_col, text_col, n), sink_path, batch_id
     )
 
 
@@ -1014,19 +1089,20 @@ def stream_decontaminate(
     foreachBatch keeps the exact broadcast-semi-join plan (and its 100-TB
     shape: no corpus shuffle, benchmark hashes broadcast) at streaming
     freshness. Output is idempotent per batch (see decontaminate_batch);
-    readers ignore the ``_batch_id`` partition column."""
+    readers ignore the ``_batch_id`` partition column.
+
+    ``checkpoint``: required once the sink holds output (see
+    _run_micro_batches)."""
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         decontaminate_batch(
             batch_df, benchmark, sink_path, batch_id, id_col, text_col, n
         )
 
-    writer = docs.writeStream.foreachBatch(gate).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.start()
-    query.awaitTermination()
-    return query
+    return _run_micro_batches(
+        docs, gate, checkpoint, _sink_committed(docs.sparkSession, sink_path),
+        "stream_decontaminate",
+    )
 
 
 def corpus_append_batch(
@@ -1087,11 +1163,6 @@ def corpus_append_batch(
     probe)."""
     from pyspark.sql import Window
 
-    from ..io import (
-        commit_versioned_state,
-        read_state_manifest,
-        read_versioned_state,
-    )
     from ..operators.text import (
         fingerprint,
         langid,
@@ -1100,163 +1171,135 @@ def corpus_append_batch(
         token_count,
     )
 
-    manifest = read_state_manifest(state_path)
-    if manifest is not None and batch_id <= manifest["batch_id"]:
-        return False  # replayed batch — already appended and committed
-    spark = batch_df.sparkSession
-    cur = read_versioned_state(spark, state_path)
-    packed_state = (
-        cur.filter(F.col("position").isNotNull()) if cur is not None else None
-    )
-
-    # --- URL tier first (build_corpus order): raw rows, null-text included
-    if url_col is not None:
-        from ..sources.warc import canonicalize_url
-
-        docs = batch_df.withColumn("canonical_url", canonicalize_url(url_col))
-    else:
-        docs = batch_df.withColumn(
-            "canonical_url", F.lit(None).cast("string")
+    def step(cur: "DataFrame | None") -> DataFrame:
+        packed_state = (
+            cur.filter(F.col("position").isNotNull()) if cur is not None else None
         )
-    with_url = docs.filter(F.col("canonical_url").isNotNull())
-    no_url = docs.filter(F.col("canonical_url").isNull())
-    w_url = Window.partitionBy("canonical_url").orderBy("doc_id")
-    with_url = (
-        with_url.withColumn("_rn", F.row_number().over(w_url))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    if cur is not None:
-        url_hits = (
-            cur.filter(F.col("canonical_url").isNotNull())
-            .join(
-                F.broadcast(with_url.select("canonical_url").distinct()),
-                on="canonical_url",
-                how="semi",
+
+        # --- URL tier first (build_corpus order): raw rows, null-text included
+        if url_col is not None:
+            from ..sources.warc import canonicalize_url
+
+            docs = batch_df.withColumn("canonical_url", canonicalize_url(url_col))
+        else:
+            docs = batch_df.withColumn(
+                "canonical_url", F.lit(None).cast("string")
             )
-            .select("canonical_url")
-            .distinct()
+        with_url = docs.filter(F.col("canonical_url").isNotNull())
+        no_url = docs.filter(F.col("canonical_url").isNull())
+        w_url = Window.partitionBy("canonical_url").orderBy("doc_id")
+        with_url = (
+            with_url.withColumn("_rn", F.row_number().over(w_url))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
         )
-        with_url = with_url.join(
-            F.broadcast(url_hits), on="canonical_url", how="anti"
-        )
-    claimed = with_url.unionByName(no_url)
-
-    # --- quality/LID gate over the URL-tier survivors
-    gated = claimed.filter(F.col("text").isNotNull())
-    if scrub_pii:
-        gated = gated.withColumn("text", pii_scrub("text"))
-    gated = (
-        gated.withColumn("n_tokens", token_count("text"))
-        .withColumn("_punct", punct_ratio("text"))
-        .withColumn("_lang", langid("text"))
-        .filter(
-            (F.col("n_tokens") >= min_tokens)
-            & (F.col("_punct") <= max_punct_ratio)
-            & F.col("_lang").isin(*langs)
-        )
-        .drop("_punct", "_lang")
-    )
-    merged = gated.withColumn("fingerprint", fingerprint("text"))
-
-    # --- exact tier: in-batch min-id + packed-state probe
-    w_fp = Window.partitionBy("fingerprint").orderBy("doc_id")
-    merged = (
-        merged.withColumn("_rn", F.row_number().over(w_fp))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    if packed_state is not None:
-        fp_hits = (
-            packed_state.join(
-                F.broadcast(merged.select("fingerprint").distinct()),
-                on="fingerprint",
-                how="semi",
+        if cur is not None:
+            url_hits = (
+                cur.filter(F.col("canonical_url").isNotNull())
+                .join(
+                    F.broadcast(with_url.select("canonical_url").distinct()),
+                    on="canonical_url",
+                    how="semi",
+                )
+                .select("canonical_url")
+                .distinct()
             )
-            .select("fingerprint")
-            .distinct()
-        )
-        merged = merged.join(F.broadcast(fp_hits), on="fingerprint", how="anti")
+            with_url = with_url.join(
+                F.broadcast(url_hits), on="canonical_url", how="anti"
+            )
+        claimed = with_url.unionByName(no_url)
 
-    if packed_state is None:
-        base_pos, base_tok = 0, 0
-    else:
-        row = packed_state.agg(
-            F.count(F.lit(1)), F.coalesce(F.sum("n_tokens"), F.lit(0))
-        ).first()
-        base_pos, base_tok = int(row[0]), int(row[1])
-    # micro-batch prefix sum: trigger-bounded rows, documented above
-    w = Window.orderBy("doc_id")
-    start = (
-        F.sum("n_tokens").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        # --- quality/LID gate over the URL-tier survivors
+        gated = claimed.filter(F.col("text").isNotNull())
+        if scrub_pii:
+            gated = gated.withColumn("text", pii_scrub("text"))
+        gated = (
+            gated.withColumn("n_tokens", token_count("text"))
+            .withColumn("_punct", punct_ratio("text"))
+            .withColumn("_lang", langid("text"))
+            .filter(
+                (F.col("n_tokens") >= min_tokens)
+                & (F.col("_punct") <= max_punct_ratio)
+                & F.col("_lang").isin(*langs)
+            )
+            .drop("_punct", "_lang")
         )
-        - F.col("n_tokens")
-        + F.lit(base_tok)
-    ).cast("long")
-    carried = [
-        c for c in ("doc_id", "text", "source") if c in merged.columns
-    ]
-    new_rows = merged.select(
-        *carried,
-        "n_tokens",
-        "fingerprint",
-        "canonical_url",
-        (F.row_number().over(w) - 1 + F.lit(base_pos))
-        .cast("long")
-        .alias("position"),
-        F.floor(start / block_size).cast("long").alias("seq_id"),
-        F.pmod(start, F.lit(block_size)).cast("long").alias("seq_offset"),
-    )
-    # --- URL-claim ledger: claimants that did NOT get packed (gated out
-    # or fingerprint-dropped) still consumed their canonical URL in the
-    # batch pipeline's ordering — remember them as null-position rows so
-    # later re-fetches of the same URL keep dropping
-    ledger = (
-        with_url.join(new_rows.select("doc_id"), on="doc_id", how="anti")
-        .select(
-            "doc_id",
-            *(
-                [F.lit(None).cast("string").alias("text")]
-                if "text" in carried else []
-            ),
-            *([F.col("source")] if "source" in carried else []),
-            F.lit(None).cast("int").alias("n_tokens"),
-            F.lit(None).cast("string").alias("fingerprint"),
+        merged = gated.withColumn("fingerprint", fingerprint("text"))
+
+        # --- exact tier: in-batch min-id + packed-state probe
+        w_fp = Window.partitionBy("fingerprint").orderBy("doc_id")
+        merged = (
+            merged.withColumn("_rn", F.row_number().over(w_fp))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+        if packed_state is not None:
+            fp_hits = (
+                packed_state.join(
+                    F.broadcast(merged.select("fingerprint").distinct()),
+                    on="fingerprint",
+                    how="semi",
+                )
+                .select("fingerprint")
+                .distinct()
+            )
+            merged = merged.join(F.broadcast(fp_hits), on="fingerprint", how="anti")
+
+        if packed_state is None:
+            base_pos, base_tok = 0, 0
+        else:
+            row = packed_state.agg(
+                F.count(F.lit(1)), F.coalesce(F.sum("n_tokens"), F.lit(0))
+            ).first()
+            base_pos, base_tok = int(row[0]), int(row[1])
+        # micro-batch prefix sum: trigger-bounded rows, documented above
+        w = Window.orderBy("doc_id")
+        start = (
+            F.sum("n_tokens").over(
+                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            )
+            - F.col("n_tokens")
+            + F.lit(base_tok)
+        ).cast("long")
+        carried = [
+            c for c in ("doc_id", "text", "source") if c in merged.columns
+        ]
+        new_rows = merged.select(
+            *carried,
+            "n_tokens",
+            "fingerprint",
             "canonical_url",
-            F.lit(None).cast("long").alias("position"),
-            F.lit(None).cast("long").alias("seq_id"),
-            F.lit(None).cast("long").alias("seq_offset"),
+            (F.row_number().over(w) - 1 + F.lit(base_pos))
+            .cast("long")
+            .alias("position"),
+            F.floor(start / block_size).cast("long").alias("seq_id"),
+            F.pmod(start, F.lit(block_size)).cast("long").alias("seq_offset"),
         )
-    )
-    appended = new_rows.unionByName(ledger)
-    out = appended if cur is None else cur.unionByName(appended)
-    commit_versioned_state(out, state_path, batch_id)
-    return True
-
-
-def _require_checkpoint_for_committed_state(
-    spark, state_path: str, checkpoint: "str | None", job: str
-) -> None:
-    """Guard for stateful availableNow jobs whose exactly-once contract
-    keys on Spark's monotone batch_id: once a manifest is committed, a
-    NEW query without a checkpoint restarts batch_id at 0, every batch
-    lands at or below ``manifest.batch_id``, and the replay guard
-    silently drops the new data. Raise up front instead."""
-    if checkpoint:
-        return
-    from ..io import read_state_manifest
-
-    manifest = read_state_manifest(state_path)
-    if manifest is not None:
-        raise ValueError(
-            f"{job}: state at {state_path!r} already has a committed "
-            f"manifest (batch_id={manifest['batch_id']}) but no "
-            "checkpointLocation was given — a fresh query restarts "
-            "batch_id at 0 and the exactly-once replay guard would "
-            "silently discard every new batch. Pass the original "
-            "checkpoint to resume, or a new state_path to start over."
+        # --- URL-claim ledger: claimants that did NOT get packed (gated out
+        # or fingerprint-dropped) still consumed their canonical URL in the
+        # batch pipeline's ordering — remember them as null-position rows so
+        # later re-fetches of the same URL keep dropping
+        ledger = (
+            with_url.join(new_rows.select("doc_id"), on="doc_id", how="anti")
+            .select(
+                "doc_id",
+                *(
+                    [F.lit(None).cast("string").alias("text")]
+                    if "text" in carried else []
+                ),
+                *([F.col("source")] if "source" in carried else []),
+                F.lit(None).cast("int").alias("n_tokens"),
+                F.lit(None).cast("string").alias("fingerprint"),
+                "canonical_url",
+                F.lit(None).cast("long").alias("position"),
+                F.lit(None).cast("long").alias("seq_id"),
+                F.lit(None).cast("long").alias("seq_offset"),
+            )
         )
+        appended = new_rows.unionByName(ledger)
+        return appended if cur is None else cur.unionByName(appended)
+
+    return apply_versioned_batch(batch_df.sparkSession, state_path, batch_id, step)
 
 
 def stream_build_corpus(
@@ -1284,14 +1327,7 @@ def stream_build_corpus(
     a backfill rebuild erases. Readers take ``position IS NOT NULL``
     rows (the ledger rows carry URL state only).
 
-    ``checkpoint`` is REQUIRED once state exists: a fresh query without
-    a checkpoint restarts batch_id at 0, and the exactly-once replay
-    guard (``batch_id <= manifest.batch_id``) would silently discard
-    every new batch as a replay — so this raises instead of losing
-    data."""
-    _require_checkpoint_for_committed_state(
-        docs.sparkSession, state_path, checkpoint, "stream_build_corpus"
-    )
+    ``checkpoint``: required once state exists (see _run_micro_batches)."""
 
     def append(batch_df: DataFrame, batch_id: int) -> None:
         corpus_append_batch(
@@ -1301,12 +1337,10 @@ def stream_build_corpus(
             scrub_pii=scrub_pii, url_col=url_col,
         )
 
-    writer = docs.writeStream.foreachBatch(append).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.start()
-    query.awaitTermination()
-    return query
+    return _run_micro_batches(
+        docs, append, checkpoint, _ledger_committed(state_path),
+        "stream_build_corpus",
+    )
 
 
 def winnow_dedup_append_batch(
@@ -1363,72 +1397,64 @@ def winnow_dedup_append_batch(
     family's documented trade-off. The two ledger forms don't mix:
     appending evidence=True onto a plain-fps ledger (or vice versa)
     raises."""
-    from ..io import (
-        commit_versioned_state,
-        read_state_manifest,
-        read_versioned_state,
-    )
     from ..operators.dedup import winnow_dedup_against_index, winnow_pairs
     from ..operators.text import winnow_fingerprints
 
-    manifest = read_state_manifest(state_path)
-    if manifest is not None and batch_id <= manifest["batch_id"]:
-        return False
-    cur = read_versioned_state(batch_df.sparkSession, state_path)
-    if cur is not None and ("pfps" in cur.columns) != evidence:
-        have = "positioned (evidence)" if "pfps" in cur.columns else "plain"
-        raise ValueError(
-            f"winnow dedup ledger at {state_path!r} is the {have} form; "
-            f"evidence={evidence} appends would mix ledger schemas — "
-            "use one form per state path"
+    def step(cur: "DataFrame | None") -> DataFrame:
+        if cur is not None and ("pfps" in cur.columns) != evidence:
+            have = "positioned (evidence)" if "pfps" in cur.columns else "plain"
+            raise ValueError(
+                f"winnow dedup ledger at {state_path!r} is the {have} form; "
+                f"evidence={evidence} appends would mix ledger schemas — "
+                "use one form per state path"
+            )
+        if evidence:
+            return _winnow_dedup_append_evidence(
+                batch_df, cur,
+                k=k, w=w, threshold=threshold, portable=portable,
+                max_fingerprint_df=max_fingerprint_df,
+                id_col=id_col, text_col=text_col,
+            )
+        # fingerprint the batch ONCE (the CPU-heavy stage) and materialize:
+        # the frame feeds the in-batch pair tier, the ledger probe, AND the
+        # appended ledger rows via the fps seams — without the seams each
+        # consumer re-normalized and re-hashed the text (review-pass finding)
+        bfps = batch_df.select(
+            F.col(id_col).alias("_id"),
+            winnow_fingerprints(
+                text_col, k=k, w=w, portable=portable, alias="fps"
+            ),
+        ).localCheckpoint()
+        in_batch = (
+            winnow_pairs(
+                batch_df, id_col, text_col, k=k, w=w, threshold=threshold,
+                portable=portable, max_fingerprint_df=max_fingerprint_df,
+                fps_df=bfps,
+            )
+            .select(F.col("id_b").alias(id_col))
+            .distinct()
         )
-    if evidence:
-        return _winnow_dedup_append_evidence(
-            batch_df, state_path, batch_id, cur,
-            k=k, w=w, threshold=threshold, portable=portable,
-            max_fingerprint_df=max_fingerprint_df,
-            id_col=id_col, text_col=text_col,
+        drops = in_batch
+        if cur is not None:
+            survivors_vs_state = winnow_dedup_against_index(
+                batch_df,
+                cur.select(F.col(id_col).alias("_id"), "fps"),
+                id_col, text_col, k=k, w=w, threshold=threshold,
+                portable=portable, max_fingerprint_df=max_fingerprint_df,
+                batch_fps=bfps,
+            ).select(id_col)
+            state_hits = batch_df.select(id_col).join(
+                survivors_vs_state, on=id_col, how="anti"
+            )
+            drops = drops.unionByName(state_hits).distinct()
+        flagged = bfps.select(F.col("_id").alias(id_col), "fps").join(
+            drops.withColumn("_dropped", F.lit(True)), on=id_col, how="left"
+        ).select(
+            id_col, "fps", F.col("_dropped").isNull().alias("survivor")
         )
-    # fingerprint the batch ONCE (the CPU-heavy stage) and materialize:
-    # the frame feeds the in-batch pair tier, the ledger probe, AND the
-    # appended ledger rows via the fps seams — without the seams each
-    # consumer re-normalized and re-hashed the text (review-pass finding)
-    bfps = batch_df.select(
-        F.col(id_col).alias("_id"),
-        winnow_fingerprints(
-            text_col, k=k, w=w, portable=portable, alias="fps"
-        ),
-    ).localCheckpoint()
-    in_batch = (
-        winnow_pairs(
-            batch_df, id_col, text_col, k=k, w=w, threshold=threshold,
-            portable=portable, max_fingerprint_df=max_fingerprint_df,
-            fps_df=bfps,
-        )
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    drops = in_batch
-    if cur is not None:
-        survivors_vs_state = winnow_dedup_against_index(
-            batch_df,
-            cur.select(F.col(id_col).alias("_id"), "fps"),
-            id_col, text_col, k=k, w=w, threshold=threshold,
-            portable=portable, max_fingerprint_df=max_fingerprint_df,
-            batch_fps=bfps,
-        ).select(id_col)
-        state_hits = batch_df.select(id_col).join(
-            survivors_vs_state, on=id_col, how="anti"
-        )
-        drops = drops.unionByName(state_hits).distinct()
-    flagged = bfps.select(F.col("_id").alias(id_col), "fps").join(
-        drops.withColumn("_dropped", F.lit(True)), on=id_col, how="left"
-    ).select(
-        id_col, "fps", F.col("_dropped").isNull().alias("survivor")
-    )
-    out = flagged if cur is None else cur.unionByName(flagged)
-    commit_versioned_state(out, state_path, batch_id)
-    return True
+        return flagged if cur is None else cur.unionByName(flagged)
+
+    return apply_versioned_batch(batch_df.sparkSession, state_path, batch_id, step)
 
 
 def _winnow_evidence_per_doc(
@@ -1504,8 +1530,6 @@ def _winnow_evidence_per_doc(
 
 def _winnow_dedup_append_evidence(
     batch_df: DataFrame,
-    state_path: str,
-    batch_id: int,
     cur: "DataFrame | None",
     k: int,
     w: int,
@@ -1514,14 +1538,14 @@ def _winnow_dedup_append_evidence(
     max_fingerprint_df: "int | None",
     id_col: str,
     text_col: str,
-) -> bool:
-    """The evidence=True body of winnow_dedup_append_batch (see its
-    docstring for the contract): positioned ledger, drops justified by
-    recorded covering spans + anchor counts. The batch is fingerprinted
-    ONCE (robust positioned — the value sets the decisions need reduce
-    losslessly via _pos_vals); the in-batch tier and the ledger probe
-    both ride the precomputed-pfps seams."""
-    from ..io import commit_versioned_state
+) -> DataFrame:
+    """The evidence=True step of winnow_dedup_append_batch (see its
+    docstring for the contract): the positioned ledger ``cur`` plus this
+    batch's rows, drops justified by recorded covering spans + anchor
+    counts. The batch is fingerprinted ONCE (robust positioned — the
+    value sets the decisions need reduce losslessly via _pos_vals); the
+    in-batch tier and the ledger probe both ride the precomputed-pfps
+    seams."""
     from ..operators.text import winnow_fingerprints
 
     bpf = batch_df.select(
@@ -1547,9 +1571,7 @@ def _winnow_dedup_append_evidence(
             "drop_evidence",
         )
     )
-    out = flagged if cur is None else cur.unionByName(flagged)
-    commit_versioned_state(out, state_path, batch_id)
-    return True
+    return flagged if cur is None else cur.unionByName(flagged)
 
 
 def stream_near_dedup_winnow(
@@ -1583,12 +1605,7 @@ def stream_near_dedup_winnow(
     a compliance reviewer asks for when a streamed doc silently
     disappears from the corpus.
 
-    ``checkpoint`` is REQUIRED once state exists (see
-    stream_build_corpus: a fresh query restarts batch_id at 0 and the
-    replay guard would silently discard new data)."""
-    _require_checkpoint_for_committed_state(
-        docs.sparkSession, state_path, checkpoint, "stream_near_dedup_winnow"
-    )
+    ``checkpoint``: required once state exists (see _run_micro_batches)."""
 
     def append(batch_df: DataFrame, batch_id: int) -> None:
         winnow_dedup_append_batch(
@@ -1598,12 +1615,10 @@ def stream_near_dedup_winnow(
             id_col=id_col, text_col=text_col, evidence=evidence,
         )
 
-    writer = docs.writeStream.foreachBatch(append).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.start()
-    query.awaitTermination()
-    return query
+    return _run_micro_batches(
+        docs, append, checkpoint, _ledger_committed(state_path),
+        "stream_near_dedup_winnow",
+    )
 
 
 def winnow_scrub_append_batch(
@@ -1642,11 +1657,6 @@ def winnow_scrub_append_batch(
     both diverge from the one-shot run — the family's documented cap
     trade-offs. Exactly-once: replayed batch_ids skip, a crash before
     the manifest flip leaves the previous ledger intact."""
-    from ..io import (
-        commit_versioned_state,
-        read_state_manifest,
-        read_versioned_state,
-    )
     from ..operators.dedup import (
         _scrub_covered_spans,
         winnow_match_spans,
@@ -1654,44 +1664,41 @@ def winnow_scrub_append_batch(
     )
     from ..operators.text import winnow_fingerprints
 
-    manifest = read_state_manifest(state_path)
-    if manifest is not None and batch_id <= manifest["batch_id"]:
-        return False
-    cur = read_versioned_state(batch_df.sparkSession, state_path)
-    # fingerprint the batch ONCE; empty sets stay (they anchor nothing
-    # but their docs still need ledger + output rows)
-    bpf = batch_df.select(
-        F.col(id_col).alias("_id"),
-        winnow_fingerprints(
-            text_col, k=k, w=w, portable=portable, robust=True, alias="pfps"
-        ),
-    ).localCheckpoint()
-    in_spans = winnow_match_spans(
-        batch_df, id_col, text_col, k=k, w=w, threshold=threshold,
-        portable=portable, max_fingerprint_df=max_fingerprint_df,
-        pfps_df=bpf,
-    ).select(F.col("id_b").alias("_sid"), "b_start", "b_end")
-    spans = in_spans
-    if cur is not None:
-        idx_spans = winnow_spans_against_index(
-            batch_df,
-            cur.select(F.col(id_col).alias("_id"), "pfps"),
-            id_col, text_col, k=k, w=w, threshold=threshold,
+    def step(cur: "DataFrame | None") -> DataFrame:
+        # fingerprint the batch ONCE; empty sets stay (they anchor nothing
+        # but their docs still need ledger + output rows)
+        bpf = batch_df.select(
+            F.col(id_col).alias("_id"),
+            winnow_fingerprints(
+                text_col, k=k, w=w, portable=portable, robust=True, alias="pfps"
+            ),
+        ).localCheckpoint()
+        in_spans = winnow_match_spans(
+            batch_df, id_col, text_col, k=k, w=w, threshold=threshold,
             portable=portable, max_fingerprint_df=max_fingerprint_df,
-            batch_pfps=bpf,
-        ).select(F.col("id_batch").alias("_sid"), "b_start", "b_end")
-        spans = spans.unionByName(idx_spans)
-    per_doc = spans.groupBy("_sid").agg(
-        F.collect_list(F.struct("b_start", "b_end")).alias("_spans"),
-        F.count(F.lit(1)).cast("int").alias("n_spans"),
-    )
-    scrubbed = _scrub_covered_spans(batch_df, id_col, text_col, per_doc)
-    flagged = bpf.select(F.col("_id").alias(id_col), "pfps").join(
-        scrubbed, on=id_col
-    )
-    out = flagged if cur is None else cur.unionByName(flagged)
-    commit_versioned_state(out, state_path, batch_id)
-    return True
+            pfps_df=bpf,
+        ).select(F.col("id_b").alias("_sid"), "b_start", "b_end")
+        spans = in_spans
+        if cur is not None:
+            idx_spans = winnow_spans_against_index(
+                batch_df,
+                cur.select(F.col(id_col).alias("_id"), "pfps"),
+                id_col, text_col, k=k, w=w, threshold=threshold,
+                portable=portable, max_fingerprint_df=max_fingerprint_df,
+                batch_pfps=bpf,
+            ).select(F.col("id_batch").alias("_sid"), "b_start", "b_end")
+            spans = spans.unionByName(idx_spans)
+        per_doc = spans.groupBy("_sid").agg(
+            F.collect_list(F.struct("b_start", "b_end")).alias("_spans"),
+            F.count(F.lit(1)).cast("int").alias("n_spans"),
+        )
+        scrubbed = _scrub_covered_spans(batch_df, id_col, text_col, per_doc)
+        flagged = bpf.select(F.col("_id").alias(id_col), "pfps").join(
+            scrubbed, on=id_col
+        )
+        return flagged if cur is None else cur.unionByName(flagged)
+
+    return apply_versioned_batch(batch_df.sparkSession, state_path, batch_id, step)
 
 
 def stream_span_scrub_winnow(
@@ -1717,12 +1724,7 @@ def stream_span_scrub_winnow(
     winnow_span_scrub bit-for-bit when no stop-gram cap is set (tested).
     Readers take ``(doc_id, scrubbed, n_cut, n_spans)``.
 
-    ``checkpoint`` is REQUIRED once state exists (see
-    stream_build_corpus: a fresh query restarts batch_id at 0 and the
-    replay guard would silently discard new data)."""
-    _require_checkpoint_for_committed_state(
-        docs.sparkSession, state_path, checkpoint, "stream_span_scrub_winnow"
-    )
+    ``checkpoint``: required once state exists (see _run_micro_batches)."""
 
     def append(batch_df: DataFrame, batch_id: int) -> None:
         winnow_scrub_append_batch(
@@ -1732,12 +1734,10 @@ def stream_span_scrub_winnow(
             id_col=id_col, text_col=text_col,
         )
 
-    writer = docs.writeStream.foreachBatch(append).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.start()
-    query.awaitTermination()
-    return query
+    return _run_micro_batches(
+        docs, append, checkpoint, _ledger_committed(state_path),
+        "stream_span_scrub_winnow",
+    )
 
 
 def corpus_manifest_from_state(spark, state_path: str) -> DataFrame:
@@ -1793,57 +1793,48 @@ def semantic_dedup_append_batch(
     manifest flip leaves the previous state intact. A production
     deployment shards the ledger by cell (the partitionBy(cell) IVF
     index layout) and manifests the appends."""
-    from ..io import (
-        commit_versioned_state,
-        read_state_manifest,
-        read_versioned_state,
-    )
     from ..operators.similarity import (
         cosine,
         cosine_pairs_blocked,
         ivf_assign,
     )
 
-    manifest = read_state_manifest(state_path)
-    if manifest is not None and batch_id <= manifest["batch_id"]:
-        return False
-    spark = batch_df.sparkSession
-    cur = read_versioned_state(spark, state_path)
-    assigned = ivf_assign(batch_df, centroids, id_col=id_col, vec_col=vec_col)
-    in_batch = (
-        cosine_pairs_blocked(
-            assigned, "cell", id_col=id_col, vec_col=vec_col,
-            threshold=threshold,
-        )
-        .select(F.col("id_b").alias(id_col))
-        .distinct()
-    )
-    if cur is not None:
-        a = assigned.select(
-            F.col(id_col).alias("_bid"), F.col(vec_col).alias("_bvec"), "cell"
-        )
-        state_hits = (
-            cur.select(F.col(vec_col).alias("_svec"), "cell")
-            .join(F.broadcast(a), on="cell")
-            .filter(cosine(F.col("_bvec"), F.col("_svec")) >= threshold)
-            .select(F.col("_bid").alias(id_col))
+    def step(cur: "DataFrame | None") -> DataFrame:
+        assigned = ivf_assign(batch_df, centroids, id_col=id_col, vec_col=vec_col)
+        in_batch = (
+            cosine_pairs_blocked(
+                assigned, "cell", id_col=id_col, vec_col=vec_col,
+                threshold=threshold,
+            )
+            .select(F.col("id_b").alias(id_col))
             .distinct()
         )
-        drops = in_batch.unionByName(state_hits).distinct()
-    else:
-        drops = in_batch
-    flagged = (
-        assigned.join(
-            drops.withColumn("_dropped", F.lit(True)), on=id_col, how="left"
+        if cur is not None:
+            a = assigned.select(
+                F.col(id_col).alias("_bid"), F.col(vec_col).alias("_bvec"), "cell"
+            )
+            state_hits = (
+                cur.select(F.col(vec_col).alias("_svec"), "cell")
+                .join(F.broadcast(a), on="cell")
+                .filter(cosine(F.col("_bvec"), F.col("_svec")) >= threshold)
+                .select(F.col("_bid").alias(id_col))
+                .distinct()
+            )
+            drops = in_batch.unionByName(state_hits).distinct()
+        else:
+            drops = in_batch
+        flagged = (
+            assigned.join(
+                drops.withColumn("_dropped", F.lit(True)), on=id_col, how="left"
+            )
+            .select(
+                id_col, vec_col, "cell",
+                F.col("_dropped").isNull().alias("survivor"),
+            )
         )
-        .select(
-            id_col, vec_col, "cell",
-            F.col("_dropped").isNull().alias("survivor"),
-        )
-    )
-    out = flagged if cur is None else cur.unionByName(flagged)
-    commit_versioned_state(out, state_path, batch_id)
-    return True
+        return flagged if cur is None else cur.unionByName(flagged)
+
+    return apply_versioned_batch(batch_df.sparkSession, state_path, batch_id, step)
 
 
 def stream_semantic_dedup(
@@ -1868,12 +1859,7 @@ def stream_semantic_dedup(
     streaming tradeoff a backfill rebuild erases. Readers take
     ``survivor = true`` rows.
 
-    ``checkpoint`` is REQUIRED once state exists (see
-    stream_build_corpus: a fresh query restarts batch_id at 0 and the
-    replay guard would silently discard new data)."""
-    _require_checkpoint_for_committed_state(
-        vectors.sparkSession, state_path, checkpoint, "stream_semantic_dedup"
-    )
+    ``checkpoint``: required once state exists (see _run_micro_batches)."""
 
     def append(batch_df: DataFrame, batch_id: int) -> None:
         semantic_dedup_append_batch(
@@ -1881,12 +1867,10 @@ def stream_semantic_dedup(
             threshold=threshold, id_col=id_col, vec_col=vec_col,
         )
 
-    writer = vectors.writeStream.foreachBatch(append).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.start()
-    query.awaitTermination()
-    return query
+    return _run_micro_batches(
+        vectors, append, checkpoint, _ledger_committed(state_path),
+        "stream_semantic_dedup",
+    )
 
 
 def ann_search_batch(
@@ -1925,7 +1909,6 @@ def ann_search_batch(
     index is never re-read whole, never shuffled. Per-query results are
     bit-identical to the batch probes (ivf_index_topk /
     ivf_pq_index_topk) over the same index."""
-    from .. import index_store
     from ..operators.similarity import ann_index_search_many
 
     spark = batch_df.sparkSession
@@ -1971,14 +1954,7 @@ def ann_search_batch(
     # createDataFrame would parallelize them into defaultParallelism
     # Python-runner slices per trigger and write that many tiny files
     # into the sink partition (round 16, the io.local_frame contract)
-    out = local_frame(spark, hits, schema)
-    (
-        out.withColumn("_batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(sink_path)
-    )
+    _write_batch_partition(local_frame(spark, hits, schema), sink_path, batch_id)
 
 
 def stream_ann_search(
@@ -2006,7 +1982,10 @@ def stream_ann_search(
     refreshes are a restart, exactly like the frozen-stats contract of
     stream_bm25_score. Emits rows bit-identical to running the batch
     probe per query (tested against ivf_pq_index_topk / ivf_index_topk
-    on a fixture query stream)."""
+    on a fixture query stream).
+
+    ``checkpoint``: required once the sink holds output (see
+    _run_micro_batches)."""
 
     def probe(batch_df: DataFrame, batch_id: int) -> None:
         ann_search_batch(
@@ -2018,12 +1997,10 @@ def stream_ann_search(
             adc_prune=adc_prune, adaptive_nprobe=adaptive_nprobe,
         )
 
-    writer = queries.writeStream.foreachBatch(probe).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.start()
-    query.awaitTermination()
-    return query
+    return _run_micro_batches(
+        queries, probe, checkpoint,
+        _sink_committed(queries.sparkSession, sink_path), "stream_ann_search",
+    )
 
 
 def stream_ann_index_add(
@@ -2050,10 +2027,8 @@ def stream_ann_index_add(
     add-batches instead of growing with stream lifetime — the rollup
     sink's compaction cadence applied to the ANN layout.
 
-    ``checkpoint`` is REQUIRED once the add manifest exists (the
-    stream_build_corpus rationale: a fresh query restarts batch_id at 0
-    and the replay guard would silently discard every new batch)."""
-    from .. import index_store
+    ``checkpoint``: required once the add manifest exists (see
+    _run_micro_batches)."""
     from ..operators import similarity
 
     def add(batch_df: DataFrame, batch_id: int) -> bool:
@@ -2062,7 +2037,7 @@ def stream_ann_index_add(
             id_col=id_col, vec_col=vec_col,
         )
 
-    return index_store.run_add_stream(
+    return _run_index_add(
         vectors, index_path, add, similarity.ann_index_compact,
         checkpoint, compact_every, "stream_ann_index_add",
     )
@@ -2116,7 +2091,6 @@ def winnow_index_dedup_batch(
     needs, so the append side is unchanged; decisions then derive from
     the span pair frames (equal to the value tiers' at cap=None;
     tested bit-equal to the evidence ledger over the same feed)."""
-    from .. import index_store
     from ..operators import dedup as dd
     from ..operators.text import winnow_fingerprints
 
@@ -2183,13 +2157,7 @@ def winnow_index_dedup_batch(
             )
             .select(id_col, F.col("_dropped").isNull().alias("survivor"))
         )
-    (
-        flagged.withColumn("_batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(sink_path)
-    )
+    _write_batch_partition(flagged, sink_path, batch_id)
     dd.winnow_index_add_batch(
         spark, index_path, batch_df, batch_id,
         id_col=id_col, text_col=text_col, pfps_df=bpf,
@@ -2221,9 +2189,8 @@ def stream_winnow_index_dedup(
     (tested). ``evidence=True`` adds the drop-evidence structs to the
     sink rows (winnow_index_dedup_batch's evidence contract).
 
-    ``checkpoint`` is REQUIRED once the index's add manifest exists (the
-    stream_build_corpus rationale)."""
-    from .. import index_store
+    ``checkpoint``: required once the index's add manifest exists (see
+    _run_micro_batches)."""
     from ..operators import dedup as dd
 
     def add(batch_df: DataFrame, batch_id: int) -> bool:
@@ -2233,7 +2200,7 @@ def stream_winnow_index_dedup(
             id_col=id_col, text_col=text_col, evidence=evidence,
         )
 
-    return index_store.run_add_stream(
+    return _run_index_add(
         docs, index_path, add, dd.winnow_index_compact,
         checkpoint, compact_every, "stream_winnow_index_dedup",
     )
@@ -2268,13 +2235,7 @@ def decontaminate_spans_batch(
         id_col=id_col, text_col=text_col, threshold=threshold,
         max_fingerprint_df=max_fingerprint_df,
     )
-    (
-        out.withColumn("_batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(sink_path)
-    )
+    _write_batch_partition(out, sink_path, batch_id)
 
 
 def stream_decontaminate_spans(
@@ -2291,7 +2252,10 @@ def stream_decontaminate_spans(
     the covering spans they share with a frozen benchmark's persisted
     positioned winnow index and flow on scrubbed (decontaminate_spans_
     batch per trigger; stateless, no watermark). Emits rows bit-identical
-    to the batch winnow_index_scrub over the same input (tested)."""
+    to the batch winnow_index_scrub over the same input (tested).
+
+    ``checkpoint``: required once the sink holds output (see
+    _run_micro_batches)."""
 
     def scrub(batch_df: DataFrame, batch_id: int) -> None:
         decontaminate_spans_batch(
@@ -2300,12 +2264,10 @@ def stream_decontaminate_spans(
             id_col=id_col, text_col=text_col,
         )
 
-    writer = docs.writeStream.foreachBatch(scrub).trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    query = writer.start()
-    query.awaitTermination()
-    return query
+    return _run_micro_batches(
+        docs, scrub, checkpoint, _sink_committed(docs.sparkSession, sink_path),
+        "stream_decontaminate_spans",
+    )
 
 
 def stream_bm25_score(

@@ -2406,3 +2406,104 @@ def test_stream_ann_add_remove_interplay(spark, tmp_path):
             spark.readStream.schema(schema).parquet(landing), idx,
             checkpoint=ckpt,
         )
+
+
+def test_apply_versioned_batch_replay_and_failed_step(spark, tmp_path):
+    """The ledger commit protocol: a replayed batch_id runs no step and
+    leaves the manifest and version as they were; a step that raises —
+    while building the next state or while it is written — leaves the
+    previous version committed, and the next batch commits over it."""
+    import os
+
+    from bigdata_usaspending_spark import io
+
+    state = str(tmp_path / "st")
+    one = spark.range(1).withColumnRenamed("id", "x")
+    assert io.apply_versioned_batch(spark, state, 0, lambda cur: one)
+    assert io.apply_versioned_batch(
+        spark, state, 1, lambda cur: cur.unionByName(one)
+    )
+    committed = {"version": 1, "batch_id": 1}
+    assert io.read_state_manifest(state) == committed
+
+    seen = []
+    for replay in (1, 0):
+        assert not io.apply_versioned_batch(spark, state, replay, seen.append)
+    assert seen == []
+    assert io.read_state_manifest(state) == committed
+
+    def fails_to_build(cur):
+        raise RuntimeError("step failed")
+
+    with pytest.raises(RuntimeError, match="step failed"):
+        io.apply_versioned_batch(spark, state, 2, fails_to_build)
+    with pytest.raises(Exception, match="write failed"):
+        io.apply_versioned_batch(
+            spark, state, 2,
+            lambda cur: cur.select(
+                F.raise_error(F.lit("write failed")).cast("long").alias("x")
+            ),
+        )
+    assert io.read_state_manifest(state) == committed
+    assert io.read_versioned_state(spark, state).count() == 2
+
+    assert io.apply_versioned_batch(
+        spark, state, 2, lambda cur: cur.unionByName(one)
+    )
+    assert io.read_state_manifest(state) == {"version": 2, "batch_id": 2}
+    assert io.read_versioned_state(spark, state).count() == 3
+    assert sorted(n for n in os.listdir(state) if n.startswith("v=")) == [
+        "v=1", "v=2"
+    ]
+
+
+def test_checkpoint_guard_ledger_job(spark, tmp_path):
+    """A ledger stream runs without a checkpoint while no state exists;
+    once a manifest is committed, a checkpoint-less run raises before
+    starting instead of discarding its batches as replays."""
+    from bigdata_usaspending_spark.io import read_state_manifest
+
+    events = spark.createDataFrame(
+        [(1, "a", 10.0)], "event_id long, event_type string, value double"
+    )
+    landing = str(tmp_path / "landing")
+    events.write.parquet(landing)
+    schema = spark.read.parquet(landing).schema
+    state = str(tmp_path / "rollup")
+    jobs.stream_incremental_rollup(
+        spark.readStream.schema(schema).parquet(landing), state, "event_type"
+    ).stop()
+    assert read_state_manifest(state) == {"version": 0, "batch_id": 0}
+    with pytest.raises(ValueError, match="checkpointLocation"):
+        jobs.stream_incremental_rollup(
+            spark.readStream.schema(schema).parquet(landing), state, "event_type"
+        )
+    assert read_state_manifest(state) == {"version": 0, "batch_id": 0}
+
+
+def test_checkpoint_guard_sink_job(spark, tmp_path):
+    """A batch-partition sink job runs without a checkpoint into an empty
+    sink; rerun into the now non-empty sink without a checkpoint, its
+    batch ids would restart at 0 and overwrite the first run's
+    partitions, so it raises before starting and the sink is unchanged."""
+    docs = spark.createDataFrame(
+        [(1, "a clean document about rivers and stone bridges")],
+        "doc_id long, text string",
+    )
+    bench = spark.createDataFrame(
+        [("what is the capital of france",)], "text string"
+    )
+    landing = str(tmp_path / "landing")
+    docs.write.parquet(landing)
+    schema = spark.read.parquet(landing).schema
+    sink = str(tmp_path / "clean")
+    jobs.stream_decontaminate(
+        spark.readStream.schema(schema).parquet(landing), bench, sink
+    ).stop()
+    first = sorted(spark.read.parquet(sink).collect())
+    assert [(r.doc_id, r._batch_id) for r in first] == [(1, 0)]
+    with pytest.raises(ValueError, match="checkpointLocation"):
+        jobs.stream_decontaminate(
+            spark.readStream.schema(schema).parquet(landing), bench, sink
+        )
+    assert sorted(spark.read.parquet(sink).collect()) == first
