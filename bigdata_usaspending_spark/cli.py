@@ -664,8 +664,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.job == "ann-index":
-        import os
-
         from pyspark.sql import functions as F
 
         from . import index_store
@@ -791,51 +789,16 @@ def main(argv: list[str] | None = None) -> int:
             # consumer otherwise (the index-write pattern)
             cents = local_frame(spark, cents.collect(), cents.schema)
             if args.pq:
-                assigned = similarity.ivf_assign(
-                    df, cents, id_col=args.id_col, vec_col=args.vec_col
+                similarity.ivf_pq_index_build(
+                    df, cents, args.index, args.m, args.kc, args.train_cap,
+                    id_col=args.id_col, vec_col=args.vec_col,
+                    rotation=rotation,
                 )
-                resid = similarity.ivf_residuals(
-                    assigned, cents, vec_col=args.vec_col
-                )
-                cb = similarity.pq_train_driver(
-                    similarity._bounded_train_frame(
-                        resid, args.id_col, args.train_cap
-                    ),
-                    vec_col="residual", m=args.m, k=args.kc,
-                )
-                # the assignment already exists for training — encode it
-                # and write directly instead of paying ivf_pq_index_write's
-                # second full assign+encode pass
-                encoded = similarity.ivf_pq_encode(
-                    assigned, cents, cb, vec_col=args.vec_col
-                )
-                similarity._ivf_pq_index_write_encoded(
-                    encoded, cents, cb, args.index
-                )
-                if rotation is not None:
-                    similarity._write_index_rotation(
-                        spark, rotation, args.index
-                    )
             else:
-                # a rebuild over a former IVF-PQ directory must not leave
-                # stale codebooks behind — add/search autodetect PQ from
-                # that file and would probe a codes-less vectors layout.
-                # Hadoop FS, not a local rmtree: a local os-path delete
-                # silently no-ops on s3a/hdfs and the stale file survives.
-                index_store.delete(spark, args.index, "codebooks.parquet")
                 similarity.ivf_index_write(
                     df, cents, args.index,
                     id_col=args.id_col, vec_col=args.vec_col,
                 )
-            if rotation is None:
-                # a rebuild without --opq over a former OPQ directory
-                # must not leave a stale rotation behind — probes apply
-                # it automatically when the file exists.  Same Hadoop-FS
-                # contract as the codebooks clear above: on an object
-                # store a driver-local rmtree silently no-ops and every
-                # subsequent probe would rotate queries against
-                # un-rotated vectors.
-                index_store.delete(spark, args.index, "rotation.parquet")
             n = similarity._read_index_vectors(spark, args.index).count()
             kind = "OPQ-IVF-PQ" if args.opq else (
                 "IVF-PQ" if args.pq else "IVF"

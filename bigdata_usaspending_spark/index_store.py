@@ -310,14 +310,16 @@ def compact(spark, path: str, component: str, verb: str, rewrite) -> dict:
     return out
 
 
-def clear_on_rebuild(spark, path: str) -> None:
+def clear_on_rebuild(spark, path: str, *stale: str) -> None:
     """Run by every build over a directory that may hold a former index.
     A stale tombstone set would silently hide any rebuilt row sharing a
     removed id; a stale add manifest would make a fresh stream (batch_id
     restarting at 0) be skipped as replays of the dead stream's
-    batches."""
-    delete(spark, path, TOMBSTONES)
-    delete(spark, path, ADD_MANIFEST)
+    batches. ``stale`` names the family's own components the new layout
+    does not have (a plain IVF build drops a former IVF-PQ index's
+    codebooks and rotation)."""
+    for name in (TOMBSTONES, ADD_MANIFEST, *stale):
+        delete(spark, path, name)
 
 
 # --------------------------------------------------------------------------

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import index_store
+from ..io import num_partitions
 from .text import fingerprint, ngram_occurrences, tokens
 
 # Mersenne prime 2^31-1 for the minhash affine family; base hashes are < p
@@ -72,20 +73,10 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
         # untouched (round 16: _bm25_per_doc now routes through here
         # and is shared by stream_bm25_score)
         return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    # probe the JVM RDD directly: df.rdd wraps the same physical RDD in
-    # the Python serializer layer, ~100x the cost per call (measured
-    # round 15: ~80-260 ms vs ~1 ms) — and this helper runs on every
-    # fingerprint/shingle path, several times per composed build.
-    # _jdf/queryExecution is a private seam: keep the public df.rdd
-    # probe as the fallback so a Spark minor bump can't break every
-    # fingerprint path (round-15 VERDICT note)
-    try:
-        n_parts = df._jdf.queryExecution().toRdd().getNumPartitions()
-    except Exception:
-        n_parts = df.rdd.getNumPartitions()
-    if n_parts < target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    # io.num_partitions: this helper runs on every fingerprint/shingle
+    # path, several times per composed build, so the probe must be cheap
+    if num_partitions(df) < target:
         return df.repartition(target)
     return df
 

@@ -14,6 +14,13 @@ SURVEY.md §7.4 extension — first-class 100-TB component:
   nearest cells. The centroid assignment is one broadcast-join pass;
   the search scans ~nprobe/C of the data.
 - BucketedRandomProjectionLSH (pyspark.ml) wrapper as the library alternative.
+- ivf_pq_index_build: THE IVF-PQ index build (the CLI's ``ann-index build
+  --pq``, the lifecycle audit, the registry's index audits) — one assign
+  pass trains the residual codebooks on a bounded sample and is encoded
+  and written through the one layout writer, OPQ rotation last.
+- exact_topk_witness: THE audit contract (every ``*_recall_audit`` and
+  index audit) — the checkpointed exact euclidean top-k plus ``recall_ok``
+  (the probe hit >= floor of it, over the witness's actual size).
 
 Determinism: float32 x float32 products are exact in double (<= 48-bit
 mantissa), and the dot product is a sequential left fold over the array —
@@ -546,23 +553,16 @@ def ivf_index_write(
     which are collected ONCE and localized, so a centroids frame carrying
     expensive lineage (ivf_refine re-scans the corpus per iteration) is
     never executed twice (once for the write, once inside ivf_assign)."""
-    from ..io import local_rows_of
-
-    local_cents = (
-        centroids
-        if local_rows_of(centroids) is not None
-        else local_frame(
-            centroids.sparkSession, centroids.collect(), centroids.schema
-        )
-    )
+    local_cents = _localized(centroids)
     assigned = ivf_assign(df, local_cents, id_col=id_col, vec_col=vec_col)
     _write_model_component(local_cents, f"{path}/centroids.parquet")
-    (
-        assigned.write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/vectors.parquet")
+    _write_vectors_layout(assigned, path)
+    # a rebuild over a former IVF-PQ / OPQ directory must not leave its
+    # model files behind: stats, adds and probes autodetect the IVF-PQ
+    # layout from codebooks.parquet and apply rotation.parquet when present
+    index_store.clear_on_rebuild(
+        df.sparkSession, path, "codebooks.parquet", "rotation.parquet"
     )
-    index_store.clear_on_rebuild(df.sparkSession, path)
 
 
 def ivf_index_add(
@@ -1445,17 +1445,6 @@ def rp_lsh_recall_audit(
     fixed seed and input). Turns the one remaining rows-only ANN query
     into a fully value-verified row, exactly like the CMS/HLL/GK audits:
     the estimate never leaves the plan, the guarantee does."""
-    exact = (
-        df.select(
-            F.col(id_col),
-            euclidean_to_query_kernel(query_vec)(F.col(vec_col)).alias("distance"),
-        )
-        .orderBy(F.asc("distance"), F.asc(id_col))
-        .limit(k)
-        # the witness feeds both the recall check and the output; checkpoint
-        # the k rows so the corpus scan runs exactly once
-        .localCheckpoint()
-    )
     approx_ids = {
         r[id_col]
         for r in random_projection_lsh_neighbors(
@@ -1464,17 +1453,45 @@ def rp_lsh_recall_audit(
         .select(id_col)
         .collect()  # k-bounded
     }
-    exact_ids = [r[id_col] for r in exact.select(id_col).collect()]  # k-bounded
-    # recall denominator = the ACTUAL witness size, not k: a corpus smaller
-    # than k would otherwise fail the floor even at 100% recall
-    ok = (
-        len(set(exact_ids) & approx_ids) >= floor * len(exact_ids)
-        if exact_ids
-        else True
+    exact, _, ok = exact_topk_witness(
+        df, query_vec, approx_ids, k, floor, id_col=id_col, vec_col=vec_col
     )
-    return exact.withColumn("recall_ok", F.lit(bool(ok))).orderBy(
+    return exact.withColumn("recall_ok", F.lit(ok)).orderBy(
         F.asc("distance"), F.asc(id_col)
     )
+
+
+def exact_topk_witness(
+    df: DataFrame,
+    query_vec: "list[float]",
+    approx_ids,
+    k: int,
+    floor: float = 0.8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> "tuple[DataFrame, list, bool]":
+    """The audit contract every ANN audit shares: the EXACT euclidean
+    top-``k`` of ``df`` to ``query_vec`` (oracle-replayable fold
+    distances, ties to the lower id) and whether the approximate probe's
+    ``approx_ids`` hit >= ``floor`` of it. Returns ``(exact, exact_ids,
+    recall_ok)``: ``exact`` is the ``(id_col, distance)`` witness,
+    localCheckpointed so the corpus scan runs once for both the check
+    and the caller's output; ``exact_ids`` are its ids in distance
+    order. The recall denominator is the ACTUAL witness size, not k: a
+    corpus smaller than k would otherwise fail the floor even at 100%
+    recall (an empty witness passes)."""
+    exact = (
+        df.select(
+            F.col(id_col),
+            euclidean_to_query_kernel(query_vec)(F.col(vec_col)).alias("distance"),
+        )
+        .orderBy(F.asc("distance"), F.asc(id_col))
+        .limit(k)
+        .localCheckpoint()
+    )
+    exact_ids = [r[id_col] for r in exact.select(id_col).collect()]  # k-bounded
+    hits = len(set(exact_ids) & set(approx_ids))
+    return exact, exact_ids, bool(hits >= floor * len(exact_ids))
 
 
 def _collect_query_matrix(
@@ -2357,26 +2374,13 @@ def opq_recall_audit(
             dsub=dsub,
         ).collect()  # k-bounded
     }
-    exact = (
-        df.select(
-            id_col,
-            euclidean_to_query_kernel(query_vec)(F.col(vec_col)).alias(
-                "distance"
-            ),
-        )
-        .orderBy(F.asc("distance"), F.asc(id_col))
-        .limit(k)
-    )
-    exact_ids = [r[id_col] for r in exact.collect()]  # k-bounded
-    recall_ok = (
-        len(set(exact_ids) & approx_ids) >= floor * len(exact_ids)
-        if exact_ids
-        else True
+    exact, _, recall_ok = exact_topk_witness(
+        df, query_vec, approx_ids, k, floor, id_col=id_col, vec_col=vec_col
     )
     mse_le = audit["mse_opq"] <= audit["mse_pq"] * (1 + 1e-9) + 1e-12
     return exact.select(
         id_col, "distance",
-        F.lit(bool(recall_ok)).alias("recall_ok"),
+        F.lit(recall_ok).alias("recall_ok"),
         F.lit(bool(mse_le)).alias("opq_mse_le_pq"),
     ).orderBy(F.asc("distance"), F.asc(id_col))
 
@@ -2484,12 +2488,10 @@ def ivf_pq_recall_audit(
     the residuals (identity at parity scales; see
     _bounded_train_frame)."""
     assigned = ivf_assign(df, centroids, id_col=id_col, vec_col=vec_col)
-    resid = ivf_residuals(assigned, centroids, vec_col=vec_col)
-    cb = pq_train_driver(
-        _bounded_train_frame(resid, id_col, train_cap),
-        vec_col="residual", m=m, k=kc,
+    cb = _train_residual_codebooks(
+        assigned, centroids, m, kc, train_cap, id_col, vec_col
     )
-    encoded = pq_encode(resid, cb, vec_col="residual").drop("residual")
+    encoded = ivf_pq_encode(assigned, centroids, cb, vec_col=vec_col)
     approx_ids = {
         r[id_col]
         for r in ivf_pq_topk(
@@ -2498,23 +2500,31 @@ def ivf_pq_recall_audit(
             id_col=id_col, vec_col=vec_col,
         ).collect()  # k-bounded
     }
-    exact = (
-        df.select(
-            F.col(id_col),
-            euclidean_to_query_kernel(query_vec)(F.col(vec_col)).alias("distance"),
-        )
-        .orderBy(F.asc("distance"), F.asc(id_col))
-        .limit(k)
-        .localCheckpoint()
+    exact, _, ok = exact_topk_witness(
+        df, query_vec, approx_ids, k, floor, id_col=id_col, vec_col=vec_col
     )
-    exact_ids = [r[id_col] for r in exact.select(id_col).collect()]  # k-bounded
-    ok = (
-        len(set(exact_ids) & approx_ids) >= floor * len(exact_ids)
-        if exact_ids
-        else True
-    )
-    return exact.withColumn("recall_ok", F.lit(bool(ok))).orderBy(
+    return exact.withColumn("recall_ok", F.lit(ok)).orderBy(
         F.asc("distance"), F.asc(id_col)
+    )
+
+
+def _train_residual_codebooks(
+    assigned: DataFrame,
+    centroids: DataFrame,
+    m: int,
+    k: int,
+    train_cap: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """IVF-PQ's training step: residual PQ codebooks (``m`` subspaces x
+    ``k`` codes) from a ``train_cap``-bounded deterministic sample of the
+    ivf_assign'ed frame's residuals (identity at parity scales; see
+    _bounded_train_frame). Returns pq_train_driver's local frame."""
+    resid = ivf_residuals(assigned, centroids, vec_col=vec_col)
+    return pq_train_driver(
+        _bounded_train_frame(resid, id_col, train_cap),
+        vec_col="residual", m=m, k=k,
     )
 
 
@@ -2548,6 +2558,19 @@ def _write_index_rotation(spark, rotation, path: str) -> None:
         [(i, [float(v) for v in row]) for i, row in enumerate(rotation)],
         "i int, vals array<double>",
         f"{path}/rotation.parquet",
+    )
+
+
+def _write_vectors_layout(df: DataFrame, path: str) -> None:
+    """(Re)write an index's whole ``vectors.parquet``, partitioned by
+    cell. The overwrite is pinned static: under a session-wide dynamic
+    partitionOverwriteMode a rebuild would replace only the cells the new
+    build populates and keep a former index's rows in the others."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("cell")
+        .parquet(f"{path}/vectors.parquet")
     )
 
 
@@ -2677,50 +2700,81 @@ def ivf_pq_index_write(
     matrix is persisted so probes rotate queries and adds rotate new
     batches into the index's space automatically. Orthogonal rotations
     preserve cosine AND L2, so every probe contract is unchanged."""
-    from ..io import local_rows_of
-
-    spark = df.sparkSession
-    # frames that are ALREADY local (pq_train_driver output, a caller's
-    # localized centroids) are used as-is — no re-collect job (round 16)
-    local_cents = (
-        centroids
-        if local_rows_of(centroids) is not None
-        else local_frame(spark, centroids.collect(), centroids.schema)
-    )
-    local_cb = (
-        codebooks
-        if local_rows_of(codebooks) is not None
-        else local_frame(spark, codebooks.collect(), codebooks.schema)
-    )
+    local_cents = _localized(centroids)
+    local_cb = _localized(codebooks)
     assigned = ivf_assign(df, local_cents, id_col=id_col, vec_col=vec_col)
     encoded = ivf_pq_encode(
         assigned, local_cents, local_cb, vec_col=vec_col, dsub=dsub
     )
-    _ivf_pq_index_write_encoded(encoded, local_cents, local_cb, path)
-    if rotation is not None:
-        _write_index_rotation(spark, rotation, path)
+    _ivf_pq_index_write_encoded(encoded, local_cents, local_cb, path, rotation)
+
+
+def ivf_pq_index_build(
+    df: DataFrame,
+    centroids: DataFrame,
+    path: str,
+    m: int,
+    k: int,
+    train_cap: int = 65_536,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    rotation: "list[list[float]] | None" = None,
+) -> DataFrame:
+    """Train and persist an IVF-PQ index in one assign pass — the build
+    every index-producing surface shares (the ``ann-index build --pq``
+    CLI, ivf_pq_index_lifecycle_audit, the registry's index audits).
+    ``centroids`` are localized once; ``df`` is ivf_assign'ed once; the
+    residual codebooks (``m`` subspaces x ``k`` codes) train on a
+    ``train_cap``-bounded sample of that assigned frame
+    (_train_residual_codebooks) and the same frame is encoded and
+    written — the layout ivf_pq_index_write produces from the same
+    codebooks, without its second assign+encode pass. ``rotation``: as
+    in ivf_pq_index_write (``df`` and ``centroids`` already rotated; the
+    OPQ training stays with the caller, which computes the centroids in
+    the rotated space). Returns the codebooks (a local frame)."""
+    local_cents = _localized(centroids)
+    assigned = ivf_assign(df, local_cents, id_col=id_col, vec_col=vec_col)
+    cb = _train_residual_codebooks(
+        assigned, local_cents, m, k, train_cap, id_col, vec_col
+    )
+    encoded = ivf_pq_encode(assigned, local_cents, cb, vec_col=vec_col)
+    _ivf_pq_index_write_encoded(encoded, local_cents, cb, path, rotation)
+    return cb
+
+
+def _localized(model: DataFrame) -> DataFrame:
+    """A bounded model frame as a local_frame — collected once, so
+    expensive training lineage never re-executes per consumer; frames
+    that are ALREADY local (pq_train_driver output, a caller's localized
+    centroids) are used as-is, with no re-collect job."""
+    from ..io import local_rows_of
+
+    if local_rows_of(model) is not None:
+        return model
+    return local_frame(model.sparkSession, model.collect(), model.schema)
 
 
 def _ivf_pq_index_write_encoded(
-    encoded: DataFrame, local_cents: DataFrame, local_cb: DataFrame, path: str
+    encoded: DataFrame,
+    local_cents: DataFrame,
+    local_cb: DataFrame,
+    path: str,
+    rotation: "list[list[float]] | None",
 ) -> None:
-    """Write an IVF-PQ index from an ALREADY-encoded frame plus localized
-    model frames — the shared tail of ivf_pq_index_write, split out so a
-    caller that already holds the encoded rows (the lifecycle audit
-    builds them anyway) doesn't pay a second assign+encode pass."""
+    """The one IVF-PQ layout writer (ivf_pq_index_write and
+    ivf_pq_index_build): model components, the cell-partitioned encoded
+    vectors, then the stale-state clear and — only after the layout
+    exists — the OPQ rotation when one is given. A rebuild without a
+    rotation over a former OPQ directory drops the old matrix: probes
+    apply it automatically when present, so a leftover over an
+    un-rotated layout means silently wrong neighbors."""
+    spark = encoded.sparkSession
     _write_model_component(local_cents, f"{path}/centroids.parquet")
     _write_model_component(local_cb, f"{path}/codebooks.parquet")
-    (
-        encoded.write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{path}/vectors.parquet")
-    )
-    # a rebuild over a former OPQ directory must not leave a stale
-    # rotation behind — probes apply it automatically when present, so
-    # a leftover matrix over an un-rotated layout means silently wrong
-    # neighbors (callers that DO pass a rotation re-write it after this)
-    index_store.delete(encoded.sparkSession, path, "rotation.parquet")
-    index_store.clear_on_rebuild(encoded.sparkSession, path)
+    _write_vectors_layout(encoded, path)
+    index_store.clear_on_rebuild(spark, path, "rotation.parquet")
+    if rotation is not None:
+        _write_index_rotation(spark, rotation, path)
 
 
 def ivf_pq_index_add(
@@ -3333,35 +3387,20 @@ def ivf_pq_index_lifecycle_audit(
     train_cap: int = 65_536,
 ) -> DataFrame:
     """The full persisted-index lifecycle through the audit contract
-    (the ivf_pq_recall_audit pattern): train residual codebooks on the
-    INITIAL corpus, ``ivf_pq_index_write`` it, ``ivf_pq_index_add`` the
-    new batch with the SAVED model state (no retraining — the add path's
-    whole point), probe the persisted partitioned layout, and emit the
-    EXACT euclidean top-k witness over initial ∪ batch + ``recall_ok``
-    pinned TRUE iff the persisted-index probe hit >= ``floor`` of the
-    exact set. The approximate result never leaves the plan; the
-    guarantee does. Codebooks train on a ``train_cap``-bounded
-    deterministic sample of the initial residuals (identity at parity
-    scales; see _bounded_train_frame). Centroids are localized ONCE and
-    the training pass's encoded rows feed the index write directly —
-    centroid lineage (mean_centroids re-scans the corpus) and the
-    assign+encode pass never execute twice."""
-    from ..io import local_rows_of
-
+    (the ivf_pq_recall_audit pattern): ``ivf_pq_index_build`` the
+    INITIAL corpus (residual codebooks on a ``train_cap``-bounded
+    sample, one assign pass), ``ivf_pq_index_add`` the new batch with
+    the SAVED model state (no retraining — the add path's whole point),
+    probe the persisted partitioned layout, and emit the EXACT euclidean
+    top-k witness over initial ∪ batch + ``recall_ok`` pinned TRUE iff
+    the persisted-index probe hit >= ``floor`` of the exact set
+    (exact_topk_witness). The approximate result never leaves the plan;
+    the guarantee does."""
     spark = initial.sparkSession
-    local_cents = (
-        centroids
-        if local_rows_of(centroids) is not None
-        else local_frame(spark, centroids.collect(), centroids.schema)
+    ivf_pq_index_build(
+        initial, centroids, path, m, kc, train_cap,
+        id_col=id_col, vec_col=vec_col,
     )
-    assigned = ivf_assign(initial, local_cents, id_col=id_col, vec_col=vec_col)
-    resid = ivf_residuals(assigned, local_cents, vec_col=vec_col)
-    cb = pq_train_driver(
-        _bounded_train_frame(resid, id_col, train_cap),
-        vec_col="residual", m=m, k=kc,
-    )
-    encoded = ivf_pq_encode(assigned, local_cents, cb, vec_col=vec_col)
-    _ivf_pq_index_write_encoded(encoded, local_cents, cb, path)
     ivf_pq_index_add(spark, path, batch, id_col=id_col, vec_col=vec_col)
     approx_ids = {
         r[id_col]
@@ -3374,23 +3413,9 @@ def ivf_pq_index_lifecycle_audit(
     full = initial.select(id_col, vec_col).unionByName(
         batch.select(id_col, vec_col)
     )
-    exact = (
-        full.select(
-            F.col(id_col),
-            euclidean_to_query_kernel(query_vec)(F.col(vec_col)).alias(
-                "distance"
-            ),
-        )
-        .orderBy(F.asc("distance"), F.asc(id_col))
-        .limit(k)
-        .localCheckpoint()
+    exact, _, ok = exact_topk_witness(
+        full, query_vec, approx_ids, k, floor, id_col=id_col, vec_col=vec_col
     )
-    exact_ids = [r[id_col] for r in exact.select(id_col).collect()]  # k-bounded
-    ok = (
-        len(set(exact_ids) & approx_ids) >= floor * len(exact_ids)
-        if exact_ids
-        else True
-    )
-    return exact.withColumn("recall_ok", F.lit(bool(ok))).orderBy(
+    return exact.withColumn("recall_ok", F.lit(ok)).orderBy(
         F.asc("distance"), F.asc(id_col)
     )

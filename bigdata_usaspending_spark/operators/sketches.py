@@ -46,6 +46,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..io import num_partitions
+
 
 # --------------------------------------------------------------------------
 # t-digest kernel
@@ -372,10 +374,7 @@ def _tree_merge_partials(partials: DataFrame, merge_fn, schema: str, fanin: int)
         # ceil(n / 1) never shrinks — the level loop would append
         # repartition nodes forever
         raise ValueError(f"fanin must be >= 2, got {fanin}")
-    # JVM-side probe: df.rdd wraps the same RDD in the Python serializer
-    # layer at ~100x the per-call cost (round-15 measurement in
-    # dedup._ensure_parallelism)
-    n = partials._jdf.queryExecution().toRdd().getNumPartitions()
+    n = num_partitions(partials)
     while n > fanin:
         n = max(1, -(-n // fanin))
         partials = partials.repartition(n).mapInPandas(merge_fn, schema=schema)

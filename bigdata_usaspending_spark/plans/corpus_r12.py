@@ -534,16 +534,7 @@ def q_ann_ivf_pq_pruned(spark: SparkSession, sf: str) -> DataFrame:
     centroids = local_frame(spark, cents0.collect(), cents0.schema)
     tmp = tempfile.mkdtemp(prefix="ivfpq_pruned_")
     try:
-        assigned = similarity.ivf_assign(data, centroids)
-        resid = similarity.ivf_residuals(assigned, centroids)
-        cb = similarity.pq_train_driver(
-            similarity._bounded_train_frame(resid, "vec_id", 65_536),
-            vec_col="residual", m=32, k=32,
-        )
-        # reuse the training pass's assigned frame (the recall-audit
-        # pattern): the plain index_write would run a second assign pass
-        encoded = similarity.ivf_pq_encode(assigned, centroids, cb)
-        similarity._ivf_pq_index_write_encoded(encoded, centroids, cb, tmp)
+        similarity.ivf_pq_index_build(data, centroids, tmp, m=32, k=32)
         full = similarity.ivf_pq_index_topk(
             spark, tmp, qvec, k=5, nprobe=10, rerank_factor=16
         ).collect()  # k-bounded
@@ -556,27 +547,12 @@ def q_ann_ivf_pq_pruned(spark: SparkSession, sf: str) -> DataFrame:
             (r[0], r[1]) for r in full
         ]
         prune_effective = bool(stats.get("pruned_cells"))
-        exact = (
-            data.select(
-                "vec_id",
-                similarity.euclidean_to_query_kernel(qvec)(
-                    F.col("embedding")
-                ).alias("distance"),
-            )
-            .orderBy(F.asc("distance"), F.asc("vec_id"))
-            .limit(5)
-            .localCheckpoint()
-        )
-        exact_ids = [r.vec_id for r in exact.collect()]  # k-bounded
-        hit = {r[0] for r in pruned}
-        recall_ok = (
-            len(set(exact_ids) & hit) >= 0.8 * len(exact_ids)
-            if exact_ids
-            else True
+        exact, _, recall_ok = similarity.exact_topk_witness(
+            data, qvec, [r[0] for r in pruned], 5
         )
         return exact.select(
             "vec_id", "distance",
-            F.lit(bool(recall_ok)).alias("recall_ok"),
+            F.lit(recall_ok).alias("recall_ok"),
             F.lit(bool(prune_exact)).alias("prune_exact"),
             F.lit(bool(prune_effective)).alias("prune_effective"),
         ).orderBy(F.asc("distance"), F.asc("vec_id"))
@@ -653,14 +629,7 @@ def q_ann_ivf_pq_adaptive(spark: SparkSession, sf: str) -> DataFrame:
     centroids = local_frame(spark, cents0.collect(), cents0.schema)
     tmp = tempfile.mkdtemp(prefix="ivfpq_adaptive_")
     try:
-        assigned = similarity.ivf_assign(data, centroids)
-        resid = similarity.ivf_residuals(assigned, centroids)
-        cb = similarity.pq_train_driver(
-            similarity._bounded_train_frame(resid, "vec_id", 65_536),
-            vec_col="residual", m=32, k=32,
-        )
-        encoded = similarity.ivf_pq_encode(assigned, centroids, cb)
-        similarity._ivf_pq_index_write_encoded(encoded, centroids, cb, tmp)
+        similarity.ivf_pq_index_build(data, centroids, tmp, m=32, k=32)
         exhaustive = similarity.ivf_pq_index_topk(
             spark, tmp, qvec, k=5, nprobe=10, rerank_factor=16
         ).collect()  # k-bounded
@@ -675,27 +644,12 @@ def q_ann_ivf_pq_adaptive(spark: SparkSession, sf: str) -> DataFrame:
         adaptive_effective = bool(stats.get("pruned_cells")) and len(
             stats.get("cells_scanned", [])
         ) < len(stats.get("cells_ranked", []))
-        exact = (
-            data.select(
-                "vec_id",
-                similarity.euclidean_to_query_kernel(qvec)(
-                    F.col("embedding")
-                ).alias("distance"),
-            )
-            .orderBy(F.asc("distance"), F.asc("vec_id"))
-            .limit(5)
-            .localCheckpoint()
-        )
-        exact_ids = [r.vec_id for r in exact.collect()]  # k-bounded
-        hit = {r[0] for r in adaptive}
-        recall_ok = (
-            len(set(exact_ids) & hit) >= 0.8 * len(exact_ids)
-            if exact_ids
-            else True
+        exact, _, recall_ok = similarity.exact_topk_witness(
+            data, qvec, [r[0] for r in adaptive], 5
         )
         return exact.select(
             "vec_id", "distance",
-            F.lit(bool(recall_ok)).alias("recall_ok"),
+            F.lit(recall_ok).alias("recall_ok"),
             F.lit(bool(adaptive_exact)).alias("adaptive_exact"),
             F.lit(bool(adaptive_effective)).alias("adaptive_effective"),
         ).orderBy(F.asc("distance"), F.asc("vec_id"))
@@ -1224,19 +1178,9 @@ def q_ann_opq_index(spark: SparkSession, sf: str) -> DataFrame:
             spark, _ivf_centroids(rotated).collect(),
             "cell int, centroid array<double>",
         )
-        assigned = similarity.ivf_assign(rotated, centroids)
-        resid = similarity.ivf_residuals(assigned, centroids)
-        cb = similarity.pq_train_driver(
-            similarity._bounded_train_frame(resid, "vec_id", 65_536),
-            vec_col="residual", m=32, k=16,
+        similarity.ivf_pq_index_build(
+            rotated, centroids, tmp, m=32, k=16, rotation=rot
         )
-        # reuse the training pass's assigned frame (the recall-audit
-        # pattern — ivf_pq_index_write would run a second assign pass
-        # over `rotated`); the rotation is written after, exactly as the
-        # plain write path does (round 16)
-        encoded = similarity.ivf_pq_encode(assigned, centroids, cb)
-        similarity._ivf_pq_index_write_encoded(encoded, centroids, cb, tmp)
-        similarity._write_index_rotation(spark, rot, tmp)
         similarity.ivf_pq_index_add(spark, tmp, batch)  # RAW batch
         hit = {
             r.vec_id
@@ -1247,27 +1191,12 @@ def q_ann_opq_index(spark: SparkSession, sf: str) -> DataFrame:
         rotation_persisted = (
             similarity._read_index_rotation(spark, tmp) is not None
         )
-        exact = (
-            data.unionByName(batch)
-            .select(
-                "vec_id",
-                similarity.euclidean_to_query_kernel(qvec)(
-                    F.col("embedding")
-                ).alias("distance"),
-            )
-            .orderBy(F.asc("distance"), F.asc("vec_id"))
-            .limit(5)
-            .localCheckpoint()
-        )
-        exact_ids = [r.vec_id for r in exact.collect()]  # k-bounded
-        recall_ok = (
-            len(set(exact_ids) & hit) >= 0.8 * len(exact_ids)
-            if exact_ids
-            else True
+        exact, _, recall_ok = similarity.exact_topk_witness(
+            data.unionByName(batch), qvec, hit, 5
         )
         return exact.select(
             "vec_id", "distance",
-            F.lit(bool(recall_ok)).alias("recall_ok"),
+            F.lit(recall_ok).alias("recall_ok"),
             F.lit(bool(rotation_persisted)).alias("rotation_persisted"),
         ).orderBy(F.asc("distance"), F.asc("vec_id"))
     finally:

@@ -90,19 +90,7 @@ def q_ann_index_compact(spark: SparkSession, sf: str) -> DataFrame:
             spark, _ivf_centroids(emb).collect(),
             "cell int, centroid array<double>",
         )
-        assigned = similarity.ivf_assign(initial, centroids)
-        resid = similarity.ivf_residuals(assigned, centroids)
-        cb = similarity.pq_train_driver(
-            similarity._bounded_train_frame(resid, "vec_id", 65_536),
-            vec_col="residual", m=16, k=16,
-        )
-        # reuse the training pass's assigned frame and the already-local
-        # model frames (the ivf_pq_recall_audit pattern): the plain
-        # index_write would re-collect both models and run a second
-        # assign pass over `initial` (round-15 profiler: one full
-        # ArrowEvalPython pass + two local collects saved)
-        encoded = similarity.ivf_pq_encode(assigned, centroids, cb)
-        similarity._ivf_pq_index_write_encoded(encoded, centroids, cb, tmp)
+        similarity.ivf_pq_index_build(initial, centroids, tmp, m=16, k=16)
         for i in range(3):
             similarity.ivf_pq_index_add(
                 spark, tmp,
@@ -132,30 +120,15 @@ def q_ann_index_compact(spark: SparkSession, sf: str) -> DataFrame:
             and stats["files_after"] < files_before
         )
         rows_ok = stats["rows"] == n_rows
-        exact = (
-            data.select(
-                "vec_id",
-                similarity.euclidean_to_query_kernel(qvec)(
-                    F.col("embedding")
-                ).alias("distance"),
-            )
-            .orderBy(F.asc("distance"), F.asc("vec_id"))
-            .limit(_COMPACT_K)
-            .localCheckpoint()
-        )
-        exact_ids = [r.vec_id for r in exact.collect()]  # k-bounded
-        hit = {v for v, _ in after}
-        recall_ok = (
-            len(set(exact_ids) & hit) >= 0.8 * len(exact_ids)
-            if exact_ids
-            else True
+        exact, _, recall_ok = similarity.exact_topk_witness(
+            data, qvec, [v for v, _ in after], _COMPACT_K
         )
         return exact.select(
             "vec_id", "distance",
             F.lit(bool(compact_exact)).alias("compact_exact"),
             F.lit(bool(files_reduced)).alias("files_reduced"),
             F.lit(bool(rows_ok)).alias("rows_ok"),
-            F.lit(bool(recall_ok)).alias("recall_ok"),
+            F.lit(recall_ok).alias("recall_ok"),
         ).orderBy(F.asc("distance"), F.asc("vec_id"))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -247,17 +220,9 @@ def q_corpus_semantic_opq(spark: SparkSession, sf: str) -> DataFrame:
             spark, _ivf_centroids(rotated).collect(),
             "cell int, centroid array<double>",
         )
-        assigned = similarity.ivf_assign(rotated, centroids)
-        resid = similarity.ivf_residuals(assigned, centroids)
-        cb = similarity.pq_train_driver(
-            similarity._bounded_train_frame(resid, "vec_id", 65_536),
-            vec_col="residual", m=32, k=16,
+        similarity.ivf_pq_index_build(
+            rotated, centroids, tmp, m=32, k=16, rotation=rot
         )
-        # reuse the training pass's assigned frame — q_ann_opq_index's
-        # round-16 note (one ArrowEvalPython assign pass saved)
-        encoded = similarity.ivf_pq_encode(assigned, centroids, cb)
-        similarity._ivf_pq_index_write_encoded(encoded, centroids, cb, tmp)
-        similarity._write_index_rotation(spark, rot, tmp)
         similarity.ivf_pq_index_add(spark, tmp, batch)  # RAW batch
         hit = {
             r.vec_id
@@ -268,28 +233,14 @@ def q_corpus_semantic_opq(spark: SparkSession, sf: str) -> DataFrame:
         rotation_persisted = (
             similarity._read_index_rotation(spark, tmp) is not None
         )
-        exact = (
-            survivors.select(
-                "vec_id",
-                similarity.euclidean_to_query_kernel(qvec)(
-                    F.col("embedding")
-                ).alias("distance"),
-            )
-            .orderBy(F.asc("distance"), F.asc("vec_id"))
-            .limit(_OPQ_CAP_K)
-            .localCheckpoint()
-        )
-        exact_ids = [r.vec_id for r in exact.collect()]  # k-bounded
-        recall_ok = (
-            len(set(exact_ids) & hit) >= 0.8 * len(exact_ids)
-            if exact_ids
-            else True
+        exact, exact_ids, recall_ok = similarity.exact_topk_witness(
+            survivors, qvec, hit, _OPQ_CAP_K
         )
         n_clean = survivors.count() - len(exact_ids)
         return exact.select(
             F.col("vec_id").alias("doc_id"), "distance",
             F.lit(int(n_clean)).cast("long").alias("n_clean"),
-            F.lit(bool(recall_ok)).alias("recall_ok"),
+            F.lit(recall_ok).alias("recall_ok"),
             F.lit(bool(rotation_persisted)).alias("rotation_persisted"),
         ).orderBy(F.asc("distance"), F.asc("doc_id"))
     finally:

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -53,12 +54,15 @@ RUNTIME_CONFS: dict[str, str] = {
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Best-effort apply of runtime-settable confs to an existing session."""
+    """Best-effort apply of runtime-settable confs to an existing session.
+    A key a build refuses to modify at runtime raises AnalysisException
+    (CANNOT_MODIFY_CONFIG / CANNOT_MODIFY_STATIC_CONFIG) and keeps that
+    build's default; any other failure propagates."""
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
-            pass  # non-runtime-settable on this build; defaults still fine
+        except AnalysisException:
+            pass
     return spark
 
 

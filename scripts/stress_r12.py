@@ -93,15 +93,9 @@ def workloads(spark, sf_dir: str, tag: str) -> dict[str, float]:
         ).select("cell", "embedding")
     )
     local_c = spark.createDataFrame(centroids.collect(), centroids.schema)
-    assigned = similarity.ivf_assign(data, local_c)
-    resid = similarity.ivf_residuals(assigned, local_c)
-    cb = similarity.pq_train_driver(
-        similarity._bounded_train_frame(resid, "vec_id", 65_536),
-        vec_col="residual", m=16, k=16,
-    )
     tmp = tempfile.mkdtemp(prefix="stress_r12_idx_")
     try:
-        similarity.ivf_pq_index_write(data, local_c, cb, tmp)
+        similarity.ivf_pq_index_build(data, local_c, tmp, m=16, k=16)
         out["ivfpq_probe_plain"] = timed(
             "ivfpq_probe_plain",
             lambda: similarity.ivf_pq_index_topk(

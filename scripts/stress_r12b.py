@@ -95,13 +95,9 @@ def workloads(spark, sf_dir: str, tag: str) -> dict[str, float]:
             ).collect(),
             "cell int, centroid array<double>",
         )
-        assigned = similarity.ivf_assign(data, local_c)
-        resid = similarity.ivf_residuals(assigned, local_c)
-        cb = similarity.pq_train_driver(
-            similarity._bounded_train_frame(resid, "vec_id", 65_536),
-            vec_col="residual", m=16, k=16,
+        similarity.ivf_pq_index_build(
+            data, local_c, f"{tmp}/pq_idx", m=16, k=16
         )
-        similarity.ivf_pq_index_write(data, local_c, cb, f"{tmp}/pq_idx")
         stats: dict = {}
         out["ivfpq_probe_adaptive"] = timed(
             "ivfpq_probe_adaptive",

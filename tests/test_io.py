@@ -420,3 +420,115 @@ def test_model_io_falls_back_to_spark_on_arrow_unsupported_layout(
     monkeypatch.setattr(io, "_arrow_table_files", broken)
     with pytest.raises(RuntimeError, match="not a fast-path failure"):
         io.model_row_count(spark, p)
+
+
+class _SeamlessJdf:
+    """A JVM DataFrame handle whose private ``queryExecution`` seam fails
+    the way a Spark without it would (``error``); every other call is
+    delegated, so the public ``df.rdd`` / ``repartition`` paths still
+    work."""
+
+    def __init__(self, jdf, error):
+        self._jdf, self._error = jdf, error
+
+    def queryExecution(self):
+        raise self._error
+
+    def __getattr__(self, name):
+        return getattr(self._jdf, name)
+
+
+def _without_seam(df, error):
+    df._jdf = _SeamlessJdf(df._jdf, error)
+    return df
+
+
+def test_num_partitions_falls_back_to_public_rdd_for_both_callers(spark):
+    """io.num_partitions answers through df.rdd when the private seam is
+    missing (Py4JError / AttributeError), for both of its callers:
+    dedup._ensure_parallelism still spreads a one-partition frame and the
+    sketch tree merge still sizes its levels. Any other error from the
+    seam propagates."""
+    import pandas as pd
+    from py4j.protocol import Py4JError
+
+    from bigdata_usaspending_spark.operators.dedup import _ensure_parallelism
+    from bigdata_usaspending_spark.operators.sketches import (
+        _tree_merge_partials,
+    )
+
+    target = spark.sparkContext.defaultParallelism
+    for error in (Py4JError("queryExecution does not exist"), AttributeError("_jdf")):
+        one = _without_seam(spark.range(0, 40, numPartitions=1), error)
+        assert io.num_partitions(one) == 1
+        spread = _ensure_parallelism(one)
+        assert spread.rdd.getNumPartitions() == max(target, 1)
+        assert sorted(r.id for r in spread.collect()) == list(range(40))
+
+    def merge(batches):
+        total = sum(int(pdf["n"].sum()) for pdf in batches)
+        yield pd.DataFrame({"n": [total]})
+
+    partials = _without_seam(
+        spark.range(0, 12, numPartitions=12).selectExpr("1 AS n"),
+        Py4JError("queryExecution does not exist"),
+    )
+    rows = _tree_merge_partials(partials, merge, "n long", fanin=3)
+    assert len(rows) <= 3 and sum(r.n for r in rows) == 12
+
+    broken = _without_seam(spark.range(3), RuntimeError("not a seam failure"))
+    with pytest.raises(RuntimeError, match="not a seam failure"):
+        io.num_partitions(broken)
+
+
+def test_local_frame_named_rows_only_for_positional_rows(spark, monkeypatch):
+    """local_frame attaches driver rows for tuple/Row input, skips other
+    row shapes (a dict row used to be attached as its key names), and no
+    longer swallows an unrelated failure."""
+    scalars = io.local_frame(spark, [1, 2], "int")
+    assert io.local_rows_of(scalars) is None
+    assert [r.value for r in scalars.collect()] == [1, 2]
+    dicts = io.local_frame(spark, [{"a": 1}], "a int")
+    assert io.local_rows_of(dicts) is None
+    assert dicts.collect()[0].a == 1
+
+    def broken(rows, names):
+        raise RuntimeError("not a row-shape failure")
+
+    monkeypatch.setattr(io, "_as_named_rows", broken)
+    with pytest.raises(RuntimeError, match="not a row-shape failure"):
+        io.local_frame(spark, [(1,)], "a int")
+
+
+def test_apply_runtime_confs_swallows_only_refused_keys(spark):
+    """A key the session refuses to modify raises AnalysisException and is
+    skipped; any other failure from conf.set propagates."""
+    from pyspark.errors import AnalysisException
+
+    from bigdata_usaspending_spark.session import (
+        RUNTIME_CONFS,
+        apply_runtime_confs,
+    )
+
+    # what a real session raises for a key it will not modify at runtime
+    with pytest.raises(AnalysisException):
+        spark.conf.set("spark.sql.warehouse.dir", "/elsewhere")
+
+    class _Conf:
+        def __init__(self, error):
+            self.error, self.seen = error, []
+
+        def set(self, key, value):
+            self.seen.append(key)
+            if len(self.seen) == 1:
+                raise self.error
+
+    class _Session:
+        def __init__(self, error):
+            self.conf = _Conf(error)
+
+    refused = _Session(AnalysisException("CANNOT_MODIFY_CONFIG"))
+    assert apply_runtime_confs(refused) is refused
+    assert refused.conf.seen == list(RUNTIME_CONFS)
+    with pytest.raises(RuntimeError, match="unrelated"):
+        apply_runtime_confs(_Session(RuntimeError("unrelated")))

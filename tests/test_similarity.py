@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -1657,3 +1658,158 @@ def test_ann_index_drift_gate(spark, sf_small, tmp_path):
     )
     with pytest.raises(ValueError, match="rotation"):
         similarity.ann_index_drift(spark, path, data)
+
+
+def _tiny_ivf_pq_corpus(spark, rotation=None):
+    """48 8-d vectors spread over 4 well-separated cells, as local frames
+    (no Python-runner slices): small enough that an IVF-PQ build with
+    m=4, k=4 stays a few seconds. With ``rotation`` both the vectors and
+    the centroids are rotated (orthogonal, so every vector keeps its
+    cell)."""
+    import numpy as np
+
+    from bigdata_usaspending_spark.io import local_frame
+
+    cents = [
+        [1.0 if d in (2 * c, 2 * c + 1) else 0.0 for d in range(8)]
+        for c in range(4)
+    ]
+    vecs = [
+        [2.0 * cents[i % 4][d] + ((i * (d + 3)) % 7) / 10 for d in range(8)]
+        for i in range(48)
+    ]
+    if rotation is not None:
+        r = np.array(rotation)
+        cents = [(np.array(c) @ r).tolist() for c in cents]
+        vecs = [(np.array(v) @ r).tolist() for v in vecs]
+    data = local_frame(
+        spark, [(i, v) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = local_frame(
+        spark, list(enumerate(cents)), "cell int, centroid array<double>"
+    )
+    return data, cents
+
+
+def _signed_permutation(dim: int) -> "list[list[float]]":
+    """An orthogonal rotation with exact entries (a signed cyclic shift)."""
+    return [
+        [(-1.0 if i % 2 else 1.0) if j == (i + 1) % dim else 0.0
+         for j in range(dim)]
+        for i in range(dim)
+    ]
+
+
+def _documented_codebooks(df, cents, m, k):
+    """Residual codebooks trained the way ivf_pq_index_write's docstring
+    asks a caller to: pq_train_driver over the bounded sample of the
+    assigned frame's residuals."""
+    assigned = similarity.ivf_assign(df, cents)
+    return similarity.pq_train_driver(
+        similarity._bounded_train_frame(
+            similarity.ivf_residuals(assigned, cents), "vec_id", 65_536
+        ),
+        vec_col="residual", m=m, k=k,
+    )
+
+
+def _index_rows(path):
+    """Every component's rows, sorted, read driver-side with pyarrow (the
+    cell partition column comes back from the directory names)."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for comp in os.listdir(path):
+        if comp.endswith(".parquet"):
+            rows = pq.read_table(os.path.join(path, comp)).to_pylist()
+            out[comp] = sorted(tuple(sorted(r.items())) for r in rows)
+    return out
+
+
+@pytest.mark.parametrize("rotated", [False, True], ids=["ivf_pq", "opq"])
+def test_ivf_pq_index_build_matches_index_write(spark, tmp_path, rotated):
+    """The one build writes exactly what ivf_pq_index_write writes from
+    codebooks trained the documented way — centroids, codebooks,
+    vectors+cell+codes and (when given) the rotation — and returns those
+    codebooks."""
+    rot = _signed_permutation(8) if rotated else None
+    data, cents = _tiny_ivf_pq_corpus(spark, rot)
+    cb = _documented_codebooks(data, cents, m=4, k=4)
+    built, written = str(tmp_path / "built"), str(tmp_path / "written")
+    got_cb = similarity.ivf_pq_index_build(
+        data, cents, built, 4, 4, rotation=rot
+    )
+    similarity.ivf_pq_index_write(data, cents, cb, written, rotation=rot)
+    assert sorted(got_cb.collect()) == sorted(cb.collect())
+    got, want = _index_rows(built), _index_rows(written)
+    assert got == want
+    assert ("rotation.parquet" in got) == rotated
+    assert len(got["vectors.parquet"]) == 48
+    assert all(
+        dict(r)["codes"] is not None for r in got["vectors.parquet"]
+    )
+
+
+def test_exact_topk_witness_recall_denominator(spark):
+    """recall_ok divides by the witness's actual size: a corpus smaller
+    than k passes at full recall and fails below the floor."""
+    from bigdata_usaspending_spark.io import local_frame
+
+    df = local_frame(
+        spark, [(i, [float(i), 0.0]) for i in range(3)],
+        "vec_id long, embedding array<float>",
+    )
+    q = [0.0, 0.0]
+    exact, ids, ok = similarity.exact_topk_witness(df, q, [2, 0, 1], k=10)
+    assert ids == [0, 1, 2] and ok is True
+    assert [(r.vec_id, r.distance) for r in exact.orderBy("distance").collect()] == [
+        (0, 0.0), (1, 1.0), (2, 2.0)
+    ]
+    # 2 of 3 < 0.8 of the witness; k caps the witness at 2 and 2 of 2 pass
+    assert similarity.exact_topk_witness(df, q, [0, 1, 99], k=10)[2] is False
+    assert similarity.exact_topk_witness(df, q, [1, 0], k=2)[2] is True
+    empty = df.filter(F.col("vec_id") < 0)
+    assert similarity.exact_topk_witness(empty, q, [], k=10)[1:] == ([], True)
+
+
+@pytest.fixture(params=["static", "dynamic"])
+def session_overwrite_mode(spark, request):
+    """Run under either session-wide partitionOverwriteMode; restored after."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, request.param)
+    yield request.param
+    spark.conf.set(key, old)
+
+
+def test_plain_rebuild_clears_former_ivf_pq_model_files(
+    spark, tmp_path, session_overwrite_mode
+):
+    """ivf_index_write over a former OPQ-rotated IVF-PQ directory drops
+    its codebooks and rotation: stats report a plain IVF layout and an
+    add takes the plain IVF path instead of encoding with stale
+    codebooks. Under a dynamic session overwrite mode the rebuild still
+    replaces every cell directory (the new build populates fewer)."""
+    rot = _signed_permutation(8)
+    rotated, rot_cents = _tiny_ivf_pq_corpus(spark, rot)
+    path = str(tmp_path / "rebuilt")
+    similarity.ivf_pq_index_write(
+        rotated, rot_cents, _documented_codebooks(rotated, rot_cents, 4, 4),
+        path, rotation=rot,
+    )
+    before = similarity.ann_index_stats(spark, path)
+    assert before["layout"] == "ivf-pq" and before["rotation"] is True
+    assert before["populated_cells"] == 4
+    data, cents = _tiny_ivf_pq_corpus(spark)
+    two_cells = cents.filter(F.col("cell") < 2)
+    initial = data.filter(F.col("vec_id") < 40)
+    similarity.ivf_index_write(initial, two_cells, path)
+    after = similarity.ann_index_stats(spark, path)
+    assert after["layout"] == "ivf" and after["rotation"] is False
+    assert after["populated_cells"] <= 2 and after["vectors"] == 40
+    assert similarity.ann_index_add_batch(
+        spark, path, data.filter(F.col("vec_id") >= 40), 0
+    )
+    vectors = spark.read.parquet(f"{path}/vectors.parquet")
+    assert "codes" not in vectors.columns and vectors.count() == 48
