@@ -672,9 +672,6 @@ def main(argv: list[str] | None = None) -> int:
         from .session import apply_runtime_confs
 
         apply_runtime_confs(spark)
-        # Hadoop-FS existence check: layout autodetection must work on
-        # whatever filesystem the index lives on
-        is_pq = index_store.has(spark, args.index, "codebooks.parquet")
         if args.action in ("build", "add", "stream-add") and not args.vectors:
             raise SystemExit(f"ann-index {args.action} needs --vectors")
         if args.action == "stream-search":
@@ -824,16 +821,9 @@ def main(argv: list[str] | None = None) -> int:
                     f"vectors ({args.index})"
                 )
                 return 0
-            if is_pq:
-                similarity.ivf_pq_index_add(
-                    spark, args.index, df,
-                    id_col=args.id_col, vec_col=args.vec_col,
-                )
-            else:
-                similarity.ivf_index_add(
-                    spark, args.index, df,
-                    id_col=args.id_col, vec_col=args.vec_col,
-                )
+            similarity.ivf_index_add(
+                spark, args.index, df, id_col=args.id_col, vec_col=args.vec_col
+            )
             n = similarity._read_index_vectors(spark, args.index).count()
             print(f"index now holds {n} vectors ({args.index})")
             return 0
@@ -841,7 +831,9 @@ def main(argv: list[str] | None = None) -> int:
         if not args.query:
             raise SystemExit("ann-index search needs --query")
         qvec = [float(x) for x in args.query.split(",") if x.strip()]
-        if is_pq:
+        # Hadoop-FS existence check: layout autodetection must work on
+        # whatever filesystem the index lives on
+        if index_store.has(spark, args.index, "codebooks.parquet"):
             stats: dict = {}
             out = similarity.ivf_pq_index_topk(
                 spark, args.index, qvec,

@@ -21,6 +21,14 @@ SURVEY.md §7.4 extension — first-class 100-TB component:
 - exact_topk_witness: THE audit contract (every ``*_recall_audit`` and
   index audit) — the checkpointed exact euclidean top-k plus ``recall_ok``
   (the probe hit >= floor of it, over the witness's actual size).
+- _open_ann_index: THE persisted-index open (every probe, add, drift and
+  dedup surface) — layout detection, the bounded centroid / codebook /
+  OPQ-rotation loads, the stale-rotation and empty-codebook refusals, and
+  the live vectors frame.
+- _probe_ann: THE per-query IVF / IVF-PQ probe (ivf_index_topk,
+  ivf_pq_index_topk, ann_index_search_many's loop, the in-memory
+  ivf_pq_topk) — coarse cells + exact cosine on plain IVF; ADC tables,
+  adaptive / adc_prune cell pruning and the exact rerank on IVF-PQ.
 
 Determinism: float32 x float32 products are exact in double (<= 48-bit
 mantissa), and the dot product is a sequential left fold over the array —
@@ -43,6 +51,7 @@ Execution tiers (deliberate, per kernel):
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
@@ -573,23 +582,29 @@ def ivf_index_add(
     vec_col: str = "embedding",
     max_cells: int = 65_536,
 ) -> None:
-    """Incrementally ADD vectors to a persisted IVF index — the index
+    """Incrementally ADD vectors to a persisted IVF or IVF-PQ index (layout
+    autodetected; ``ivf_pq_index_add`` is the same function) — the index
     lifecycle's middle step (build once → add batches forever → probe),
-    the ANN twin of the incremental dedup index. New vectors are
-    assigned with the SAVED centroids (one bounded read + one broadcast
-    kernel map — the index is never rescanned, the model never
-    retrained) and appended into the same partitionBy(cell) layout, so
-    existing probe plans keep pruning correctly over both generations.
+    the faiss ``IndexIVF.add`` analog and the ANN twin of the incremental
+    dedup index. New vectors are assigned with the SAVED centroids and,
+    on IVF-PQ, mapped through the saved OPQ rotation and encoded with the
+    SAVED residual codebooks (one bounded model read + broadcast kernels
+    — the index is never rescanned, the model never retrained), then
+    appended into the same partitionBy(cell) layout, so existing probe
+    plans keep pruning correctly over both generations.
 
-    Standard IVF caveat (faiss semantics): adds do not move centroids;
-    if the data distribution drifts far from the training set, rebuild
-    with fresh centroids rather than adding forever."""
+    Standard IVF caveat (faiss semantics): adds move neither centroids
+    nor codebooks; if the data distribution drifts far from the training
+    set, rebuild with fresh centroids rather than adding forever."""
     (
         _prepare_add_frame(spark, path, df, id_col, vec_col, max_cells)
         .write.mode("append")
         .partitionBy("cell")
         .parquet(f"{path}/vectors.parquet")
     )
+
+
+ivf_pq_index_add = ivf_index_add
 
 
 def ivf_index_topk(
@@ -611,42 +626,30 @@ def ivf_index_topk(
     single row is read (plan-pinned in tests). Result is identical to
     running ivf_topk over the index's source frame.
 
-    Refuses a layout carrying ``rotation.parquet``: a rotation is only
-    valid paired with PQ codebooks (the OPQ IndexPreTransform), and a
-    plain-IVF probe has no rotated space to map the query into — a
-    stale matrix over un-rotated vectors must fail loudly, not probe
-    wrong (the ann_index_search_many guard, kept in agreement so both
-    probe surfaces of one index behave identically)."""
-    if index_store.has(spark, path, "rotation.parquet"):
-        raise ValueError(
-            f"index at {path!r} has rotation.parquet but is probed as "
-            "plain IVF — a rotation is only valid on the IVF-PQ layout; "
-            "rebuild the index"
-        )
-    qvec = _as_qvec(query)
-    cent_rows = _read_bounded_rows(
-        spark, f"{path}/centroids.parquet", "cell", max_cells
+    Reads the index as plain IVF (``_open_ann_index(layout="ivf")``), so
+    a layout carrying ``rotation.parquet`` is refused: a rotation is
+    only valid paired with PQ codebooks (the OPQ IndexPreTransform), and
+    a plain-IVF probe has no rotated space to map the query into."""
+    ix = _open_ann_index(spark, path, max_cells, layout="ivf")
+    return _probe_ann(
+        ix, query, ix.scan, k, nprobe, id_col=id_col, vec_col=vec_col
     )
-    cells = _ivf_probe_cells(cent_rows, qvec, nprobe)
-    cand = _read_index_vectors(spark, path).filter(F.col("cell").isin(cells))
-    return brute_force_topk(cand, qvec, id_col=id_col, vec_col=vec_col, k=k)
 
 
 def _ivf_probe_cells(cent_rows, qvec, nprobe: int) -> "list[int]":
-    """The coarse IVF probe shared by the single-query persisted probe
-    (ivf_index_topk) and the many-query serving path (streaming
-    ann-search): rank ``(cell, centroid)`` rows by the same left-fold
-    cosine and (cosine DESC, cell ASC) tie order as ivf_topk's
-    distributed probe; return the ``nprobe`` nearest cell ids. Degenerate
-    inputs score -inf instead of raising (the _ivf_pq_probe_tables
-    null-degrade twin): a zero-norm query probes the lowest cells
-    deterministically, a zero-norm centroid is never preferred — one bad
-    streamed query must not kill a whole serving micro-batch."""
+    """The coarse plain-IVF probe of ``_probe_ann``: rank ``(cell,
+    centroid)`` pairs by the same left-fold cosine and (cosine DESC, cell
+    ASC) tie order as ivf_topk's distributed probe; return the ``nprobe``
+    nearest cell ids. Degenerate inputs score -inf instead of raising
+    (the _ivf_pq_probe_tables null-degrade twin): a zero-norm query
+    probes the lowest cells deterministically, a zero-norm centroid is
+    never preferred — one bad streamed query must not kill a whole
+    serving micro-batch."""
     q = np.array(qvec, dtype=np.float64)
     qn = float(np.sqrt(_fold_sum_cols(q[None, :] * q[None, :])[0]))
     ranked = []
-    for r in cent_rows:
-        c = np.array(list(r["centroid"]), dtype=np.float64)
+    for cell, cv in cent_rows:
+        c = np.array(cv, dtype=np.float64)
         cn = float(np.sqrt(_fold_sum_cols(c[None, :] * c[None, :])[0]))
         den = qn * cn
         cs = (
@@ -654,7 +657,7 @@ def _ivf_probe_cells(cent_rows, qvec, nprobe: int) -> "list[int]":
             if den > 0.0
             else float("-inf")
         )
-        ranked.append((-cs, int(r["cell"])))
+        ranked.append((-cs, int(cell)))
     return [cell for _, cell in sorted(ranked)[:nprobe]]
 
 
@@ -1751,33 +1754,91 @@ def ivf_pq_topk(
     them. ``adaptive_nprobe=True`` ignores ``nprobe`` and scans by the
     Best-Bin-First bound instead (ivf_pq_index_topk's contract:
     bit-identical to the exhaustive all-cells probe)."""
-    if adaptive_nprobe and adc_prune:
-        raise ValueError(
-            "adaptive_nprobe subsumes adc_prune — pass one or the other"
-        )
-    cb_rows = _collect_codebooks(codebooks)
-    if dsub is None:
-        dsub = len(cb_rows[0][2])
-    qvec = [float(x) for x in _as_qvec(query)]
     cent_rows = sorted(
         (r[cell_col], [float(x) for x in r[centroid_vec]])
         for r in centroids.collect()
     )
+
+    def scan(cells):
+        # a broadcast semi-join: prunes to the probed partitions when
+        # the encoded frame is written partitioned by cell
+        probe_cells = local_frame(
+            encoded.sparkSession, [(int(c),) for c in cells], f"{cell_col} int"
+        )
+        return encoded.join(F.broadcast(probe_cells), on=cell_col, how="semi")
+
+    return _probe_ann(
+        _AnnIndex("ivf-pq", cent_rows, _collect_codebooks(codebooks), dsub),
+        query, scan, k, nprobe, rerank_factor, id_col, vec_col, cell_col,
+        adc_prune, prune_phase1, probe_stats, adaptive_nprobe,
+    )
+
+
+def _probe_ann(
+    ix: "_AnnIndex",
+    query,
+    scan,
+    k: int = 10,
+    nprobe: int = 2,
+    rerank_factor: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    cell_col: str = "cell",
+    adc_prune: bool = False,
+    prune_phase1: int = 1,
+    probe_stats: "dict | None" = None,
+    adaptive_nprobe: bool = False,
+) -> DataFrame:
+    """THE per-query IVF / IVF-PQ probe behind every query surface — the
+    persisted single-query probes, ann_index_search_many's per-query loop
+    and the in-memory ivf_pq_topk. ``ix`` is the model state
+    (``_open_ann_index``), ``scan(cells)`` returns the candidate rows of
+    those cells (the persisted index's partition-pruned ``ix.scan``, or
+    ivf_pq_topk's semi-join). The raw query is first mapped into the
+    index space (the OPQ rotation, when ``ix`` has one).
+
+    - plain IVF: the ``nprobe`` centroid-nearest cells
+      (``_ivf_probe_cells``), exact cosine top-k — ``(id, cosine)``;
+      ``adc_prune`` has no codes to prune with and is ignored;
+    - IVF-PQ: per-cell ADC tables (``_ivf_pq_probe_tables``; every cell
+      when adaptive), then the adaptive Best-Bin-First rounds
+      (``_adaptive_pruned_tables``) or the adc_prune phase
+      (``_adc_pruned_tables``), then the ADC scan and exact rerank —
+      ``(id, l2sq)``. ``probe_stats`` receives the scanned/pruned
+      cells."""
+    if adaptive_nprobe and adc_prune:
+        raise ValueError(
+            "adaptive_nprobe subsumes adc_prune — pass one or the other"
+        )
+    if adaptive_nprobe and ix.layout != "ivf-pq":
+        raise ValueError(
+            "adaptive_nprobe needs the IVF-PQ layout — the Best-Bin-First "
+            "bound comes from the ADC tables; a plain IVF index has no "
+            "codes (a silent fixed-nprobe fallback could miss neighbors "
+            "the caller believes the bound covered)"
+        )
+    qvec = _as_qvec(query)
+    if ix.rotation is not None:
+        r64 = np.array(ix.rotation, dtype=np.float64)
+        qvec = [float(v) for v in np.array(qvec, dtype=np.float64) @ r64]
+    if ix.layout != "ivf-pq":
+        cells = _ivf_probe_cells(ix.centroids, qvec, nprobe)
+        return brute_force_topk(
+            scan(cells), qvec, id_col=id_col, vec_col=vec_col, k=k
+        )
     cell_tables = _ivf_pq_probe_tables(
-        cent_rows, cb_rows, qvec,
-        len(cent_rows) if adaptive_nprobe else nprobe, dsub,
+        ix.centroids, ix.codebooks, qvec,
+        len(ix.centroids) if adaptive_nprobe else nprobe, ix.dsub,
     )
     short_ids = None
     if adaptive_nprobe:
         cell_tables, short_ids = _adaptive_pruned_tables(
-            lambda cs: encoded.filter(F.col(cell_col).isin(cs)),
-            cell_tables, cell_col, k, rerank_factor, prune_phase1,
+            scan, cell_tables, cell_col, k, rerank_factor, prune_phase1,
             probe_stats, id_col=id_col,
         )
     elif adc_prune:
         cell_tables = _adc_pruned_tables(
-            lambda cs: encoded.filter(F.col(cell_col).isin(cs)),
-            cell_tables, cell_col, k, rerank_factor, prune_phase1,
+            scan, cell_tables, cell_col, k, rerank_factor, prune_phase1,
             probe_stats,
         )
     elif probe_stats is not None:
@@ -1786,17 +1847,9 @@ def ivf_pq_topk(
             cells_ranked=list(cells0), cells_scanned=list(cells0),
             pruned_cells=[], threshold=None,
         )
-
-    # 3) ADC scan over the probed cells' candidates
-    probe_cells = local_frame(
-        encoded.sparkSession, [(int(c),) for c in cell_tables], f"{cell_col} int"
-    )
-    cands = encoded.join(F.broadcast(probe_cells), on=cell_col, how="semi")
-    if short_ids is not None:
-        # the adaptive rounds already produced the exact ADC shortlist
-        return _ivf_pq_exact_rerank(cands, short_ids, qvec, k, id_col, vec_col)
-    return _ivf_pq_adc_rerank(
-        cands, cell_tables, qvec, k, rerank_factor, id_col, vec_col, cell_col
+    return _ivf_pq_rerank(
+        scan(list(cell_tables)), cell_tables, short_ids, qvec, k,
+        rerank_factor, id_col, vec_col, cell_col,
     )
 
 
@@ -2077,45 +2130,10 @@ def _adaptive_pruned_tables(
     return tables, [i for _, i in best]
 
 
-def _ivf_pq_exact_rerank(
-    cands: DataFrame,
-    shortlist_ids: list,
-    qvec: list,
-    k: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """The closing pass of the adaptive probe when the rounds already
-    produced the exact ADC shortlist: semi-join the candidate frame down
-    to the shortlist ids (k*rerank-bounded broadcast) and exact-rerank —
-    no second ADC scan. Output ordering/limit identical to
-    _ivf_pq_adc_rerank's final stage."""
-    spark = cands.sparkSession
-    ids_df = local_frame(
-        spark, [(i,) for i in shortlist_ids], cands.select(id_col).schema
-    )
-    shortlist = cands.join(F.broadcast(ids_df), on=id_col, how="semi")
-
-    q64 = np.array(qvec, dtype=np.float64)
-
-    @F.pandas_udf("double")
-    def _l2sq_exact(v: pd.Series) -> pd.Series:
-        if v.empty:
-            return pd.Series([], dtype=np.float64)
-        x = np.array(v.tolist(), dtype=np.float64)
-        diff = x - q64[None, :]
-        return pd.Series(_fold_sum_cols(diff * diff))
-
-    return (
-        shortlist.select(F.col(id_col), _l2sq_exact(F.col(vec_col)).alias("l2sq"))
-        .orderBy(F.asc("l2sq"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def _ivf_pq_adc_rerank(
+def _ivf_pq_rerank(
     cands: DataFrame,
     cell_tables: dict,
+    short_ids: "list | None",
     qvec: list,
     k: int,
     rerank_factor: int,
@@ -2124,9 +2142,28 @@ def _ivf_pq_adc_rerank(
     cell_col: str,
 ) -> DataFrame:
     """Steps 3–4 of the IVF-PQ query path over an already cell-pruned
-    candidate frame: Arrow ADC scan (_adc_kernel), then exact squared-L2
-    rerank of the ``k*rerank_factor`` best."""
-    _adc = _adc_kernel(cell_tables)
+    candidate frame: the ``k*rerank_factor`` ADC shortlist (the Arrow
+    ADC scan, _adc_kernel), re-scored by exact squared L2 on the original
+    vectors; top-k ascending. When the adaptive rounds already produced
+    the exact ADC shortlist (``short_ids``), the candidates are
+    semi-joined down to those ids (k*rerank-bounded broadcast) instead —
+    no second ADC scan."""
+    if short_ids is not None:
+        ids_df = local_frame(
+            cands.sparkSession, [(i,) for i in short_ids],
+            cands.select(id_col).schema,
+        )
+        shortlist = cands.join(F.broadcast(ids_df), on=id_col, how="semi")
+    else:
+        _adc = _adc_kernel(cell_tables)
+        shortlist = (
+            cands.select(
+                F.col(id_col), F.col(vec_col),
+                _adc(F.col("codes"), F.col(cell_col).cast("long")).alias("_ad"),
+            )
+            .orderBy(F.asc("_ad"), F.asc(id_col))
+            .limit(k * rerank_factor)
+        )
 
     q64 = np.array(qvec, dtype=np.float64)
 
@@ -2138,14 +2175,6 @@ def _ivf_pq_adc_rerank(
         diff = x - q64[None, :]
         return pd.Series(_fold_sum_cols(diff * diff))
 
-    shortlist = (
-        cands.select(
-            F.col(id_col), F.col(vec_col),
-            _adc(F.col("codes"), F.col(cell_col).cast("long")).alias("_ad"),
-        )
-        .orderBy(F.asc("_ad"), F.asc(id_col))
-        .limit(k * rerank_factor)
-    )
     return (
         shortlist.select(F.col(id_col), _l2sq_exact(F.col(vec_col)).alias("l2sq"))
         .orderBy(F.asc("l2sq"), F.asc(id_col))
@@ -2395,11 +2424,14 @@ def semantic_dedup_against_index(
     max_cells: int = 65_536,
 ) -> DataFrame:
     """Incremental SemDeDup: survivors of a NEW embedding batch against a
-    PERSISTED IVF index (``ivf_index_write``'s layout) — the semantic
-    member of the incremental dedup family (the exact/bloom/minhash/URL
-    tiers' probe inversion applied to embeddings). At 100 TB you never
-    re-cluster the corpus per ingest: batch vectors are assigned with the
-    SAVED centroids (bounded model read + broadcast kernel), compared by
+    PERSISTED IVF or IVF-PQ index (read through ``_open_ann_index``) —
+    the semantic member of the incremental dedup family (the
+    exact/bloom/minhash/URL tiers' probe inversion applied to
+    embeddings). At 100 TB you never re-cluster the corpus per ingest:
+    batch vectors are mapped into the index space (an OPQ index stores
+    ROTATED vectors and centroids; the rotation is orthogonal, so cosines
+    are unchanged by it), assigned with the SAVED centroids (bounded
+    model read + broadcast kernel), compared by
     exact cosine ONLY against index vectors in their assigned cells —
     the index scan carries a ``cell IN (batch's cells)`` partition
     predicate and the batch side broadcasts into the join, so the index
@@ -2415,19 +2447,18 @@ def semantic_dedup_against_index(
     B was dropped) can diverge from a whole-input semantic_dedup run;
     streaming/jobs.semantic_dedup_append_batch keeps a full
     survivor-flagged ledger for exact whole-input parity."""
-    local_cents = _localized_model(
-        spark, f"{path}/centroids.parquet", "cell", max_cells
+    ix = _open_ann_index(spark, path, max_cells)
+    assigned = ivf_assign(
+        ix.to_index_space(batch, vec_col), ix.model("centroids"),
+        id_col=id_col, vec_col=vec_col,
     )
-    assigned = ivf_assign(batch, local_cents, id_col=id_col, vec_col=vec_col)
     # the batch's cell set is bounded by the index's cell count (model
     # state), so this collect is max_cells-bounded
     batch_cells = [int(r[0]) for r in assigned.select("cell").distinct().collect()]
     a = assigned.select(
         F.col(id_col).alias("_bid"), F.col(vec_col).alias("_bvec"), "cell"
     )
-    idx = _read_index_vectors(spark, path).filter(
-        F.col("cell").isin(batch_cells)
-    )
+    idx = ix.scan(batch_cells)
     index_hits = (
         idx.select(F.col(vec_col).alias("_ivec"), "cell")
         .join(F.broadcast(a), on="cell")
@@ -2528,25 +2559,6 @@ def _train_residual_codebooks(
     )
 
 
-def _read_bounded_rows(spark, path: str, what: str, max_cells: int):
-    """Cap-guarded read of persisted model state — driver-side on local
-    filesystems (no Spark job; round-16 guide §5: every probe/add paid a
-    collect job per model component), one bounded collect elsewhere."""
-    from ..io import read_model_rows
-
-    return read_model_rows(spark, path, what, max_cells)[0]
-
-
-def _localized_model(spark, path: str, what: str, max_cells: int) -> DataFrame:
-    """Cap-guarded persisted model state as a 1-slice local frame — the
-    read is driver-side on local filesystems (read_model_rows), so an
-    add/probe's model load schedules zero Spark jobs there."""
-    from ..io import read_model_rows
-
-    rows, schema = read_model_rows(spark, path, what, max_cells)
-    return local_frame(spark, rows, schema)
-
-
 def _write_index_rotation(spark, rotation, path: str) -> None:
     """Persist an OPQ rotation alongside an index layout — one row per
     matrix row, ``(i, vals)``. The rotation is model state (dim x dim),
@@ -2645,27 +2657,116 @@ def ann_index_remove(spark, path: str, ids, id_col: str = "vec_id") -> dict:
     )
 
 
-def _read_index_rotation(spark, path: str, max_dim: int = 8192):
-    """Load a persisted OPQ rotation if the index has one (None
-    otherwise) — the probe/add-side half of the faiss IndexPreTransform
-    contract: raw inputs are mapped into the index's rotated space
-    before any other math."""
-    if not index_store.has(spark, path, "rotation.parquet"):
-        return None
-    rows = sorted(
-        (r["i"], list(r["vals"]))
-        for r in _read_bounded_rows(
-            spark, f"{path}/rotation.parquet", "rotation row", max_dim
+class _AnnIndex:
+    """One IVF / IVF-PQ index's model state, as the probe (``_probe_ann``)
+    and the add, drift and dedup surfaces use it — read from disk by
+    ``_open_ann_index``, or built from in-memory frames by ivf_pq_topk:
+
+    - ``layout``: ``"ivf"`` or ``"ivf-pq"``;
+    - ``centroids``: ``(cell, vector)`` pairs, cell-ascending;
+    - ``codebooks``: ``(sub, cell, vector)`` rows, (sub, cell)-ascending,
+      and ``dsub``, their sub-vector width (IVF-PQ only);
+    - ``rotation``: the persisted OPQ matrix, or None;
+    - ``vectors``: the live vector frame, read on first use (so a
+      surface that never scans schedules no read)."""
+
+    def __init__(
+        self, layout, centroids, codebooks=None, dsub=None, rotation=None,
+        spark=None, path=None, stored=None,
+    ):
+        self.layout, self.centroids, self.codebooks = layout, centroids, codebooks
+        self.dsub = len(codebooks[0][2]) if dsub is None and codebooks else dsub
+        self.rotation = rotation
+        self._spark, self._path, self._stored = spark, path, stored
+
+    @functools.cached_property
+    def vectors(self) -> DataFrame:
+        return _read_index_vectors(self._spark, self._path)
+
+    def scan(self, cells) -> DataFrame:
+        """The persisted probe's candidate scan: a ``cell IN (...)``
+        predicate on the PARTITION column, so Catalyst prunes to those
+        cell directories before a row is read."""
+        return self.vectors.filter(F.col("cell").isin([int(c) for c in cells]))
+
+    def model(self, component: str) -> DataFrame:
+        """A stored model component (``"centroids"`` / ``"codebooks"``) as
+        a 1-slice local frame with its on-disk rows and schema."""
+        return local_frame(self._spark, *self._stored[component])
+
+    def to_index_space(self, df: DataFrame, vec_col: str) -> DataFrame:
+        """Map raw vectors into the space the model lives in — the OPQ
+        pre-transform when the index has a rotation (the faiss
+        IndexPreTransform contract), else the identity."""
+        if self.rotation is None:
+            return df
+        return opq_rotate(df, self.rotation, vec_col=vec_col)
+
+
+def _open_ann_index(
+    spark, path: str, max_cells: int = 65_536, layout: "str | None" = None
+) -> _AnnIndex:
+    """THE persisted-index open: every probe, add, drift and dedup surface
+    reads an IVF / IVF-PQ index through here. The layout is autodetected
+    from ``codebooks.parquet`` (the ann-index CLI contract) unless the
+    caller names one: ``layout="ivf"`` reads an IVF-PQ directory as plain
+    IVF (codebooks unused), ``layout="ivf-pq"`` refuses a plain one.
+    Centroids, codebooks and the OPQ rotation load driver-side and
+    cap-guarded (io.read_model_rows — no Spark job on local
+    filesystems); they are model state, never corpus-sized.
+
+    The open owns the two corrupt-layout refusals. A ``rotation.parquet``
+    read as plain IVF: a rotation pairs only with PQ codebooks, so over
+    un-rotated vectors it is a stale file, and applying it (queries
+    rotated against un-rotated vectors) or ignoring it (one surface
+    rotating, another not) would both return wrong neighbors silently.
+    And an empty codebook set (a truncated layout)."""
+    from ..io import read_model_rows
+
+    is_pq = layout != "ivf" and index_store.has(spark, path, "codebooks.parquet")
+    if layout == "ivf-pq" and not is_pq:
+        raise ValueError(
+            f"index at {path!r} has the ivf layout (no codebooks.parquet); "
+            "probe it with ivf_index_topk"
         )
+    if not is_pq and index_store.has(spark, path, "rotation.parquet"):
+        raise ValueError(
+            f"index at {path!r} has rotation.parquet but is read as plain "
+            "IVF — a rotation is only valid on the IVF-PQ layout; rebuild "
+            "the index (or delete the stale rotation.parquet)"
+        )
+    stored = {
+        "centroids": read_model_rows(
+            spark, f"{path}/centroids.parquet", "cell", max_cells
+        )
+    }
+    centroids = sorted(
+        (r["cell"], [float(x) for x in r["centroid"]])
+        for r in stored["centroids"][0]
     )
-    return [vals for _, vals in rows]
-
-
-def _rotate_qvec(qvec, rotation):
-    if rotation is None:
-        return qvec
-    q = np.array(qvec, dtype=np.float64)
-    return [float(v) for v in q @ np.array(rotation, dtype=np.float64)]
+    if not is_pq:
+        return _AnnIndex("ivf", centroids, spark=spark, path=path, stored=stored)
+    stored["codebooks"] = read_model_rows(
+        spark, f"{path}/codebooks.parquet", "codebook", max_cells
+    )
+    codebooks = sorted(
+        (r["sub"], r["cell"], list(r["centroid"])) for r in stored["codebooks"][0]
+    )
+    if not codebooks:
+        raise ValueError(
+            f"empty codebook set at {path}/codebooks.parquet — the index is "
+            "truncated or was not written by ivf_pq_index_write"
+        )
+    rotation = None
+    if index_store.has(spark, path, "rotation.parquet"):
+        rows = read_model_rows(
+            spark, f"{path}/rotation.parquet", "rotation row", 8192
+        )[0]
+        rotation = [v for _, v in sorted((r["i"], list(r["vals"])) for r in rows)]
+    return _AnnIndex(
+        "ivf-pq", centroids, codebooks, rotation=rotation,
+        spark=spark, path=path, stored=stored,
+    )
 
 
 def ivf_pq_index_write(
@@ -2777,34 +2878,6 @@ def _ivf_pq_index_write_encoded(
         _write_index_rotation(spark, rotation, path)
 
 
-def ivf_pq_index_add(
-    spark,
-    path: str,
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_cells: int = 65_536,
-) -> None:
-    """Incrementally ADD vectors to a persisted IVF-PQ index — the faiss
-    ``IndexIVFPQ.add`` analog: new vectors are assigned with the SAVED
-    centroids and encoded with the SAVED residual codebooks (one bounded
-    model read + broadcast kernels — the index is never rescanned, the
-    quantizer never retrained), then appended into the same
-    ``partitionBy(cell)`` layout so existing probe plans keep pruning
-    over both generations.
-
-    Standard IVF-PQ caveat (faiss semantics): adds move neither
-    centroids nor codebooks; if the data distribution drifts far from
-    the training set, quantization error grows — rebuild rather than
-    adding forever."""
-    (
-        _prepare_add_frame(spark, path, df, id_col, vec_col, max_cells)
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{path}/vectors.parquet")
-    )
-
-
 def _prepare_add_frame(
     spark,
     path: str,
@@ -2820,37 +2893,18 @@ def _prepare_add_frame(
     persisted) plus the residual encode — and fail fast on a schema
     mismatch: appending a different column set or vector type writes a
     SECOND schema into the partitioned layout, which later probes
-    surface as null ids/codes executor-side. Mirrors the probe surfaces'
-    stale-rotation guard: a plain-IVF layout carrying rotation.parquet
-    is refused HERE too, so the corrupt layout fails at the write
-    surface instead of silently appending raw un-rotated vectors that
-    only blow up at probe time."""
-    if index_store.has(spark, path, "rotation.parquet") and not index_store.has(
-        spark, path, "codebooks.parquet"
-    ):
-        raise ValueError(
-            f"index at {path!r} has rotation.parquet but no "
-            "codebooks.parquet — a rotation is only valid on the IVF-PQ "
-            "layout; refusing to append into the corrupt layout "
-            "(rebuild the index, or delete the stale rotation.parquet)"
-        )
+    surface as null ids/codes executor-side. The model comes from
+    ``_open_ann_index``, so its stale-rotation refusal holds at the write
+    surface too: a corrupt layout fails here instead of silently taking
+    raw un-rotated vectors that only blow up at probe time."""
+    ix = _open_ann_index(spark, path, max_cells)
     index_store.refuse_tombstoned(spark, path, df, id_col, "ann_index_compact")
-    local_cents = _localized_model(
-        spark, f"{path}/centroids.parquet", "cell", max_cells
+    cents = ix.model("centroids")
+    out = ivf_assign(
+        ix.to_index_space(df, vec_col), cents, id_col=id_col, vec_col=vec_col
     )
-    if index_store.has(spark, path, "codebooks.parquet"):
-        local_cb = _localized_model(
-            spark, f"{path}/codebooks.parquet", "codebook", max_cells
-        )
-        rotation = _read_index_rotation(spark, path)
-        if rotation is not None:
-            # OPQ pre-transform: the saved centroids/codebooks live in
-            # the rotated space — map the raw batch into it first
-            df = opq_rotate(df, rotation, vec_col=vec_col)
-        assigned = ivf_assign(df, local_cents, id_col=id_col, vec_col=vec_col)
-        out = ivf_pq_encode(assigned, local_cents, local_cb, vec_col=vec_col)
-    else:
-        out = ivf_assign(df, local_cents, id_col=id_col, vec_col=vec_col)
+    if ix.layout == "ivf-pq":
+        out = ivf_pq_encode(out, cents, ix.model("codebooks"), vec_col=vec_col)
     saved = {
         f.name: f.dataType.simpleString()
         for f in index_store.read(spark, path, "vectors.parquet").schema.fields
@@ -3027,31 +3081,14 @@ def ann_index_drift(
     broadcast-centroid kernel map + the same bounded aggregate; the
     join, totals, and fold all touch ≤ cells rows. Nothing scans twice,
     no driver state beyond the cap-guarded model load."""
-    if index_store.has(spark, path, "rotation.parquet") and not index_store.has(
-        spark, path, "codebooks.parquet"
-    ):
-        raise ValueError(
-            f"index at {path!r} has rotation.parquet but no "
-            "codebooks.parquet — a rotation is only valid on the IVF-PQ "
-            "layout; rebuild the index"
-        )
-    local_cents = _localized_model(
-        spark, f"{path}/centroids.parquet", "cell", max_cells
-    )
-    rotation = (
-        _read_index_rotation(spark, path)
-        if index_store.has(spark, path, "codebooks.parquet")
-        else None
-    )
-    if rotation is not None:
-        sample_df = opq_rotate(sample_df, rotation, vec_col=vec_col)
-    base = (
-        _read_index_vectors(spark, path)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("pn"))
-    )
+    ix = _open_ann_index(spark, path, max_cells)
+    local_cents = ix.model("centroids")
+    base = ix.vectors.groupBy("cell").agg(F.count(F.lit(1)).alias("pn"))
     cur = (
-        ivf_assign(sample_df, local_cents, id_col=id_col, vec_col=vec_col)
+        ivf_assign(
+            ix.to_index_space(sample_df, vec_col), local_cents,
+            id_col=id_col, vec_col=vec_col,
+        )
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("qn"))
     )
@@ -3126,14 +3163,15 @@ def ivf_pq_index_topk(
     probe_stats: "dict | None" = None,
     adaptive_nprobe: bool = False,
 ) -> DataFrame:
-    """Probe a persisted IVF-PQ index: centroids + codebooks load
-    driver-side (cap-guarded — index-parameter-bounded model state), the
-    coarse probe and per-cell ADC tables are the SAME driver-side math as
-    ``ivf_pq_topk`` (shared ``_ivf_pq_probe_tables``), and the vectors
-    scan carries a ``cell IN (...)`` predicate on the PARTITION column —
-    Catalyst prunes to nprobe directories before a single row is read.
-    Result is identical to running ivf_pq_topk over the index's live
-    frames with the same model state.
+    """Probe a persisted IVF-PQ index: ``_open_ann_index`` loads
+    centroids + codebooks (+ the OPQ rotation) driver-side (cap-guarded —
+    index-parameter-bounded model state), and ``_probe_ann`` — the SAME
+    per-query probe as ``ivf_pq_topk`` — ranks the cells, builds the
+    per-cell ADC tables and scans with a ``cell IN (...)`` predicate on
+    the PARTITION column, so Catalyst prunes to nprobe directories before
+    a single row is read. Result is identical to running ivf_pq_topk over
+    the index's live frames with the same model state. A plain-IVF index
+    is refused (probe it with ivf_index_topk).
 
     ``adc_prune=True`` adds residual-aware cell pruning (the faiss
     IVF-pruning idea, VERDICT r11 #6) with an EXACTNESS guarantee —
@@ -3163,74 +3201,11 @@ def ivf_pq_index_topk(
     to mistune. ``prune_phase1`` seeds the first chunk size. Driver
     table cost grows to O(ncells * m * kc) floats (still
     model-state-bounded, max_cells-guarded)."""
-    if adaptive_nprobe and adc_prune:
-        raise ValueError(
-            "adaptive_nprobe subsumes adc_prune — pass one or the other"
-        )
-    qvec = _rotate_qvec(
-        [float(x) for x in _as_qvec(query)], _read_index_rotation(spark, path)
-    )
-    cent_rows = sorted(
-        (r["cell"], [float(x) for x in r["centroid"]])
-        for r in _read_bounded_rows(
-            spark, f"{path}/centroids.parquet", "cell", max_cells
-        )
-    )
-    cb_rows = sorted(
-        (r["sub"], r["cell"], list(r["centroid"]))
-        for r in _read_bounded_rows(
-            spark, f"{path}/codebooks.parquet", "codebook", max_cells
-        )
-    )
-    if not cb_rows:
-        raise ValueError(
-            f"ivf_pq probe: empty codebook set at {path}/codebooks.parquet "
-            "— the index is truncated or was not written by "
-            "ivf_pq_index_write"
-        )
-    dsub = len(cb_rows[0][2])
-    cell_tables = _ivf_pq_probe_tables(
-        cent_rows, cb_rows, qvec,
-        len(cent_rows) if adaptive_nprobe else nprobe, dsub,
-    )
-    vectors = _read_index_vectors(spark, path)
-    short_ids = None
-    if adaptive_nprobe:
-        cell_tables, short_ids = _adaptive_pruned_tables(
-            lambda cs: vectors.filter(F.col("cell").isin(cs)),
-            cell_tables, "cell", k, rerank_factor, prune_phase1,
-            probe_stats, id_col=id_col,
-        )
-    elif adc_prune:
-        # soundness notes live on _adc_pruned_tables: the threshold
-        # needs k*rerank REAL distances (NULL/NaN phase-1 rows skip
-        # pruning — also prevents float(None)); NaN table slots are
-        # unreachable PADDING under the write/add lifecycle (codes
-        # always reference existing codebook entries), so lb's nanmin
-        # is a true bound there. Caveat: stale codes predating a
-        # codebook rebuild (already guarded by the add-time schema
-        # check and the CLI's stale-codebook clear) could surface
-        # NULL-ADC rows from a pruned cell; adc_prune assumes the
-        # lifecycle's code/codebook consistency.
-        cell_tables = _adc_pruned_tables(
-            lambda cs: vectors.filter(F.col("cell").isin(cs)),
-            cell_tables, "cell", k, rerank_factor, prune_phase1,
-            probe_stats,
-        )
-    elif probe_stats is not None:
-        cells0 = [int(c) for c in cell_tables]
-        probe_stats.update(
-            cells_ranked=list(cells0), cells_scanned=list(cells0),
-            pruned_cells=[], threshold=None,
-        )
-    cands = vectors.filter(
-        F.col("cell").isin([int(c) for c in cell_tables])
-    )
-    if short_ids is not None:
-        # the adaptive rounds already produced the exact ADC shortlist
-        return _ivf_pq_exact_rerank(cands, short_ids, qvec, k, id_col, vec_col)
-    return _ivf_pq_adc_rerank(
-        cands, cell_tables, qvec, k, rerank_factor, id_col, vec_col, "cell"
+    ix = _open_ann_index(spark, path, max_cells, layout="ivf-pq")
+    return _probe_ann(
+        ix, query, ix.scan, k, nprobe, rerank_factor, id_col, vec_col,
+        adc_prune=adc_prune, prune_phase1=prune_phase1,
+        probe_stats=probe_stats, adaptive_nprobe=adaptive_nprobe,
     )
 
 
@@ -3253,11 +3228,9 @@ def ann_index_search_many(
     MANY query vectors with the model state loaded ONCE — the serving
     seam under the streaming vector-search job. ``queries`` is a list of
     ``(query_id, vector)`` pairs (trigger-bounded by the caller); each
-    query runs the exact single-query probe math (shared
-    ``_ivf_probe_cells`` / ``_ivf_pq_probe_tables`` /
-    ``_ivf_pq_adc_rerank`` helpers), so per-query results are
-    bit-identical to ``ivf_index_topk`` / ``ivf_pq_index_topk`` over the
-    same index.
+    query runs the single-query probe (``_probe_ann``), so per-query
+    results are bit-identical to ``ivf_index_topk`` /
+    ``ivf_pq_index_topk`` over the same index.
 
     Returns ``(rows, score_col)``: driver-side result tuples
     ``(query_id, rank, hit_id, score)`` — k-bounded per query — and the
@@ -3272,102 +3245,19 @@ def ann_index_search_many(
     layout only) replaces the fixed ``nprobe`` with the Best-Bin-First
     bound per query (ivf_pq_index_topk's contract: hits bit-identical
     to the exhaustive all-cells probe)."""
-    if adaptive_nprobe and adc_prune:
-        raise ValueError(
-            "adaptive_nprobe subsumes adc_prune — pass one or the other"
-        )
-
-    is_pq = index_store.has(spark, path, "codebooks.parquet")
-    if adaptive_nprobe and not is_pq:
-        raise ValueError(
-            "adaptive_nprobe needs the IVF-PQ layout — the Best-Bin-First "
-            "bound comes from the ADC tables; a plain IVF index has no "
-            "codes (a silent fixed-nprobe fallback could miss neighbors "
-            "the caller believes the bound covered)"
-        )
-    cent_raw = _read_bounded_rows(
-        spark, f"{path}/centroids.parquet", "cell", max_cells
-    )
-    vectors = _read_index_vectors(spark, path)
-    rotation = _read_index_rotation(spark, path)
-    if rotation is not None and not is_pq:
-        # a rotation can only legitimately exist on an IVF-PQ layout
-        # (OPQ pairs with PQ codebooks; the CLI enforces --opq needs
-        # --pq, and every index writer clears the file on plain
-        # rebuilds).  Applying it here would rotate queries against
-        # UN-rotated vectors — and ivf_index_topk never reads the file,
-        # so the two probe surfaces of the same index would silently
-        # diverge.  A present rotation over plain IVF is a corrupt or
-        # stale layout: refuse loudly on both surfaces.
-        raise ValueError(
-            f"index at {path!r} has rotation.parquet but no "
-            "codebooks.parquet — a rotation is only valid on the IVF-PQ "
-            "layout; rebuild the index (stale rotation over plain IVF "
-            "would silently return wrong neighbors)"
-        )
+    ix = _open_ann_index(spark, path, max_cells)
     out = []
-    if is_pq:
-        cent_rows = sorted(
-            (r["cell"], [float(x) for x in r["centroid"]]) for r in cent_raw
-        )
-        cb_rows = sorted(
-            (r["sub"], r["cell"], list(r["centroid"]))
-            for r in _read_bounded_rows(
-                spark, f"{path}/codebooks.parquet", "codebook", max_cells
-            )
-        )
-        if not cb_rows:
-            raise ValueError(
-                f"ann search: empty codebook set at {path}/codebooks.parquet"
-            )
-        dsub = len(cb_rows[0][2])
-        for qid, vec in queries:
-            qvec = _rotate_qvec([float(x) for x in vec], rotation)
-            cell_tables = _ivf_pq_probe_tables(
-                cent_rows, cb_rows, qvec,
-                len(cent_rows) if adaptive_nprobe else nprobe, dsub,
-            )
-            short_ids = None
-            if adaptive_nprobe:
-                cell_tables, short_ids = _adaptive_pruned_tables(
-                    lambda cs: vectors.filter(F.col("cell").isin(cs)),
-                    cell_tables, "cell", k, rerank_factor, prune_phase1,
-                    id_col=id_col,
-                )
-            elif adc_prune:
-                cell_tables = _adc_pruned_tables(
-                    lambda cs: vectors.filter(F.col("cell").isin(cs)),
-                    cell_tables, "cell", k, rerank_factor, prune_phase1,
-                )
-            cands = vectors.filter(
-                F.col("cell").isin([int(c) for c in cell_tables])
-            )
-            if short_ids is not None:
-                hits = _ivf_pq_exact_rerank(
-                    cands, short_ids, qvec, k, id_col, vec_col
-                ).collect()  # k-bounded
-            else:
-                hits = _ivf_pq_adc_rerank(
-                    cands, cell_tables, qvec, k, rerank_factor,
-                    id_col, vec_col, "cell",
-                ).collect()  # k-bounded
-            out.extend(
-                (qid, rank, h[0], float(h[1]))
-                for rank, h in enumerate(hits, start=1)
-            )
-        return out, "l2sq"
     for qid, vec in queries:
-        qvec = _rotate_qvec([float(x) for x in vec], rotation)
-        cells = _ivf_probe_cells(cent_raw, qvec, nprobe)
-        cands = vectors.filter(F.col("cell").isin(cells))
-        hits = brute_force_topk(
-            cands, qvec, id_col=id_col, vec_col=vec_col, k=k
+        hits = _probe_ann(
+            ix, vec, ix.scan, k, nprobe, rerank_factor, id_col, vec_col,
+            adc_prune=adc_prune, prune_phase1=prune_phase1,
+            adaptive_nprobe=adaptive_nprobe,
         ).collect()  # k-bounded
         out.extend(
             (qid, rank, h[0], float(h[1]))
             for rank, h in enumerate(hits, start=1)
         )
-    return out, "cosine"
+    return out, "l2sq" if ix.layout == "ivf-pq" else "cosine"
 
 
 def ivf_pq_index_lifecycle_audit(

@@ -461,9 +461,9 @@ def _winnow_kernel(k: int, w: int, robust: bool, portable: bool):
     round 16 extends it to the xxhash64 PRODUCTION path (VERDICT r15 #3)
     with a numpy-vectorized sliding-window XXH64 (_xxh64_windows).
 
-    Exact-equivalence notes (each mirrors the HOF chain, pinned by
-    tests/test_text.py::test_winnow_md5_kernel_matches_hof_expression and
-    ::test_winnow_xxhash64_kernel_matches_hof_expression):
+    Exact-equivalence notes (each mirrors the HOF chain, pinned for both
+    hash modes by the kernel-vs-HOF-expression tests in
+    tests/test_text.py):
     - normalization: Java's default ``\\s`` is ASCII-only, so the Python
       regex compiles with ``re.ASCII`` ([ \\t\\n\\r\\f\\v] — the same set);
       ``F.lower``/``str.lower`` and ``F.trim``/``strip(' ')`` agree
@@ -565,11 +565,6 @@ def _winnow_kernel(k: int, w: int, robust: bool, portable: bool):
     # projection/filter-scoped — Catalyst rejects nondeterministic
     # expressions inside join conditions and the like.
     return _fps.asNondeterministic()
-
-
-def _winnow_md5_kernel(k: int, w: int, robust: bool):
-    """The portable-path kernel (round-15 name, kept for callers/tests)."""
-    return _winnow_kernel(k, w, robust, portable=True)
 
 
 def winnow_fingerprints(

@@ -1189,7 +1189,7 @@ def q_ann_opq_index(spark: SparkSession, sf: str) -> DataFrame:
             ).collect()  # k-bounded, RAW query
         }
         rotation_persisted = (
-            similarity._read_index_rotation(spark, tmp) is not None
+            similarity._open_ann_index(spark, tmp).rotation is not None
         )
         exact, _, recall_ok = similarity.exact_topk_witness(
             data.unionByName(batch), qvec, hit, 5

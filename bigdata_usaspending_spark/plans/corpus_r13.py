@@ -231,7 +231,7 @@ def q_corpus_semantic_opq(spark: SparkSession, sf: str) -> DataFrame:
             ).collect()  # k-bounded, RAW query
         }
         rotation_persisted = (
-            similarity._read_index_rotation(spark, tmp) is not None
+            similarity._open_ann_index(spark, tmp).rotation is not None
         )
         exact, exact_ids, recall_ok = similarity.exact_topk_witness(
             survivors, qvec, hit, _OPQ_CAP_K

@@ -1813,3 +1813,40 @@ def test_plain_rebuild_clears_former_ivf_pq_model_files(
     )
     vectors = spark.read.parquet(f"{path}/vectors.parquet")
     assert "codes" not in vectors.columns and vectors.count() == 48
+
+
+def test_semantic_dedup_against_opq_index_rotates_the_batch(spark, tmp_path):
+    """An OPQ-built IVF-PQ index stores rotated vectors and centroids: a
+    batch of RAW copies of two index vectors must be mapped into the
+    index space before it is assigned and compared, so both copies are
+    dropped as near-duplicates."""
+    rot = _signed_permutation(8)
+    rotated, rot_cents = _tiny_ivf_pq_corpus(spark, rot)
+    path = str(tmp_path / "opq_idx")
+    similarity.ivf_pq_index_build(rotated, rot_cents, path, 4, 4, rotation=rot)
+    raw, _ = _tiny_ivf_pq_corpus(spark)
+    batch = raw.filter(F.col("vec_id").isin(5, 18)).withColumn(
+        "vec_id", F.col("vec_id") + 1000
+    )
+    survivors = similarity.semantic_dedup_against_index(
+        spark, path, batch, threshold=0.99
+    )
+    assert survivors.collect() == []
+
+
+def test_plain_ivf_index_refused_by_ivf_pq_probe_and_stale_rotation(
+    spark, tmp_path
+):
+    """ivf_pq_index_topk on a plain-IVF index is a ValueError naming the
+    ivf layout and ivf_index_topk (not Spark's PATH_NOT_FOUND for
+    codebooks.parquet), and semantic_dedup_against_index refuses a stale
+    rotation.parquet over the plain layout like every index surface."""
+    data, cents = _tiny_ivf_pq_corpus(spark)
+    path = str(tmp_path / "plain_idx")
+    similarity.ivf_index_write(data, cents, path)
+    q = [1.0] * 8
+    with pytest.raises(ValueError, match="ivf layout.*ivf_index_topk"):
+        similarity.ivf_pq_index_topk(spark, path, q, k=3)
+    similarity._write_index_rotation(spark, _signed_permutation(8), path)
+    with pytest.raises(ValueError, match="rotation"):
+        similarity.semantic_dedup_against_index(spark, path, data.limit(2))

@@ -8,6 +8,10 @@
 - The ANN tier: one exact-witness kernel call (``exact_topk_witness``),
   one residual codebook training call, and the IVF-PQ layout writer's
   privates used only inside ``similarity.py``.
+- The ANN index surfaces: one persisted-index open (``_open_ann_index``:
+  the only layout check on ``codebooks.parquet`` besides the stats
+  report, the only stale-rotation refusal) and one per-query probe
+  (``_probe_ann``: the only call of each probe step).
 - No unmarked ``except Exception`` in the package.
 - Every package name ``scripts/*.py`` and ``bench.py`` import or reach
   through an attribute exists (nothing in the default test run executes
@@ -94,6 +98,32 @@ def test_ivf_pq_writer_privates_stay_in_similarity():
     ]
     for needle in ("_ivf_pq_index_write_encoded", "_write_index_rotation"):
         assert [str(p) for p in outside if needle in p.read_text(encoding="utf-8")] == []
+
+
+def test_one_ann_probe_sequence():
+    for step in (
+        "_ivf_pq_probe_tables", "_adaptive_pruned_tables",
+        "_adc_pruned_tables", "_ivf_probe_cells",
+    ):
+        assert _package_calls(step) == 1, step
+
+
+def test_one_persisted_ann_index_open():
+    src = _source("operators/similarity.py")
+    assert src.count("a rotation is only valid on the IVF-PQ") == 1
+    layout_checks = [
+        fn.name
+        for fn in ast.walk(ast.parse(src))
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", None) == "has"
+        and any(
+            isinstance(a, ast.Constant) and a.value == "codebooks.parquet"
+            for a in node.args
+        )
+    ]
+    assert sorted(layout_checks) == ["_open_ann_index", "ann_index_stats"]
 
 
 def test_broad_exception_handlers_are_marked():
