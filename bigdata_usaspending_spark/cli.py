@@ -925,7 +925,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.job == "winnow-index":
-        from . import index_store
         from .operators import dedup as dd
         from .session import apply_runtime_confs
 
@@ -943,8 +942,8 @@ def main(argv: list[str] | None = None) -> int:
             print(_json.dumps(dd.winnow_index_stats(spark, args.index)))
             return 0
         if args.action == "remove":
-            meta = index_store.read_meta(spark, args.index)
-            ids = _cli_remove_ids(spark, args, meta["id_type"])
+            ix = dd._open_winnow_index(spark, args.index)
+            ids = _cli_remove_ids(spark, args, ix.meta["id_type"])
             rep = dd.winnow_index_remove(
                 spark, args.index, ids, id_col=args.id_col
             )
@@ -1009,7 +1008,7 @@ def main(argv: list[str] | None = None) -> int:
                 df, args.index, id_col=args.id_col, text_col=args.text_col,
                 k=args.k, w=args.w, portable=args.portable,
             )
-            n = dd._read_index_fps(spark, args.index).count()
+            n = dd._open_winnow_index(spark, args.index).fps.count()
             print(
                 f"built winnow index over {n} fingerprinted docs "
                 f"({args.index})"
@@ -1020,7 +1019,7 @@ def main(argv: list[str] | None = None) -> int:
                 spark, args.index, df,
                 id_col=args.id_col, text_col=args.text_col,
             )
-            n = dd._read_index_fps(spark, args.index).count()
+            n = dd._open_winnow_index(spark, args.index).fps.count()
             print(f"index now holds {n} fingerprinted docs ({args.index})")
             return 0
         fn = {

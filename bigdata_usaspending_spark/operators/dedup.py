@@ -270,6 +270,25 @@ def shingles_of(col: Column | str, n: int = 3) -> Column:
     return F.array_distinct(ngram_occurrences(col, n)).alias("shingles")
 
 
+def _stop_grams(max_df: int, key: str, *frames: DataFrame) -> DataFrame:
+    """The stop-gram set behind every near-dup tier's ``max_*_df`` cap:
+    the ``key`` values (shingle or fingerprint hashes) in more than
+    ``max_df`` documents, counted over the union of ``frames``. Each
+    frame must hold one row per (document, key) — callers whose rows
+    repeat a key within a document (positions) ``distinct()`` first. What
+    a capped key is removed from, and so whether capped Jaccard is an
+    underestimate or value-exact, stays with each caller."""
+    keys = functools.reduce(
+        DataFrame.unionByName, [f.select(key) for f in frames]
+    )
+    return (
+        keys.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("_df"))
+        .filter(F.col("_df") > max_df)
+        .select(key)
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -308,13 +327,7 @@ def ngram_jaccard_pairs(
     # running many dedup passes should materialize and then unpersist.
     sh.cache()
     if max_shingle_df is not None:
-        heavy = (
-            sh.groupBy("_sh")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_shingle_df)
-            .select("_sh")
-        )
-        sh = sh.join(heavy, on="_sh", how="anti")
+        sh = sh.join(_stop_grams(max_shingle_df, "_sh", sh), on="_sh", how="anti")
     a = sh.select(F.col("_id").alias("id_a"), F.col("_nsh").alias("nsh_a"), "_sh")
     b = sh.select(F.col("_id").alias("id_b"), F.col("_nsh").alias("nsh_b"), "_sh")
     inter = (
@@ -410,12 +423,7 @@ def winnow_pairs(
         # apply verbatim: eager lost — q_dedup_winnow 1.5→3.1 s)
         fps.cache()
     if max_fingerprint_df is not None:
-        heavy = (
-            fps.groupBy("_f")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_fingerprint_df)
-            .select("_f")
-        )
+        heavy = _stop_grams(max_fingerprint_df, "_f", fps)
         fps = fps.join(heavy, on="_f", how="anti")
     a = fps.select(F.col("_id").alias("id_a"), F.col("_nf").alias("nf_a"), "_f")
     b = fps.select(F.col("_id").alias("id_b"), F.col("_nf").alias("nf_b"), "_f")
@@ -515,13 +523,8 @@ def winnow_match_spans(
         # race at every site tested this round.
         pos_fps.cache()
     if max_fingerprint_df is not None:
-        heavy = (
-            pos_fps.select("_id", "_f")
-            .distinct()
-            .groupBy("_f")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_fingerprint_df)
-            .select("_f")
+        heavy = _stop_grams(
+            max_fingerprint_df, "_f", pos_fps.select("_id", "_f").distinct()
         )
         pos_fps = pos_fps.join(heavy, on="_f", how="anti")
     a = pos_fps.select(
@@ -599,11 +602,10 @@ def winnow_span_scrub(
         portable=portable, max_fingerprint_df=max_fingerprint_df,
         pfps_df=pfps_df,
     )
-    per_doc = spans.groupBy(F.col("id_b").alias("_sid")).agg(
-        F.collect_list(F.struct("b_start", "b_end")).alias("_spans"),
-        F.count(F.lit(1)).cast("int").alias("n_spans"),
+    return _scrub_spans(
+        df, id_col, text_col,
+        spans.select(F.col("id_b").alias("_sid"), "b_start", "b_end"),
     )
-    return _scrub_covered_spans(df, id_col, text_col, per_doc)
 
 
 @functools.lru_cache(maxsize=None)
@@ -665,16 +667,31 @@ def _scrub_spans_kernel():
     return _scrub.asNondeterministic()
 
 
+def _scrub_spans(
+    df: DataFrame, id_col: str, text_col: str, spans: DataFrame
+) -> DataFrame:
+    """The scrub stage of every span-scrub surface — winnow_span_scrub,
+    winnow_scrub_against_index and the streaming scrub ledger, each
+    feeding its own verified pairs: ``spans`` holds one ``(_sid,
+    b_start, b_end)`` row per pair (``_sid`` the doc losing the span);
+    each doc loses the per-char UNION of its spans and counts them in
+    ``n_spans``. One aggregate on ``_sid``, then _scrub_covered_spans."""
+    per_doc = spans.groupBy("_sid").agg(
+        F.collect_list(F.struct("b_start", "b_end")).alias("_spans"),
+        F.count(F.lit(1)).cast("int").alias("n_spans"),
+    )
+    return _scrub_covered_spans(df, id_col, text_col, per_doc)
+
+
 def _scrub_covered_spans(
     df: DataFrame, id_col: str, text_col: str, per_doc: DataFrame
 ) -> DataFrame:
-    """The scrub stage of winnow_span_scrub, split out so the incremental
-    and streaming forms can feed their own span evidence: cut the
-    per-char UNION of each doc's covering spans (``per_doc``:
-    ``_sid, _spans array<struct<b_start,b_end>>, n_spans``) out of its
-    normalized text. Docs absent from ``per_doc`` return whole with
-    ``n_cut = 0``. Scan arithmetic per row (Arrow-vectorized — see
-    _scrub_spans_kernel) — no shuffle of its own."""
+    """Cut the per-char UNION of each doc's covering spans (``per_doc``:
+    ``_sid, _spans array<struct<b_start,b_end>>, n_spans`` — _scrub_spans'
+    aggregate) out of its normalized text. Docs absent from ``per_doc``
+    return whole with ``n_cut = 0``. Scan arithmetic per row
+    (Arrow-vectorized — see _scrub_spans_kernel) — no shuffle of its
+    own."""
     c = F.col(text_col)
     norm = F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
     out = (
@@ -776,14 +793,7 @@ def winnow_dedup_against_index(
     b_ex = bfps.select(F.col("_id").alias("_bid"), F.explode("fps").alias("_f"))
     i_ex = index.select(F.col("_id").alias("_iid"), F.explode("fps").alias("_f"))
     if max_fingerprint_df is not None:
-        heavy = (
-            i_ex.select("_f")
-            .unionByName(b_ex.select("_f"))
-            .groupBy("_f")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_fingerprint_df)
-            .select("_f")
-        )
+        heavy = _stop_grams(max_fingerprint_df, "_f", i_ex, b_ex)
         i_ex = i_ex.join(heavy, on="_f", how="anti")
         b_ex = b_ex.join(heavy, on="_f", how="anti")
     cand = (
@@ -916,14 +926,10 @@ def winnow_spans_against_index(
         # combined DOCUMENT frequency (positions collapse to one row per
         # (doc, fp) before counting, unlike the set-valued tiers where
         # exploded rows are already distinct)
-        heavy = (
-            i_ex.select(F.col("_iid").alias("_d"), "_f")
-            .distinct()
-            .unionByName(b_ex.select(F.col("_bid").alias("_d"), "_f").distinct())
-            .groupBy("_f")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_fingerprint_df)
-            .select("_f")
+        heavy = _stop_grams(
+            max_fingerprint_df, "_f",
+            i_ex.select("_iid", "_f").distinct(),
+            b_ex.select("_bid", "_f").distinct(),
         )
         i_ex = i_ex.join(heavy, on="_f", how="anti")
         b_ex = b_ex.join(heavy, on="_f", how="anti")
@@ -999,11 +1005,10 @@ def winnow_scrub_against_index(
         portable=portable, max_fingerprint_df=max_fingerprint_df,
         batch_pfps=batch_pfps,
     )
-    per_doc = spans.groupBy(F.col("id_batch").alias("_sid")).agg(
-        F.collect_list(F.struct("b_start", "b_end")).alias("_spans"),
-        F.count(F.lit(1)).cast("int").alias("n_spans"),
+    return _scrub_spans(
+        batch, id_col, text_col,
+        spans.select(F.col("id_batch").alias("_sid"), "b_start", "b_end"),
     )
-    return _scrub_covered_spans(batch, id_col, text_col, per_doc)
 
 
 def winnow_pos_index_write(
@@ -1041,20 +1046,6 @@ def winnow_pos_index_write(
     index_store.clear_on_rebuild(df.sparkSession, path)
 
 
-def _checked_add_meta(spark, path: str, df: DataFrame, id_col: str) -> dict:
-    """The index meta, after the add surfaces' guards: the batch's id
-    type must match the index's, and no batch id may be tombstoned."""
-    meta = index_store.read_meta(spark, path)
-    id_type = dict(df.dtypes)[id_col]
-    if id_type != meta["id_type"]:
-        raise ValueError(
-            f"batch id column {id_col!r} has type {id_type} but the "
-            f"index was built with {meta['id_type']}; cast the batch ids"
-        )
-    index_store.refuse_tombstoned(spark, path, df, id_col, "winnow_index_compact")
-    return meta
-
-
 def winnow_pos_index_add(
     spark,
     path: str,
@@ -1068,11 +1059,9 @@ def winnow_pos_index_add(
     miss) and appended to the same layout. Mirrors ``ivf_pq_index_add``,
     including the id-type guard (appending a second id type writes a
     mixed-schema parquet that later probes surface as nulls)."""
-    meta = _checked_add_meta(spark, path, df, id_col)
-    pfps = winnow_pos_index(
-        df, id_col, text_col,
-        k=meta["k"], w=meta["w"], portable=meta["portable"],
-    )
+    ix = _open_winnow_index(spark, path)
+    ix.check_add(df, id_col)
+    pfps = winnow_pos_index(df, id_col, text_col, **ix.params)
     pfps.write.mode("append").parquet(f"{path}/fps.parquet")
 
 
@@ -1098,7 +1087,8 @@ def winnow_index_compact(
         # right after a large removal would otherwise over-shard the
         # surviving rows far below target_file_bytes
         n_files = max(1, -(-live_bytes // max(1, int(target_file_bytes))))
-        _read_index_fps(spark, path).repartition(n_files).write.parquet(tmp)
+        live = _open_winnow_index(spark, path).fps
+        live.repartition(n_files).write.parquet(tmp)
 
     return index_store.compact(
         spark, path, "fps.parquet", "winnow_index_compact", rewrite
@@ -1123,38 +1113,83 @@ def winnow_index_add_batch(
     ``fps.parquet`` under a ``b{batch_id}-`` prefix, advance the add
     manifest LAST; replays of committed batches skip, crashed batches
     self-clean their prefix files on redo. Fingerprints use the SAVED
-    parameters, with the id-type guard.
+    parameters, after the add guards (``_WinnowIndex.check_add``).
 
     ``pfps_df`` (optional): a precomputed positioned frame (the
     ``(_id, pfps)`` shape) so a caller that already fingerprinted the
-    batch — the streaming dedup job needs the same frame for its
-    decision tiers — skips the re-hash. MUST have been computed with the
-    index's saved parameters (callers read them from the same meta);
-    empty-set rows are filtered here either way."""
+    batch skips the re-hash. MUST have been computed with the index's
+    saved parameters; empty-set rows are filtered here either way."""
 
     def stage(staging: str) -> None:
-        meta = _checked_add_meta(spark, path, batch_df, id_col)
+        ix = _open_winnow_index(spark, path)
+        ix.check_add(batch_df, id_col)
         pfps = (
             pfps_df.filter(F.size("pfps") > 0)
             if pfps_df is not None
-            else winnow_pos_index(
-                batch_df, id_col, text_col,
-                k=meta["k"], w=meta["w"], portable=meta["portable"],
-            )
+            else winnow_pos_index(batch_df, id_col, text_col, **ix.params)
         )
         pfps.write.mode("overwrite").parquet(staging)
 
     return index_store.add_batch(spark, path, "fps.parquet", batch_id, stage)
 
 
+class _WinnowIndex:
+    """A persisted positioned winnow index as its surfaces use it, from
+    ``_open_winnow_index``:
+
+    - ``meta``: the saved fingerprint parameters and id column
+      (``params`` is its ``k``/``w``/``portable`` as keyword arguments);
+    - ``fps``: the LIVE ``(_id, pfps)`` frame (_read_index_fps), read on
+      first use, so a surface that needs only the parameters schedules
+      no read;
+    - ``check_add(df, id_col)``: the add surfaces' guards — the batch's
+      id type must match the index's, and no batch id may be
+      tombstoned."""
+
+    def __init__(self, spark, path: str, meta: dict):
+        self.spark, self.path, self.meta = spark, path, meta
+        self.params = {k: meta[k] for k in ("k", "w", "portable")}
+
+    @functools.cached_property
+    def fps(self) -> DataFrame:
+        return _read_index_fps(self.spark, self.path)
+
+    def check_add(self, df: DataFrame, id_col: str) -> None:
+        id_type = dict(df.dtypes)[id_col]
+        if id_type != self.meta["id_type"]:
+            raise ValueError(
+                f"batch id column {id_col!r} has type {id_type} but the "
+                f"index was built with {self.meta['id_type']}; cast the "
+                "batch ids"
+            )
+        index_store.refuse_tombstoned(
+            self.spark, self.path, df, id_col, "winnow_index_compact"
+        )
+
+
+def _open_winnow_index(spark, path: str) -> _WinnowIndex:
+    """THE persisted winnow-index open: the probes (spans, scrub,
+    dedup), the adds, remove, stats, compact, the append-only streaming
+    dedup job and the CLI read an index through here — the saved meta
+    (a ValueError when ``meta.json`` is missing) and the live positioned
+    frame."""
+    return _WinnowIndex(spark, path, index_store.read_meta(spark, path))
+
+
+def _value_sets(pfps: DataFrame) -> DataFrame:
+    """A positioned ``(_id, pfps)`` frame as plain value sets ``(_id,
+    fps)`` — the drop tiers' form of the same index (_pos_vals)."""
+    return pfps.select("_id", _pos_vals("pfps").alias("fps"))
+
+
 def _read_index_fps(spark, path: str) -> DataFrame:
     """The LIVE fingerprint set of a persisted positioned winnow index:
     ``fps.parquet`` minus any tombstoned doc ids (winnow_index_remove).
-    Every probe surface (spans/scrub/dedup, the streaming dedup job, the
-    stats verb) reads through here, so a removed doc stops matching —
-    and stops SUPPRESSING near-dups — immediately, before the physical
-    delete that the next winnow_index_compact performs. No tombstones →
-    the plain scan (plus the parallelism spread), zero other overhead.
+    Every surface reads it through ``_open_winnow_index``, so a removed
+    doc stops matching — and stops SUPPRESSING near-dups — immediately,
+    before the physical delete that the next winnow_index_compact
+    performs. No tombstones → the plain scan (plus the parallelism
+    spread), zero other overhead.
 
     _ensure_parallelism matters HERE specifically: winnow_index_compact
     rewrites fps.parquet into size-targeted files, so a compacted
@@ -1184,11 +1219,11 @@ def winnow_index_remove(spark, path: str, ids, id_col: "str | None" = None) -> d
     defaults to the saved meta's), or a plain iterable of id values.
 
     Returns ``{"requested", "matched_live", "tombstoned_total"}``."""
-    meta = index_store.read_meta(spark, path)
+    ix = _open_winnow_index(spark, path)
     return index_store.remove(
-        spark, path, ids, _read_index_fps(spark, path),
-        id_col=id_col or meta.get("id_col", "doc_id"),
-        id_type=meta["id_type"],
+        spark, path, ids, ix.fps,
+        id_col=id_col or ix.meta.get("id_col", "doc_id"),
+        id_type=ix.meta["id_type"],
         tomb_col="_id",
         verb="winnow_index_remove",
     )
@@ -1202,14 +1237,14 @@ def winnow_index_stats(spark, path: str) -> dict:
     winnow_index_compact)."""
     from ..io import hadoop_data_file_stats
 
-    meta = index_store.read_meta(spark, path)
+    ix = _open_winnow_index(spark, path)
     target = f"{path}/fps.parquet"
     n_files, n_bytes = hadoop_data_file_stats(spark, target)
     n_tomb = index_store.pending_tombstones(spark, path)
     return {
-        "k": meta["k"], "w": meta["w"], "portable": meta["portable"],
-        "id_type": meta["id_type"],
-        "docs": _read_index_fps(spark, path).count(),
+        **ix.params,
+        "id_type": ix.meta["id_type"],
+        "docs": ix.fps.count(),
         "tombstones": n_tomb,
         "data_files": n_files,
         "data_bytes": n_bytes,
@@ -1229,12 +1264,10 @@ def winnow_index_spans(
     positioned winnow index (winnow_spans_against_index over the saved
     layout, fingerprint parameters loaded from the index meta). The
     index parquet is scan-only; the batch broadcasts."""
-    meta = index_store.read_meta(spark, path)
-    index = _read_index_fps(spark, path)
+    ix = _open_winnow_index(spark, path)
     return winnow_spans_against_index(
-        batch, index, id_col, text_col,
-        k=meta["k"], w=meta["w"], threshold=threshold,
-        portable=meta["portable"], max_fingerprint_df=max_fingerprint_df,
+        batch, ix.fps, id_col, text_col, threshold=threshold,
+        max_fingerprint_df=max_fingerprint_df, **ix.params,
     )
 
 
@@ -1249,12 +1282,10 @@ def winnow_index_scrub(
 ) -> DataFrame:
     """Passage-level decontamination against a persisted positioned
     winnow index (winnow_scrub_against_index over the saved layout)."""
-    meta = index_store.read_meta(spark, path)
-    index = _read_index_fps(spark, path)
+    ix = _open_winnow_index(spark, path)
     return winnow_scrub_against_index(
-        batch, index, id_col, text_col,
-        k=meta["k"], w=meta["w"], threshold=threshold,
-        portable=meta["portable"], max_fingerprint_df=max_fingerprint_df,
+        batch, ix.fps, id_col, text_col, threshold=threshold,
+        max_fingerprint_df=max_fingerprint_df, **ix.params,
     )
 
 
@@ -1272,14 +1303,10 @@ def winnow_index_dedup(
     (distinct fp — provably the plain winnowed set), so the drop tier
     (winnow_dedup_against_index) runs over the same index the span
     tiers probe — one persisted artifact serves all three actions."""
-    meta = index_store.read_meta(spark, path)
-    index = _read_index_fps(spark, path).select(
-        "_id", _pos_vals("pfps").alias("fps")
-    )
+    ix = _open_winnow_index(spark, path)
     return winnow_dedup_against_index(
-        batch, index, id_col, text_col,
-        k=meta["k"], w=meta["w"], threshold=threshold,
-        portable=meta["portable"], max_fingerprint_df=max_fingerprint_df,
+        batch, _value_sets(ix.fps), id_col, text_col, threshold=threshold,
+        max_fingerprint_df=max_fingerprint_df, **ix.params,
     )
 
 

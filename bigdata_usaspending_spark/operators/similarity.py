@@ -1737,11 +1737,11 @@ def ivf_pq_topk(
        (q − centroid_cell) builds an m x k squared-L2 table against the
        shared residual codebooks — nprobe tiny tables, driver-side, the
        same left-fold binary64 arithmetic as pq_topk's;
-    3. ADC scan: candidates = encoded rows of the probed cells (a
-       broadcast semi-join that prunes to nprobe partitions when the
-       index is written partitioned by cell); each row's approximate
-       distance = sum of its cell's table entries selected by its codes,
-       folded sub-ascending;
+    3. ADC scan: candidates = encoded rows of the probed cells (the
+       ``cell IN (...)`` filter of _scan_cells, which prunes to nprobe
+       partitions when the index is written partitioned by cell); each
+       row's approximate distance = sum of its cell's table entries
+       selected by its codes, folded sub-ascending;
     4. exact rerank: the k*rerank_factor best candidates re-scored by
        exact squared L2 on the ORIGINAL vectors; top-k ascending.
 
@@ -1759,17 +1759,10 @@ def ivf_pq_topk(
         for r in centroids.collect()
     )
 
-    def scan(cells):
-        # a broadcast semi-join: prunes to the probed partitions when
-        # the encoded frame is written partitioned by cell
-        probe_cells = local_frame(
-            encoded.sparkSession, [(int(c),) for c in cells], f"{cell_col} int"
-        )
-        return encoded.join(F.broadcast(probe_cells), on=cell_col, how="semi")
-
     return _probe_ann(
         _AnnIndex("ivf-pq", cent_rows, _collect_codebooks(codebooks), dsub),
-        query, scan, k, nprobe, rerank_factor, id_col, vec_col, cell_col,
+        query, lambda cells: _scan_cells(encoded, cells, cell_col),
+        k, nprobe, rerank_factor, id_col, vec_col, cell_col,
         adc_prune, prune_phase1, probe_stats, adaptive_nprobe,
     )
 
@@ -1793,9 +1786,9 @@ def _probe_ann(
     persisted single-query probes, ann_index_search_many's per-query loop
     and the in-memory ivf_pq_topk. ``ix`` is the model state
     (``_open_ann_index``), ``scan(cells)`` returns the candidate rows of
-    those cells (the persisted index's partition-pruned ``ix.scan``, or
-    ivf_pq_topk's semi-join). The raw query is first mapped into the
-    index space (the OPQ rotation, when ``ix`` has one).
+    those cells (_scan_cells over the persisted index's vectors, or over
+    ivf_pq_topk's encoded frame). The raw query is first mapped into
+    the index space (the OPQ rotation, when ``ix`` has one).
 
     - plain IVF: the ``nprobe`` centroid-nearest cells
       (``_ivf_probe_cells``), exact cosine top-k — ``(id, cosine)``;
@@ -2657,6 +2650,15 @@ def ann_index_remove(spark, path: str, ids, id_col: str = "vec_id") -> dict:
     )
 
 
+def _scan_cells(vectors: DataFrame, cells, cell_col: str = "cell") -> DataFrame:
+    """THE candidate scan of every IVF / IVF-PQ probe: the rows of
+    ``cells``, as a ``cell IN (...)`` predicate — on a persisted index the
+    PARTITION column, so Catalyst prunes to those cell directories
+    before a row is read; no job of its own (a broadcast semi-join
+    against a cell frame would schedule one per scan)."""
+    return vectors.filter(F.col(cell_col).isin([int(c) for c in cells]))
+
+
 class _AnnIndex:
     """One IVF / IVF-PQ index's model state, as the probe (``_probe_ann``)
     and the add, drift and dedup surfaces use it — read from disk by
@@ -2684,10 +2686,8 @@ class _AnnIndex:
         return _read_index_vectors(self._spark, self._path)
 
     def scan(self, cells) -> DataFrame:
-        """The persisted probe's candidate scan: a ``cell IN (...)``
-        predicate on the PARTITION column, so Catalyst prunes to those
-        cell directories before a row is read."""
-        return self.vectors.filter(F.col("cell").isin([int(c) for c in cells]))
+        """The persisted probe's candidate scan (_scan_cells)."""
+        return _scan_cells(self.vectors, cells)
 
     def model(self, component: str) -> DataFrame:
         """A stored model component (``"centroids"`` / ``"codebooks"``) as
@@ -3225,8 +3225,9 @@ def ann_index_search_many(
 ):
     """Probe a persisted IVF or IVF-PQ index (layout autodetected by the
     presence of ``codebooks.parquet``, the ann-index CLI contract) for
-    MANY query vectors with the model state loaded ONCE — the serving
-    seam under the streaming vector-search job. ``queries`` is a list of
+    MANY query vectors with the model state loaded ONCE: the open plus
+    _search_many, the per-query loop the streaming vector-search job
+    also runs over its own open. ``queries`` is a list of
     ``(query_id, vector)`` pairs (trigger-bounded by the caller); each
     query runs the single-query probe (``_probe_ann``), so per-query
     results are bit-identical to ``ivf_index_topk`` /
@@ -3245,7 +3246,20 @@ def ann_index_search_many(
     layout only) replaces the fixed ``nprobe`` with the Best-Bin-First
     bound per query (ivf_pq_index_topk's contract: hits bit-identical
     to the exhaustive all-cells probe)."""
-    ix = _open_ann_index(spark, path, max_cells)
+    return _search_many(
+        _open_ann_index(spark, path, max_cells), queries, k, nprobe,
+        rerank_factor, id_col, vec_col, adc_prune, prune_phase1,
+        adaptive_nprobe,
+    )
+
+
+def _search_many(
+    ix: "_AnnIndex", queries, k, nprobe, rerank_factor, id_col, vec_col,
+    adc_prune=False, prune_phase1=1, adaptive_nprobe=False,
+):
+    """ann_index_search_many's per-query loop over an opened index —
+    shared with the streaming serving trigger, which also needs the
+    open's vectors schema. Returns ``(rows, score_col)``."""
     out = []
     for qid, vec in queries:
         hits = _probe_ann(

@@ -28,16 +28,26 @@ one of three shapes:
 Every foreachBatch job runs through ``_run_micro_batches``: the one
 runner, and the one place that refuses to start a checkpoint-less query
 over output an earlier run already committed.
+
+The winnow streams share one decision step. ``_fingerprint_batch``
+fingerprints each micro-batch once; ``_winnow_decide`` makes the
+drop decision (plain or with drop evidence) for both the ledger job and
+the append-only index job; ``_winnow_span_pairs`` gives the verified
+span pairs that the evidence and the scrub ledger cut from. The
+append-only job runs the index's add guards (id type, tombstoned ids)
+before it writes its sink partition, then appends to the index.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import index_store
 from ..io import apply_versioned_batch, hadoop_child_names, read_state_manifest
-from ..operators.text import fingerprint
+from ..operators.text import fingerprint, winnow_fingerprints
 
 
 def read_events_stream(spark, path: str, schema) -> DataFrame:
@@ -1343,6 +1353,134 @@ def stream_build_corpus(
     )
 
 
+# --------------------------------------------------------------------------
+# the winnow decision step: ledger, append-only and scrub streams
+# --------------------------------------------------------------------------
+
+def _fingerprint_batch(
+    batch_df: DataFrame, id_col: str, text_col: str,
+    k: int, w: int, portable: bool, positioned: bool,
+) -> DataFrame:
+    """The micro-batch fingerprinted ONCE (the CPU-heavy stage) and
+    materialized: ``(_id, fps)`` plain or ``(_id, pfps)`` robust
+    positioned. The frame feeds the in-batch tier, the committed-side
+    probe and the rows the ledger or index keeps, through the fps/pfps
+    seams — without them each consumer re-normalizes and re-hashes the
+    text. Empty sets stay: they match nothing, but their docs still need
+    flags and rows."""
+    return batch_df.select(
+        F.col(id_col).alias("_id"),
+        winnow_fingerprints(
+            text_col, k=k, w=w, portable=portable, robust=positioned,
+            alias="pfps" if positioned else "fps",
+        ),
+    ).localCheckpoint()
+
+
+def _ledger_fps(cur: "DataFrame | None", id_col: str, fps_col: str):
+    """A ledger's committed fingerprint sets as a probe's ``(_id,
+    fps|pfps)`` index side, or None before the first commit."""
+    if cur is None:
+        return None
+    return cur.select(F.col(id_col).alias("_id"), fps_col)
+
+
+def _winnow_span_pairs(
+    batch_df: DataFrame, bpf: DataFrame, committed: "DataFrame | None",
+    id_col: str, text_col: str, **winnow,
+) -> DataFrame:
+    """The verified span pairs of a micro-batch, one row per (batch doc,
+    earlier doc): the in-batch tier (winnow_match_spans over the
+    positioned frame ``bpf``) plus, when ``committed`` ``(_id, pfps)`` is
+    given, the committed-side probe (winnow_spans_against_index —
+    scan-only, the batch broadcasts). Columns ``_sid`` (the later doc),
+    ``other_id``, ``jaccard``, ``n_shared``, ``n_anchors``, ``b_start``,
+    ``b_end``, harmonized across the two tiers (match_spans counts
+    n_shared via count_distinct -> long; the index probe via
+    array_intersect size -> int). The drop-evidence structs and the
+    scrub cuts both come from here."""
+    from ..operators.dedup import winnow_match_spans, winnow_spans_against_index
+
+    tiers = [(
+        winnow_match_spans(batch_df, id_col, text_col, pfps_df=bpf, **winnow),
+        "id_b", "id_a",
+    )]
+    if committed is not None:
+        tiers.append((
+            winnow_spans_against_index(
+                batch_df, committed, id_col, text_col, batch_pfps=bpf,
+                **winnow,
+            ),
+            "id_batch", "id_index",
+        ))
+    return functools.reduce(DataFrame.unionByName, [
+        pairs.select(
+            F.col(doc).alias("_sid"),
+            F.col(other).alias("other_id"),
+            F.col("jaccard").cast("double").alias("jaccard"),
+            F.col("n_shared").cast("long").alias("n_shared"),
+            F.col("n_anchors").cast("long").alias("n_anchors"),
+            F.col("b_start").cast("int").alias("b_start"),
+            F.col("b_end").cast("int").alias("b_end"),
+        )
+        for pairs, doc, other in tiers
+    ])
+
+
+def _winnow_decide(
+    batch_df: DataFrame, bfp: DataFrame, committed: "DataFrame | None",
+    id_col: str, text_col: str, evidence: bool, **winnow,
+) -> DataFrame:
+    """THE winnow decision of both dedup streams (the versioned ledger
+    and the append-only index, plain and evidence forms): a batch doc
+    drops iff its fingerprint Jaccard reaches the threshold against an
+    earlier same-batch doc or against ANY committed doc — dropped ones
+    included, so A~B~C with only B~C above threshold still drops C after
+    B dropped (the transitive-chain contract).
+
+    ``bfp`` is the batch's _fingerprint_batch frame and ``committed`` the
+    committed side in the same form — value sets ``(_id, fps)`` for the
+    plain decision (winnow_pairs in the batch, winnow_dedup_against_index
+    against the committed side), positioned ``(_id, pfps)`` for
+    ``evidence`` (the _winnow_span_pairs frames, whose verified pair sets
+    equal the value tiers' at cap=None) — or None before anything is
+    committed. Returns ``bfp``'s rows renamed to ``(id_col, fps|pfps)``
+    plus ``survivor``; with ``evidence`` also ``drop_evidence``, the
+    sorted ``(other_id, jaccard, n_shared, n_anchors, start, end)``
+    structs justifying a drop (NULL on survivors)."""
+    from ..operators.dedup import winnow_dedup_against_index, winnow_pairs
+
+    rows = bfp.select(F.col("_id").alias(id_col), bfp.columns[1])
+    if evidence:
+        per_doc = _winnow_span_pairs(
+            batch_df, bfp, committed, id_col, text_col, **winnow
+        ).groupBy(F.col("_sid").alias(id_col)).agg(
+            F.sort_array(F.collect_list(F.struct(
+                "other_id", "jaccard", "n_shared", "n_anchors",
+                F.col("b_start").alias("start"), F.col("b_end").alias("end"),
+            ))).alias("drop_evidence")
+        )
+        return rows.join(per_doc, on=id_col, how="left").select(
+            *rows.columns,
+            F.col("drop_evidence").isNull().alias("survivor"),
+            "drop_evidence",
+        )
+    drops = (
+        winnow_pairs(batch_df, id_col, text_col, fps_df=bfp, **winnow)
+        .select(F.col("id_b").alias(id_col))
+        .distinct()
+    )
+    if committed is not None:
+        survivors = winnow_dedup_against_index(
+            batch_df, committed, id_col, text_col, batch_fps=bfp, **winnow
+        ).select(id_col)
+        hits = batch_df.select(id_col).join(survivors, on=id_col, how="anti")
+        drops = drops.unionByName(hits).distinct()
+    return rows.join(
+        drops.withColumn("_dropped", F.lit(True)), on=id_col, how="left"
+    ).select(*rows.columns, F.col("_dropped").isNull().alias("survivor"))
+
+
 def winnow_dedup_append_batch(
     batch_df: DataFrame,
     state_path: str,
@@ -1396,9 +1534,8 @@ def winnow_dedup_append_batch(
     value-exact semantics while anchors/spans stay capped — the
     family's documented trade-off. The two ledger forms don't mix:
     appending evidence=True onto a plain-fps ledger (or vice versa)
-    raises."""
-    from ..operators.dedup import winnow_dedup_against_index, winnow_pairs
-    from ..operators.text import winnow_fingerprints
+    raises. The decision is _winnow_decide, shared with the append-only
+    winnow_index_dedup_batch."""
 
     def step(cur: "DataFrame | None") -> DataFrame:
         if cur is not None and ("pfps" in cur.columns) != evidence:
@@ -1408,170 +1545,18 @@ def winnow_dedup_append_batch(
                 f"evidence={evidence} appends would mix ledger schemas — "
                 "use one form per state path"
             )
-        if evidence:
-            return _winnow_dedup_append_evidence(
-                batch_df, cur,
-                k=k, w=w, threshold=threshold, portable=portable,
-                max_fingerprint_df=max_fingerprint_df,
-                id_col=id_col, text_col=text_col,
-            )
-        # fingerprint the batch ONCE (the CPU-heavy stage) and materialize:
-        # the frame feeds the in-batch pair tier, the ledger probe, AND the
-        # appended ledger rows via the fps seams — without the seams each
-        # consumer re-normalized and re-hashed the text (review-pass finding)
-        bfps = batch_df.select(
-            F.col(id_col).alias("_id"),
-            winnow_fingerprints(
-                text_col, k=k, w=w, portable=portable, alias="fps"
-            ),
-        ).localCheckpoint()
-        in_batch = (
-            winnow_pairs(
-                batch_df, id_col, text_col, k=k, w=w, threshold=threshold,
-                portable=portable, max_fingerprint_df=max_fingerprint_df,
-                fps_df=bfps,
-            )
-            .select(F.col("id_b").alias(id_col))
-            .distinct()
+        bfp = _fingerprint_batch(
+            batch_df, id_col, text_col, k, w, portable, positioned=evidence
         )
-        drops = in_batch
-        if cur is not None:
-            survivors_vs_state = winnow_dedup_against_index(
-                batch_df,
-                cur.select(F.col(id_col).alias("_id"), "fps"),
-                id_col, text_col, k=k, w=w, threshold=threshold,
-                portable=portable, max_fingerprint_df=max_fingerprint_df,
-                batch_fps=bfps,
-            ).select(id_col)
-            state_hits = batch_df.select(id_col).join(
-                survivors_vs_state, on=id_col, how="anti"
-            )
-            drops = drops.unionByName(state_hits).distinct()
-        flagged = bfps.select(F.col("_id").alias(id_col), "fps").join(
-            drops.withColumn("_dropped", F.lit(True)), on=id_col, how="left"
-        ).select(
-            id_col, "fps", F.col("_dropped").isNull().alias("survivor")
+        flagged = _winnow_decide(
+            batch_df, bfp, _ledger_fps(cur, id_col, bfp.columns[1]),
+            id_col, text_col, evidence,
+            k=k, w=w, threshold=threshold, portable=portable,
+            max_fingerprint_df=max_fingerprint_df,
         )
         return flagged if cur is None else cur.unionByName(flagged)
 
     return apply_versioned_batch(batch_df.sparkSession, state_path, batch_id, step)
-
-
-def _winnow_evidence_per_doc(
-    batch_df: DataFrame,
-    bpf: DataFrame,
-    index_pfps: "DataFrame | None",
-    id_col: str,
-    text_col: str,
-    k: int,
-    w: int,
-    threshold: float,
-    portable: bool,
-    max_fingerprint_df: "int | None",
-) -> DataFrame:
-    """The drop-evidence assembly shared by the versioned-ledger and the
-    append-only streaming dedup forms: verified span pairs from the
-    in-batch tier (winnow_match_spans over the precomputed positioned
-    frame) plus, when ``index_pfps`` is given, the committed-side probe
-    (winnow_spans_against_index — scan-only, batch broadcasts), columns
-    harmonized across the two tiers (match_spans counts n_shared via
-    count_distinct -> long; the index probe via array_intersect size ->
-    int), grouped per dropped doc into the sorted ``drop_evidence``
-    struct array. Docs absent from the result are survivors."""
-    from ..operators.dedup import (
-        winnow_match_spans,
-        winnow_spans_against_index,
-    )
-
-    ev = winnow_match_spans(
-        batch_df, id_col, text_col, k=k, w=w, threshold=threshold,
-        portable=portable, max_fingerprint_df=max_fingerprint_df,
-        pfps_df=bpf,
-    ).select(
-        F.col("id_b").alias("_did"),
-        F.col("id_a").alias("other_id"),
-        F.col("jaccard").cast("double").alias("jaccard"),
-        F.col("n_shared").cast("long").alias("n_shared"),
-        F.col("n_anchors").cast("long").alias("n_anchors"),
-        F.col("b_start").cast("int").alias("start"),
-        F.col("b_end").cast("int").alias("end"),
-    )
-    if index_pfps is not None:
-        # the FULL committed side probes (dropped rows keep suppressing —
-        # the transitive-chain rationale); evidence then names the
-        # actual earlier doc, survivor or not
-        ev = ev.unionByName(
-            winnow_spans_against_index(
-                batch_df, index_pfps,
-                id_col, text_col, k=k, w=w, threshold=threshold,
-                portable=portable, max_fingerprint_df=max_fingerprint_df,
-                batch_pfps=bpf,
-            ).select(
-                F.col("id_batch").alias("_did"),
-                F.col("id_index").alias("other_id"),
-                F.col("jaccard").cast("double").alias("jaccard"),
-                F.col("n_shared").cast("long").alias("n_shared"),
-                F.col("n_anchors").cast("long").alias("n_anchors"),
-                F.col("b_start").cast("int").alias("start"),
-                F.col("b_end").cast("int").alias("end"),
-            )
-        )
-    return ev.groupBy("_did").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    "other_id", "jaccard", "n_shared", "n_anchors",
-                    "start", "end",
-                )
-            )
-        ).alias("drop_evidence")
-    )
-
-
-def _winnow_dedup_append_evidence(
-    batch_df: DataFrame,
-    cur: "DataFrame | None",
-    k: int,
-    w: int,
-    threshold: float,
-    portable: bool,
-    max_fingerprint_df: "int | None",
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """The evidence=True step of winnow_dedup_append_batch (see its
-    docstring for the contract): the positioned ledger ``cur`` plus this
-    batch's rows, drops justified by recorded covering spans + anchor
-    counts. The batch is fingerprinted ONCE (robust positioned — the
-    value sets the decisions need reduce losslessly via _pos_vals); the
-    in-batch tier and the ledger probe both ride the precomputed-pfps
-    seams."""
-    from ..operators.text import winnow_fingerprints
-
-    bpf = batch_df.select(
-        F.col(id_col).alias("_id"),
-        winnow_fingerprints(
-            text_col, k=k, w=w, portable=portable, robust=True, alias="pfps"
-        ),
-    ).localCheckpoint()
-    per_doc = _winnow_evidence_per_doc(
-        batch_df, bpf,
-        cur.select(F.col(id_col).alias("_id"), "pfps")
-        if cur is not None
-        else None,
-        id_col, text_col, k, w, threshold, portable, max_fingerprint_df,
-    )
-    flagged = (
-        bpf.select(F.col("_id").alias(id_col), "pfps")
-        .join(per_doc, on=F.col(id_col) == F.col("_did"), how="left")
-        .drop("_did")
-        .select(
-            id_col, "pfps",
-            F.col("drop_evidence").isNull().alias("survivor"),
-            "drop_evidence",
-        )
-    )
-    return flagged if cur is None else cur.unionByName(flagged)
 
 
 def stream_near_dedup_winnow(
@@ -1657,42 +1642,18 @@ def winnow_scrub_append_batch(
     both diverge from the one-shot run — the family's documented cap
     trade-offs. Exactly-once: replayed batch_ids skip, a crash before
     the manifest flip leaves the previous ledger intact."""
-    from ..operators.dedup import (
-        _scrub_covered_spans,
-        winnow_match_spans,
-        winnow_spans_against_index,
-    )
-    from ..operators.text import winnow_fingerprints
+    from ..operators.dedup import _scrub_spans
 
     def step(cur: "DataFrame | None") -> DataFrame:
-        # fingerprint the batch ONCE; empty sets stay (they anchor nothing
-        # but their docs still need ledger + output rows)
-        bpf = batch_df.select(
-            F.col(id_col).alias("_id"),
-            winnow_fingerprints(
-                text_col, k=k, w=w, portable=portable, robust=True, alias="pfps"
-            ),
-        ).localCheckpoint()
-        in_spans = winnow_match_spans(
-            batch_df, id_col, text_col, k=k, w=w, threshold=threshold,
-            portable=portable, max_fingerprint_df=max_fingerprint_df,
-            pfps_df=bpf,
-        ).select(F.col("id_b").alias("_sid"), "b_start", "b_end")
-        spans = in_spans
-        if cur is not None:
-            idx_spans = winnow_spans_against_index(
-                batch_df,
-                cur.select(F.col(id_col).alias("_id"), "pfps"),
-                id_col, text_col, k=k, w=w, threshold=threshold,
-                portable=portable, max_fingerprint_df=max_fingerprint_df,
-                batch_pfps=bpf,
-            ).select(F.col("id_batch").alias("_sid"), "b_start", "b_end")
-            spans = spans.unionByName(idx_spans)
-        per_doc = spans.groupBy("_sid").agg(
-            F.collect_list(F.struct("b_start", "b_end")).alias("_spans"),
-            F.count(F.lit(1)).cast("int").alias("n_spans"),
+        bpf = _fingerprint_batch(
+            batch_df, id_col, text_col, k, w, portable, positioned=True
         )
-        scrubbed = _scrub_covered_spans(batch_df, id_col, text_col, per_doc)
+        spans = _winnow_span_pairs(
+            batch_df, bpf, _ledger_fps(cur, id_col, "pfps"), id_col, text_col,
+            k=k, w=w, threshold=threshold, portable=portable,
+            max_fingerprint_df=max_fingerprint_df,
+        )
+        scrubbed = _scrub_spans(batch_df, id_col, text_col, spans)
         flagged = bpf.select(F.col("_id").alias(id_col), "pfps").join(
             scrubbed, on=id_col
         )
@@ -1904,12 +1865,13 @@ def ann_search_batch(
     contract, exactly like the bounded model state the probe itself
     loads; the cap raises rather than silently pulling an unbounded
     stream. Model state (centroids + codebooks) loads ONCE per trigger
-    (similarity.ann_index_search_many), and every per-query candidate
+    (similarity._open_ann_index — whose vectors schema also gives the
+    hit-id field, so the index is read once), and every per-query candidate
     scan stays partition-pruned to its nprobe cell directories — the
     index is never re-read whole, never shuffled. Per-query results are
     bit-identical to the batch probes (ivf_index_topk /
     ivf_pq_index_topk) over the same index."""
-    from ..operators.similarity import ann_index_search_many
+    from ..operators.similarity import _open_ann_index, _search_many
 
     spark = batch_df.sparkSession
     rows = (
@@ -1924,22 +1886,19 @@ def ann_search_batch(
             "trigger (maxFilesPerTrigger / maxOffsetsPerTrigger) to the "
             "serving budget instead of letting one batch grow unbounded"
         )
-    hits, score_col = ann_index_search_many(
-        spark, index_path,
-        [(r[0], r[1]) for r in rows],
-        k=k, nprobe=nprobe, rerank_factor=rerank_factor,
-        id_col=index_id_col, vec_col=index_vec_col,
+    ix = _open_ann_index(spark, index_path)
+    hits, score_col = _search_many(
+        ix, [(r[0], r[1]) for r in rows],
+        k, nprobe, rerank_factor, index_id_col, index_vec_col,
         adc_prune=adc_prune, adaptive_nprobe=adaptive_nprobe,
     )
     from pyspark.sql.types import (
         DoubleType, IntegerType, StructField, StructType,
     )
 
-    # the hit-id field keeps the INDEX's id name and type (one metadata
-    # read per trigger — string/long/whatever the index was built with)
-    hit_id_field = index_store.read(
-        spark, index_path, "vectors.parquet"
-    ).schema[index_id_col]
+    # the hit-id field keeps the INDEX's id name and type
+    # (string/long/whatever the index was built with)
+    hit_id_field = ix.vectors.schema[index_id_col]
     schema = StructType(
         [
             batch_df.schema[query_id_col],
@@ -2063,16 +2022,18 @@ def winnow_index_dedup_batch(
     flags landing in a batch_id-keyed sink partition instead of ledger
     rows.
 
-    Decisions are the same two tiers (in-batch pairwise min-id via
-    winnow_pairs; any committed index doc suppresses a batch doc via
-    winnow_dedup_against_index — dropped docs' fingerprints are appended
-    too, so they keep suppressing: the transitive-chain contract), and
-    the batch is fingerprinted ONCE (robust positioned — the value sets
-    the decisions need reduce losslessly) with the index's SAVED
-    parameters. Exactly-once across the sink AND the index: the sink
-    partition overwrites idempotently, the index append is the
-    prefix-rename form (winnow_index_add_batch), and the add manifest —
-    checked here — advances only after both; a crash between them
+    Decisions are the ledger job's (_winnow_decide, over the live index
+    instead of the ledger — dropped docs' fingerprints are appended too,
+    so they keep suppressing: the transitive-chain contract), and the
+    batch is fingerprinted ONCE (robust positioned — the value sets the
+    decisions need reduce losslessly) with the index's SAVED parameters.
+    The index's add guards (the id-type check and the tombstoned-id
+    refusal, _WinnowIndex.check_add) run once, BEFORE the sink write, so
+    a batch the index refuses leaves no ``_batch_id`` partition behind.
+    Exactly-once across the sink AND the index: the sink partition
+    overwrites idempotently, the index append is the prefix-rename form
+    (index_store.add_batch, as in winnow_index_add_batch), and the add
+    manifest — checked here — advances only after both; a crash between them
     replays into identical decisions (the index is unchanged until the
     append) and overwrites its own partition. A crash INSIDE the append
     (after a staged-file rename, before the manifest) is the sharp edge:
@@ -2092,75 +2053,30 @@ def winnow_index_dedup_batch(
     the span pair frames (equal to the value tiers' at cap=None;
     tested bit-equal to the evidence ledger over the same feed)."""
     from ..operators import dedup as dd
-    from ..operators.text import winnow_fingerprints
 
     spark = batch_df.sparkSession
     if index_store.batch_committed(spark, index_path, batch_id):
         return False
     index_store.drop_partial_batch(spark, index_path, "fps.parquet", batch_id)
-    meta = index_store.read_meta(spark, index_path)
-    bpf = batch_df.select(
-        F.col(id_col).alias("_id"),
-        winnow_fingerprints(
-            text_col, k=meta["k"], w=meta["w"], portable=meta["portable"],
-            robust=True, alias="pfps",
-        ),
-    ).localCheckpoint()
-    if evidence:
-        per_doc = _winnow_evidence_per_doc(
-            batch_df, bpf,
-            dd._read_index_fps(spark, index_path),
-            id_col, text_col, meta["k"], meta["w"], threshold,
-            meta["portable"], max_fingerprint_df,
-        )
-        flagged = (
-            batch_df.select(id_col)
-            .join(per_doc, on=F.col(id_col) == F.col("_did"), how="left")
-            .drop("_did")
-            .select(
-                id_col,
-                F.col("drop_evidence").isNull().alias("survivor"),
-                "drop_evidence",
-            )
-        )
-    else:
-        bfps = bpf.select("_id", dd._pos_vals("pfps").alias("fps"))
-        in_drops = (
-            dd.winnow_pairs(
-                batch_df, id_col, text_col,
-                k=meta["k"], w=meta["w"], threshold=threshold,
-                portable=meta["portable"],
-                max_fingerprint_df=max_fingerprint_df, fps_df=bfps,
-            )
-            .select(F.col("id_b").alias(id_col))
-            .distinct()
-        )
-        index = dd._read_index_fps(spark, index_path).select(
-            "_id", dd._pos_vals("pfps").alias("fps")
-        )
-        survivors_vs_state = dd.winnow_dedup_against_index(
-            batch_df, index, id_col, text_col,
-            k=meta["k"], w=meta["w"], threshold=threshold,
-            portable=meta["portable"],
-            max_fingerprint_df=max_fingerprint_df,
-            batch_fps=bfps,
-        ).select(id_col)
-        state_hits = batch_df.select(id_col).join(
-            survivors_vs_state, on=id_col, how="anti"
-        )
-        drops = in_drops.unionByName(state_hits).distinct()
-        flagged = (
-            batch_df.select(id_col)
-            .join(
-                drops.withColumn("_dropped", F.lit(True)),
-                on=id_col, how="left",
-            )
-            .select(id_col, F.col("_dropped").isNull().alias("survivor"))
-        )
+    ix = dd._open_winnow_index(spark, index_path)
+    ix.check_add(batch_df, id_col)
+    bpf = _fingerprint_batch(
+        batch_df, id_col, text_col, positioned=True, **ix.params
+    )
+    bfp, committed = (
+        (bpf, ix.fps) if evidence
+        else (dd._value_sets(bpf), dd._value_sets(ix.fps))
+    )
+    flagged = _winnow_decide(
+        batch_df, bfp, committed, id_col, text_col, evidence,
+        threshold=threshold, max_fingerprint_df=max_fingerprint_df,
+        **ix.params,
+    ).drop(bfp.columns[1])
     _write_batch_partition(flagged, sink_path, batch_id)
-    dd.winnow_index_add_batch(
-        spark, index_path, batch_df, batch_id,
-        id_col=id_col, text_col=text_col, pfps_df=bpf,
+    index_store.add_batch(
+        spark, index_path, "fps.parquet", batch_id,
+        lambda staging: bpf.filter(F.size("pfps") > 0)
+        .write.mode("overwrite").parquet(staging),
     )
     return True
 

@@ -2267,6 +2267,98 @@ def test_winnow_index_dedup_batch_crash_replay_decisions(spark, tmp_path):
     assert got_ev == want
 
 
+@pytest.fixture(scope="module")
+def winnow_first_batch(spark, tmp_path_factory):
+    """Two winnow batches, and batch 1 committed to each dedup stream's
+    state: the plain and the evidence ledger, and a positioned index."""
+    from bigdata_usaspending_spark.operators import dedup as dd
+
+    A = "the quick brown fox jumps over the lazy dog near the old stone bridge"
+    b1 = spark.createDataFrame(
+        [(1, A), (2, "totally unrelated words about distant sailing ships "
+                     "crossing wide oceans tonight")],
+        "doc_id long, text string",
+    )
+    b2 = spark.createDataFrame(
+        [(11, A + " by the river"), (12, A + " by the river today"),
+         (13, "fresh mountain weather report with no overlap at all"),
+         (14, "short")],
+        "doc_id long, text string",
+    )
+    root = tmp_path_factory.mktemp("winnow_first_batch")
+    for evidence in (False, True):
+        assert jobs.winnow_dedup_append_batch(
+            b1, str(root / f"ledger_{evidence}"), 0,
+            threshold=0.5, portable=True, evidence=evidence,
+        )
+    dd.winnow_pos_index_write(b1, str(root / "widx"), portable=True)
+    return b2, root
+
+
+@pytest.mark.parametrize("evidence", [False, True])
+def test_winnow_ledger_and_index_batches_decide_alike(
+    spark, tmp_path, winnow_first_batch, evidence
+):
+    """The two winnow dedup streams share one decision step: called
+    directly (no streaming query) on the same second batch over the same
+    committed first batch, the ledger job and the append-only index job
+    give the same ``(doc_id, survivor)`` rows — a cross-batch near-dup
+    (11 of 1), an in-batch one (12 of 11) and two survivors — and, with
+    ``evidence``, the same drop-evidence structs."""
+    import shutil
+
+    from bigdata_usaspending_spark.io import read_versioned_state
+
+    b2, root = winnow_first_batch
+    state, index = str(tmp_path / "ledger"), str(tmp_path / "widx")
+    shutil.copytree(root / f"ledger_{evidence}", state)
+    shutil.copytree(root / "widx", index)
+    cols = ["doc_id", "survivor"] + (["drop_evidence"] if evidence else [])
+
+    assert jobs.winnow_dedup_append_batch(
+        b2, state, 1, threshold=0.5, portable=True, evidence=evidence
+    )
+    ledger = read_versioned_state(spark, state).filter(F.col("doc_id") >= 10)
+    want = sorted(tuple(r) for r in ledger.select(cols).collect())
+
+    sink = str(tmp_path / "flags")
+    assert jobs.winnow_index_dedup_batch(
+        b2, index, sink, 0, threshold=0.5, evidence=evidence
+    )
+    got = sorted(tuple(r) for r in spark.read.parquet(sink).select(cols).collect())
+
+    assert got == want
+    assert [r[:2] for r in got] == [
+        (11, False), (12, False), (13, True), (14, True),
+    ]
+    if evidence:
+        assert {e.other_id for e in got[0][2]} == {1}
+        assert {e.other_id for e in got[1][2]} == {1, 11}
+
+
+def test_winnow_index_dedup_batch_refuses_tombstoned_before_sink(spark, tmp_path):
+    """The append-only dedup job runs the index's add guards before it
+    writes its sink partition: a batch re-adding a tombstoned id raises
+    and leaves no ``_batch_id=0`` partition for a batch the index never
+    took."""
+    import os
+
+    from bigdata_usaspending_spark.operators import dedup as dd
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog near the old "
+             "stone bridge"),
+         (2, "totally unrelated words about distant sailing ships")],
+        "doc_id long, text string",
+    )
+    index, sink = str(tmp_path / "widx"), str(tmp_path / "flags")
+    dd.winnow_pos_index_write(docs, index, portable=True)
+    dd.winnow_index_remove(spark, index, [1])
+    with pytest.raises(ValueError, match="tombstoned"):
+        jobs.winnow_index_dedup_batch(docs.filter("doc_id = 1"), index, sink, 0)
+    assert not os.path.exists(os.path.join(sink, "_batch_id=0"))
+
+
 @pytest.mark.slow
 def test_stream_winnow_dedup_remove_interplay(spark, tmp_path):
     """Takedowns flowing through the STREAMING dedup (VERDICT r13 #3+#4

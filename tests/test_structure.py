@@ -12,6 +12,11 @@
   the only layout check on ``codebooks.parquet`` besides the stats
   report, the only stale-rotation refusal) and one per-query probe
   (``_probe_ann``: the only call of each probe step).
+- The winnow text tier: one batch fingerprint in the streaming jobs
+  (``_fingerprint_batch``), one per-doc span union (``_scrub_spans``),
+  one persisted winnow-index read (inside ``_WinnowIndex``, which
+  ``_open_winnow_index`` returns) and one stop-gram cap filter
+  (``_stop_grams``).
 - No unmarked ``except Exception`` in the package.
 - Every package name ``scripts/*.py`` and ``bench.py`` import or reach
   through an attribute exists (nothing in the default test run executes
@@ -124,6 +129,32 @@ def test_one_persisted_ann_index_open():
         )
     ]
     assert sorted(layout_checks) == ["_open_ann_index", "ann_index_stats"]
+
+
+def test_one_winnow_batch_fingerprint_in_the_streams():
+    assert _source("streaming/jobs.py").count("winnow_fingerprints(") <= 1
+
+
+def test_one_winnow_span_union():
+    assert _package_count('collect_list(F.struct("b_start", "b_end"))') == 1
+
+
+def test_one_persisted_winnow_index_read():
+    tree = ast.parse(_source("operators/dedup.py"))
+    callers = [
+        cls.name
+        for cls in ast.walk(tree)
+        if isinstance(cls, ast.ClassDef)
+        for node in ast.walk(cls)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "_read_index_fps"
+    ]
+    assert callers == ["_WinnowIndex"]
+    assert _package_count("_read_index_fps(") == 2  # the def and that call
+
+
+def test_one_stop_gram_cap():
+    assert _source("operators/dedup.py").count("> max_") == 1
 
 
 def test_broad_exception_handlers_are_marked():
