@@ -38,10 +38,6 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"})
 
 
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -71,10 +67,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # reads the same naive column.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> list[str]:

@@ -535,9 +535,7 @@ def main(argv: list[str] | None = None) -> int:
             build_corpus,
             write_corpus,
         )
-        from .session import apply_runtime_confs
 
-        apply_runtime_confs(spark)
         if args.stream:
             from .streaming import jobs as stream_jobs
 
@@ -651,9 +649,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.job == "sql":
         from .catalog import register_views
-        from .session import apply_runtime_confs
 
-        apply_runtime_confs(spark)
         register_views(spark, args.sf_dir)
         out = spark.sql(args.query)
         if args.output:
@@ -669,9 +665,7 @@ def main(argv: list[str] | None = None) -> int:
         from . import index_store
         from .io import local_frame
         from .operators import similarity
-        from .session import apply_runtime_confs
 
-        apply_runtime_confs(spark)
         if args.action in ("build", "add", "stream-add") and not args.vectors:
             raise SystemExit(f"ann-index {args.action} needs --vectors")
         if args.action == "stream-search":
@@ -872,10 +866,8 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.job == "stream-ledger":
         from .io import read_versioned_state
-        from .session import apply_runtime_confs
         from .streaming import jobs as stream_jobs
 
-        apply_runtime_confs(spark)
         if args.action in ("near-dedup", "span-scrub"):
             if not args.documents:
                 raise SystemExit(
@@ -926,9 +918,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.job == "winnow-index":
         from .operators import dedup as dd
-        from .session import apply_runtime_confs
 
-        apply_runtime_confs(spark)
         if args.action == "compact":
             stats = dd.winnow_index_compact(spark, args.index)
             print(
@@ -1043,9 +1033,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.job == "profile":
         from .catalog import load
         from .operators.aggregates import profile_table
-        from .session import apply_runtime_confs
 
-        apply_runtime_confs(spark)
         out = profile_table(
             load(spark, args.sf_dir, args.table),
             exact_distinct=not args.approx,

@@ -22,7 +22,7 @@ EXACT_DECIMAL = "decimal(27,6)"
 def safe_to_date(col: Column | str, fmt: str = "yyyy-MM-dd") -> Column:
     """String -> date, null on malformed (reference: app/ml_app.py:561-576).
     try_to_date keeps null-on-error semantics under ANSI sessions too."""
-    return F.try_to_date(F.col(col) if isinstance(col, str) else col, F.lit(fmt))
+    return F.try_to_date(F.col(col) if isinstance(col, str) else col, fmt)
 
 
 def safe_to_decimal(col: Column | str, precision: int = 18, scale: int = 2) -> Column:

@@ -265,6 +265,20 @@ def rollup_two_level(
     return df.rollup(F.col(key1), k2).agg(exact_sum(amount_col, alias))
 
 
+def misra_gries_merge(acc, counts, k: int):
+    """One Misra-Gries merge-trim step over pandas Series of counters:
+    add a batch's ``value_counts`` to the running ``acc`` (None before
+    the first batch), then, past ``k`` counters, subtract the (k+1)-th
+    largest count from all and drop the non-positive ones. Every value
+    whose count exceeds n/k over the batches merged so far survives."""
+    acc = counts if acc is None else acc.add(counts, fill_value=0)
+    if len(acc) > k:
+        thresh = acc.nlargest(k + 1).iloc[-1]
+        acc = acc - thresh
+        acc = acc[acc > 0]
+    return acc
+
+
 def heavy_hitters(
     df: DataFrame,
     value_col: str,
@@ -307,12 +321,7 @@ def heavy_hitters(
 
         acc: "pd.Series | None" = None
         for pdf in batches:
-            vc = pdf["_v"].value_counts()
-            acc = vc if acc is None else acc.add(vc, fill_value=0)
-            if len(acc) > k:
-                thresh = acc.nlargest(k + 1).iloc[-1]
-                acc = acc - thresh
-                acc = acc[acc > 0]
+            acc = misra_gries_merge(acc, pdf["_v"].value_counts(), k)
         yield pd.DataFrame({"_v": [] if acc is None else acc.index.astype(str)})
 
     cands = vals.mapInPandas(_mg, schema="_v string").distinct()

@@ -783,6 +783,28 @@ def winnow_dedup_against_index(
     batch (winnow_index's shape; empty sets allowed — they drop out
     here) so callers that already fingerprinted the batch skip the
     re-hash; the caller owns its persistence."""
+    matched = _winnow_matched_ids(
+        batch, index, id_col, text_col, k, w, threshold, portable,
+        max_fingerprint_df, batch_fps,
+    )
+    return batch.join(F.broadcast(matched), on=id_col, how="anti")
+
+
+def _winnow_matched_ids(
+    batch: DataFrame,
+    index: DataFrame,
+    id_col: str,
+    text_col: str = "text",
+    k: int = 8,
+    w: int = 4,
+    threshold: float = 0.5,
+    portable: bool = False,
+    max_fingerprint_df: "int | None" = None,
+    batch_fps: "DataFrame | None" = None,
+) -> DataFrame:
+    """The distinct ``id_col`` values of the batch docs that
+    winnow_dedup_against_index drops: the verified near-duplicates of
+    some index doc."""
     if batch_fps is not None:
         bfps = batch_fps.filter(F.size("fps") > 0)
     else:
@@ -813,12 +835,11 @@ def winnow_dedup_against_index(
     )
     inter = F.size(F.array_intersect("fps_b", "fps_i")).cast("double")
     union = F.size(F.array_union("fps_b", "fps_i")).cast("double")
-    matched = (
+    return (
         verified.filter((inter / union) >= threshold)
         .select(F.col("_bid").alias(id_col))
         .distinct()
     )
-    return batch.join(F.broadcast(matched), on=id_col, how="anti")
 
 
 def winnow_pos_index(
@@ -1102,7 +1123,6 @@ def winnow_index_add_batch(
     batch_id: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    pfps_df: "DataFrame | None" = None,
 ) -> bool:
     """One IDEMPOTENT micro-batch ADD to a persisted positioned winnow
     index — the exactly-once form of ``winnow_pos_index_add`` (which is
@@ -1113,22 +1133,14 @@ def winnow_index_add_batch(
     ``fps.parquet`` under a ``b{batch_id}-`` prefix, advance the add
     manifest LAST; replays of committed batches skip, crashed batches
     self-clean their prefix files on redo. Fingerprints use the SAVED
-    parameters, after the add guards (``_WinnowIndex.check_add``).
-
-    ``pfps_df`` (optional): a precomputed positioned frame (the
-    ``(_id, pfps)`` shape) so a caller that already fingerprinted the
-    batch skips the re-hash. MUST have been computed with the index's
-    saved parameters; empty-set rows are filtered here either way."""
+    parameters, after the add guards (``_WinnowIndex.check_add``)."""
 
     def stage(staging: str) -> None:
         ix = _open_winnow_index(spark, path)
         ix.check_add(batch_df, id_col)
-        pfps = (
-            pfps_df.filter(F.size("pfps") > 0)
-            if pfps_df is not None
-            else winnow_pos_index(batch_df, id_col, text_col, **ix.params)
-        )
-        pfps.write.mode("overwrite").parquet(staging)
+        winnow_pos_index(
+            batch_df, id_col, text_col, **ix.params
+        ).write.mode("overwrite").parquet(staging)
 
     return index_store.add_batch(spark, path, "fps.parquet", batch_id, stage)
 

@@ -1,6 +1,18 @@
-"""Composed query plans: the oracle-checked corpus, rollup ETL, dashboard."""
+"""Composed query plans: the oracle-checked corpus, rollup ETL, dashboard.
+
+Session confs are applied at one boundary: every callable ``all_queries()``
+returns runs ``session.apply_runtime_confs(spark)`` before its body, so a
+registry query gives the same result on a bare ``SparkSession`` as on one
+from ``session.get_spark``. The plan functions themselves do not apply
+confs; a caller that uses one directly (the tests, the ``stress_*``
+scripts) passes a ``get_spark`` session.
+"""
 
 from __future__ import annotations
+
+import functools
+
+from ..session import apply_runtime_confs
 
 
 # The external correctness gate verifies the FIRST 50 registry entries in
@@ -68,14 +80,26 @@ def _merged(attr: str) -> dict:
     return merged
 
 
+def _with_session_confs(fn):
+    """``fn`` run under ``session.RUNTIME_CONFS``, applied to whatever
+    session the caller passes."""
+
+    @functools.wraps(fn)
+    def run(spark, sf_dir):
+        return fn(apply_runtime_confs(spark), sf_dir)
+
+    return run
+
+
 def all_queries():
     """Merged registry: reference-parity corpus + training-data extensions
     + the generalized operator surface, ordered so the external gate's
-    50-entry verification window rotates over not-yet-checked queries."""
+    50-entry verification window rotates over not-yet-checked queries.
+    Each callable applies the session confs first."""
     merged = _merged("QUERIES")
     ordered = {name: merged.pop(name) for name in _VERIFY_FIRST if name in merged}
     ordered.update(merged)
-    return ordered
+    return {name: _with_session_confs(fn) for name, fn in ordered.items()}
 
 
 def all_oracles():

@@ -27,7 +27,6 @@ from ..catalog import load
 from ..functions import exact_sum, month_of, year_of
 from ..operators import aggregates as agg
 from ..operators import cleaning, joins, topk
-from ..session import apply_runtime_confs
 
 # DuckDB-side twin of functions.exact_sum. The decimal->double hop goes
 # through VARCHAR because DuckDB's direct decimal->double cast divides two
@@ -39,10 +38,6 @@ D2D = "CAST(CAST({x} AS VARCHAR) AS DOUBLE)"
 SUM2 = D2D.format(x="ROUND(SUM(CAST({c} AS DECIMAL(27,6))), 2)")
 
 
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
-
-
 # --------------------------------------------------------------------------
 # §2.1/§2.2 scans, projections, filters
 # --------------------------------------------------------------------------
@@ -50,13 +45,13 @@ def _prep(spark: SparkSession) -> SparkSession:
 def q_scan_project(spark: SparkSession, sf: str) -> DataFrame:
     """S1/P1 — projection-only columnar scan (reference selected single
     columns out of Cassandra full scans, app/machine_learning_models.py:161)."""
-    return load(_prep(spark), sf, "customer").select("c_name", "c_acctbal")
+    return load(spark, sf, "customer").select("c_name", "c_acctbal")
 
 
 def q_filter_positive(spark: SparkSession, sf: str) -> DataFrame:
     """P2 — numeric comparison filter, pushed to the parquet scan
     (reference: award_amount > 0, app/machine_learning_models.py:149)."""
-    li = load(_prep(spark), sf, "lineitem")
+    li = load(spark, sf, "lineitem")
     return cleaning.filter_positive(li, "l_extendedprice").filter(
         F.col("l_extendedprice") > 5000
     ).select("l_orderkey", "l_linenumber", "l_extendedprice")
@@ -65,7 +60,7 @@ def q_filter_positive(spark: SparkSession, sf: str) -> DataFrame:
 def q_dropna(spark: SparkSession, sf: str) -> DataFrame:
     """P3 — conjunctive NOT NULL filter (reference dropna(subset=...),
     app/machine_learning_models.py:136-145)."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     return cleaning.drop_null_required(orders, ["o_custkey", "o_totalprice", "o_orderdate"])
 
 
@@ -82,7 +77,6 @@ def q_case_when_label(spark: SparkSession, sf: str) -> DataFrame:
     did the same with its approxQuantile threshold) — a scalar predicate
     beats a cross-join stage and lets the comparison run inside the scan's
     codegen."""
-    spark = _prep(spark)
     orders = load(spark, sf, "orders")
     median = _median_totalprice(spark, sf).first()["m"]
     return orders.select(
@@ -93,7 +87,7 @@ def q_case_when_label(spark: SparkSession, sf: str) -> DataFrame:
 def q_month_derive(spark: SparkSession, sf: str) -> DataFrame:
     """P5/F1/F2 — calendar month/year derivation
     (app/spark_cassandra_groupby_month.py:25, machine_learning_models.py:147-148)."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     return orders.select(
         "o_orderkey",
         month_of("o_orderdate").alias("o_month"),
@@ -109,7 +103,7 @@ def q_cast_to_date(spark: SparkSession, sf: str) -> DataFrame:
     'error'-type events get a deliberately malformed date string to exercise
     the null-on-error path.
     """
-    ev = load(_prep(spark), sf, "events")
+    ev = load(spark, sf, "events")
     raw = ev.select(
         "event_id",
         F.when(F.col("event_type") == "error", F.lit("not-a-date"))
@@ -146,7 +140,7 @@ def _lineitem_with_supplier(spark: SparkSession, sf: str) -> DataFrame:
 def q_join_dim_fact(spark: SparkSession, sf: str) -> DataFrame:
     """J1 — inner equi-join, dim broadcast (reference geo⋈awards,
     app/spark_cassandra_etl_award_amount_aggregator.py:81-82)."""
-    return _orders_with_customer(_prep(spark), sf).select(
+    return _orders_with_customer(spark, sf).select(
         "o_orderkey", "c_name", "o_totalprice"
     )
 
@@ -154,13 +148,13 @@ def q_join_dim_fact(spark: SparkSession, sf: str) -> DataFrame:
 def q_agg_sum_by_key(spark: SparkSession, sf: str) -> DataFrame:
     """A1 — grouped SUM by one key after dim join (the flagship rollup,
     app/spark_cassandra_etl_award_amount_aggregator.py:83-85)."""
-    return agg.sum_by_key(_orders_with_customer(_prep(spark), sf), ["c_name"], "o_totalprice")
+    return agg.sum_by_key(_orders_with_customer(spark, sf), ["c_name"], "o_totalprice")
 
 
 def q_agg_sum_two_keys(spark: SparkSession, sf: str) -> DataFrame:
     """A2 — grouped SUM by two keys (app/spark_cassandra_groupby.py:68-72)."""
     return agg.sum_by_key(
-        _lineitem_with_supplier(_prep(spark), sf),
+        _lineitem_with_supplier(spark, sf),
         ["s_name", "l_returnflag"],
         "l_extendedprice",
     )
@@ -170,14 +164,13 @@ def q_agg_by_month(spark: SparkSession, sf: str) -> DataFrame:
     """A3 — grouped SUM by (key, calendar month)
     (app/spark_cassandra_groupby_month.py:25-32)."""
     return agg.sum_by_month(
-        _lineitem_with_supplier(_prep(spark), sf), "s_name", "l_shipdate", "l_extendedprice"
+        _lineitem_with_supplier(spark, sf), "s_name", "l_shipdate", "l_extendedprice"
     )
 
 
 def q_count_distinct(spark: SparkSession, sf: str) -> DataFrame:
     """A4 — COUNT DISTINCT per categorical column, one pass per table
     (reference ran one Spark job per column, app/machine_learning_models.py:159-167)."""
-    spark = _prep(spark)
     c = agg.distinct_counts(load(spark, sf, "customer"), ["c_mktsegment"])
     o = agg.distinct_counts(load(spark, sf, "orders"), ["o_orderpriority"])
     return c.crossJoin(o)
@@ -186,7 +179,7 @@ def q_count_distinct(spark: SparkSession, sf: str) -> DataFrame:
 def q_value_counts(spark: SparkSession, sf: str) -> DataFrame:
     """A5 — GROUP BY value COUNT(*) — replaces the driver-side Counter
     (app/fetch_recipient_name_geo_data.py:99-105)."""
-    return agg.value_counts(load(_prep(spark), sf, "customer"), "c_mktsegment")
+    return agg.value_counts(load(spark, sf, "customer"), "c_mktsegment")
 
 
 def q_approx_median(spark: SparkSession, sf: str) -> DataFrame:
@@ -194,7 +187,6 @@ def q_approx_median(spark: SparkSession, sf: str) -> DataFrame:
     app/machine_learning_models.py:237-238; exact median here so the oracle
     can reproduce it — see operators.aggregates.exact_median: built-in
     percentile aggregate, map-side partial, no single-partition window)."""
-    spark = _prep(spark)
     return _median_totalprice(spark, sf).select(F.col("m").alias("median_totalprice"))
 
 
@@ -208,21 +200,20 @@ def q_median_approx_scale(spark: SparkSession, sf: str) -> DataFrame:
     count + exact-median witness + the GK rank guarantee (est's rank
     within n/accuracy of n/2) checked exactly and pinned TRUE — a fully
     value-verified oracle row instead of the old rows-only check."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     return agg.median_approx_audit(orders, "o_totalprice", accuracy=10000)
 
 
 def q_describe_stats(spark: SparkSession, sf: str) -> DataFrame:
     """A7 — count/mean/stddev/min/max (reference df.describe(),
     app/machine_learning_models.py:300)."""
-    return agg.describe_stats(load(_prep(spark), sf, "orders"), "o_totalprice")
+    return agg.describe_stats(load(spark, sf, "orders"), "o_totalprice")
 
 
 def q_corr(spark: SparkSession, sf: str) -> DataFrame:
     """A8 — Pearson correlations (reference ml.stat.Correlation,
     app/machine_learning_models.py:183-191). Three pairwise coefficients over
     lineitem numerics, deterministic via exact-decimal sums."""
-    spark = _prep(spark)
     li = load(spark, sf, "lineitem")
     c1 = agg.pearson_corr(li, "l_quantity", "l_extendedprice", "corr_qty_price")
     c2 = agg.pearson_corr(li, "l_quantity", "l_discount", "corr_qty_discount")
@@ -233,7 +224,7 @@ def q_corr(spark: SparkSession, sf: str) -> DataFrame:
 def q_rollup_two_level(spark: SparkSession, sf: str) -> DataFrame:
     """A9 — ROLLUP(key, month) SUM: the server-side fix for the dashboard's
     client-side JS re-aggregation (templates/dashboard.html:148-189)."""
-    df = _lineitem_with_supplier(_prep(spark), sf)
+    df = _lineitem_with_supplier(spark, sf)
     return agg.rollup_two_level(
         df, "s_name", month_of("l_shipdate").alias("month"), "l_extendedprice"
     )
@@ -257,13 +248,13 @@ def q_topk(spark: SparkSession, sf: str) -> DataFrame:
 def q_topn_frequency(spark: SparkSession, sf: str) -> DataFrame:
     """O3 — top-n most frequent values (Counter.most_common analog,
     app/fetch_recipient_name_geo_data.py:111-113)."""
-    return topk.top_n_frequency(load(_prep(spark), sf, "customer"), "c_mktsegment", 5)
+    return topk.top_n_frequency(load(spark, sf, "customer"), "c_mktsegment", 5)
 
 
 def q_orderby_asc(spark: SparkSession, sf: str) -> DataFrame:
     """O4 — monthly totals ascending (the JS line-chart sort,
     templates/dashboard.html:188, moved into the engine)."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     monthly = orders.groupBy(month_of("o_orderdate").alias("month")).agg(
         exact_sum("o_totalprice", "total_award_amount")
     )
@@ -273,7 +264,7 @@ def q_orderby_asc(spark: SparkSession, sf: str) -> DataFrame:
 def q_first_row(spark: SparkSession, sf: str) -> DataFrame:
     """O5 — deterministic first-row fetch (reference .collect()[0]/.head(),
     app/ml_app.py:215)."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     return orders.orderBy(F.asc("o_orderkey")).limit(1).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -282,7 +273,6 @@ def q_first_row(spark: SparkSession, sf: str) -> DataFrame:
 def q_union_branches(spark: SparkSession, sf: str) -> DataFrame:
     """§2.7 — the two parallel keyed-total branches (recipient-style vs
     sub-agency-style, separate scripts in the reference) as one unionByName."""
-    spark = _prep(spark)
     a = q_agg_sum_by_key(spark, sf).select(
         F.col("c_name").alias("entity"), F.lit("recipient").alias("branch"), "total_award_amount"
     )
@@ -297,7 +287,7 @@ def q_union_branches(spark: SparkSession, sf: str) -> DataFrame:
 def q_window_topk_per_group(spark: SparkSession, sf: str) -> DataFrame:
     """§2.5 extension — per-group top-k via row_number window; the scalable
     form of the dashboard's global top-k."""
-    df = _orders_with_customer(_prep(spark), sf).select(
+    df = _orders_with_customer(spark, sf).select(
         "c_mktsegment", "o_orderkey", "o_totalprice"
     )
     return topk.window_topk_per_group(df, "c_mktsegment", "o_totalprice", "o_orderkey", 3)

@@ -22,14 +22,9 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions import exact_sum
 from ..operators import dedup, similarity, text
-from ..session import apply_runtime_confs
 
 JACCARD_THRESHOLD = 0.5
 COSINE_PAIR_THRESHOLD = 0.3
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 # --------------------------------------------------------------------------
@@ -38,7 +33,7 @@ def _prep(spark: SparkSession) -> SparkSession:
 
 def q_text_tokens(spark: SparkSession, sf: str) -> DataFrame:
     """Token counting: whitespace + BPE-ish regex pre-tokenizer."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return docs.select(
         "doc_id",
         text.token_count("text", "n_tokens"),
@@ -49,7 +44,7 @@ def q_text_tokens(spark: SparkSession, sf: str) -> DataFrame:
 def q_text_quality(spark: SparkSession, sf: str) -> DataFrame:
     """Quality-score components: char/token counts, stopword & punctuation
     ratios (raw divisions — deterministic doubles)."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return docs.select(
         "doc_id",
         F.length("text").cast("int").alias("n_chars"),
@@ -61,13 +56,13 @@ def q_text_quality(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_text_langid(spark: SparkSession, sf: str) -> DataFrame:
     """Marker-stopword-voting language ID."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return docs.select("doc_id", text.langid("text"))
 
 
 def q_doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
     """md5 fingerprint of normalized text — the exact-dedup key."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return docs.select("doc_id", text.fingerprint("text"))
 
 
@@ -77,20 +72,20 @@ def q_doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_text_commonness(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus-frequency quality score (LM-free perplexity stand-in)."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return text.commonness_scores(docs)
 
 
 def q_dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
     """Exact dedup groups: canonical min-id + copy count per distinct
     normalized text."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return dedup.exact_dedup_groups(docs, "doc_id").select("doc_id", "n_copies")
 
 
 def q_dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     """Near-dup pairs by exact 3-gram Jaccard >= 0.5."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     out = dedup.ngram_jaccard_pairs(docs, "doc_id", threshold=JACCARD_THRESHOLD)
     # raw (unrounded) jaccard is computed inside; re-derive without rounding
     return out
@@ -101,7 +96,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     md5-derived shingle hash (dedup.portable_hash60) makes every stage —
     affine minhash family, banded candidate join, exact-Jaccard verify —
     reproducible in plain SQL. Production callers keep the xxhash64 default."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return dedup.minhash_lsh_pairs(
         docs, "doc_id", threshold=JACCARD_THRESHOLD, portable=True
     )
@@ -111,14 +106,14 @@ def q_dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     """SimHash near-dup pairs at hamming <= 3, fully oracle-checked via the
     portable 60-bit token hash (bit-votes, pigeonhole banding and
     bit_count(xor) are all plain SQL)."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return dedup.simhash_pairs(docs, "doc_id", max_hamming=3, portable=True)
 
 
 def q_text_repetition(spark: SparkSession, sf: str) -> DataFrame:
     """Gopher-style repetition filters: duplicate-token fraction +
     top-bigram occurrence fraction per document."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return text.repetition_metrics(docs)
 
 
@@ -127,7 +122,7 @@ def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     the exact 3-gram Jaccard near-dup pairs — the step that turns pairwise
     near-dup output into per-document canonical ids (chains A~B~C collapse
     to one cluster even when A~C was never emitted)."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", threshold=JACCARD_THRESHOLD)
     # the dup graph is tiny relative to the corpus: size the per-round
     # shuffles to the pair volume (see connected_components docstring)
@@ -139,7 +134,7 @@ def q_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     benchmark; every remaining corpus doc sharing a 3-gram shingle with any
     benchmark doc is dropped (broadcast semi-join on the tiny benchmark
     shingle set — the GPT-3/Llama training-hygiene step)."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
     benchmark = docs.filter(F.col("doc_id") % 20 == 0)
     return dedup.decontaminate(corpus, benchmark, "doc_id", portable=True).select(
@@ -149,7 +144,7 @@ def q_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_dedup_embedding(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding near-dup pairs: cosine >= 0.3 within label blocks."""
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     return similarity.cosine_pairs_blocked(
         emb, "label", threshold=COSINE_PAIR_THRESHOLD
     )
@@ -166,7 +161,6 @@ def q_dedup_semantic(spark: SparkSession, sf: str) -> DataFrame:
     quadratic only inside clusters, assignment is a broadcast-centroid
     pass. The rank-window assignment here is the oracle-replayable twin of
     the production fold (same argument as q_ann_ivf_topk)."""
-    spark = _prep(spark)
     emb = load(spark, sf, "embeddings")
     cent = _ivf_centroids(emb)
     assigned = _assign_by_rank(emb, cent)
@@ -182,7 +176,6 @@ def q_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     docs whose fingerprint is unseen, one min-id winner per within-batch
     duplicate group — the per-ingest dedup step that never re-scans the
     corpus at 100 TB."""
-    spark = _prep(spark)
     docs = load(spark, sf, "documents")
     corpus = docs.filter(F.col("doc_id") % 3 == 0)
     batch = docs.filter(F.col("doc_id") % 3 != 0)
@@ -211,7 +204,7 @@ def _query_vec_list(emb: DataFrame) -> list:
 
 def q_embedding_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Brute-force exact cosine top-10 against the vec_id=0 query vector."""
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     return similarity.brute_force_topk(
         emb.filter(F.col("vec_id") != 0), _query_vec_list(emb), k=10
     )
@@ -224,7 +217,6 @@ def q_maxsim_topk(spark: SparkSession, sf: str) -> DataFrame:
     against any document token. Explode + one keyed max-aggregation +
     TakeOrdered — fully replayable SQL (slices, fold cosines, MAX, and the
     token-ascending sum all reproduce in DuckDB)."""
-    spark = _prep(spark)
     emb = load(spark, sf, "embeddings")
     return similarity.maxsim_topk(
         emb.filter(F.col("vec_id") != 0), _query_vec_list(emb), n_tokens=4, k=10
@@ -269,7 +261,6 @@ def q_ann_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     assignment, nprobe=3 probed cells, exact cosine within candidates.
     Oracle-checked: every stage is reproducible SQL (see corpus_ext
     ORACLE_SQL)."""
-    spark = _prep(spark)
     emb = load(spark, sf, "embeddings")
     centroids = _ivf_centroids(emb)
     data = emb.filter(F.col("vec_id") != 0)
@@ -283,7 +274,6 @@ def q_ann_ivf_refined(spark: SparkSession, sf: str) -> DataFrame:
     centroids as member means (similarity.mean_centroids — deterministic
     decimal means), re-assign, probe, search. Demonstrates that even the
     iterative-training path is replayable by an external engine."""
-    spark = _prep(spark)
     emb = load(spark, sf, "embeddings")
     data = emb.filter(F.col("vec_id") != 0)
     cent0 = _ivf_centroids(emb)
@@ -299,7 +289,6 @@ def q_ann_rp_lsh(spark: SparkSession, sf: str) -> DataFrame:
     md5 hash (similarity.rp_weight), so bucketing, probing, and the final
     exact-cosine top-k are all replayable in SQL — unlike the MLlib LSH
     whose JVM RNG keeps q_ann_lsh rows-only."""
-    spark = _prep(spark)
     emb = load(spark, sf, "embeddings")
     return similarity.rp_lsh_topk(
         emb.filter(F.col("vec_id") != 0), _query_vec_list(emb),
@@ -321,7 +310,6 @@ def q_ann_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     codebooks, the Lloyd re-assignment, the sub-ordered ADC fold, the
     rerank — is replayable SQL (the refinement iteration is generated as a
     CTE pair in the oracle)."""
-    spark = _prep(spark)
     emb = load(spark, sf, "embeddings")
     data = emb.filter(F.col("vec_id") != 0)
     # Codebook training runs driver-side on the (bounded) training set — the
@@ -351,7 +339,6 @@ def q_ann_quantized(spark: SparkSession, sf: str) -> DataFrame:
     quantized codes prunes to k*4 candidates, float rerank returns top-10.
     Fully oracle-checked — quantization (floor(x*scale+0.5)), int dots and
     the rerank are all engine-portable arithmetic."""
-    spark = _prep(spark)
     emb = load(spark, sf, "embeddings")
     return similarity.quantized_topk(
         emb.filter(F.col("vec_id") != 0), _query_vec_list(emb), k=10
@@ -366,7 +353,6 @@ def q_ann_lsh(spark: SparkSession, sf: str) -> DataFrame:
     DuckDB) plus recall_ok — TRUE iff the seeded LSH neighbors hit >= 80%
     of the exact set. Fully value-verified; the former rows-only check is
     retired."""
-    spark = _prep(spark)
     emb = load(spark, sf, "embeddings")
     qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     return similarity.rp_lsh_recall_audit(
@@ -386,7 +372,7 @@ def q_training_data_pipeline(spark: SparkSession, sf: str) -> DataFrame:
 
     from ..operators.sampling import hash_gate
 
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     quality = docs.select(
         "doc_id",
         "text",
@@ -421,7 +407,7 @@ def q_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
     oracle's SUM() OVER (ORDER BY), and both agree exactly."""
     from ..operators.sampling import pack_sequences
 
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     with_tokens = docs.select("doc_id", text.token_count("text", "n_tokens"))
     return pack_sequences(with_tokens, "doc_id", "n_tokens", budget=512, num_partitions=8)
 
@@ -429,7 +415,7 @@ def q_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
 def q_window_tumbling(spark: SparkSession, sf: str) -> DataFrame:
     """Tumbling 1-day event-time window aggregate (batch equivalent of the
     streaming rollup in streaming/)."""
-    ev = load(_prep(spark), sf, "events")
+    ev = load(spark, sf, "events")
     return ev.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
         F.count(F.lit(1)).alias("n_events"),
         exact_sum("value", "total_value"),
@@ -441,7 +427,7 @@ def q_sessionize(spark: SparkSession, sf: str) -> DataFrame:
     per session with event count and duration (lag + cumulative-sum windows)."""
     from pyspark.sql import Window
 
-    ev = load(_prep(spark), sf, "events").select(
+    ev = load(spark, sf, "events").select(
         "user_id", "event_id", F.unix_millis("ts").alias("ms")
     )
     w = Window.partitionBy("user_id").orderBy("ms", "event_id")
@@ -472,7 +458,7 @@ def q_session_window(spark: SparkSession, sf: str) -> DataFrame:
     job share one session definition. Boundary semantics are the operator's:
     a session's end is exclusive, so a gap >= the timeout opens a new
     session (q_sessionize's hand-rolled flag uses strict >)."""
-    ev = load(_prep(spark), sf, "events").filter(F.col("ts").isNotNull())
+    ev = load(spark, sf, "events").filter(F.col("ts").isNotNull())
     return (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("sess"))
         .agg(

@@ -18,15 +18,10 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..operators import sampling, text
 from .corpus import D2D
-from ..session import apply_runtime_confs
 
 CHUNK_TOKENS = 32
 TOKEN_BUDGET = 3000
 DEDUP_CHUNK_TOKENS = 8
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 def _with_synth_pii(docs: DataFrame) -> DataFrame:
@@ -58,13 +53,13 @@ def q_pii_scrub(spark: SparkSession, sf: str) -> DataFrame:
     """PII redaction pass: typed placeholder scrub + per-category audit
     counts (operators/text.pii_redaction_stats) over documents carrying
     synthesized emails/SSNs/phones/IPs."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return text.pii_redaction_stats(_with_synth_pii(docs))
 
 
 def q_chunk_documents(spark: SparkSession, sf: str) -> DataFrame:
     """Fixed-token context-window chunking with per-document ordinals."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return text.chunk_documents(docs, chunk_tokens=CHUNK_TOKENS)
 
 
@@ -72,7 +67,7 @@ def q_chunk_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """Chunk-level exact dedup (the paragraph-dedup analog): fingerprint
     8-token chunks, keep the (doc_id, chunk_id)-least survivor per distinct
     chunk with its copy count. One shuffle on the chunk fingerprint."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     chunks = text.chunk_documents(docs, chunk_tokens=DEDUP_CHUNK_TOKENS)
     fp = chunks.withColumn("fp", F.md5(F.col("chunk_text").cast("binary")))
     by_fp = Window.partitionBy("fp")
@@ -93,7 +88,7 @@ def q_token_budget_mix(spark: SparkSession, sf: str) -> DataFrame:
     deterministic doc_id order) that start before their source's cumulative
     token count hits TOKEN_BUDGET (operators/sampling.token_budget_head —
     two-pass distributed prefix sum, no per-source serialization)."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     with_tokens = docs.select("doc_id", "source", text.token_count("text"))
     out = sampling.token_budget_head(
         with_tokens, "source", "doc_id", "n_tokens", TOKEN_BUDGET
@@ -111,7 +106,7 @@ def q_temperature_mix(spark: SparkSession, sf: str) -> DataFrame:
     ~300-doc target mix, rows gated by the portable hash. Every rate is
     reproducible SQL (sqrt is correctly-rounded IEEE; the weight sum
     accumulates in decimal)."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     out = sampling.temperature_mix(
         docs, "doc_id", "source", target_total=TEMPERATURE_TARGET, alpha=0.5
     )
@@ -128,7 +123,7 @@ def q_corpus_shuffle(spark: SparkSession, sf: str) -> DataFrame:
     replayed by any other engine, and a bare sort gives no addressable
     position). Rank is a two-pass prefix count over hash-range buckets —
     no single-partition window anywhere in the plan."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     out = sampling.global_shuffle(
         docs.select("doc_id"), "doc_id", seed=SHUFFLE_SEED
     )

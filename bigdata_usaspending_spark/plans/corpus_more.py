@@ -18,12 +18,7 @@ from ..catalog import load
 from ..functions import exact_sum, month_of
 from ..operators import cleaning
 from ..operators.joins import asof_join, join_dim_fact, range_join
-from ..session import apply_runtime_confs
 from .corpus import D2D, SUM2
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 # --------------------------------------------------------------------------
@@ -39,7 +34,6 @@ def _geo_subset(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_join_left(spark: SparkSession, sf: str) -> DataFrame:
     """LEFT join keeps non-geocoded facts with null dim attrs."""
-    spark = _prep(spark)
     orders = load(spark, sf, "orders")
     dim = _geo_subset(spark, sf)
     return join_dim_fact(
@@ -50,7 +44,6 @@ def q_join_left(spark: SparkSession, sf: str) -> DataFrame:
 def q_join_semi(spark: SparkSession, sf: str) -> DataFrame:
     """SEMI join: the filtering effect of the reference's inner geo join,
     without dim columns."""
-    spark = _prep(spark)
     orders = load(spark, sf, "orders")
     dim = _geo_subset(spark, sf)
     return join_dim_fact(
@@ -61,7 +54,6 @@ def q_join_semi(spark: SparkSession, sf: str) -> DataFrame:
 def q_join_anti(spark: SparkSession, sf: str) -> DataFrame:
     """ANTI join: the facts the geo join silently dropped — the audit query
     the reference never had."""
-    spark = _prep(spark)
     orders = load(spark, sf, "orders")
     dim = _geo_subset(spark, sf)
     return join_dim_fact(
@@ -76,7 +68,6 @@ def q_join_anti(spark: SparkSession, sf: str) -> DataFrame:
 def q_join_full(spark: SparkSession, sf: str) -> DataFrame:
     """FULL OUTER join: both unmatched sides survive with nulls — the
     reconciliation shape (e.g. awards vs geo entities in either direction)."""
-    spark = _prep(spark)
     totals = (
         load(spark, sf, "orders")
         .groupBy("o_custkey")
@@ -90,7 +81,7 @@ def q_join_full(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_cube_two_keys(spark: SparkSession, sf: str) -> DataFrame:
     """CUBE(returnflag, linestatus) — all 4 grouping sets in one shuffle."""
-    li = load(_prep(spark), sf, "lineitem")
+    li = load(spark, sf, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         exact_sum("l_extendedprice", "total_award_amount")
     )
@@ -99,7 +90,6 @@ def q_cube_two_keys(spark: SparkSession, sf: str) -> DataFrame:
 def q_grouping_sets(spark: SparkSession, sf: str) -> DataFrame:
     """Explicit GROUPING SETS ((key), (month), ()) via SQL — the precise
     server-side form of the dashboard's two client-side charts (A9)."""
-    spark = _prep(spark)
     load(spark, sf, "orders").createOrReplaceTempView("_orders_gs")
     return spark.sql(
         """
@@ -119,7 +109,6 @@ def q_grouping_sets(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_set_intersect(spark: SparkSession, sf: str) -> DataFrame:
     """Customers active in both halves of the calendar (INTERSECT)."""
-    spark = _prep(spark)
     orders = load(spark, sf, "orders")
     h1 = orders.filter(month_of("o_orderdate") <= 6).select("o_custkey")
     h2 = orders.filter(month_of("o_orderdate") > 6).select("o_custkey")
@@ -129,7 +118,6 @@ def q_set_intersect(spark: SparkSession, sf: str) -> DataFrame:
 def q_set_except(spark: SparkSession, sf: str) -> DataFrame:
     """Customers active only in the first half (EXCEPT — set semantics:
     subtract(), not exceptAll(), to match ANSI EXCEPT DISTINCT)."""
-    spark = _prep(spark)
     orders = load(spark, sf, "orders")
     h1 = orders.filter(month_of("o_orderdate") <= 6).select("o_custkey")
     h2 = orders.filter(month_of("o_orderdate") > 6).select("o_custkey")
@@ -142,7 +130,6 @@ def q_set_except(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_window_lag_delta(spark: SparkSession, sf: str) -> DataFrame:
     """Month-over-month delta of each supplier's total via lag()."""
-    spark = _prep(spark)
     li = load(spark, sf, "lineitem")
     sup = load(spark, sf, "supplier")
     monthly = (
@@ -162,7 +149,6 @@ def q_window_lag_delta(spark: SparkSession, sf: str) -> DataFrame:
 def q_window_moving_sum(spark: SparkSession, sf: str) -> DataFrame:
     """3-month moving sum per supplier (rows between 2 preceding and
     current)."""
-    spark = _prep(spark)
     li = load(spark, sf, "lineitem")
     sup = load(spark, sf, "supplier")
     monthly = (
@@ -190,7 +176,6 @@ def q_flagship_etl(spark: SparkSession, sf: str) -> DataFrame:
     (nation ⋈ customer, both broadcast) -> fact join -> grouped exact SUM
     (reference app/spark_cassandra_etl_award_amount_aggregator.py:66-95,
     with lat/lon carried attrs played by n_name)."""
-    spark = _prep(spark)
     orders = load(spark, sf, "orders")
     customer = load(spark, sf, "customer")
     nation = load(spark, sf, "nation")
@@ -207,7 +192,7 @@ def q_dashboard_sankey(spark: SparkSession, sf: str) -> DataFrame:
     from ..ml.adapter import awards_view
     from .dashboard import sankey_links
 
-    return sankey_links(awards_view(_prep(spark), sf), k=15).withColumn(
+    return sankey_links(awards_view(spark, sf), k=15).withColumn(
         "total_award_amount", F.col("total_award_amount")
     )
 
@@ -223,7 +208,6 @@ def q_dashboard_payload(spark: SparkSession, sf: str) -> DataFrame:
     app/ml_app.py:107,117). Geo dims derive deterministically from the
     star (customer/nation keys -> lat/lon; every third customer geocoded,
     mirroring a partially-geocoded dimension)."""
-    spark = _prep(spark)
     from ..ml.adapter import awards_view
     from .serving import dashboard_payload
 
@@ -257,7 +241,7 @@ def q_ml_prepare(spark: SparkSession, sf: str) -> DataFrame:
     from ..ml.adapter import awards_view
     from ..ml.pipelines import REQUIRED
 
-    aw = awards_view(_prep(spark), sf)
+    aw = awards_view(spark, sf)
     out = cleaning.filter_positive(
         cleaning.with_month_year(
             cleaning.drop_null_required(aw, list(REQUIRED)), "start_date"
@@ -308,7 +292,6 @@ def q_tpch_q4_shape(spark: SparkSession, sf: str) -> DataFrame:
     here l_shipdate > o_orderdate + 90 days stands in for the reference
     schema's commit/receipt lag). The semi-join keeps the orders side
     shuffle-free of lineitem payload columns."""
-    spark = _prep(spark)
     orders = load(spark, sf, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1995-04-01").cast("timestamp"))
@@ -332,7 +315,6 @@ def q_tpch_q6_shape(spark: SparkSession, sf: str) -> DataFrame:
     SUM(extendedprice * discount) — the canonical pushdown + map-only
     aggregate (PushedFilters on shipdate/discount/quantity, no shuffle
     beyond the 1-row final agg)."""
-    spark = _prep(spark)
     li = load(spark, sf, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp"))
@@ -351,7 +333,6 @@ def q_tpch_q12_shape(spark: SparkSession, sf: str) -> DataFrame:
     schema's shipmode analog), high- vs low-priority line counts for a
     shipdate year — CASE-sum aggregation after an equi-join, one shuffle on
     the single grouping key."""
-    spark = _prep(spark)
     orders = load(spark, sf, "orders")
     li = load(spark, sf, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
@@ -375,7 +356,6 @@ def q_tpch_q18_shape(spark: SparkSession, sf: str) -> DataFrame:
     back to customer and ranked. The HAVING aggregate shuffles only
     (orderkey, quantity); the winner set is tiny and broadcast into the
     customer join."""
-    spark = _prep(spark)
     li = load(spark, sf, "lineitem")
     orders = load(spark, sf, "orders")
     cust = load(spark, sf, "customer")
@@ -405,7 +385,7 @@ def q_asof_attribution(spark: SparkSession, sf: str) -> DataFrame:
     trades/quotes operator Spark lacks, done as a union-window (one shuffle
     on user_id, no inequality cross product). Oracle: DuckDB's native
     ASOF LEFT JOIN."""
-    ev = load(_prep(spark), sf, "events")
+    ev = load(spark, sf, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
@@ -434,7 +414,6 @@ def q_asof_attribution(spark: SparkSession, sf: str) -> DataFrame:
 def q_range_join_tiers(spark: SparkSession, sf: str) -> DataFrame:
     """Interval/banding join (operators.joins.range_join): totals per price
     tier via a broadcast nested-loop join against a tiny range dimension."""
-    spark = _prep(spark)
     orders = load(spark, sf, "orders")
     from ..io import local_frame
 
@@ -455,7 +434,6 @@ def q_tpch_q3_shape(spark: SparkSession, sf: str) -> DataFrame:
     filtered orders ⋈ shipdate-filtered lineitem -> top-10 orders by exact
     revenue. Both dims broadcast; the lineitem side never shuffles before
     the final aggregation."""
-    spark = _prep(spark)
     cust = load(spark, sf, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     ).select("c_custkey")
@@ -481,7 +459,6 @@ def q_tpch_q5_shape(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q5-shaped composition: revenue by nation where the supplier and
     the customer share the nation (join predicate beyond the key chain),
     over a one-year order window."""
-    spark = _prep(spark)
     cust = load(spark, sf, "customer").select("c_custkey", "c_nationkey")
     orders = load(spark, sf, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -516,7 +493,6 @@ def q_tpch_q7_shape(spark: SparkSession, sf: str) -> DataFrame:
     pair disjunction runs post-join on broadcast-tagged rows, and lineitem
     reaches the final (supp_nation, cust_nation, year) aggregation with the
     order join as its only shuffle."""
-    spark = _prep(spark)
     nations = ("NATION_1", "NATION_2")
     nat = load(spark, sf, "nation").filter(F.col("n_name").isin(*nations))
     sup = (
@@ -581,7 +557,6 @@ def q_tpch_q8_shape(spark: SparkSession, sf: str) -> DataFrame:
     per-year aggregate is map-side partial. Both sums accumulate in exact
     decimal; the share divides the two ROUNDED doubles, so any engine
     reproduces it bit-for-bit."""
-    spark = _prep(spark)
     nat = load(spark, sf, "nation").select("n_nationkey", "n_name", "n_regionkey")
     reg = load(spark, sf, "region").filter(F.col("r_name") == MKT_REGION)
     amer_keys = nat.join(
@@ -647,7 +622,7 @@ def q_hash_sample(spark: SparkSession, sf: str) -> DataFrame:
     auditable training-data subsets, unlike seeded sample()."""
     from ..operators.sampling import hash_sample
 
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return hash_sample(docs, "doc_id", 20).select("doc_id", "lang", "source")
 
 
@@ -656,7 +631,7 @@ def q_stratified_sample(spark: SparkSession, sf: str) -> DataFrame:
     English, half of German, drop the rest), still fully oracle-checkable."""
     from ..operators.sampling import stratified_hash_sample
 
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     out = stratified_hash_sample(
         docs, "doc_id", "lang", {"en": (100, 100), "de": (50, 100)}
     )
@@ -679,7 +654,7 @@ def q_scalar_functions(spark: SparkSession, sf: str) -> DataFrame:
     concat_ws, regexp_extract + try_cast, length, coalesce) in one codegen'd
     projection — the engine ships Spark's full built-in scalar library; this
     query pins cross-engine semantics for the commonly-used subset."""
-    cust = load(_prep(spark), sf, "customer")
+    cust = load(spark, sf, "customer")
     return cust.select(
         "c_custkey",
         F.upper("c_name").alias("name_upper"),
@@ -698,7 +673,7 @@ def q_scalar_functions(spark: SparkSession, sf: str) -> DataFrame:
 def q_having(spark: SparkSession, sf: str) -> DataFrame:
     """GROUP BY ... HAVING — a post-aggregation filter (Catalyst plans it as
     Filter over the final hash aggregate; no extra shuffle)."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     totals = orders.groupBy("o_orderpriority").agg(
         exact_sum("o_totalprice", "total_award_amount"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -709,7 +684,7 @@ def q_having(spark: SparkSession, sf: str) -> DataFrame:
 def q_window_ntile(spark: SparkSession, sf: str) -> DataFrame:
     """ntile window: quartile assignment within each priority (total order
     tiebroken by key for determinism), then quartile boundary stats."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.asc("o_totalprice"), F.asc("o_orderkey")
     )
@@ -726,7 +701,7 @@ def q_pivot_priority_by_month(spark: SparkSession, sf: str) -> DataFrame:
     order priority. Spark's pivot with explicit values compiles to a single
     hash aggregation with one conditional SUM per value — same shuffle as
     the plain groupBy; the oracle expresses it as FILTER aggregates."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     wide = (
         orders.groupBy(month_of("o_orderdate").alias("month"))
         .pivot("o_orderpriority", PRIORITIES)
@@ -739,7 +714,7 @@ def q_grouped_median(spark: SparkSession, sf: str) -> DataFrame:
     """Exact median per group (the A6 median generalized to GROUP BY):
     built-in percentile aggregate per key — partial-aggregated like any
     hash agg, no per-group sort."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     return orders.groupBy("o_orderpriority").agg(
         F.percentile(F.col("o_totalprice").cast("double"), F.lit(0.5)).alias(
             "median_totalprice"
@@ -753,7 +728,6 @@ def q_join_salted(spark: SparkSession, sf: str) -> DataFrame:
     priority rollup — result must be identical to the plain join."""
     from ..operators.skew import salted_join
 
-    spark = _prep(spark)
     li = load(spark, sf, "lineitem")
     orders = load(spark, sf, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
@@ -769,7 +743,7 @@ def q_multimodal_bytes(spark: SparkSession, sf: str) -> DataFrame:
     """Binary-column metadata pass: byte length of the opaque payload (the
     schema/plumbing half of the multimodal family; decode is stubbed —
     operators/multimodal.py)."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return docs.select(
         "doc_id",
         F.octet_length(F.encode("text", "UTF-8")).cast("int").alias("byte_len"),
@@ -781,7 +755,6 @@ def q_deep_join_chain(spark: SparkSession, sf: str) -> DataFrame:
     region) -> regional totals: the deep star traversal. All four dims
     broadcast — the fact side flows through zero shuffles until the final
     group-by."""
-    spark = _prep(spark)
     li = load(spark, sf, "lineitem")
     orders = load(spark, sf, "orders")
     customer = load(spark, sf, "customer")
@@ -807,7 +780,6 @@ def q_pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
     incl. a derived-expression SUM (extprice * (1 - discount)) — the widest
     single-pass aggregation shape. Exact: 2dp x 2dp products have scale 4,
     carried in decimal."""
-    spark = _prep(spark)
     li = load(spark, sf, "lineitem")
     d = "decimal(19,4)"
     disc_price = (F.col("l_extendedprice").cast(d) * (F.lit(1).cast(d) - F.col("l_discount").cast(d))).cast(
@@ -835,7 +807,6 @@ def q_agg_salted(spark: SparkSession, sf: str) -> DataFrame:
     oracle is the plain GROUP BY."""
     from ..operators.skew import salted_sum_by_key
 
-    spark = _prep(spark)
     li = load(spark, sf, "lineitem")
     sup = load(spark, sf, "supplier")
     joined = join_dim_fact(li, sup, on=li.l_suppkey == sup.s_suppkey)
@@ -847,7 +818,7 @@ def q_dedup_survivors(spark: SparkSession, sf: str) -> DataFrame:
     back) — the materializable output of the dedup pass."""
     from ..operators.dedup import exact_dedup
 
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return exact_dedup(docs, "doc_id").select("doc_id", "lang", "source", "n_chars")
 
 

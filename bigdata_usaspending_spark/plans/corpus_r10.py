@@ -64,15 +64,10 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..operators import retrieval, text
 from ..operators.text import tokens as sql_tokens
-from ..session import apply_runtime_confs
 from ..sources.warc import TRACKING_PARAM_RE, url_dedup_groups
 from .oracle_lib import _BM25_BATCH, _BM25_BATCH_K
 
 _RERANK_TRAINED_K = 5
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 def _synth_url() -> "F.Column":
@@ -126,7 +121,7 @@ def q_url_dedup(spark: SparkSession, sf: str) -> DataFrame:
     canonical URL with the min doc_id and the copy count. One linear
     shuffle keyed on the canonical URL; canonicalization is map-side
     codegen."""
-    docs = load(_prep(spark), sf, "documents").select("doc_id", _synth_url())
+    docs = load(spark, sf, "documents").select("doc_id", _synth_url())
     return url_dedup_groups(docs, id_col="doc_id", url_col="target_uri")
 
 
@@ -245,7 +240,7 @@ def _bm25_candidates(spark: SparkSession, sf: str) -> DataFrame:
     and query text — the shared retrieve stage (exactly
     corpus_r9.q_rerank_topk's candidate frame; candidates broadcast, the
     corpus streams through the probe)."""
-    docs = load(_prep(spark), sf, "documents").select("doc_id", "text")
+    docs = load(spark, sf, "documents").select("doc_id", "text")
     cands = text.bm25_topk_batch(docs, _BM25_BATCH, k=_BM25_BATCH_K)
     qtext = reduce(
         lambda acc, kv: acc.when(F.col("query_id") == kv[0], F.lit(kv[1])),
@@ -402,7 +397,7 @@ def q_corpus_build_mini(spark: SparkSession, sf: str) -> DataFrame:
     shuffle/pack — no single-partition window, no driver state."""
     from .build_corpus import CorpusBuildConfig, build_corpus
 
-    docs = load(_prep(spark), sf, "documents").select(
+    docs = load(spark, sf, "documents").select(
         "doc_id", "text", "source"
     )
     cfg = CorpusBuildConfig(
@@ -502,7 +497,7 @@ def q_fuzzy_name_pairs_k3(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import fuzzy
 
     cust = (
-        load(_prep(spark), sf, "customer")
+        load(spark, sf, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
         .filter(F.col("c_custkey") % 10 == 0)
     )
@@ -550,7 +545,7 @@ def q_ann_ivf_pq(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import similarity
     from .corpus_ext import _ivf_centroids, _query_vec_list
 
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     data = emb.filter(F.col("vec_id") != 0)
     return similarity.ivf_pq_recall_audit(
         data, _ivf_centroids(emb), _query_vec_list(emb),
@@ -567,7 +562,7 @@ def q_corpus_datasheet(spark: SparkSession, sf: str) -> DataFrame:
     from .build_corpus import corpus_datasheet
 
     return corpus_datasheet(
-        load(_prep(spark), sf, "documents").select("text", "source")
+        load(spark, sf, "documents").select("text", "source")
     )
 
 

@@ -60,11 +60,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import similarity
-from ..session import apply_runtime_confs
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 def q_ann_ivf_pq_incremental(spark: SparkSession, sf: str) -> DataFrame:
@@ -78,7 +73,7 @@ def q_ann_ivf_pq_incremental(spark: SparkSession, sf: str) -> DataFrame:
     returned frame never re-reads it."""
     from .corpus_ext import _ivf_centroids, _query_vec_list
 
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     data = emb.filter(F.col("vec_id") != 0)
     initial = data.filter(F.col("vec_id") % 5 != 1)
     batch = data.filter(F.col("vec_id") % 5 == 1)
@@ -269,7 +264,7 @@ def q_semantic_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import similarity
     from .corpus_ext import _ivf_centroids
 
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     data = emb.filter(F.col("vec_id") != 0)
     initial = data.filter(F.col("vec_id") % 4 != 1)
     batch = data.filter(F.col("vec_id") % 4 == 1)
@@ -454,7 +449,7 @@ def q_dedup_incremental_winnow(spark: SparkSession, sf: str) -> DataFrame:
     full-set verify replay exactly)."""
     from ..operators import dedup
 
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     corpus = docs.filter(F.col("doc_id") % 3 == 0)
     batch = docs.filter(F.col("doc_id") % 3 != 0)
     # localCheckpoint stands in for the PERSISTED index the contract
@@ -577,7 +572,7 @@ def q_fuzzy_dim_match(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import fuzzy
 
     cust = (
-        load(_prep(spark), sf, "customer")
+        load(spark, sf, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
         .filter(F.col("c_custkey") % 10 == 0)
     )

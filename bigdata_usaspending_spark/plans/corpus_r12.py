@@ -36,11 +36,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..io import local_frame
-from ..session import apply_runtime_confs
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 # shared across waves — moved verbatim to plans/oracle_lib (VERDICT r14 #7)
@@ -72,7 +67,7 @@ def q_winnow_robust(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.text import winnow_fingerprints
 
     docs = _ensure_parallelism(
-        load(_prep(spark), sf, "documents")
+        load(spark, sf, "documents")
         .filter((F.col("doc_id") % 7 == 0) & F.col("text").isNotNull())
         .select("doc_id", "text")
     )
@@ -258,7 +253,7 @@ def q_winnow_match_spans(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import dedup
 
     docs = (
-        load(_prep(spark), sf, "documents")
+        load(spark, sf, "documents")
         .filter((F.col("doc_id") % 7 == 0) & F.col("text").isNotNull())
         .select("doc_id", "text")
     )
@@ -340,7 +335,7 @@ def q_winnow_span_scrub(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import dedup
 
     docs = (
-        load(_prep(spark), sf, "documents")
+        load(spark, sf, "documents")
         .filter((F.col("doc_id") % 7 == 0) & F.col("text").isNotNull())
         .select("doc_id", "text")
     )
@@ -454,7 +449,7 @@ def q_winnow_spans_incremental(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import dedup
 
     docs = (
-        load(_prep(spark), sf, "documents")
+        load(spark, sf, "documents")
         .filter((F.col("doc_id") % 7 == 0) & F.col("text").isNotNull())
         .select("doc_id", "text")
     )
@@ -490,7 +485,7 @@ def _clustered_embeddings(spark: SparkSession, sf: str) -> DataFrame:
     residual is ~40 units from every codebook entry, so its ADC lower
     bound exceeds any near-cluster threshold. float32 widens to binary64
     losslessly, so the +40.0 arithmetic replays bit-exactly in SQL."""
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     return emb.select(
         "vec_id",
         "label",
@@ -706,7 +701,7 @@ def _scrub_docs(spark: SparkSession, sf: str) -> DataFrame:
     (the cut keeps a gate-passing remnant — the scrub tier's raison
     d'être: the doc that QUOTES a passage but is otherwise worth
     keeping). Both outcomes exercise in one build."""
-    docs = load(_prep(spark), sf, "documents").select(
+    docs = load(spark, sf, "documents").select(
         "doc_id", "text", "source"
     )
     v17 = docs.filter(
@@ -924,7 +919,7 @@ def q_decontaminate_spans(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import dedup
 
     docs = (
-        load(_prep(spark), sf, "documents")
+        load(spark, sf, "documents")
         .filter((F.col("doc_id") % 7 == 0) & F.col("text").isNotNull())
         .select("doc_id", "text")
     )
@@ -1053,7 +1048,7 @@ def q_chunk_overlap(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.text import chunk_spans
 
     return (
-        load(_prep(spark), sf, "documents")
+        load(spark, sf, "documents")
         .filter((F.col("doc_id") % 5 == 0) & F.col("text").isNotNull())
         .select(
             "doc_id",
@@ -1115,7 +1110,7 @@ def q_ann_opq(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import similarity
     from .corpus_ext import _query_vec_list
 
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     return similarity.opq_recall_audit(
         emb.filter(F.col("vec_id") != 0), _query_vec_list(emb),
         k=5, m=16, kc=16, iters=2, rerank_factor=16,
@@ -1163,7 +1158,7 @@ def q_ann_opq_index(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import similarity
     from .corpus_ext import _ivf_centroids, _query_vec_list
 
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     data = emb.filter((F.col("vec_id") != 0) & (F.col("vec_id") % 5 != 0))
     batch = emb.filter((F.col("vec_id") != 0) & (F.col("vec_id") % 5 == 0))
     qvec = _query_vec_list(emb)

@@ -44,11 +44,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..io import local_frame
-from ..session import apply_runtime_confs
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 _COMPACT_K = 5
@@ -80,7 +75,7 @@ def q_ann_index_compact(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import similarity
     from .corpus_ext import _ivf_centroids, _query_vec_list
 
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     data = emb.filter(F.col("vec_id") != 0)
     initial = data.filter(F.col("vec_id") % 4 != 0)
     qvec = _query_vec_list(emb)
@@ -189,7 +184,6 @@ def q_corpus_semantic_opq(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import similarity
     from .corpus_ext import _ivf_centroids, _query_vec_list
 
-    spark = _prep(spark)
     docs = load(spark, sf, "documents")
     emb = load(spark, sf, "embeddings")
     survivors = (
@@ -295,7 +289,7 @@ def q_gopher_repetition(spark: SparkSession, sf: str) -> DataFrame:
     top tie-break, raw IEEE divisions."""
     from ..operators import text
 
-    docs = load(_prep(spark), sf, "documents").filter(
+    docs = load(spark, sf, "documents").filter(
         F.col("text").isNotNull()
     )
     return text.ngram_char_fractions(docs).orderBy("doc_id")
@@ -391,7 +385,7 @@ def q_winnow_index_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
     from .oracle_lib import _ROBUST_K, _ROBUST_W, _SPAN_MAX_DF, _SPAN_THRESHOLD
 
     docs = (
-        load(_prep(spark), sf, "documents")
+        load(spark, sf, "documents")
         .filter((F.col("doc_id") % 7 == 0) & F.col("text").isNotNull())
         .select("doc_id", "text")
     )
@@ -476,7 +470,6 @@ def q_corpus_build_incremental(spark: SparkSession, sf: str) -> DataFrame:
         _WINNOW_BUILD_THRESHOLD,
     )
 
-    spark = _prep(spark)
     committed = (
         load(spark, sf, "documents")
         .filter((F.col("doc_id") % 5 == 4) & F.col("text").isNotNull())

@@ -49,11 +49,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..io import local_frame
-from ..session import apply_runtime_confs
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 _REMOVE_K = 5
@@ -69,7 +64,7 @@ def q_ann_index_remove(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import similarity
     from .corpus_ext import _ivf_centroids, _query_vec_list
 
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     data = emb.filter(F.col("vec_id") != 0)
     victims = data.filter(F.col("vec_id") % 7 == 3)
     qvec = _query_vec_list(emb)
@@ -175,7 +170,6 @@ def q_winnow_index_remove(spark: SparkSession, sf: str) -> DataFrame:
         _WINNOW_BUILD_THRESHOLD,
     )
 
-    spark = _prep(spark)
     committed = (
         load(spark, sf, "documents")
         .filter((F.col("doc_id") % 5 == 4) & F.col("text").isNotNull())
@@ -331,7 +325,6 @@ def q_corpus_build_takedown(spark: SparkSession, sf: str) -> DataFrame:
         _WINNOW_BUILD_THRESHOLD,
     )
 
-    spark = _prep(spark)
     committed = (
         load(spark, sf, "documents")
         .filter((F.col("doc_id") % 5 == 4) & F.col("text").isNotNull())

@@ -58,11 +58,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..io import local_frame
-from ..session import apply_runtime_confs
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 _REBUILD_K = 5
@@ -79,7 +74,7 @@ def q_ann_index_rebuild(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import similarity
     from .corpus_ext import _ivf_centroids, _query_vec_list
 
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     data = emb.filter(F.col("vec_id") != 0)
     fresh0 = emb.filter(F.col("vec_id") == 0)
     victims = data.filter(F.col("vec_id") % 7 == 3)
@@ -179,7 +174,6 @@ def q_winnow_index_rebuild(spark: SparkSession, sf: str) -> DataFrame:
         _WINNOW_BUILD_THRESHOLD,
     )
 
-    spark = _prep(spark)
     docs = load(spark, sf, "documents").filter(F.col("text").isNotNull())
     committed = docs.filter(F.col("doc_id") % 5 == 4).select(
         "doc_id", "text"
@@ -328,7 +322,7 @@ def q_ann_index_drift(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators import similarity
     from .corpus_ext import _ivf_centroids
 
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     data = emb.filter(F.col("vec_id") != 0)
     tmp = tempfile.mkdtemp(prefix="drift_idx_")
     try:

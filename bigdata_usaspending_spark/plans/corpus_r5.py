@@ -44,12 +44,7 @@ from ..operators.aggregates import (
 )
 from ..operators.dedup import repeated_passages, scrub_repeated_passages
 from ..operators.joins import join_dim_fact
-from ..session import apply_runtime_confs
 from .corpus import SUM2
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 def q_fuzzy_name_pairs(spark: SparkSession, sf: str) -> DataFrame:
@@ -57,7 +52,7 @@ def q_fuzzy_name_pairs(spark: SparkSession, sf: str) -> DataFrame:
     entity match the reference's exact-equality grouping lacks. Candidate
     generation is the order-1 deletion neighborhood (len+1 keys/row, an
     equality join), never the all-pairs product."""
-    cust = load(_prep(spark), sf, "customer")
+    cust = load(spark, sf, "customer")
     return fuzzy.edit_distance_pairs(cust, "c_custkey", "c_name", max_dist=1)
 
 
@@ -67,7 +62,7 @@ def q_fuzzy_name_pairs_k2(spark: SparkSession, sf: str) -> DataFrame:
     Distance-2 name pairs differ in up to two digits, so the match set is
     ~30x denser than k=1 — the segment filter keeps the demonstration
     bounded while exercising the full order-2 path end-to-end."""
-    cust = load(_prep(spark), sf, "customer").filter(
+    cust = load(spark, sf, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
     return fuzzy.edit_distance_pairs(cust, "c_custkey", "c_name", max_dist=2)
@@ -79,7 +74,7 @@ def q_hll_distinct(spark: SparkSession, sf: str) -> DataFrame:
     sketches — each asserted within 5% of the exact count (lgk=14 keeps the
     expected error ~0.4%, so the tolerance still catches a broken merge
     while never flaking). The exact count doubles as the oracle witness."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     return hll_distinct_audit(
         orders,
         "o_orderpriority",
@@ -94,7 +89,6 @@ def q_orders_open_by_month(spark: SparkSession, sf: str) -> DataFrame:
     """Orders in flight per calendar month (open from order date until the
     last line shipment): interval-overlap aggregation by month bin-explode
     — linear in (orders x months open), one hash agg, no theta join."""
-    spark = _prep(spark)
     last_ship = (
         load(spark, sf, "lineitem")
         .groupBy("l_orderkey")
@@ -118,7 +112,7 @@ def q_window_rank_family(spark: SparkSession, sf: str) -> DataFrame:
     percent_rank, cume_dist of order totals within each priority, keeping
     each priority's 3 cheapest ranks (ties included, so the result set is
     tie-invariant and deterministic)."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy(F.asc("o_totalprice"))
     ranked = orders.select(
         "o_orderkey",
@@ -137,7 +131,6 @@ def q_string_agg_per_nation(spark: SparkSession, sf: str) -> DataFrame:
     comma-joined, lexically sorted string. collect_list order is execution
     dependent, so the sort inside the aggregate is what makes the value
     deterministic; the dim join broadcasts."""
-    spark = _prep(spark)
     cust = load(spark, sf, "customer")
     nation = load(spark, sf, "nation").select(
         F.col("n_nationkey").alias("c_nationkey"), "n_name"
@@ -153,7 +146,7 @@ def q_repeated_passages(spark: SparkSession, sf: str) -> DataFrame:
     """Cross-document repeated 8-token passages (ExactSubstr-style span
     dedup): one linear span explode + one hash aggregate — no pairwise
     join anywhere (operators/dedup.repeated_passages)."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return repeated_passages(docs, "doc_id", "text", n=8, min_docs=3)
 
 
@@ -162,7 +155,7 @@ def q_heavy_hitter_tokens(spark: SparkSession, sf: str) -> DataFrame:
     Misra-Gries candidate sketch + exact recount
     (operators/aggregates.heavy_hitters): the full-GROUP-BY answer without
     ever shuffling the long tail."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     toks = docs.select(
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token")
     )
@@ -174,7 +167,7 @@ def q_passage_scrub(spark: SparkSession, sf: str) -> DataFrame:
     (dedup.scrub_repeated_passages): detection reused from
     q_repeated_passages, application as a sorted bounded fold of replaces
     — list_reduce-replayable so the oracle is bit-identical."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return scrub_repeated_passages(docs, "doc_id", "text", n=8, min_docs=3)
 
 
@@ -186,7 +179,7 @@ def q_knn_join(spark: SparkSession, sf: str) -> DataFrame:
     per-query shuffle; bit-identical to the cross-join + window oracle."""
     from ..operators.similarity import knn_join
 
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
     corpus = emb.filter(F.col("vec_id") >= 20)
     return knn_join(queries, corpus, k=5)
@@ -201,7 +194,7 @@ def q_ann_ivf_knn_join(spark: SparkSession, sf: str) -> DataFrame:
     SQL (the q_ann_ivf_topk contract, extended per-query)."""
     from ..operators.similarity import ivf_knn_join, mean_centroids
 
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     corpus = emb.filter(F.col("vec_id") >= 10)
     cents = mean_centroids(corpus.withColumn("cell", F.col("label")), "cell")
@@ -216,7 +209,7 @@ def q_hll_intersection(spark: SparkSession, sf: str) -> DataFrame:
     count and the audit boolean."""
     from ..functions import month_of
 
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     h1 = orders.filter(month_of("o_orderdate") <= 6)
     h2 = orders.filter(month_of("o_orderdate") > 6)
     return hll_intersection_audit(h1, h2, "o_custkey", lgk=14, rel_err=0.1)
@@ -226,7 +219,7 @@ def q_table_profile(spark: SparkSession, sf: str) -> DataFrame:
     """One-pass ANALYZE-style profile of the orders table: per column,
     row/non-null/exact-distinct counts and lexical min/max as strings
     (aggregates.profile_table); one scan, inline unpivot."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     return profile_table(orders)
 
 
@@ -237,7 +230,7 @@ def q_sample_k_per_group(spark: SparkSession, sf: str) -> DataFrame:
     oracle replay it bit-for-bit."""
     from ..operators.sampling import sample_k_per_group
 
-    orders = load(_prep(spark), sf, "orders").select(
+    orders = load(spark, sf, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
     return sample_k_per_group(
@@ -253,7 +246,6 @@ def q_scd2_customer_segment(spark: SparkSession, sf: str) -> DataFrame:
     bit-deterministic; ONE key shuffle for the open⋈updates join."""
     from .. import io as engine_io
 
-    spark = _prep(spark)
     cust = load(spark, sf, "customer")
     orders = load(spark, sf, "orders")
     cur = cust.select(
@@ -287,7 +279,7 @@ def q_tdigest_quantiles(spark: SparkSession, sf: str) -> DataFrame:
     digest paths shuffle bounded centroid arrays, never values."""
     from ..operators.sketches import tdigest_quantile_audit
 
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     return tdigest_quantile_audit(
         orders,
         "o_totalprice",
@@ -309,7 +301,7 @@ def q_dedup_incremental_bloom(spark: SparkSession, sf: str) -> DataFrame:
     never shuffle."""
     from ..operators import dedup
 
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     corpus = docs.filter(F.col("doc_id") % 3 == 0)
     batch = docs.filter(F.col("doc_id") % 3 != 0)
     index = dedup.fingerprint_index(corpus)
@@ -326,7 +318,7 @@ def q_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
     oracle replays the exponential-rank draw bit-for-bit."""
     from ..operators.sampling import weighted_sample_k
 
-    orders = load(_prep(spark), sf, "orders").select(
+    orders = load(spark, sf, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
     return weighted_sample_k(
@@ -343,7 +335,7 @@ def q_cms_token_counts(spark: SparkSession, sf: str) -> DataFrame:
     witness rows."""
     from ..operators.sketches import cms_frequency_audit
 
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     toks = docs.select(
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("token")
     )
@@ -360,7 +352,6 @@ def q_consistent_sample(spark: SparkSession, sf: str) -> DataFrame:
     from ..functions import exact_sum
     from ..operators.sampling import hash_gate
 
-    spark = _prep(spark)
     cust = load(spark, sf, "customer").filter(hash_gate("c_custkey", 20))
     orders = load(spark, sf, "orders").filter(hash_gate("o_custkey", 20))
     j = orders.join(
@@ -387,7 +378,7 @@ def q_dedup_incremental_minhash(spark: SparkSession, sf: str) -> DataFrame:
     oracle-checked via the portable hash bridge."""
     from ..operators import dedup
 
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     corpus = docs.filter(F.col("doc_id") % 3 == 0)
     batch = docs.filter(F.col("doc_id") % 3 != 0)
     index = dedup.minhash_index(corpus, "doc_id", portable=True)

@@ -24,12 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..session import apply_runtime_confs
 from ..operators.aggregates import profile_table_hll_audit
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 def q_table_profile_hll(spark: SparkSession, sf: str) -> DataFrame:
@@ -39,7 +34,7 @@ def q_table_profile_hll(spark: SparkSession, sf: str) -> DataFrame:
     aggregates (aggregates.profile_table_hll_audit). Production drops the
     witness via profile_table(exact_distinct=False); this registered form
     keeps it so the HLL path is accuracy-gated."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     return profile_table_hll_audit(orders)
 
 
@@ -52,7 +47,7 @@ def q_langid_scorer(spark: SparkSession, sf: str) -> DataFrame:
     the seam's default can never drift from the oracle-checked column."""
     from ..operators.scorers import HeuristicLangIdScorer, apply_text_scorer
 
-    docs = load(_prep(spark), sf, "documents").select("doc_id", "text")
+    docs = load(spark, sf, "documents").select("doc_id", "text")
     return apply_text_scorer(docs, HeuristicLangIdScorer()).select(
         "doc_id", "lang_pred"
     )
@@ -69,7 +64,7 @@ def q_commonness_scorer(spark: SparkSession, sf: str) -> DataFrame:
     quality default can never drift from the oracle-checked column."""
     from ..operators.scorers import VocabCommonnessScorer, apply_text_scorer
 
-    docs = load(_prep(spark), sf, "documents").select("doc_id", "text")
+    docs = load(spark, sf, "documents").select("doc_id", "text")
     scorer = VocabCommonnessScorer.from_corpus(docs)
     return apply_text_scorer(
         docs.filter(F.col("text").isNotNull()), scorer
@@ -86,7 +81,7 @@ def q_skew_profile(spark: SparkSession, sf: str) -> DataFrame:
     fully oracle-checked."""
     from ..operators.skew import skew_profile
 
-    li = load(_prep(spark), sf, "lineitem")
+    li = load(spark, sf, "lineitem")
     return skew_profile(li, "l_suppkey")
 
 
@@ -100,7 +95,7 @@ def q_decontaminate_semantic(spark: SparkSession, sf: str) -> DataFrame:
     replay exactly in SQL."""
     from ..operators.similarity import semantic_decontaminate
 
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 20 != 0)
     bench = emb.filter(F.col("vec_id") % 20 == 0)
     return semantic_decontaminate(corpus, bench, threshold=0.8).select(
@@ -216,9 +211,8 @@ def q_training_pipeline_v2(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.sampling import weighted_sample_k
     from ..operators.similarity import semantic_decontaminate
 
-    sp = _prep(spark)
-    docs = load(sp, sf, "documents")
-    emb = load(sp, sf, "embeddings")
+    docs = load(spark, sf, "documents")
+    emb = load(spark, sf, "embeddings")
     quality = docs.select(
         "doc_id",
         "text",
@@ -313,7 +307,7 @@ def q_drift_psi(spark: SparkSession, sf: str) -> DataFrame:
     from ..functions import month_of
     from ..operators.timeseries import psi_drift
 
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     base = orders.filter(month_of("o_orderdate") <= 6)
     cur = orders.filter(month_of("o_orderdate") > 6)
     return psi_drift(base, cur, "o_totalprice", lo=0.0, hi=600000.0, nbins=20)
@@ -382,7 +376,7 @@ def q_quota_mix(spark: SparkSession, sf: str) -> DataFrame:
         sample_quota_per_group,
     )
 
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     weights = docs.groupBy("source").agg(
         F.sum(text.token_count("text", "nt")).alias("wt")
     )
@@ -453,7 +447,7 @@ def q_split_grouped(spark: SparkSession, sf: str) -> DataFrame:
     shuffle, SQL-replayable hash ranges."""
     from ..operators.sampling import split_assign
 
-    docs = load(_prep(spark), sf, "documents").select("doc_id", "source")
+    docs = load(spark, sf, "documents").select("doc_id", "source")
     return split_assign(
         docs, "doc_id",
         [("train", 80), ("val", 10), ("test", 10)],
@@ -485,7 +479,7 @@ def q_contamination_report(spark: SparkSession, sf: str) -> DataFrame:
     order-independent, so the scores replay exactly in SQL."""
     from ..operators.similarity import contamination_report
 
-    emb = load(_prep(spark), sf, "embeddings")
+    emb = load(spark, sf, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 20 != 0)
     bench = emb.filter(F.col("vec_id") % 20 == 0)
     return contamination_report(corpus, bench, threshold=0.8)
@@ -521,7 +515,7 @@ def q_contamination_report_ngram(spark: SparkSession, sf: str) -> DataFrame:
     the corpus."""
     from ..operators import dedup
 
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     corpus = docs.filter(F.col("doc_id") % 20 != 0)
     bench = docs.filter(F.col("doc_id") % 20 == 0)
     return dedup.contamination_report_ngram(corpus, bench, "doc_id")

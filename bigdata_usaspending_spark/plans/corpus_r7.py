@@ -22,22 +22,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load
 from ..operators import text
-from ..session import apply_runtime_confs
 
 from .oracle_lib import _BM25_TERMS  # shared across waves (plans/oracle_lib)
 
 _BM25_K = 25
 
 
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
-
-
 def q_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     """BM25 top-25 for a 4-term query over documents: exact int tf/df/dl
     statistics, fixed-order double scoring, ties broken by doc_id — the
     returned set replays engine-exact in SQL."""
-    docs = load(_prep(spark), sf, "documents").select("doc_id", "text")
+    docs = load(spark, sf, "documents").select("doc_id", "text")
     return text.bm25_topk(docs, _BM25_TERMS, k=_BM25_K)
 
 

@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import text
-from ..session import apply_runtime_confs
 
 # shared across waves — moved verbatim to plans/oracle_lib (VERDICT r14 #7)
 from .oracle_lib import (
@@ -40,16 +39,12 @@ from .oracle_lib import (
 )
 
 
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
-
-
 def q_bm25_batch(spark: SparkSession, sf: str) -> DataFrame:
     """Per-query BM25 top-10 for a 4-query batch over documents: one
     corpus scan for the union vocabulary, driver-side stats row, per-query
     scores built array-side, window top-k on query_id. Ties break on
     ascending doc_id, so the returned set replays engine-exact in SQL."""
-    docs = load(_prep(spark), sf, "documents").select("doc_id", "text")
+    docs = load(spark, sf, "documents").select("doc_id", "text")
     return text.bm25_topk_batch(docs, _BM25_BATCH, k=_BM25_BATCH_K)
 
 
@@ -60,7 +55,7 @@ def q_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     by one bounded Spark aggregate instead of downloaded)."""
     from ..operators.scorers import BigramLMScorer, apply_text_scorer
 
-    docs = load(_prep(spark), sf, "documents").select("doc_id", "text")
+    docs = load(spark, sf, "documents").select("doc_id", "text")
     scorer = BigramLMScorer.from_corpus(docs, lam=_LM_LAMBDA)
     return apply_text_scorer(
         docs.filter(F.col("text").isNotNull()), scorer

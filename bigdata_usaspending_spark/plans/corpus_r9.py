@@ -58,17 +58,12 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import retrieval, text
-from ..session import apply_runtime_confs
 from .oracle_lib import _BM25_BATCH, _BM25_BATCH_K
 
 _HYBRID_LEX_K = 25  # = corpus_r7._BM25_K, the bm25 oracle's own k
 _HYBRID_VEC_K = 10
 _HYBRID_K = 15
 _RERANK_K = 5
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 def q_hybrid_rrf(spark: SparkSession, sf: str) -> DataFrame:
@@ -79,7 +74,7 @@ def q_hybrid_rrf(spark: SparkSession, sf: str) -> DataFrame:
     from .corpus_ext import _query_vec_list
     from .oracle_lib import _BM25_TERMS
 
-    docs = load(_prep(spark), sf, "documents").select("doc_id", "text")
+    docs = load(spark, sf, "documents").select("doc_id", "text")
     emb = load(spark, sf, "embeddings")
     qvec = _query_vec_list(emb)
     return retrieval.hybrid_retrieve(
@@ -101,7 +96,7 @@ def q_rerank_topk(spark: SparkSession, sf: str) -> DataFrame:
     doc_id."""
     from ..operators.scorers import TokenOverlapPairScorer
 
-    docs = load(_prep(spark), sf, "documents").select("doc_id", "text")
+    docs = load(spark, sf, "documents").select("doc_id", "text")
     cands = text.bm25_topk_batch(docs, _BM25_BATCH, k=_BM25_BATCH_K)
     qtext = reduce(
         lambda acc, kv: acc.when(F.col("query_id") == kv[0], F.lit(kv[1])),
@@ -138,7 +133,7 @@ def q_rrf_grouped(spark: SparkSession, sf: str) -> DataFrame:
     across configs), fused query by query via the tagged single-plan
     form (windows partition by query_id — no single-partition stage).
     Output ``(query_id, doc_id, rrf, n_lists)`` top-10 per query."""
-    docs = load(_prep(spark), sf, "documents").select("doc_id", "text")
+    docs = load(spark, sf, "documents").select("doc_id", "text")
     hits = text.bm25_score_hits_multi(
         docs,
         _BM25_BATCH,
@@ -155,7 +150,7 @@ def q_rrf_grouped(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _dsir_frames(spark: SparkSession, sf: str):
-    pool = load(_prep(spark), sf, "documents").select(
+    pool = load(spark, sf, "documents").select(
         "doc_id", "text", "lang", "source"
     )
     # target as a boolean Column: both LMs fit from ONE corpus scan
@@ -171,7 +166,7 @@ def q_langid_trained(spark: SparkSession, sf: str) -> DataFrame:
     the established cross-engine pair), never in Python."""
     from ..operators.scorers import TrigramLangIdScorer, apply_text_scorer
 
-    docs = load(_prep(spark), sf, "documents").select(
+    docs = load(spark, sf, "documents").select(
         "doc_id", F.lower(F.col("text")).alias("text"), "lang"
     )
     scorer = TrigramLangIdScorer.from_corpus(docs)
@@ -222,7 +217,7 @@ def q_curriculum_phases(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.scorers import BigramLMScorer, apply_text_scorer
     from .oracle_lib import _LM_LAMBDA
 
-    docs = load(_prep(spark), sf, "documents").select("doc_id", "text")
+    docs = load(spark, sf, "documents").select("doc_id", "text")
     # _LM_LAMBDA, not _DSIR_LAM: the oracle embeds r8's q_lm_perplexity
     # SQL verbatim, so the fit must share ITS constant structurally
     lm = BigramLMScorer.from_corpus(docs, lam=_LM_LAMBDA)
@@ -283,7 +278,7 @@ def q_training_pipeline_v3(spark: SparkSession, sf: str) -> DataFrame:
         apply_text_scorer,
     )
 
-    docs = load(_prep(spark), sf, "documents").select(
+    docs = load(spark, sf, "documents").select(
         "doc_id", F.lower(F.col("text")).alias("text"), "lang"
     )
     lid = TrigramLangIdScorer.from_corpus(docs)

@@ -35,13 +35,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import exact_sum
-from ..session import apply_runtime_confs
 from .corpus import D2D, SUM2
 from .corpus_more import _REV_D, _REV_SQL, _revenue_col
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 _D38 = "decimal(38,6)"
@@ -53,7 +48,6 @@ def q_tpch_q13_shape(spark: SparkSession, sf: str) -> DataFrame:
     second aggregation over the per-customer counts. Two shuffles (custkey,
     then c_count); the priority filter is applied to the orders side
     BEFORE the join, which an outer-join WHERE could not express."""
-    spark = _prep(spark)
     cust = load(spark, sf, "customer").select("c_custkey")
     orders = load(spark, sf, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
@@ -75,7 +69,6 @@ def q_tpch_q14_shape(spark: SparkSession, sf: str) -> DataFrame:
     broadcast part join; numerator and denominator are conditional
     exact-decimal sums in the SAME single aggregate, ratio taken in double
     only after both sums are rounded — bit-reproducible by the oracle."""
-    spark = _prep(spark)
     li = load(spark, sf, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-03-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -103,7 +96,6 @@ def q_tpch_q15_shape(spark: SparkSession, sf: str) -> DataFrame:
     the supplier(s) matching the GLOBAL max — the scalar subquery becomes a
     broadcast 1-row join against the re-used revenue aggregate (the view is
     computed once; no single-partition global window)."""
-    spark = _prep(spark)
     li = load(spark, sf, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -125,7 +117,6 @@ def q_tpch_q17_shape(spark: SparkSession, sf: str) -> DataFrame:
     AVG decorrelates into a per-partkey pre-aggregation joined back on the
     (brand-pruned) lineitem subset; the average itself is an exact-decimal
     sum over a double count so the threshold is bit-deterministic."""
-    spark = _prep(spark)
     part = load(spark, sf, "part").filter(F.col("p_brand") == "Brand#3").select(
         "p_partkey"
     )
@@ -156,7 +147,6 @@ def q_tpch_q19_shape(spark: SparkSession, sf: str) -> DataFrame:
     equi-join with an OR of three (brand, size-band, quantity-band)
     conjunctions as the residual predicate — the shape that breaks naive
     join-predicate pushdown but stays a single broadcast hash join here."""
-    spark = _prep(spark)
     li = load(spark, sf, "lineitem")
     part = load(spark, sf, "part").select("p_partkey", "p_brand", "p_size")
     joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -177,7 +167,6 @@ def q_tpch_q22_shape(spark: SparkSession, sf: str) -> DataFrame:
     aggregate broadcast back as a 1-row cross join) with NO order since
     1999 (LEFT ANTI against the date-filtered orders), rolled up per
     segment with an exact-decimal balance sum."""
-    spark = _prep(spark)
     segs = ("BUILDING", "AUTOMOBILE", "MACHINERY")
     cust = load(spark, sf, "customer").filter(F.col("c_mktsegment").isin(*segs))
     avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(

@@ -49,13 +49,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..session import apply_runtime_confs
 from .corpus import D2D
 from .corpus_more import _REV_D, _REV_SQL, _revenue_col
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 _D38 = "decimal(38,6)"
@@ -89,7 +84,6 @@ def q_tpch_q2_shape(spark: SparkSession, sf: str) -> DataFrame:
     per-part pre-aggregation joined back on cost equality; supplier,
     nation and region are broadcast dims; top-100 is
     TakeOrderedAndProject."""
-    spark = _prep(spark)
     part = (
         load(spark, sf, "part")
         .filter((F.col("p_type") == "STANDARD") & (F.col("p_size") >= 25))
@@ -131,7 +125,6 @@ def q_tpch_q9_shape(spark: SparkSession, sf: str) -> DataFrame:
     (nation, year) sums are bit-deterministic. part/supplier/nation
     broadcast; orders co-shuffles with lineitem on orderkey; ONE final
     aggregate shuffle on (nation, year)."""
-    spark = _prep(spark)
     part = load(spark, sf, "part").filter(F.col("p_name").like("%o%")).select(
         "p_partkey", "p_retailprice"
     )
@@ -171,7 +164,6 @@ def q_tpch_q10_shape(spark: SparkSession, sf: str) -> DataFrame:
     at the scan; customer and nation broadcast; ONE aggregate shuffle on
     custkey; top-20 via TakeOrderedAndProject with custkey tiebreak so
     equal-revenue rows order deterministically."""
-    spark = _prep(spark)
     orders = load(spark, sf, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -201,7 +193,6 @@ def q_tpch_q11_shape(spark: SparkSession, sf: str) -> DataFrame:
     grouped aggregate through a broadcast 1-row cross join (one lineitem
     scan, one shuffle); value is an exact-decimal sum so the threshold
     comparison is bit-deterministic on both engines."""
-    spark = _prep(spark)
     nat = load(spark, sf, "nation").filter(F.col("n_name") == "NATION_7").select(
         "n_nationkey"
     )
@@ -236,7 +227,6 @@ def q_tpch_q16_shape(spark: SparkSession, sf: str) -> DataFrame:
     suppliers (name ending '7', the complaints stand-in) removed by a
     broadcast LEFT ANTI, and the distinct-count aggregate runs over
     already-distinct pairs."""
-    spark = _prep(spark)
     bridge = (
         load(spark, sf, "lineitem").select("l_partkey", "l_suppkey").distinct()
     )
@@ -264,7 +254,6 @@ def q_tpch_q20_shape(spark: SparkSession, sf: str) -> DataFrame:
     single lineitem scan (the canonical correlated subquery pair,
     decorrelated); the part name filter broadcasts; qualifying pairs
     LEFT SEMI join suppliers so each supplier appears once."""
-    spark = _prep(spark)
     red = load(spark, sf, "part").filter(F.col("p_name").like("red%")).select(
         "p_partkey"
     )
@@ -306,7 +295,6 @@ def q_tpch_q21_shape(spark: SparkSession, sf: str) -> DataFrame:
     to the late (order, supplier) pairs — two orderkey shuffles total
     instead of three lineitem re-scans. Suppliers are region-filtered
     through broadcast dims; top-10 is TakeOrderedAndProject."""
-    spark = _prep(spark)
     orders = load(spark, sf, "orders").filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_orderdate"
     )

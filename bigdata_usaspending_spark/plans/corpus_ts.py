@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import text, timeseries
-from ..session import apply_runtime_confs
 
 # Same VARCHAR-hop rationale as plans/corpus.py:D2D.
 D2D = "CAST(CAST({x} AS VARCHAR) AS DOUBLE)"
@@ -30,16 +29,12 @@ HIST_BINS = 20
 BOILERPLATE_MAX_DF = 0.4
 
 
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
-
-
 def q_monthly_gap_fill(spark: SparkSession, sf: str) -> DataFrame:
     """Dense monthly resample with forward fill over a sparse key subset
     (generalizes the reference's by-month dashboard aggregation,
     app/spark_cassandra_groupby_month.py:25-32, which silently skipped
     empty months)."""
-    orders = load(_prep(spark), sf, "orders").filter(
+    orders = load(spark, sf, "orders").filter(
         F.col("o_custkey") <= GAP_FILL_KEY_CAP
     )
     return timeseries.monthly_gap_fill(
@@ -52,7 +47,7 @@ def q_zscore_outliers(spark: SparkSession, sf: str) -> DataFrame:
     distribution view the reference's dashboards lacked. Threshold 1.5:
     o_totalprice is near-uniform (max |z| ≈ √3), so 2σ would select
     nothing and the probe would be vacuous."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     return timeseries.zscore_flags(
         orders, "o_orderpriority", "o_totalprice", z_threshold=1.5
     )
@@ -62,7 +57,7 @@ def q_fixed_histogram(spark: SparkSession, sf: str) -> DataFrame:
     """Equi-width 20-bin histogram of lineitem extended price: two linear
     passes (1-row min/max partial agg broadcast back, then a bounded-key
     groupBy) — the distribution sketch affordable at 100 TB."""
-    li = load(_prep(spark), sf, "lineitem")
+    li = load(spark, sf, "lineitem")
     return timeseries.fixed_width_histogram(li, "l_extendedprice", HIST_BINS)
 
 
@@ -70,7 +65,7 @@ def q_boilerplate_scrub(spark: SparkSession, sf: str) -> DataFrame:
     """Corpus-adaptive boilerplate removal: drop tokens whose document
     frequency exceeds 40% of the corpus (CCNet-style hygiene at token
     granularity; dropset provably broadcast-small — see operator doc)."""
-    docs = load(_prep(spark), sf, "documents")
+    docs = load(spark, sf, "documents")
     return text.remove_high_df_tokens(
         docs, "doc_id", "text", max_df_frac=BOILERPLATE_MAX_DF
     )
@@ -82,7 +77,7 @@ def q_quantile_summary(spark: SparkSession, sf: str) -> DataFrame:
     maps — no sort, no window). Spark's R-7 linear interpolation is
     bit-identical to DuckDB's quantile_cont (verified empirically at
     sf0.01), so the continuous-quantile surface is fully oracle-checked."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     q = F.percentile(
         F.col("o_totalprice").cast("double"),
         F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)),
@@ -104,7 +99,7 @@ def q_mad_outliers(spark: SparkSession, sf: str) -> DataFrame:
     """Robust (median/MAD) outlier flags per order priority — the
     50%-breakdown twin of q_zscore_outliers (uniform o_totalprice puts the
     extreme deviation at ~2x MAD, so k=1.8 exercises a non-empty tail)."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     return timeseries.mad_outliers(orders, "o_orderpriority", "o_totalprice", k=1.8)
 
 
@@ -112,7 +107,7 @@ def q_ewma_monthly(spark: SparkSession, sf: str) -> DataFrame:
     """Per-priority EWMA (alpha=0.5) over monthly exact-decimal order
     totals — the trend-smoothing view on the reference's by-month rollup;
     the ordered fold replays in DuckDB via list_reduce."""
-    orders = load(_prep(spark), sf, "orders")
+    orders = load(spark, sf, "orders")
     return timeseries.ewma_monthly(
         orders, "o_orderpriority", "o_orderdate", "o_totalprice", alpha=0.5
     )

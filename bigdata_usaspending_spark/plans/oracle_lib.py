@@ -20,11 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..session import apply_runtime_confs
-
-
-def _prep(spark: SparkSession) -> SparkSession:
-    return apply_runtime_confs(spark)
 
 
 # --- retrieval-family shared parameters (rounds 7-9) ---------------------
@@ -134,7 +129,7 @@ def _near_docs(spark: SparkSession, sf: str) -> DataFrame:
     above 0.8 for every gated doc (>= 8 tokens) — so the LSH tier must
     merge each variant into its source's component and drop it (min-id
     original survives)."""
-    docs = load(_prep(spark), sf, "documents").select(
+    docs = load(spark, sf, "documents").select(
         "doc_id", "text", "source"
     )
     variants = docs.filter(

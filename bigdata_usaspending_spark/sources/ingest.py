@@ -3,7 +3,8 @@
 Lifecycle parity with the reference's POST /fetch_data (app/ml_app.py:394-551)
 with its per-row INSERT loop (:488-509) replaced by bulk columnar writes, and
 the per-row Python type coercion (:561-576, 480-485) replaced by engine-side
-casts with identical null-on-malformed semantics (F.to_date / try_cast).
+casts with identical null-on-malformed semantics (functions.safe_to_date /
+safe_to_decimal).
 """
 
 from __future__ import annotations
@@ -13,10 +14,10 @@ from dataclasses import dataclass
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import schemas
+from ..functions import safe_to_date, safe_to_decimal
 from .usaspending_api import FIELDS, UsaspendingClient
 
 # API field name -> awards column name (order matches schemas.AWARDS)
@@ -50,13 +51,8 @@ def coerce_awards(raw: DataFrame) -> DataFrame:
     """String landing columns -> typed awards columns, null on malformed
     (engine-side twin of the reference's parse_date/parse_float,
     app/ml_app.py:561-576, 480-485)."""
-    out = raw
-    for c in _DATE_COLS:
-        # try_to_date: null-on-malformed under ANSI and non-ANSI sessions
-        out = out.withColumn(c, F.expr(f"try_to_date({c}, 'yyyy-MM-dd')"))
-    out = out.withColumn(
-        "award_amount", F.expr("try_cast(award_amount AS DECIMAL(18,2))")
-    )
+    out = raw.withColumns({c: safe_to_date(c) for c in _DATE_COLS})
+    out = out.withColumn("award_amount", safe_to_decimal("award_amount"))
     return out.select([f.name for f in schemas.AWARDS.fields])
 
 

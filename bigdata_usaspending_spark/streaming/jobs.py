@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from .. import index_store
 from ..io import apply_versioned_batch, hadoop_child_names, read_state_manifest
+from ..operators.aggregates import misra_gries_merge
 from ..operators.text import fingerprint, winnow_fingerprints
 
 
@@ -299,11 +300,7 @@ def stream_windowed_heavy_hitters(
             acc = None
         for pdf in pdfs:
             vc = pdf["_v"].value_counts().astype("float64")
-            acc = vc if acc is None else acc.add(vc, fill_value=0.0)
-            if len(acc) > k:
-                thresh = acc.nlargest(k + 1).iloc[-1]
-                acc = acc - thresh
-                acc = acc[acc > 0]
+            acc = misra_gries_merge(acc, vc, k)
         if acc is None:
             acc = pd.Series(dtype="float64")
         state.update((list(acc.index.astype(str)), [float(x) for x in acc.values]))
@@ -431,11 +428,7 @@ def stream_heavy_hitters(
             acc = None
         for pdf in pdfs:
             vc = pdf["_v"].value_counts().astype("float64")
-            acc = vc if acc is None else acc.add(vc, fill_value=0.0)
-            if len(acc) > k:
-                thresh = acc.nlargest(k + 1).iloc[-1]
-                acc = acc - thresh
-                acc = acc[acc > 0]
+            acc = misra_gries_merge(acc, vc, k)
         if acc is None:
             acc = pd.Series(dtype="float64")
         state.update((list(acc.index.astype(str)), [float(x) for x in acc.values]))
@@ -1440,15 +1433,15 @@ def _winnow_decide(
 
     ``bfp`` is the batch's _fingerprint_batch frame and ``committed`` the
     committed side in the same form — value sets ``(_id, fps)`` for the
-    plain decision (winnow_pairs in the batch, winnow_dedup_against_index
-    against the committed side), positioned ``(_id, pfps)`` for
-    ``evidence`` (the _winnow_span_pairs frames, whose verified pair sets
-    equal the value tiers' at cap=None) — or None before anything is
-    committed. Returns ``bfp``'s rows renamed to ``(id_col, fps|pfps)``
+    plain decision (winnow_pairs in the batch, the ids
+    winnow_dedup_against_index drops against the committed side),
+    positioned ``(_id, pfps)`` for ``evidence`` (the _winnow_span_pairs
+    frames, whose verified pair sets equal the value tiers' at cap=None)
+    — or None before anything is committed. Returns ``bfp``'s rows renamed to ``(id_col, fps|pfps)``
     plus ``survivor``; with ``evidence`` also ``drop_evidence``, the
     sorted ``(other_id, jaccard, n_shared, n_anchors, start, end)``
     structs justifying a drop (NULL on survivors)."""
-    from ..operators.dedup import winnow_dedup_against_index, winnow_pairs
+    from ..operators.dedup import _winnow_matched_ids, winnow_pairs
 
     rows = bfp.select(F.col("_id").alias(id_col), bfp.columns[1])
     if evidence:
@@ -1471,10 +1464,9 @@ def _winnow_decide(
         .distinct()
     )
     if committed is not None:
-        survivors = winnow_dedup_against_index(
+        hits = _winnow_matched_ids(
             batch_df, committed, id_col, text_col, batch_fps=bfp, **winnow
-        ).select(id_col)
-        hits = batch_df.select(id_col).join(survivors, on=id_col, how="anti")
+        )
         drops = drops.unionByName(hits).distinct()
     return rows.join(
         drops.withColumn("_dropped", F.lit(True)), on=id_col, how="left"

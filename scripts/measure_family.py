@@ -17,6 +17,12 @@ import os
 import sys
 import time
 
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+
+from bench import warm_up  # noqa: E402
+
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -30,30 +36,7 @@ def main() -> int:
     from bigdata_usaspending_spark.session import get_spark
 
     spark = get_spark("measure_family")
-    from bigdata_usaspending_spark.catalog import TABLES, load
-
-    for t in TABLES:
-        try:
-            load(spark, sf_dir, t).count()
-        except Exception:
-            pass
-    try:  # the bench harness's Arrow-path warmup
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        @F.pandas_udf("double")
-        def _warm(v: pd.Series) -> pd.Series:
-            return pd.Series([0.0] * len(v), dtype="float64")
-
-        emb = load(spark, sf_dir, "embeddings")
-        (
-            emb.select(F.col("vec_id"), _warm(F.col("embedding")).alias("s"))
-            .orderBy(F.desc("s"), F.asc("vec_id"))
-            .limit(1)
-            .count()
-        )
-    except Exception:
-        pass
+    warm_up(spark, sf_dir)
 
     registry = all_queries()
     out: dict[str, dict] = {}

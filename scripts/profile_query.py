@@ -16,12 +16,15 @@ from __future__ import annotations
 
 import json
 import os
+import shlex
 import sys
 import time
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
+
+from bench import warm_up  # noqa: E402
 
 
 def main() -> int:
@@ -35,59 +38,22 @@ def main() -> int:
         except OSError:
             pass
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
-
-    from bigdata_usaspending_spark.session import (
-        DEFAULT_SHUFFLE_PARTITIONS,
-        RUNTIME_CONFS,
-        apply_runtime_confs,
-    )
-
-    cpus = os.environ["SPARK_GRAFT_CPUS"]
-    builder = (
-        SparkSession.builder.appName("profile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-        .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-    )
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = apply_runtime_confs(builder.getOrCreate())
-
-    from bigdata_usaspending_spark.catalog import TABLES, load
-    from bigdata_usaspending_spark.plans import all_queries
-
-    for t in TABLES:
-        try:
-            load(spark, sf_dir, t).count()
-        except Exception:
-            pass
-    try:
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        @F.pandas_udf("double")
-        def _warm(v: pd.Series) -> pd.Series:
-            return pd.Series([0.0] * len(v), dtype="float64")
-
-        emb = load(spark, sf_dir, "embeddings")
-        (
-            emb.select(F.col("vec_id"), _warm(F.col("embedding")).alias("s"))
-            .orderBy(F.desc("s"), F.asc("vec_id"))
-            .limit(1)
-            .count()
+    # event-log confs go on the launch command line so get_spark's
+    # builder stays the one session factory
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        f"--conf {shlex.quote(c)}"
+        for c in (
+            "spark.eventLog.enabled=true",
+            f"spark.eventLog.dir={evdir}",
+            "spark.eventLog.compress=false",
+            "spark.eventLog.rolling.enabled=false",
         )
-    except Exception:
-        pass
+    ) + " pyspark-shell"
+    from bigdata_usaspending_spark.plans import all_queries
+    from bigdata_usaspending_spark.session import get_spark
+
+    spark = get_spark("profile")
+    warm_up(spark, sf_dir)
 
     registry = all_queries()
     windows: dict[str, tuple[float, float, float, float]] = {}

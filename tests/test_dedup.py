@@ -425,6 +425,46 @@ def test_heavy_hitters_matches_naive_groupby(spark):
     assert {t for t, _ in got} == {"head_a", "head_b", "head_c"}
 
 
+@pytest.mark.parametrize("as_float", [False, True])
+def test_misra_gries_merge_keeps_every_heavy_value(as_float):
+    """Spark-free: the shared merge-trim step over random pandas batches
+    keeps every value whose count exceeds n/k, and equals the step as
+    the batch operator and both streams wrote it inline (the streams
+    cast each batch's counts to float64 first)."""
+    import numpy as np
+    import pandas as pd
+
+    from bigdata_usaspending_spark.operators.aggregates import misra_gries_merge
+
+    def inline(acc, vc, k):
+        acc = vc if acc is None else acc.add(vc, fill_value=0)
+        if len(acc) > k:
+            thresh = acc.nlargest(k + 1).iloc[-1]
+            acc = acc - thresh
+            acc = acc[acc > 0]
+        return acc
+
+    rng = np.random.default_rng(7)
+    for k in (1, 3, 10, 40):
+        got = ref = None
+        seen = []
+        for _ in range(12):
+            batch = pd.Series(
+                rng.zipf(1.6, size=int(rng.integers(1, 300))).astype(str)
+            )
+            seen.append(batch)
+            vc = batch.value_counts()
+            if as_float:
+                vc = vc.astype("float64")
+            got = misra_gries_merge(got, vc, k)
+            ref = inline(ref, vc, k)
+            pd.testing.assert_series_equal(got, ref)
+            assert len(got) <= k
+            counts = pd.concat(seen).value_counts()
+            heavy = set(counts[counts * k > counts.sum()].index)
+            assert heavy <= set(got.index)
+
+
 @pytest.mark.slow
 def test_heavy_hitters_skips_nulls_and_handles_empty(spark):
     from bigdata_usaspending_spark.operators.aggregates import heavy_hitters

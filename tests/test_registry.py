@@ -31,3 +31,24 @@ def test_registry_matches_pin():
     assert list(got) == list(pin["oracle_sql_sha256"])
     assert got == pin["oracle_sql_sha256"]
     assert sorted(rows_only_queries()) == pin["rows_only"]
+
+
+def test_registry_queries_apply_the_session_confs(spark, sf_small):
+    """A registry callable runs under ``session.RUNTIME_CONFS`` whatever
+    the session it is handed: a session whose zone was moved off UTC is
+    back on UTC after the call, and the query still runs."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "America/Los_Angeles")
+        out = all_queries()["q_scan_project"](spark, sf_small)
+        assert spark.conf.get(key) == "UTC"
+        assert out.columns == ["c_name", "c_acctbal"]
+        assert out.limit(1).count() == 1
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_registry_callables_keep_their_names():
+    for name, fn in all_queries().items():
+        assert fn.__wrapped__.__name__ == fn.__name__

@@ -18,6 +18,10 @@
   ``_open_winnow_index`` returns) and one stop-gram cap filter
   (``_stop_grams``).
 - No unmarked ``except Exception`` in the package.
+- The session confs are applied at one boundary: no per-module
+  ``_prep`` in the plan modules, ``apply_runtime_confs(`` called only by
+  the session factory, the registry wrapper and the driver entry, and
+  ``SparkSession.builder`` only in ``session.py``.
 - Every package name ``scripts/*.py`` and ``bench.py`` import or reach
   through an attribute exists (nothing in the default test run executes
   them, so a rename would otherwise break them silently).
@@ -232,3 +236,38 @@ def test_script_package_references_resolve():
                     missing.append(f"{path.name}: {ref}")
                     break
     assert missing == []
+
+
+def _repo_sources():
+    """The package, ``scripts/*.py``, ``bench.py`` and the driver entry."""
+    return [*_PKG.rglob("*.py"), *sorted(_REPO.glob("scripts/*.py")),
+            _REPO / "bench.py", _REPO / "__spark_entry__.py"]
+
+
+def test_no_per_module_session_prep():
+    for p in (_PKG / "plans").glob("*.py"):
+        src = p.read_text(encoding="utf-8")
+        assert "def _prep" not in src, p.name
+        assert "_prep(" not in src, p.name
+
+
+def test_session_confs_applied_at_one_boundary():
+    callers = sorted(
+        str(p.relative_to(_REPO))
+        for p in _repo_sources()
+        if "apply_runtime_confs(" in p.read_text(encoding="utf-8")
+    )
+    assert callers == [
+        "__spark_entry__.py",
+        f"{_PKG_NAME}/plans/__init__.py",
+        f"{_PKG_NAME}/session.py",
+    ]
+
+
+def test_one_session_builder():
+    builders = [
+        str(p.relative_to(_REPO))
+        for p in _repo_sources()
+        if "SparkSession.builder" in p.read_text(encoding="utf-8")
+    ]
+    assert builders == [f"{_PKG_NAME}/session.py"]
