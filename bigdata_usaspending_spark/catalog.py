@@ -41,21 +41,13 @@ BROADCAST_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS); Spark has no nanos timestamp
-        # type, so read it as long (legacy.parquet.nanosAsLong) and truncate
-        # to microseconds — the same truncation a micros-native engine applies.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # The NTZ->TIMESTAMP cast below is only value-preserving under a UTC
-        # session zone; pin it here so load() is self-contained on a bare
-        # SparkSession instead of silently depending on the caller having
-        # applied session.RUNTIME_CONFS (a non-UTC host would otherwise
-        # shift every event instant).
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
+            # TIMESTAMP(NANOS) read as long (session.RUNTIME_CONFS sets
+            # legacy.parquet.nanosAsLong): truncate to microseconds — the
+            # same truncation a micros-native engine applies.
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         elif isinstance(ts_type, T.TimestampNTZType):
             # Newer generations of the fixture store TIMESTAMP(MICROS) with

@@ -463,7 +463,8 @@ def _winnow_kernel(k: int, w: int, robust: bool, portable: bool):
 
     Exact-equivalence notes (each mirrors the HOF chain, pinned for both
     hash modes by the kernel-vs-HOF-expression tests in
-    tests/test_text.py):
+    tests/test_text.py against the relational reference expression in
+    tests/_text_reference.py):
     - normalization: Java's default ``\\s`` is ASCII-only, so the Python
       regex compiles with ``re.ASCII`` ([ \\t\\n\\r\\f\\v] — the same set);
       ``F.lower``/``str.lower`` and ``F.trim``/``strip(' ')`` agree
@@ -607,7 +608,7 @@ def winnow_fingerprints(
 
     Implementation note: BOTH hash modes run as the Arrow-vectorized
     kernel (same values, ~10x less CPU than the interpreted HOF chain it
-    replaced — see _winnow_kernel; the md5 path moved in round 15, the
+    replaced, kept as the test reference — see _winnow_kernel; the md5 path moved in round 15, the
     xxhash64 production path in round 16 via a numpy sliding-window
     XXH64). The kernel column is nondeterministic-marked (guide §4.4 —
     stops Catalyst duplicating it below size()>0 filters), so it is
@@ -618,131 +619,6 @@ def winnow_fingerprints(
     return _winnow_kernel(int(k), int(w), bool(robust), bool(portable))(
         c
     ).alias(alias)
-
-
-def _winnow_hof_expression(
-    col: Column | str,
-    k: int = 8,
-    w: int = 4,
-    portable: bool = False,
-    alias: str = "fingerprints",
-    robust: bool = False,
-) -> Column:
-    """The pre-kernel RELATIONAL winnowing expression, kept verbatim as
-    the reference semantics the kernel equivalence tests pin against
-    (and as the fallback shape for an engine without Arrow)."""
-    from .dedup import portable_hash60
-
-    c = F.col(col) if isinstance(col, str) else col
-    hash_fn = portable_hash60 if portable else F.xxhash64
-    s = F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
-    empty = F.array().cast("array<bigint>")
-
-    def grams_of(s0: Column) -> Column:
-        return F.when(
-            F.length(s0) >= k,
-            F.transform(
-                F.sequence(F.lit(1), F.length(s0) - k + 1),
-                lambda i: hash_fn(F.substr(s0, i, F.lit(k))),
-            ),
-        ).otherwise(empty)
-
-    def wins_of(g: Column) -> Column:
-        return F.when(
-            F.size(g) >= 1,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(
-                        F.lit(1), F.greatest(F.size(g) - w + 1, F.lit(1))
-                    ),
-                    lambda j: F.array_min(F.slice(g, j, w)),
-                )
-            ),
-        ).otherwise(empty)
-
-    def robust_of(g: Column) -> Column:
-        # one left fold over window start indices carrying (last selected
-        # position, selections): keep `last` while it is still a minimum
-        # of the current window, else append the rightmost minimal
-        # position — the paper's §5 rule verbatim. F.get is 0-based and
-        # NULL-safe (last=0 sentinel never trips ANSI element_at).
-        # PERF: interpreted HOF evaluation re-instantiates a
-        # subexpression at every reference, so the window slice, its
-        # minimum, and the rightmost position are each LET-BOUND via the
-        # single-element-array transform (slice/min evaluated once per
-        # window instead of O(w) times — measured 4.3 s -> well under
-        # 1 s on the sf0.1 sample).
-        nwin = F.greatest(F.size(g) - w + 1, F.lit(1))
-
-        def step(acc: Column, j: Column) -> Column:
-            def with_newpos(m: Column, newpos: Column) -> Column:
-                keep = (acc["last"] >= j) & (
-                    F.get(g, acc["last"] - 1) == m
-                )
-                return F.struct(
-                    F.when(keep, acc["last"]).otherwise(newpos).alias("last"),
-                    F.when(keep, acc["sel"])
-                    .otherwise(F.array_append(acc["sel"], newpos))
-                    .alias("sel"),
-                )
-
-            def with_min(win: Column, m: Column) -> Column:
-                rel = F.array_max(
-                    F.filter(
-                        F.sequence(F.lit(1), F.size(win)),
-                        lambda i: F.get(win, i - 1) == m,
-                    )
-                )
-                return F.element_at(
-                    F.transform(
-                        F.array((j + rel - 1).cast("int")),
-                        lambda newpos: with_newpos(m, newpos),
-                    ),
-                    1,
-                )
-
-            return F.element_at(
-                F.transform(
-                    F.array(F.slice(g, j, w)),
-                    lambda win: F.element_at(
-                        F.transform(
-                            F.array(F.array_min(win)),
-                            lambda m: with_min(win, m),
-                        ),
-                        1,
-                    ),
-                ),
-                1,
-            )
-
-        init = F.struct(
-            F.lit(0).cast("int").alias("last"),
-            F.array().cast("array<int>").alias("sel"),
-        )
-        sel = F.aggregate(
-            F.sequence(F.lit(1), nwin), init, step, lambda acc: acc["sel"]
-        )
-        structs = F.transform(
-            sel,
-            lambda p: F.struct(
-                F.get(g, p - 1).alias("fp"), p.alias("pos")
-            ),
-        )
-        return F.when(F.size(g) >= 1, structs).otherwise(
-            F.array().cast("array<struct<fp:bigint,pos:int>>")
-        )
-
-    pick = robust_of if robust else wins_of
-    expr = F.element_at(
-        F.transform(
-            F.array(s),
-            lambda s0: F.element_at(
-                F.transform(F.array(grams_of(s0)), pick), 1
-            ),
-        ),
-        1,
-    )
-    return expr.alias(alias)
 
 
 def chunk_spans(

@@ -375,16 +375,6 @@ def _rerank_trained_oracle() -> str:
     """
 
 
-# shared across waves — moved verbatim to plans/oracle_lib (VERDICT r14 #7)
-from .oracle_lib import (
-    _MINI_BLOCK,
-    _MINI_MAX_PUNCT,
-    _MINI_MIN_TOKENS,
-    _MINI_QUOTA,
-    _MINI_SEED,
-)
-
-
 def q_corpus_build_mini(spark: SparkSession, sf: str) -> DataFrame:
     """The corpus-build composition end to end (portable-hash variant of
     the build-corpus CLI job): gate -> exact dedup -> per-source quota ->
@@ -395,25 +385,14 @@ def q_corpus_build_mini(spark: SparkSession, sf: str) -> DataFrame:
     scans' worth of gates fused into one, a fingerprint-keyed dedup
     shuffle, one window per quota group, and the two-pass prefix-sum
     shuffle/pack — no single-partition window, no driver state."""
-    from .build_corpus import CorpusBuildConfig, build_corpus
+    from .build_corpus import build_corpus
+    from .oracle_lib import _MANIFEST_COLS, _audit_build_config
 
     docs = load(spark, sf, "documents").select(
         "doc_id", "text", "source"
     )
-    cfg = CorpusBuildConfig(
-        langs=("en",),
-        min_tokens=_MINI_MIN_TOKENS,
-        max_punct_ratio=_MINI_MAX_PUNCT,
-        near_threshold=None,
-        quota_per_source=_MINI_QUOTA,
-        block_size=_MINI_BLOCK,
-        seed=_MINI_SEED,
-        scrub_pii=False,
-        portable=True,
-    )
-    return build_corpus(docs, cfg=cfg).select(
-        "doc_id", "source", "n_tokens", "position", "seq_id", "seq_offset"
-    )
+    cfg = _audit_build_config(near_threshold=None)
+    return build_corpus(docs, cfg=cfg).select(*_MANIFEST_COLS)
 
 
 def _corpus_build_mini_oracle() -> str:
@@ -422,66 +401,11 @@ def _corpus_build_mini_oracle() -> str:
     # '|'-salted quota hash, the q_corpus_shuffle ':'-seeded permutation
     # hash, and the q_pack_sequences running-total coordinates — each
     # expression identical to its stage oracle, composed as CTEs
-    from .corpus_ext import _LANGID_CASE, _NORMALIZED, _TOKS
+    from .oracle_lib import _gate_dedup_ctes, _pack_ctes
 
     return f"""
-        WITH gated AS (
-            SELECT doc_id, source, text,
-                   CAST(len({_TOKS}) AS INTEGER) AS n_tokens
-            FROM documents
-            WHERE text IS NOT NULL
-              AND CAST(len({_TOKS}) AS INTEGER) >= {_MINI_MIN_TOKENS}
-              AND (CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '',
-                                              'g')) AS DOUBLE)
-                   / CAST(length(text) AS DOUBLE)) <= {_MINI_MAX_PUNCT!r}
-              AND {_LANGID_CASE} = 'en'
-        ),
-        uniq AS (
-            SELECT doc_id, source, n_tokens FROM (
-                SELECT doc_id, source, n_tokens,
-                       row_number() OVER (
-                           PARTITION BY md5({_NORMALIZED})
-                           ORDER BY doc_id ASC
-                       ) AS rn
-                FROM gated
-            ) WHERE rn = 1
-        ),
-        quota AS (
-            SELECT doc_id, source, n_tokens FROM (
-                SELECT doc_id, source, n_tokens,
-                       row_number() OVER (
-                           PARTITION BY source
-                           ORDER BY CAST(('0x' || substr(md5(
-                                        CAST(doc_id AS VARCHAR)
-                                        || '|{_MINI_SEED}'
-                                    ), 1, 15)) AS BIGINT) ASC,
-                                    doc_id ASC
-                       ) AS _rk
-                FROM uniq
-            ) WHERE _rk <= {_MINI_QUOTA}
-        ),
-        pos AS (
-            SELECT doc_id, source, n_tokens,
-                   CAST(row_number() OVER (ORDER BY h, doc_id) - 1
-                        AS BIGINT) AS position
-            FROM (
-                SELECT *, CAST('0x' || substr(md5('{_MINI_SEED}:'
-                               || CAST(doc_id AS VARCHAR)), 1, 15)
-                               AS BIGINT) AS h
-                FROM quota
-            )
-        ),
-        packed AS (
-            SELECT doc_id, source, n_tokens, position,
-                   SUM(n_tokens) OVER (ORDER BY position
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - n_tokens AS start
-            FROM pos
-        )
-        SELECT doc_id, source, n_tokens, position,
-               CAST(floor(start / {_MINI_BLOCK}) AS BIGINT) AS seq_id,
-               CAST(start % {_MINI_BLOCK} AS BIGINT) AS seq_offset
-        FROM packed
+        WITH {_gate_dedup_ctes("documents", "doc_id, source, n_tokens")},
+        {_pack_ctes("uniq")}
     """
 
 

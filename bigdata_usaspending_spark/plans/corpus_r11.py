@@ -51,8 +51,6 @@ training-data pipeline plan with public faiss/PassJoin constructions.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,6 +58,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import similarity
+from .oracle_lib import _temp_index
 
 
 def q_ann_ivf_pq_incremental(spark: SparkSession, sf: str) -> DataFrame:
@@ -77,14 +76,11 @@ def q_ann_ivf_pq_incremental(spark: SparkSession, sf: str) -> DataFrame:
     data = emb.filter(F.col("vec_id") != 0)
     initial = data.filter(F.col("vec_id") % 5 != 1)
     batch = data.filter(F.col("vec_id") % 5 == 1)
-    tmp = tempfile.mkdtemp(prefix="ivfpq_index_")
-    try:
+    with _temp_index("ivfpq_index_") as tmp:
         return similarity.ivf_pq_index_lifecycle_audit(
             initial, batch, _ivf_centroids(emb), _query_vec_list(emb), tmp,
             k=10, m=32, kc=16, nprobe=8, rerank_factor=32,
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _ivf_pq_incremental_oracle() -> str:
@@ -126,26 +122,11 @@ def q_corpus_build_near(spark: SparkSession, sf: str) -> DataFrame:
     all-pairs), verification joins hashed shingle sets only for
     candidates, and components run star-contraction rounds sized to the
     pair volume — no driver graph."""
-    from .build_corpus import CorpusBuildConfig, build_corpus
-    from .oracle_lib import (
-        _MINI_BLOCK, _MINI_MAX_PUNCT, _MINI_MIN_TOKENS, _MINI_QUOTA,
-        _MINI_SEED,
-    )
+    from .build_corpus import build_corpus
+    from .oracle_lib import _MANIFEST_COLS, _audit_build_config
 
-    cfg = CorpusBuildConfig(
-        langs=("en",),
-        min_tokens=_MINI_MIN_TOKENS,
-        max_punct_ratio=_MINI_MAX_PUNCT,
-        near_threshold=_NEAR_THRESHOLD,
-        quota_per_source=_MINI_QUOTA,
-        block_size=_MINI_BLOCK,
-        seed=_MINI_SEED,
-        scrub_pii=False,
-        portable=True,
-    )
-    return build_corpus(_near_docs(spark, sf), cfg=cfg).select(
-        "doc_id", "source", "n_tokens", "position", "seq_id", "seq_offset"
-    )
+    cfg = _audit_build_config(near_threshold=_NEAR_THRESHOLD)
+    return build_corpus(_near_docs(spark, sf), cfg=cfg).select(*_MANIFEST_COLS)
 
 
 def _corpus_build_near_oracle() -> str:
@@ -154,96 +135,17 @@ def _corpus_build_near_oracle() -> str:
     # (affine minhash family, banded candidates, exact-Jaccard verify)
     # over the exact-dedup survivors, then the q_dedup_clusters recursive
     # min-label components, then drop non-root members
-    from .corpus_ext import _LANGID_CASE, _NORMALIZED, _TOKS, _minhash_pairs_ctes
+    from .corpus_ext import _minhash_pairs_ctes
     from .oracle_lib import (
-        _MINI_BLOCK, _MINI_MAX_PUNCT, _MINI_MIN_TOKENS, _MINI_QUOTA,
-        _MINI_SEED,
+        _components_ctes, _gate_dedup_ctes, _near_input_cte, _pack_ctes,
     )
 
     return f"""
-        WITH RECURSIVE input AS (
-            SELECT doc_id, text, source FROM documents
-            UNION ALL
-            SELECT doc_id + 1000000 AS doc_id, text || ' the' AS text, source
-            FROM documents WHERE doc_id % 17 = 0 AND text IS NOT NULL
-        ),
-        gated AS (
-            SELECT doc_id, source, text,
-                   CAST(len({_TOKS}) AS INTEGER) AS n_tokens
-            FROM input
-            WHERE text IS NOT NULL
-              AND CAST(len({_TOKS}) AS INTEGER) >= {_MINI_MIN_TOKENS}
-              AND (CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '',
-                                              'g')) AS DOUBLE)
-                   / CAST(length(text) AS DOUBLE)) <= {_MINI_MAX_PUNCT!r}
-              AND {_LANGID_CASE} = 'en'
-        ),
-        uniq AS (
-            SELECT doc_id, source, text, n_tokens FROM (
-                SELECT doc_id, source, text, n_tokens,
-                       row_number() OVER (
-                           PARTITION BY md5({_NORMALIZED})
-                           ORDER BY doc_id ASC
-                       ) AS rn
-                FROM gated
-            ) WHERE rn = 1
-        ),
+        WITH RECURSIVE {_near_input_cte()},
+        {_gate_dedup_ctes()},
         {_minhash_pairs_ctes(threshold=_NEAR_THRESHOLD, src="uniq")},
-        edges AS (
-            SELECT id_a AS src, id_b AS dst FROM lsh_pairs
-            UNION
-            SELECT id_b, id_a FROM lsh_pairs
-        ),
-        reach(id, lbl) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT e2.src, r.lbl FROM edges e2 JOIN reach r ON e2.dst = r.id
-        ),
-        losers AS (
-            SELECT id FROM (
-                SELECT id, min(lbl) AS component FROM reach GROUP BY id
-            ) WHERE id <> component
-        ),
-        kept AS (
-            SELECT doc_id, source, n_tokens FROM uniq
-            WHERE doc_id NOT IN (SELECT id FROM losers)
-        ),
-        quota AS (
-            SELECT doc_id, source, n_tokens FROM (
-                SELECT doc_id, source, n_tokens,
-                       row_number() OVER (
-                           PARTITION BY source
-                           ORDER BY CAST(('0x' || substr(md5(
-                                        CAST(doc_id AS VARCHAR)
-                                        || '|{_MINI_SEED}'
-                                    ), 1, 15)) AS BIGINT) ASC,
-                                    doc_id ASC
-                       ) AS _rk
-                FROM kept
-            ) WHERE _rk <= {_MINI_QUOTA}
-        ),
-        pos AS (
-            SELECT doc_id, source, n_tokens,
-                   CAST(row_number() OVER (ORDER BY h, doc_id) - 1
-                        AS BIGINT) AS position
-            FROM (
-                SELECT *, CAST('0x' || substr(md5('{_MINI_SEED}:'
-                               || CAST(doc_id AS VARCHAR)), 1, 15)
-                               AS BIGINT) AS h
-                FROM quota
-            )
-        ),
-        packed AS (
-            SELECT doc_id, source, n_tokens, position,
-                   SUM(n_tokens) OVER (ORDER BY position
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - n_tokens AS start
-            FROM pos
-        )
-        SELECT doc_id, source, n_tokens, position,
-               CAST(floor(start / {_MINI_BLOCK}) AS BIGINT) AS seq_id,
-               CAST(start % {_MINI_BLOCK} AS BIGINT) AS seq_offset
-        FROM packed
+        {_components_ctes("lsh_pairs", "uniq")},
+        {_pack_ctes("kept")}
     """
 
 
@@ -268,8 +170,7 @@ def q_semantic_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     data = emb.filter(F.col("vec_id") != 0)
     initial = data.filter(F.col("vec_id") % 4 != 1)
     batch = data.filter(F.col("vec_id") % 4 == 1)
-    tmp = tempfile.mkdtemp(prefix="semdedup_idx_")
-    try:
+    with _temp_index("semdedup_idx_") as tmp:
         similarity.ivf_index_write(
             initial.select("vec_id", "embedding"), _ivf_centroids(emb), tmp
         )
@@ -277,8 +178,6 @@ def q_semantic_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
             spark, tmp, batch.select("vec_id", "embedding"),
             threshold=_SEMANTIC_INCR_THRESHOLD,
         ).localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _semantic_dedup_incremental_oracle() -> str:

@@ -46,7 +46,9 @@ from .oracle_lib import (
     _SPAN_THRESHOLD,
     _WINNOW_BUILD_MAX_DF,
     _WINNOW_BUILD_THRESHOLD,
+    _centroid_frame,
     _robust_fps_ctes,
+    _temp_index,
     _winnow_pairs_ctes,
     _winnow_spans_incremental_oracle,
 )
@@ -115,31 +117,9 @@ def q_corpus_build_winnow(spark: SparkSession, sf: str) -> DataFrame:
     w+k-1 chars shares a fingerprint — no banding probability), and the
     stop-gram cap bounds candidates <= cap x exploded rows on
     boilerplate-heavy crawls."""
-    from .build_corpus import CorpusBuildConfig, build_corpus
-    from .oracle_lib import (
-        _MINI_BLOCK, _MINI_MAX_PUNCT, _MINI_MIN_TOKENS, _MINI_QUOTA,
-        _MINI_SEED,
-    )
-    from .oracle_lib import _near_docs
+    from .oracle_lib import _winnow_corpus_build
 
-    cfg = CorpusBuildConfig(
-        langs=("en",),
-        min_tokens=_MINI_MIN_TOKENS,
-        max_punct_ratio=_MINI_MAX_PUNCT,
-        near_threshold=_WINNOW_BUILD_THRESHOLD,
-        near_method="winnow",
-        winnow_k=_ROBUST_K,
-        winnow_w=_ROBUST_W,
-        near_max_df=_WINNOW_BUILD_MAX_DF,
-        quota_per_source=_MINI_QUOTA,
-        block_size=_MINI_BLOCK,
-        seed=_MINI_SEED,
-        scrub_pii=False,
-        portable=True,
-    )
-    return build_corpus(_near_docs(spark, sf), cfg=cfg).select(
-        "doc_id", "source", "n_tokens", "position", "seq_id", "seq_offset"
-    )
+    return _winnow_corpus_build(spark, sf)
 
 
 def _corpus_build_winnow_oracle() -> str:
@@ -147,97 +127,17 @@ def _corpus_build_winnow_oracle() -> str:
     # spliced in where the minhash CTEs were: gate, exact dedup, winnow
     # pairs over the survivors, recursive min-label components, drop
     # non-roots, quota, seeded shuffle, pack
-    from .corpus_ext import _LANGID_CASE, _NORMALIZED, _TOKS
     from .oracle_lib import (
-        _MINI_BLOCK, _MINI_MAX_PUNCT, _MINI_MIN_TOKENS, _MINI_QUOTA,
-        _MINI_SEED,
+        _components_ctes, _gate_dedup_ctes, _near_input_cte, _pack_ctes,
     )
 
     return f"""
-        WITH RECURSIVE input AS (
-            SELECT doc_id, text, source FROM documents
-            UNION ALL
-            SELECT doc_id + 1000000 AS doc_id, text || ' the' AS text, source
-            FROM documents WHERE doc_id % 17 = 0 AND text IS NOT NULL
-        ),
-        gated AS (
-            SELECT doc_id, source, text,
-                   CAST(len({_TOKS}) AS INTEGER) AS n_tokens
-            FROM input
-            WHERE text IS NOT NULL
-              AND CAST(len({_TOKS}) AS INTEGER) >= {_MINI_MIN_TOKENS}
-              AND (CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '',
-                                              'g')) AS DOUBLE)
-                   / CAST(length(text) AS DOUBLE)) <= {_MINI_MAX_PUNCT!r}
-              AND {_LANGID_CASE} = 'en'
-        ),
-        uniq AS (
-            SELECT doc_id, source, text, n_tokens FROM (
-                SELECT doc_id, source, text, n_tokens,
-                       row_number() OVER (
-                           PARTITION BY md5({_NORMALIZED})
-                           ORDER BY doc_id ASC
-                       ) AS rn
-                FROM gated
-            ) WHERE rn = 1
-        ),
+        WITH RECURSIVE {_near_input_cte()},
+        {_gate_dedup_ctes()},
         {_winnow_pairs_ctes(_ROBUST_K, _ROBUST_W, _WINNOW_BUILD_THRESHOLD,
                             _WINNOW_BUILD_MAX_DF, src="uniq")},
-        edges AS (
-            SELECT id_a AS src, id_b AS dst FROM win_pairs
-            UNION
-            SELECT id_b, id_a FROM win_pairs
-        ),
-        reach(id, lbl) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT e2.src, r.lbl FROM edges e2 JOIN reach r ON e2.dst = r.id
-        ),
-        losers AS (
-            SELECT id FROM (
-                SELECT id, min(lbl) AS component FROM reach GROUP BY id
-            ) WHERE id <> component
-        ),
-        kept AS (
-            SELECT doc_id, source, n_tokens FROM uniq
-            WHERE doc_id NOT IN (SELECT id FROM losers)
-        ),
-        quota AS (
-            SELECT doc_id, source, n_tokens FROM (
-                SELECT doc_id, source, n_tokens,
-                       row_number() OVER (
-                           PARTITION BY source
-                           ORDER BY CAST(('0x' || substr(md5(
-                                        CAST(doc_id AS VARCHAR)
-                                        || '|{_MINI_SEED}'
-                                    ), 1, 15)) AS BIGINT) ASC,
-                                    doc_id ASC
-                       ) AS _rk
-                FROM kept
-            ) WHERE _rk <= {_MINI_QUOTA}
-        ),
-        pos AS (
-            SELECT doc_id, source, n_tokens,
-                   CAST(row_number() OVER (ORDER BY h, doc_id) - 1
-                        AS BIGINT) AS position
-            FROM (
-                SELECT *, CAST('0x' || substr(md5('{_MINI_SEED}:'
-                               || CAST(doc_id AS VARCHAR)), 1, 15)
-                               AS BIGINT) AS h
-                FROM quota
-            )
-        ),
-        packed AS (
-            SELECT doc_id, source, n_tokens, position,
-                   SUM(n_tokens) OVER (ORDER BY position
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - n_tokens AS start
-            FROM pos
-        )
-        SELECT doc_id, source, n_tokens, position,
-               CAST(floor(start / {_MINI_BLOCK}) AS BIGINT) AS seq_id,
-               CAST(start % {_MINI_BLOCK} AS BIGINT) AS seq_offset
-        FROM packed
+        {_components_ctes("win_pairs", "uniq")},
+        {_pack_ctes("kept")}
     """
 
 
@@ -510,9 +410,6 @@ def q_ann_ivf_pq_pruned(spark: SparkSession, sf: str) -> DataFrame:
     actually skipped >= 1 cell directory, so the guarantee was exercised,
     not vacuous). Index materializes under a per-call temp dir; the
     witness checkpoints before cleanup."""
-    import shutil
-    import tempfile
-
     from ..operators import similarity
 
     shifted = _clustered_embeddings(spark, sf)
@@ -527,8 +424,7 @@ def q_ann_ivf_pq_pruned(spark: SparkSession, sf: str) -> DataFrame:
         data.select(F.col("label").alias("cell"), "embedding")
     )
     centroids = local_frame(spark, cents0.collect(), cents0.schema)
-    tmp = tempfile.mkdtemp(prefix="ivfpq_pruned_")
-    try:
+    with _temp_index("ivfpq_pruned_") as tmp:
         similarity.ivf_pq_index_build(data, centroids, tmp, m=32, k=32)
         full = similarity.ivf_pq_index_topk(
             spark, tmp, qvec, k=5, nprobe=10, rerank_factor=16
@@ -551,8 +447,6 @@ def q_ann_ivf_pq_pruned(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(bool(prune_exact)).alias("prune_exact"),
             F.lit(bool(prune_effective)).alias("prune_effective"),
         ).orderBy(F.asc("distance"), F.asc("vec_id"))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _ann_ivf_pq_pruned_oracle() -> str:
@@ -607,9 +501,6 @@ def q_ann_ivf_pq_adaptive(spark: SparkSession, sf: str) -> DataFrame:
     ``adaptive_effective`` (>= 1 cell directory was never read AND the
     scan converged in fewer rounds than cells — the bound actually
     bit)."""
-    import shutil
-    import tempfile
-
     from ..operators import similarity
 
     shifted = _clustered_embeddings(spark, sf)
@@ -622,8 +513,7 @@ def q_ann_ivf_pq_adaptive(spark: SparkSession, sf: str) -> DataFrame:
         data.select(F.col("label").alias("cell"), "embedding")
     )
     centroids = local_frame(spark, cents0.collect(), cents0.schema)
-    tmp = tempfile.mkdtemp(prefix="ivfpq_adaptive_")
-    try:
+    with _temp_index("ivfpq_adaptive_") as tmp:
         similarity.ivf_pq_index_build(data, centroids, tmp, m=32, k=32)
         exhaustive = similarity.ivf_pq_index_topk(
             spark, tmp, qvec, k=5, nprobe=10, rerank_factor=16
@@ -648,8 +538,6 @@ def q_ann_ivf_pq_adaptive(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(bool(adaptive_exact)).alias("adaptive_exact"),
             F.lit(bool(adaptive_effective)).alias("adaptive_effective"),
         ).orderBy(F.asc("distance"), F.asc("vec_id"))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _ann_ivf_pq_adaptive_oracle() -> str:
@@ -730,28 +618,10 @@ def q_corpus_build_scrub(spark: SparkSession, sf: str) -> DataFrame:
     merely quotes a committed passage survives with the quote cut, a doc
     that IS the passage re-gates out. Full stage-replay CTE oracle down
     to the per-char scrub and the recounted token stream."""
-    from .build_corpus import CorpusBuildConfig, build_corpus
-    from .oracle_lib import (
-        _MINI_BLOCK, _MINI_MAX_PUNCT, _MINI_MIN_TOKENS, _MINI_QUOTA,
-        _MINI_SEED,
-    )
+    from .build_corpus import build_corpus
+    from .oracle_lib import _WINNOW_NEAR, _audit_build_config
 
-    cfg = CorpusBuildConfig(
-        langs=("en",),
-        min_tokens=_MINI_MIN_TOKENS,
-        max_punct_ratio=_MINI_MAX_PUNCT,
-        near_threshold=_WINNOW_BUILD_THRESHOLD,
-        near_method="winnow",
-        near_action="scrub",
-        winnow_k=_ROBUST_K,
-        winnow_w=_ROBUST_W,
-        near_max_df=_WINNOW_BUILD_MAX_DF,
-        quota_per_source=_MINI_QUOTA,
-        block_size=_MINI_BLOCK,
-        seed=_MINI_SEED,
-        scrub_pii=False,
-        portable=True,
-    )
+    cfg = _audit_build_config(**_WINNOW_NEAR, near_action="scrub")
     return build_corpus(_scrub_docs(spark, sf), cfg=cfg).select(
         "doc_id", "text", "source", "n_tokens", "position", "seq_id",
         "seq_offset",
@@ -766,45 +636,27 @@ def _corpus_build_scrub_oracle() -> str:
     # per-char union cut on each higher-id member, token recount +
     # min_tokens re-gate, then quota / seeded shuffle / pack over the
     # recounted stream
-    from .corpus_ext import _LANGID_CASE, _NORMALIZED, _TOKS
+    from .corpus_ext import _NORMALIZED
     from .oracle_lib import (
-        _MINI_BLOCK, _MINI_MAX_PUNCT, _MINI_MIN_TOKENS, _MINI_QUOTA,
-        _MINI_SEED,
+        _MINI_MIN_TOKENS, _exact_dedup_cte, _gate_predicate, _near_input_cte,
+        _pack_ctes,
     )
 
     k = _ROBUST_K
     toks_scrubbed = "string_split_regex(trim(lower(scrubbed)), '\\s+')"
-    return f"""
-        WITH RECURSIVE input AS (
-            SELECT doc_id, text, source FROM documents
-            UNION ALL
-            SELECT doc_id + 1000000 AS doc_id, text || ' the' AS text, source
-            FROM documents WHERE doc_id % 17 = 0 AND text IS NOT NULL
+    v23 = f"""
             UNION ALL
             SELECT doc_id + 2000000 AS doc_id,
                    text || '{_SCRUB_TAIL}' AS text, source
-            FROM documents WHERE doc_id % 23 = 0 AND text IS NOT NULL
-        ),
+            FROM documents WHERE doc_id % 23 = 0 AND text IS NOT NULL"""
+    return f"""
+        WITH RECURSIVE {_near_input_cte(v23)},
         gated AS (
             SELECT doc_id, source, text
             FROM input
-            WHERE text IS NOT NULL
-              AND CAST(len({_TOKS}) AS INTEGER) >= {_MINI_MIN_TOKENS}
-              AND (CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '',
-                                              'g')) AS DOUBLE)
-                   / CAST(length(text) AS DOUBLE)) <= {_MINI_MAX_PUNCT!r}
-              AND {_LANGID_CASE} = 'en'
+            WHERE {_gate_predicate()}
         ),
-        uniq AS (
-            SELECT doc_id, source, text FROM (
-                SELECT doc_id, source, text,
-                       row_number() OVER (
-                           PARTITION BY md5({_NORMALIZED})
-                           ORDER BY doc_id ASC
-                       ) AS rn
-                FROM gated
-            ) WHERE rn = 1
-        ),
+        {_exact_dedup_cte("doc_id, source, text")},
         {_robust_fps_ctes(src="uniq")},
         nf AS (
             SELECT doc_id, count(DISTINCT fp) AS nf FROM rfp GROUP BY doc_id
@@ -868,42 +720,7 @@ def _corpus_build_scrub_oracle() -> str:
             WHERE CAST(len({toks_scrubbed}) AS INTEGER)
                   >= {_MINI_MIN_TOKENS}
         ),
-        quota AS (
-            SELECT doc_id, text, source, n_tokens FROM (
-                SELECT doc_id, text, source, n_tokens,
-                       row_number() OVER (
-                           PARTITION BY source
-                           ORDER BY CAST(('0x' || substr(md5(
-                                        CAST(doc_id AS VARCHAR)
-                                        || '|{_MINI_SEED}'
-                                    ), 1, 15)) AS BIGINT) ASC,
-                                    doc_id ASC
-                       ) AS _rk
-                FROM regated
-            ) WHERE _rk <= {_MINI_QUOTA}
-        ),
-        pos AS (
-            SELECT doc_id, text, source, n_tokens,
-                   CAST(row_number() OVER (ORDER BY h, doc_id) - 1
-                        AS BIGINT) AS position
-            FROM (
-                SELECT *, CAST('0x' || substr(md5('{_MINI_SEED}:'
-                               || CAST(doc_id AS VARCHAR)), 1, 15)
-                               AS BIGINT) AS h
-                FROM quota
-            )
-        ),
-        packed AS (
-            SELECT doc_id, text, source, n_tokens, position,
-                   SUM(n_tokens) OVER (ORDER BY position
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - n_tokens AS start
-            FROM pos
-        )
-        SELECT doc_id, text, source, n_tokens, position,
-               CAST(floor(start / {_MINI_BLOCK}) AS BIGINT) AS seq_id,
-               CAST(start % {_MINI_BLOCK} AS BIGINT) AS seq_offset
-        FROM packed
+        {_pack_ctes("regated", "doc_id, text, source, n_tokens")}
     """
 
 
@@ -1152,27 +969,20 @@ def q_ann_opq_index(spark: SparkSession, sf: str) -> DataFrame:
     ``recall_ok`` (>= 80% of the exact set hit through the rotated
     lifecycle) and ``rotation_persisted`` (the probe actually loaded a
     rotation — the pre-transform ran, the guarantee isn't vacuous)."""
-    import shutil
-    import tempfile
-
     from ..operators import similarity
-    from .corpus_ext import _ivf_centroids, _query_vec_list
+    from .corpus_ext import _query_vec_list
 
     emb = load(spark, sf, "embeddings")
     data = emb.filter((F.col("vec_id") != 0) & (F.col("vec_id") % 5 != 0))
     batch = emb.filter((F.col("vec_id") != 0) & (F.col("vec_id") % 5 == 0))
     qvec = _query_vec_list(emb)
-    tmp = tempfile.mkdtemp(prefix="opq_idx_")
-    try:
+    with _temp_index("opq_idx_") as tmp:
         rot, _cb0, _audit = similarity.opq_train_driver(
             similarity._bounded_train_frame(data, "vec_id", 65_536),
             m=32, k=16, iters=2,
         )
         rotated = similarity.opq_rotate(data, rot).localCheckpoint()
-        centroids = local_frame(
-            spark, _ivf_centroids(rotated).collect(),
-            "cell int, centroid array<double>",
-        )
+        centroids = _centroid_frame(spark, rotated)
         similarity.ivf_pq_index_build(
             rotated, centroids, tmp, m=32, k=16, rotation=rot
         )
@@ -1194,8 +1004,6 @@ def q_ann_opq_index(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(recall_ok).alias("recall_ok"),
             F.lit(bool(rotation_persisted)).alias("rotation_persisted"),
         ).orderBy(F.asc("distance"), F.asc("vec_id"))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _ann_opq_index_oracle() -> str:

@@ -35,15 +35,13 @@ has no index-maintenance or embedding surface; these extend SURVEY
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..io import local_frame
+from .oracle_lib import _centroid_frame, _temp_index
 
 
 _COMPACT_K = 5
@@ -73,19 +71,16 @@ def q_ann_index_compact(spark: SparkSession, sf: str) -> DataFrame:
     file per directory (the point)."""
     from ..io import hadoop_data_file_count
     from ..operators import similarity
-    from .corpus_ext import _ivf_centroids, _query_vec_list
+    from .corpus_ext import _query_vec_list
 
     emb = load(spark, sf, "embeddings")
     data = emb.filter(F.col("vec_id") != 0)
     initial = data.filter(F.col("vec_id") % 4 != 0)
     qvec = _query_vec_list(emb)
-    tmp = tempfile.mkdtemp(prefix="compact_idx_")
-    try:
-        centroids = local_frame(
-            spark, _ivf_centroids(emb).collect(),
-            "cell int, centroid array<double>",
+    with _temp_index("compact_idx_") as tmp:
+        similarity.ivf_pq_index_build(
+            initial, _centroid_frame(spark, emb), tmp, m=16, k=16
         )
-        similarity.ivf_pq_index_build(initial, centroids, tmp, m=16, k=16)
         for i in range(3):
             similarity.ivf_pq_index_add(
                 spark, tmp,
@@ -125,8 +120,6 @@ def q_ann_index_compact(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(bool(rows_ok)).alias("rows_ok"),
             F.lit(recall_ok).alias("recall_ok"),
         ).orderBy(F.asc("distance"), F.asc("vec_id"))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _ann_index_compact_oracle() -> str:
@@ -182,7 +175,7 @@ def q_corpus_semantic_opq(spark: SparkSession, sf: str) -> DataFrame:
     booleans. Every value the output carries replays exactly in SQL;
     the rotated lifecycle contributes the audited guarantee."""
     from ..operators import similarity
-    from .corpus_ext import _ivf_centroids, _query_vec_list
+    from .corpus_ext import _query_vec_list
 
     docs = load(spark, sf, "documents")
     emb = load(spark, sf, "embeddings")
@@ -203,19 +196,15 @@ def q_corpus_semantic_opq(spark: SparkSession, sf: str) -> DataFrame:
     initial = survivors.filter(F.col("vec_id") % 5 != 0)
     batch = survivors.filter(F.col("vec_id") % 5 == 0)
     qvec = _query_vec_list(emb)
-    tmp = tempfile.mkdtemp(prefix="sem_opq_idx_")
-    try:
+    with _temp_index("sem_opq_idx_") as tmp:
         rot, _cb0, _audit = similarity.opq_train_driver(
             similarity._bounded_train_frame(initial, "vec_id", 65_536),
             m=32, k=16, iters=2,
         )
         rotated = similarity.opq_rotate(initial, rot).localCheckpoint()
-        centroids = local_frame(
-            spark, _ivf_centroids(rotated).collect(),
-            "cell int, centroid array<double>",
-        )
         similarity.ivf_pq_index_build(
-            rotated, centroids, tmp, m=32, k=16, rotation=rot
+            rotated, _centroid_frame(spark, rotated), tmp, m=32, k=16,
+            rotation=rot,
         )
         similarity.ivf_pq_index_add(spark, tmp, batch)  # RAW batch
         hit = {
@@ -237,8 +226,6 @@ def q_corpus_semantic_opq(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(recall_ok).alias("recall_ok"),
             F.lit(bool(rotation_persisted)).alias("rotation_persisted"),
         ).orderBy(F.asc("distance"), F.asc("doc_id"))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _corpus_semantic_opq_oracle() -> str:
@@ -395,8 +382,7 @@ def q_winnow_index_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
     )
     gen1 = docs.filter(F.col("doc_id") % 14 == 0)
     gen2 = docs.filter(F.col("doc_id") % 14 != 0)
-    tmp = tempfile.mkdtemp(prefix="widx_lifecycle_")
-    try:
+    with _temp_index("widx_lifecycle_") as tmp:
         dedup.winnow_pos_index_write(
             gen1, tmp, k=_ROBUST_K, w=_ROBUST_W, portable=True
         )
@@ -418,8 +404,6 @@ def q_winnow_index_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(bool(replay_skipped)).alias("replay_skipped"),
             F.lit(bool(saved_params_ok)).alias("saved_params_ok"),
         ).localCheckpoint()  # before the temp layout is removed
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _winnow_index_lifecycle_oracle() -> str:
@@ -436,10 +420,7 @@ def _winnow_index_lifecycle_oracle() -> str:
 
 
 # shared across waves — moved verbatim to plans/oracle_lib (VERDICT r14 #7)
-from .oracle_lib import (
-    _corpus_build_incremental_oracle,
-    _winnow_fps_ctes,
-)
+from .oracle_lib import _corpus_build_incremental_oracle
 
 
 def q_corpus_build_incremental(spark: SparkSession, sf: str) -> DataFrame:
@@ -456,55 +437,12 @@ def q_corpus_build_incremental(spark: SparkSession, sf: str) -> DataFrame:
     every SF. Full stage replay: gate -> exact dedup -> AGAINST-INDEX
     drop (capped candidates, value-exact verify) -> winnow pairs ->
     components -> drop non-roots -> quota -> shuffle -> pack."""
-    from ..operators import dedup
-    from .build_corpus import CorpusBuildConfig, build_corpus
-    from .oracle_lib import (
-        _MINI_BLOCK, _MINI_MAX_PUNCT, _MINI_MIN_TOKENS, _MINI_QUOTA,
-        _MINI_SEED,
-    )
-    from .oracle_lib import _near_docs
-    from .oracle_lib import (
-        _ROBUST_K,
-        _ROBUST_W,
-        _WINNOW_BUILD_MAX_DF,
-        _WINNOW_BUILD_THRESHOLD,
-    )
+    from .oracle_lib import _commit_winnow_slice, _winnow_corpus_build
 
-    committed = (
-        load(spark, sf, "documents")
-        .filter((F.col("doc_id") % 5 == 4) & F.col("text").isNotNull())
-        .select("doc_id", "text")
-    )
-    tmp = tempfile.mkdtemp(prefix="corpus_incr_idx_")
-    try:
-        dedup.winnow_pos_index_write(
-            committed, tmp, k=_ROBUST_K, w=_ROBUST_W, portable=True
-        )
-        cfg = CorpusBuildConfig(
-            langs=("en",),
-            min_tokens=_MINI_MIN_TOKENS,
-            max_punct_ratio=_MINI_MAX_PUNCT,
-            near_threshold=_WINNOW_BUILD_THRESHOLD,
-            near_method="winnow",
-            winnow_k=_ROBUST_K,
-            winnow_w=_ROBUST_W,
-            near_max_df=_WINNOW_BUILD_MAX_DF,
-            quota_per_source=_MINI_QUOTA,
-            block_size=_MINI_BLOCK,
-            seed=_MINI_SEED,
-            scrub_pii=False,
-            portable=True,
-        )
-        return (
-            build_corpus(_near_docs(spark, sf), cfg=cfg, dedup_index=tmp)
-            .select(
-                "doc_id", "source", "n_tokens", "position", "seq_id",
-                "seq_offset",
-            )
-            .localCheckpoint()  # before the temp index is removed
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    with _temp_index("corpus_incr_idx_") as tmp:
+        _commit_winnow_slice(load(spark, sf, "documents"), tmp)
+        corpus = _winnow_corpus_build(spark, sf, dedup_index=tmp)
+        return corpus.localCheckpoint()  # before the temp index is removed
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

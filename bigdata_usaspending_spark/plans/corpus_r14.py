@@ -40,15 +40,19 @@ Spark-first without a table format.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..io import local_frame
+from ..io import local_frame, local_rows_of
+from .oracle_lib import (
+    _centroid_frame,
+    _commit_winnow_slice,
+    _temp_index,
+    _winnow_take_down,
+)
 
 
 _REMOVE_K = 5
@@ -62,20 +66,16 @@ def q_ann_index_remove(spark: SparkSession, sf: str) -> DataFrame:
     set; the compact is the same single cell-keyed shuffle the add-side
     maintenance already runs — removal rides it for free."""
     from ..operators import similarity
-    from .corpus_ext import _ivf_centroids, _query_vec_list
+    from .corpus_ext import _query_vec_list
 
     emb = load(spark, sf, "embeddings")
     data = emb.filter(F.col("vec_id") != 0)
     victims = data.filter(F.col("vec_id") % 7 == 3)
     qvec = _query_vec_list(emb)
-    tmp = tempfile.mkdtemp(prefix="remove_idx_")
-    try:
-        cent_rows = _ivf_centroids(emb).collect()
-        centroids = local_frame(
-            spark, cent_rows, "cell int, centroid array<double>"
-        )
+    with _temp_index("remove_idx_") as tmp:
+        centroids = _centroid_frame(spark, emb)
         similarity.ivf_index_write(data, centroids, tmp)
-        n_cells = len(cent_rows)  # model state already on the driver
+        n_cells = len(local_rows_of(centroids))  # already on the driver
         # one pass for both counts (the victim predicate is a subset of
         # the data scan — two separate count jobs read the table twice)
         counts = data.agg(
@@ -131,8 +131,6 @@ def q_ann_index_remove(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(bool(compact_exact)).alias("compact_exact"),
             F.lit(bool(physically_dropped)).alias("physically_dropped"),
         ).orderBy(F.desc("cosine"), F.asc("vec_id"))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _ann_index_remove_oracle() -> str:
@@ -163,35 +161,17 @@ def q_winnow_index_remove(spark: SparkSession, sf: str) -> DataFrame:
     suppression — the surviving batch ids are the value-exact
     against-index decision over the REDUCED committed set."""
     from ..operators import dedup
-    from .oracle_lib import (
-        _ROBUST_K,
-        _ROBUST_W,
-        _WINNOW_BUILD_MAX_DF,
-        _WINNOW_BUILD_THRESHOLD,
-    )
+    from .oracle_lib import _WINNOW_BUILD_MAX_DF, _WINNOW_BUILD_THRESHOLD
 
-    committed = (
-        load(spark, sf, "documents")
-        .filter((F.col("doc_id") % 5 == 4) & F.col("text").isNotNull())
-        .select("doc_id", "text")
-    )
-    removed = committed.filter(F.col("doc_id") % 10 == 9)
-    batch = committed.select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" the")).alias("text"),
-    )
-    tmp = tempfile.mkdtemp(prefix="widx_remove_")
-    try:
-        dedup.winnow_pos_index_write(
-            committed, tmp, k=_ROBUST_K, w=_ROBUST_W, portable=True
+    with _temp_index("widx_remove_") as tmp:
+        committed = _commit_winnow_slice(load(spark, sf, "documents"), tmp)
+        removed = committed.filter(F.col("doc_id") % 10 == 9)
+        batch = committed.select(
+            (F.col("doc_id") + 1_000_000).alias("doc_id"),
+            F.concat(F.col("text"), F.lit(" the")).alias("text"),
         )
-        docs_before = dedup.winnow_index_stats(spark, tmp)["docs"]
-        rep = dedup.winnow_index_remove(spark, tmp, removed.select("doc_id"))
-        docs_after = dedup.winnow_index_stats(spark, tmp)["docs"]
-        # every removed doc that was fingerprinted left the live view
-        remove_witnessed = (
-            rep["matched_live"] == docs_before - docs_after
-            and rep["requested"] == removed.count()
+        rep, docs_after, remove_witnessed = _winnow_take_down(
+            spark, tmp, removed
         )
         # each decision re-fingerprints the batch inside the pipeline;
         # measured FASTER at sf0.1 than hoisting one eager/lazy
@@ -228,8 +208,6 @@ def q_winnow_index_remove(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(bool(compact_exact)).alias("compact_exact"),
             F.lit(bool(physically_dropped)).alias("physically_dropped"),
         ).orderBy(F.asc("doc_id"))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _winnow_index_remove_oracle() -> str:
@@ -238,13 +216,7 @@ def _winnow_index_remove_oracle() -> str:
     # under the combined document-frequency cap, the verify
     # re-intersects the FULL sets (value-exact), survivors are batch
     # docs with no verified hit — plus the pinned lifecycle booleans
-    from .oracle_lib import (
-        _ROBUST_K,
-        _ROBUST_W,
-        _WINNOW_BUILD_MAX_DF,
-        _WINNOW_BUILD_THRESHOLD,
-    )
-    from .oracle_lib import _winnow_fps_ctes
+    from .oracle_lib import _against_index_ctes
 
     return f"""
         WITH committed AS (
@@ -258,34 +230,7 @@ def _winnow_index_remove_oracle() -> str:
             SELECT doc_id + 1000000 AS doc_id, text || ' the' AS text
             FROM committed
         ),
-        {_winnow_fps_ctes(_ROBUST_K, _ROBUST_W, "reduced", "c")},
-        {_winnow_fps_ctes(_ROBUST_K, _ROBUST_W, "batch", "b")},
-        iheavy AS (
-            SELECT f FROM (
-                SELECT doc_id, unnest(fps) AS f FROM cfps
-                UNION ALL
-                SELECT doc_id, unnest(fps) AS f FROM bfps
-            ) GROUP BY f HAVING count(*) > {_WINNOW_BUILD_MAX_DF}
-        ),
-        icand AS (
-            SELECT DISTINCT b.id AS bid, c.id AS cid
-            FROM (SELECT doc_id AS id, unnest(fps) AS f FROM bfps) b
-            JOIN (SELECT doc_id AS id, unnest(fps) AS f FROM cfps) c
-              ON b.f = c.f
-            WHERE b.f NOT IN (SELECT f FROM iheavy)
-        ),
-        idx_hits AS (
-            SELECT DISTINCT bid AS doc_id FROM (
-                SELECT x.bid,
-                       CAST(len(list_intersect(bf.fps, cf.fps)) AS DOUBLE)
-                       / CAST(len(list_distinct(
-                             list_concat(bf.fps, cf.fps))) AS DOUBLE)
-                           AS jac
-                FROM icand x
-                JOIN bfps bf ON bf.doc_id = x.bid
-                JOIN cfps cf ON cf.doc_id = x.cid
-            ) WHERE jac >= {_WINNOW_BUILD_THRESHOLD}
-        )
+        {_against_index_ctes("reduced", "batch", "idx_hits")}
         SELECT b.doc_id,
                TRUE AS remove_witnessed, TRUE AS readd_refused,
                TRUE AS compact_exact, TRUE AS physically_dropped
@@ -311,64 +256,20 @@ def q_corpus_build_takedown(spark: SparkSession, sf: str) -> DataFrame:
     the committed slice REDUCED — one predicate swap proves the whole
     downstream recomputation. ``takedown_witnessed`` pins that the
     remove's exact witness matched the live-index delta."""
-    from ..operators import dedup
-    from .build_corpus import CorpusBuildConfig, build_corpus
-    from .oracle_lib import (
-        _MINI_BLOCK, _MINI_MAX_PUNCT, _MINI_MIN_TOKENS, _MINI_QUOTA,
-        _MINI_SEED,
-    )
-    from .oracle_lib import _near_docs
-    from .oracle_lib import (
-        _ROBUST_K,
-        _ROBUST_W,
-        _WINNOW_BUILD_MAX_DF,
-        _WINNOW_BUILD_THRESHOLD,
-    )
+    from .oracle_lib import _winnow_corpus_build
 
-    committed = (
-        load(spark, sf, "documents")
-        .filter((F.col("doc_id") % 5 == 4) & F.col("text").isNotNull())
-        .select("doc_id", "text")
-    )
-    removed = committed.filter(F.col("doc_id") % 10 == 9)
-    tmp = tempfile.mkdtemp(prefix="corpus_takedown_idx_")
-    try:
-        dedup.winnow_pos_index_write(
-            committed, tmp, k=_ROBUST_K, w=_ROBUST_W, portable=True
-        )
-        docs_before = dedup.winnow_index_stats(spark, tmp)["docs"]
-        rep = dedup.winnow_index_remove(spark, tmp, removed.select("doc_id"))
-        docs_after = dedup.winnow_index_stats(spark, tmp)["docs"]
-        takedown_witnessed = (
-            rep["matched_live"] == docs_before - docs_after
-            and rep["requested"] == removed.count()
-        )
-        cfg = CorpusBuildConfig(
-            langs=("en",),
-            min_tokens=_MINI_MIN_TOKENS,
-            max_punct_ratio=_MINI_MAX_PUNCT,
-            near_threshold=_WINNOW_BUILD_THRESHOLD,
-            near_method="winnow",
-            winnow_k=_ROBUST_K,
-            winnow_w=_ROBUST_W,
-            near_max_df=_WINNOW_BUILD_MAX_DF,
-            quota_per_source=_MINI_QUOTA,
-            block_size=_MINI_BLOCK,
-            seed=_MINI_SEED,
-            scrub_pii=False,
-            portable=True,
+    with _temp_index("corpus_takedown_idx_") as tmp:
+        committed = _commit_winnow_slice(load(spark, sf, "documents"), tmp)
+        _, _, takedown_witnessed = _winnow_take_down(
+            spark, tmp, committed.filter(F.col("doc_id") % 10 == 9)
         )
         return (
-            build_corpus(_near_docs(spark, sf), cfg=cfg, dedup_index=tmp)
-            .select(
-                "doc_id", "source", "n_tokens", "position", "seq_id",
-                "seq_offset",
-                F.lit(bool(takedown_witnessed)).alias("takedown_witnessed"),
+            _winnow_corpus_build(spark, sf, dedup_index=tmp)
+            .withColumn(
+                "takedown_witnessed", F.lit(bool(takedown_witnessed))
             )
             .localCheckpoint()  # before the temp index is removed
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _corpus_build_takedown_oracle() -> str:

@@ -49,15 +49,14 @@ index-lifecycle semantics re-expressed Spark-first.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..io import local_frame
+from ..io import local_frame, local_rows_of
+from .oracle_lib import _centroid_frame, _commit_winnow_slice, _temp_index
 
 
 _REBUILD_K = 5
@@ -72,20 +71,16 @@ def q_ann_index_rebuild(spark: SparkSession, sf: str) -> DataFrame:
     history."""
     from .. import index_store
     from ..operators import similarity
-    from .corpus_ext import _ivf_centroids, _query_vec_list
+    from .corpus_ext import _query_vec_list
 
     emb = load(spark, sf, "embeddings")
     data = emb.filter(F.col("vec_id") != 0)
     fresh0 = emb.filter(F.col("vec_id") == 0)
     victims = data.filter(F.col("vec_id") % 7 == 3)
     qvec = _query_vec_list(emb)
-    tmp = tempfile.mkdtemp(prefix="rebuild_idx_")
-    try:
-        cent_rows = _ivf_centroids(emb).collect()
-        centroids = local_frame(
-            spark, cent_rows, "cell int, centroid array<double>"
-        )
-        n_cells = len(cent_rows)  # model state already on the driver
+    with _temp_index("rebuild_idx_") as tmp:
+        centroids = _centroid_frame(spark, emb)
+        n_cells = len(local_rows_of(centroids))  # already on the driver
         n_data = data.count()
         # the pre-rebuild history: build, a committed streaming add
         # (manifest advances to 3), a takedown left pending
@@ -132,8 +127,6 @@ def q_ann_index_rebuild(spark: SparkSession, sf: str) -> DataFrame:
             F.lit(bool(fresh_stream_applied)).alias("fresh_stream_applied"),
             F.lit(bool(rebuilt_live_exact)).alias("rebuilt_live_exact"),
         ).orderBy(F.desc("cosine"), F.asc("vec_id"))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _ann_index_rebuild_oracle() -> str:
@@ -167,19 +160,10 @@ def q_winnow_index_rebuild(spark: SparkSession, sf: str) -> DataFrame:
     no stale suppression, no lost adds."""
     from .. import index_store
     from ..operators import dedup
-    from .oracle_lib import (
-        _ROBUST_K,
-        _ROBUST_W,
-        _WINNOW_BUILD_MAX_DF,
-        _WINNOW_BUILD_THRESHOLD,
-    )
+    from .oracle_lib import _WINNOW_BUILD_MAX_DF, _WINNOW_BUILD_THRESHOLD
 
     docs = load(spark, sf, "documents").filter(F.col("text").isNotNull())
-    committed = docs.filter(F.col("doc_id") % 5 == 4).select(
-        "doc_id", "text"
-    )
     added = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id", "text")
-    removed = committed.filter(F.col("doc_id") % 10 == 9)
     batch = (
         docs.filter(
             (F.col("doc_id") % 5 == 4) | (F.col("doc_id") % 5 == 1)
@@ -189,20 +173,18 @@ def q_winnow_index_rebuild(spark: SparkSession, sf: str) -> DataFrame:
             F.concat(F.col("text"), F.lit(" the")).alias("text"),
         )
     )
-    tmp = tempfile.mkdtemp(prefix="widx_rebuild_")
-    try:
+    with _temp_index("widx_rebuild_") as tmp:
         # pre-rebuild history: build, a committed streaming add
         # (manifest -> 3), a takedown left pending
-        dedup.winnow_pos_index_write(
-            committed, tmp, k=_ROBUST_K, w=_ROBUST_W, portable=True
-        )
+        committed = _commit_winnow_slice(docs, tmp)
         dedup.winnow_index_add_batch(spark, tmp, added, 3)
-        dedup.winnow_index_remove(spark, tmp, removed.select("doc_id"))
+        dedup.winnow_index_remove(
+            spark, tmp,
+            committed.filter(F.col("doc_id") % 10 == 9).select("doc_id"),
+        )
 
         # REBUILD over the same directory
-        dedup.winnow_pos_index_write(
-            committed, tmp, k=_ROBUST_K, w=_ROBUST_W, portable=True
-        )
+        _commit_winnow_slice(docs, tmp)
         stats0 = dedup.winnow_index_stats(spark, tmp)
         docs_committed = stats0["docs"]
         stale_tombstones_cleared = stats0["tombstones"] == 0
@@ -238,8 +220,6 @@ def q_winnow_index_rebuild(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy(F.asc("doc_id"))
             .localCheckpoint()  # before the temp index is removed
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _winnow_index_rebuild_oracle() -> str:
@@ -249,13 +229,7 @@ def _winnow_index_rebuild_oracle() -> str:
     # candidates share >= 1 fingerprint under the combined
     # document-frequency cap, the verify re-intersects the FULL sets,
     # survivors are batch docs with no verified hit
-    from .oracle_lib import (
-        _ROBUST_K,
-        _ROBUST_W,
-        _WINNOW_BUILD_MAX_DF,
-        _WINNOW_BUILD_THRESHOLD,
-        _winnow_fps_ctes,
-    )
+    from .oracle_lib import _against_index_ctes
 
     return f"""
         WITH live AS (
@@ -269,34 +243,7 @@ def _winnow_index_rebuild_oracle() -> str:
             WHERE (doc_id % 5 = 4 OR doc_id % 5 = 1)
               AND text IS NOT NULL
         ),
-        {_winnow_fps_ctes(_ROBUST_K, _ROBUST_W, "live", "c")},
-        {_winnow_fps_ctes(_ROBUST_K, _ROBUST_W, "batch", "b")},
-        iheavy AS (
-            SELECT f FROM (
-                SELECT doc_id, unnest(fps) AS f FROM cfps
-                UNION ALL
-                SELECT doc_id, unnest(fps) AS f FROM bfps
-            ) GROUP BY f HAVING count(*) > {_WINNOW_BUILD_MAX_DF}
-        ),
-        icand AS (
-            SELECT DISTINCT b.id AS bid, c.id AS cid
-            FROM (SELECT doc_id AS id, unnest(fps) AS f FROM bfps) b
-            JOIN (SELECT doc_id AS id, unnest(fps) AS f FROM cfps) c
-              ON b.f = c.f
-            WHERE b.f NOT IN (SELECT f FROM iheavy)
-        ),
-        hits AS (
-            SELECT DISTINCT bid AS doc_id FROM (
-                SELECT x.bid,
-                       CAST(len(list_intersect(bf.fps, cf.fps)) AS DOUBLE)
-                       / CAST(len(list_distinct(
-                             list_concat(bf.fps, cf.fps))) AS DOUBLE)
-                           AS jac
-                FROM icand x
-                JOIN bfps bf ON bf.doc_id = x.bid
-                JOIN cfps cf ON cf.doc_id = x.cid
-            ) WHERE jac >= {_WINNOW_BUILD_THRESHOLD}
-        )
+        {_against_index_ctes("live", "batch", "hits")}
         SELECT b.doc_id,
                TRUE AS stale_tombstones_cleared,
                TRUE AS stale_manifest_cleared,
@@ -320,17 +267,11 @@ def q_ann_index_drift(spark: SparkSession, sf: str) -> DataFrame:
     aggregates + a cell-sorted fold, no driver state beyond the model
     load."""
     from ..operators import similarity
-    from .corpus_ext import _ivf_centroids
 
     emb = load(spark, sf, "embeddings")
     data = emb.filter(F.col("vec_id") != 0)
-    tmp = tempfile.mkdtemp(prefix="drift_idx_")
-    try:
-        centroids = local_frame(
-            spark, _ivf_centroids(emb).collect(),
-            "cell int, centroid array<double>",
-        )
-        similarity.ivf_index_write(data, centroids, tmp)
+    with _temp_index("drift_idx_") as tmp:
+        similarity.ivf_index_write(data, _centroid_frame(spark, emb), tmp)
         similarity.ann_index_remove(
             spark, tmp, data.filter(F.col("vec_id") % 7 == 3).select("vec_id")
         )
@@ -356,8 +297,6 @@ def q_ann_index_drift(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("scenario")
         )
         return out.localCheckpoint()  # before the temp index is removed
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _ann_index_drift_oracle() -> str:

@@ -9,17 +9,45 @@ query bodies (and external users like scripts/stress_sf*.py) are
 untouched. New lifecycle queries import from here, never from another
 wave.
 
-Everything in this module is DuckDB-replay plumbing or tuning constants
-— no query registrations (those stay in their wave modules so the
-registry order and the per-round docstrings keep their history).
+The corpus-build audits (``q_corpus_build_mini`` / ``_near`` /
+``_winnow`` / ``_scrub`` / ``_incremental`` / ``_takedown``) and the
+index-lifecycle audits compose one recipe from here instead of each
+restating it:
+
+- build config: ``_audit_build_config(**near)`` (the shared gate /
+  quota / pack / seed fields; each audit passes only its near-dup tier,
+  ``_WINNOW_NEAR`` for the winnow tier) and ``_MANIFEST_COLS``;
+- stage replay, one CTE step per build stage: ``_near_input_cte``
+  (documents ∪ the % 17 variants), ``_gate_predicate`` /
+  ``_exact_dedup_cte`` / ``_gate_dedup_ctes`` (gate + exact dedup),
+  ``_components_ctes`` (pairs -> components -> drop non-roots),
+  ``_against_index_ctes`` (the winnow against-index decision) and
+  ``_pack_ctes`` (quota -> shuffle -> pack + the final SELECT);
+- index-audit scaffold: ``_temp_index`` (the temp-index lifetime),
+  ``_centroid_frame`` (label-mean centroids as a local frame),
+  ``_commit_winnow_slice`` (the committed ``doc_id % 5 == 4`` winnow
+  index), ``_winnow_take_down`` (tombstone + live-delta witness) and
+  ``_winnow_corpus_build`` (the winnow-tier build, optionally against an
+  index).
+
+Everything in this module is DuckDB-replay plumbing, audit scaffolding
+or tuning constants — no query registrations (those stay in their wave
+modules so the registry order and the per-round docstrings keep their
+history).
 """
 
 from __future__ import annotations
+
+import shutil
+import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..io import local_frame
 
 
 # --- retrieval-family shared parameters (rounds 7-9) ---------------------
@@ -121,6 +149,32 @@ _MINI_BLOCK = 128
 _MINI_MIN_TOKENS = 8
 _MINI_MAX_PUNCT = 0.2
 
+# the packed training manifest the corpus-build audits return (scrub
+# also carries the scrubbed text)
+_MANIFEST_COLS = (
+    "doc_id", "source", "n_tokens", "position", "seq_id", "seq_offset"
+)
+
+
+def _audit_build_config(**near) -> "CorpusBuildConfig":
+    """The corpus-build config every corpus-build audit runs: English
+    only, the ``_MINI_*`` gate/quota/pack/seed values, no PII scrub,
+    portable hashes (the oracle-replayable bridge). ``near`` carries the
+    near-dup tier fields, the one thing the audits vary."""
+    from .build_corpus import CorpusBuildConfig
+
+    return CorpusBuildConfig(
+        langs=("en",),
+        min_tokens=_MINI_MIN_TOKENS,
+        max_punct_ratio=_MINI_MAX_PUNCT,
+        quota_per_source=_MINI_QUOTA,
+        block_size=_MINI_BLOCK,
+        seed=_MINI_SEED,
+        scrub_pii=False,
+        portable=True,
+        **near,
+    )
+
 
 def _near_docs(spark: SparkSession, sf: str) -> DataFrame:
     """documents plus one synthesized near-dup per doc_id % 17 == 0 row:
@@ -212,6 +266,16 @@ def _robust_fps_ctes(src: str) -> str:
 
 _WINNOW_BUILD_THRESHOLD = 0.5
 _WINNOW_BUILD_MAX_DF = 50
+
+# the winnow near-dup tier of the winnow / scrub / incremental /
+# takedown corpus-build audits (``_audit_build_config(**_WINNOW_NEAR)``)
+_WINNOW_NEAR = {
+    "near_threshold": _WINNOW_BUILD_THRESHOLD,
+    "near_method": "winnow",
+    "winnow_k": _ROBUST_K,
+    "winnow_w": _ROBUST_W,
+    "near_max_df": _WINNOW_BUILD_MAX_DF,
+}
 
 
 def _winnow_pairs_ctes(
@@ -377,53 +441,103 @@ def _winnow_fps_ctes(k: int, w: int, src: str, prefix: str) -> str:
         )"""
 
 
-def _corpus_build_incremental_oracle(
-    committed_pred: str = "doc_id % 5 = 4",
-) -> str:
-    # the _corpus_build_winnow_oracle chain with the AGAINST-INDEX stage
-    # spliced between exact dedup and the in-batch pair tier: committed
-    # fps + batch fps (the prefixed plain-winnow chains), candidates
-    # share >= 1 fingerprint below the COMBINED document-frequency cap,
-    # the verify re-intersects the FULL sets (value-exact — the
-    # winnow_dedup_against_index contract). ``committed_pred``
-    # parameterizes the committed slice so round-14's takedown capstone
-    # replays the SAME chain over the REDUCED committed set.
-    from .corpus_ext import _LANGID_CASE, _NORMALIZED, _TOKS
+# --- corpus-build stage replay (rounds 10-14) ---------------------------
+# One CTE step per build stage; each corpus-build oracle composes them in
+# stage order. Every step returns its CTEs with the first line unindented
+# and the rest at the 8-space CTE indent of the composing statement.
 
-    return f"""
-        WITH RECURSIVE input AS (
+
+def _near_input_cte(extra: str = "") -> str:
+    """``input``: documents plus the ``_near_docs`` trailing-token
+    variants (id + 1_000_000 per doc_id % 17 == 0 row); ``extra`` appends
+    further UNION ALL branches."""
+    return f"""input AS (
             SELECT doc_id, text, source FROM documents
             UNION ALL
             SELECT doc_id + 1000000 AS doc_id, text || ' the' AS text, source
-            FROM documents WHERE doc_id % 17 = 0 AND text IS NOT NULL
-        ),
-        committed AS (
-            SELECT doc_id, text FROM documents
-            WHERE {committed_pred} AND text IS NOT NULL
-        ),
-        gated AS (
-            SELECT doc_id, source, text,
-                   CAST(len({_TOKS}) AS INTEGER) AS n_tokens
-            FROM input
-            WHERE text IS NOT NULL
+            FROM documents WHERE doc_id % 17 = 0 AND text IS NOT NULL{extra}
+        )"""
+
+
+def _gate_predicate() -> str:
+    """The quality + language gate's WHERE body: raw-division punctuation
+    ratio, token floor, the marker-vote LID."""
+    from .corpus_ext import _LANGID_CASE, _TOKS
+
+    return f"""text IS NOT NULL
               AND CAST(len({_TOKS}) AS INTEGER) >= {_MINI_MIN_TOKENS}
               AND (CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '',
                                               'g')) AS DOUBLE)
                    / CAST(length(text) AS DOUBLE)) <= {_MINI_MAX_PUNCT!r}
-              AND {_LANGID_CASE} = 'en'
-        ),
-        uniq AS (
-            SELECT doc_id, source, text, n_tokens FROM (
-                SELECT doc_id, source, text, n_tokens,
+              AND {_LANGID_CASE} = 'en'"""
+
+
+def _exact_dedup_cte(cols: str) -> str:
+    """``uniq``: the md5-fingerprint min-id exact dedup over ``gated``,
+    keeping ``cols``."""
+    from .corpus_ext import _NORMALIZED
+
+    return f"""uniq AS (
+            SELECT {cols} FROM (
+                SELECT {cols},
                        row_number() OVER (
                            PARTITION BY md5({_NORMALIZED})
                            ORDER BY doc_id ASC
                        ) AS rn
                 FROM gated
             ) WHERE rn = 1
+        )"""
+
+
+def _gate_dedup_ctes(
+    src: str = "input", cols: str = "doc_id, source, text, n_tokens"
+) -> str:
+    """``gated`` (gate over ``src``, with the token count) then ``uniq``."""
+    from .corpus_ext import _TOKS
+
+    return f"""gated AS (
+            SELECT doc_id, source, text,
+                   CAST(len({_TOKS}) AS INTEGER) AS n_tokens
+            FROM {src}
+            WHERE {_gate_predicate()}
         ),
-        {_winnow_fps_ctes(_ROBUST_K, _ROBUST_W, "committed", "c")},
-        {_winnow_fps_ctes(_ROBUST_K, _ROBUST_W, "uniq", "b")},
+        {_exact_dedup_cte(cols)}"""
+
+
+def _components_ctes(pairs: str, src: str) -> str:
+    """``edges`` / ``reach`` / ``losers`` / ``kept``: recursive min-label
+    connected components over the ``pairs`` CTE's (id_a, id_b), then
+    ``src`` minus every non-root member."""
+    return f"""edges AS (
+            SELECT id_a AS src, id_b AS dst FROM {pairs}
+            UNION
+            SELECT id_b, id_a FROM {pairs}
+        ),
+        reach(id, lbl) AS (
+            SELECT src, src FROM edges
+            UNION
+            SELECT e2.src, r.lbl FROM edges e2 JOIN reach r ON e2.dst = r.id
+        ),
+        losers AS (
+            SELECT id FROM (
+                SELECT id, min(lbl) AS component FROM reach GROUP BY id
+            ) WHERE id <> component
+        ),
+        kept AS (
+            SELECT doc_id, source, n_tokens FROM {src}
+            WHERE doc_id NOT IN (SELECT id FROM losers)
+        )"""
+
+
+def _against_index_ctes(committed: str, batch: str, hits: str) -> str:
+    """The winnow against-index decision: plain-winnow fingerprint sets of
+    the ``committed`` and ``batch`` sources (``cfps`` / ``bfps``),
+    candidates sharing >= 1 fingerprint below the COMBINED
+    document-frequency cap, then the FULL-set verify (value-exact — the
+    winnow_dedup_against_index contract). Ends in ``hits (doc_id)``: the
+    batch docs with a verified committed match."""
+    return f"""{_winnow_fps_ctes(_ROBUST_K, _ROBUST_W, committed, "c")},
+        {_winnow_fps_ctes(_ROBUST_K, _ROBUST_W, batch, "b")},
         iheavy AS (
             SELECT f FROM (
                 SELECT doc_id, unnest(fps) AS f FROM cfps
@@ -438,7 +552,7 @@ def _corpus_build_incremental_oracle(
               ON b.f = c.f
             WHERE b.f NOT IN (SELECT f FROM iheavy)
         ),
-        idx_hits AS (
+        {hits} AS (
             SELECT DISTINCT bid AS doc_id FROM (
                 SELECT x.bid,
                        CAST(len(list_intersect(bf.fps, cf.fps)) AS DOUBLE)
@@ -449,35 +563,17 @@ def _corpus_build_incremental_oracle(
                 JOIN bfps bf ON bf.doc_id = x.bid
                 JOIN cfps cf ON cf.doc_id = x.cid
             ) WHERE jac >= {_WINNOW_BUILD_THRESHOLD}
-        ),
-        uniq2 AS (
-            SELECT doc_id, source, text, n_tokens FROM uniq
-            WHERE doc_id NOT IN (SELECT doc_id FROM idx_hits)
-        ),
-        {_winnow_pairs_ctes(_ROBUST_K, _ROBUST_W, _WINNOW_BUILD_THRESHOLD,
-                            _WINNOW_BUILD_MAX_DF, src="uniq2")},
-        edges AS (
-            SELECT id_a AS src, id_b AS dst FROM win_pairs
-            UNION
-            SELECT id_b, id_a FROM win_pairs
-        ),
-        reach(id, lbl) AS (
-            SELECT src, src FROM edges
-            UNION
-            SELECT e2.src, r.lbl FROM edges e2 JOIN reach r ON e2.dst = r.id
-        ),
-        losers AS (
-            SELECT id FROM (
-                SELECT id, min(lbl) AS component FROM reach GROUP BY id
-            ) WHERE id <> component
-        ),
-        kept AS (
-            SELECT doc_id, source, n_tokens FROM uniq2
-            WHERE doc_id NOT IN (SELECT id FROM losers)
-        ),
-        quota AS (
-            SELECT doc_id, source, n_tokens FROM (
-                SELECT doc_id, source, n_tokens,
+        )"""
+
+
+def _pack_ctes(src: str, cols: str = "doc_id, source, n_tokens") -> str:
+    """``quota`` / ``pos`` / ``packed`` plus the final SELECT: the
+    '|'-salted per-source quota hash, the ':'-seeded permutation hash and
+    the running-total sequence coordinates over ``src``, carrying
+    ``cols``."""
+    return f"""quota AS (
+            SELECT {cols} FROM (
+                SELECT {cols},
                        row_number() OVER (
                            PARTITION BY source
                            ORDER BY CAST(('0x' || substr(md5(
@@ -486,11 +582,11 @@ def _corpus_build_incremental_oracle(
                                     ), 1, 15)) AS BIGINT) ASC,
                                     doc_id ASC
                        ) AS _rk
-                FROM kept
+                FROM {src}
             ) WHERE _rk <= {_MINI_QUOTA}
         ),
         pos AS (
-            SELECT doc_id, source, n_tokens,
+            SELECT {cols},
                    CAST(row_number() OVER (ORDER BY h, doc_id) - 1
                         AS BIGINT) AS position
             FROM (
@@ -501,14 +597,115 @@ def _corpus_build_incremental_oracle(
             )
         ),
         packed AS (
-            SELECT doc_id, source, n_tokens, position,
+            SELECT {cols}, position,
                    SUM(n_tokens) OVER (ORDER BY position
                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                    - n_tokens AS start
             FROM pos
         )
-        SELECT doc_id, source, n_tokens, position,
+        SELECT {cols}, position,
                CAST(floor(start / {_MINI_BLOCK}) AS BIGINT) AS seq_id,
                CAST(start % {_MINI_BLOCK} AS BIGINT) AS seq_offset
-        FROM packed
+        FROM packed"""
+
+
+def _corpus_build_incremental_oracle(
+    committed_pred: str = "doc_id % 5 = 4",
+) -> str:
+    # the _corpus_build_winnow_oracle chain with the AGAINST-INDEX stage
+    # spliced between exact dedup and the in-batch pair tier.
+    # ``committed_pred`` parameterizes the committed slice so round-14's
+    # takedown capstone replays the SAME chain over the REDUCED
+    # committed set.
+    return f"""
+        WITH RECURSIVE {_near_input_cte()},
+        committed AS (
+            SELECT doc_id, text FROM documents
+            WHERE {committed_pred} AND text IS NOT NULL
+        ),
+        {_gate_dedup_ctes()},
+        {_against_index_ctes("committed", "uniq", "idx_hits")},
+        uniq2 AS (
+            SELECT doc_id, source, text, n_tokens FROM uniq
+            WHERE doc_id NOT IN (SELECT doc_id FROM idx_hits)
+        ),
+        {_winnow_pairs_ctes(_ROBUST_K, _ROBUST_W, _WINNOW_BUILD_THRESHOLD,
+                            _WINNOW_BUILD_MAX_DF, src="uniq2")},
+        {_components_ctes("win_pairs", "uniq2")},
+        {_pack_ctes("kept")}
     """
+
+
+# --- index-audit scaffold (rounds 11-15) ---------------------------------
+
+
+@contextmanager
+def _temp_index(prefix: str) -> Iterator[str]:
+    """A per-call temp directory for an audit's persisted index, removed
+    when the block exits. A returned frame that still reads the index
+    must be checkpointed (or collected) inside the block."""
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _centroid_frame(spark: SparkSession, emb: DataFrame) -> DataFrame:
+    """The label-mean IVF centroids of ``emb`` collected once into a
+    one-slice local frame (``io.local_rows_of`` gives the rows back)."""
+    from .corpus_ext import _ivf_centroids
+
+    return local_frame(
+        spark, _ivf_centroids(emb).collect(),
+        "cell int, centroid array<double>",
+    )
+
+
+def _commit_winnow_slice(docs: DataFrame, path: str) -> DataFrame:
+    """The committed corpus of the winnow-index audits — the
+    ``doc_id % 5 == 4`` rows of the documents frame ``docs`` that have
+    text — written as a positioned winnow index at ``path`` (a rebuild
+    writes it again); returns the slice."""
+    from ..operators import dedup
+
+    committed = docs.filter(
+        (F.col("doc_id") % 5 == 4) & F.col("text").isNotNull()
+    ).select("doc_id", "text")
+    dedup.winnow_pos_index_write(
+        committed, path, k=_ROBUST_K, w=_ROBUST_W, portable=True
+    )
+    return committed
+
+
+def _winnow_take_down(
+    spark: SparkSession, path: str, removed: DataFrame
+) -> "tuple[dict, int, bool]":
+    """Tombstone ``removed``'s doc_ids in the winnow index at ``path``.
+    Returns the remove report, the live docs after, and whether every
+    removed doc that was fingerprinted left the live view (the report's
+    exact witness equals the live-doc delta)."""
+    from ..operators import dedup
+
+    docs_before = dedup.winnow_index_stats(spark, path)["docs"]
+    rep = dedup.winnow_index_remove(spark, path, removed.select("doc_id"))
+    docs_after = dedup.winnow_index_stats(spark, path)["docs"]
+    witnessed = (
+        rep["matched_live"] == docs_before - docs_after
+        and rep["requested"] == removed.count()
+    )
+    return rep, docs_after, witnessed
+
+
+def _winnow_corpus_build(
+    spark: SparkSession, sf: str, dedup_index: "str | None" = None
+) -> DataFrame:
+    """The winnow-tier corpus build over ``_near_docs`` (optionally
+    against the committed index at ``dedup_index``): the packed
+    manifest."""
+    from .build_corpus import build_corpus
+
+    return build_corpus(
+        _near_docs(spark, sf), cfg=_audit_build_config(**_WINNOW_NEAR),
+        dedup_index=dedup_index,
+    ).select(*_MANIFEST_COLS)

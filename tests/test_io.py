@@ -532,3 +532,22 @@ def test_apply_runtime_confs_swallows_only_refused_keys(spark):
     assert refused.conf.seen == list(RUNTIME_CONFS)
     with pytest.raises(RuntimeError, match="unrelated"):
         apply_runtime_confs(_Session(RuntimeError("unrelated")))
+
+
+def test_events_load_leaves_the_session_zone_alone(spark, sf_small):
+    """``catalog.load`` only reads: loading ``events`` keeps the caller's
+    session zone (the confs are applied at the session boundary) and
+    still yields a session-zone TIMESTAMP ``ts``."""
+    from pyspark.sql import types as T
+
+    from bigdata_usaspending_spark.catalog import load
+
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "America/Los_Angeles")
+        ev = load(spark, sf_small, "events")
+        assert spark.conf.get(key) == "America/Los_Angeles"
+        assert isinstance(ev.schema["ts"].dataType, T.TimestampType)
+    finally:
+        spark.conf.set(key, old)

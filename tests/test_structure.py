@@ -22,6 +22,10 @@
   ``_prep`` in the plan modules, ``apply_runtime_confs(`` called only by
   the session factory, the registry wrapper and the driver entry, and
   ``SparkSession.builder`` only in ``session.py``.
+- The corpus-build audits share one recipe in ``plans/oracle_lib``: one
+  audit ``CorpusBuildConfig``, one pack tail (``quota``), one
+  against-index decision (``iheavy``) and one temp-index lifetime
+  (``tempfile.mkdtemp``) across ``plans/``; ``catalog.py`` sets no conf.
 - Every package name ``scripts/*.py`` and ``bench.py`` import or reach
   through an attribute exists (nothing in the default test run executes
   them, so a rename would otherwise break them silently).
@@ -271,3 +275,31 @@ def test_one_session_builder():
         if "SparkSession.builder" in p.read_text(encoding="utf-8")
     ]
     assert builders == [f"{_PKG_NAME}/session.py"]
+
+
+def _plans_count(needle: str, skip: str = "") -> int:
+    return sum(
+        p.read_text(encoding="utf-8").count(needle)
+        for p in (_PKG / "plans").glob("*.py")
+        if p.name != skip
+    )
+
+
+def test_one_audit_corpus_build_config():
+    assert _plans_count("CorpusBuildConfig(", skip="build_corpus.py") == 1
+
+
+def test_one_corpus_build_pack_replay():
+    assert _plans_count("quota AS (") == 1
+
+
+def test_one_against_index_decision_replay():
+    assert _plans_count("iheavy AS (") == 1
+
+
+def test_one_temp_index_lifetime():
+    assert _plans_count("tempfile.mkdtemp(") == 1
+
+
+def test_catalog_sets_no_session_conf():
+    assert "spark.conf.set(" not in _source("catalog.py")

@@ -1018,10 +1018,9 @@ def test_winnow_xxhash64_kernel_matches_hof_expression(spark, sf_small):
     settings, real documents, and the normalization/unicode corner set."""
     from pyspark.sql import functions as F
 
-    from bigdata_usaspending_spark.operators.text import (
-        _winnow_hof_expression,
-        winnow_fingerprints,
-    )
+    from bigdata_usaspending_spark.operators.text import winnow_fingerprints
+
+    from _text_reference import _winnow_hof_expression
 
     rows = [
         (1, None), (2, ""), (3, "short"),
