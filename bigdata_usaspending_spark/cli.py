@@ -663,7 +663,7 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
 
         from . import index_store
-        from .io import local_frame
+        from .io import local_frame, model_row_count
         from .operators import similarity
 
         if args.action in ("build", "add", "stream-add") and not args.vectors:
@@ -778,7 +778,8 @@ def main(argv: list[str] | None = None) -> int:
             )
             # localize once: refinement lineage re-scans the corpus per
             # consumer otherwise (the index-write pattern)
-            cents = local_frame(spark, cents.collect(), cents.schema)
+            cell_rows = cents.collect()
+            cents = local_frame(spark, cell_rows, cents.schema)
             if args.pq:
                 similarity.ivf_pq_index_build(
                     df, cents, args.index, args.m, args.kc, args.train_cap,
@@ -790,12 +791,14 @@ def main(argv: list[str] | None = None) -> int:
                     df, cents, args.index,
                     id_col=args.id_col, vec_col=args.vec_col,
                 )
-            n = similarity._read_index_vectors(spark, args.index).count()
+            # a fresh build has no tombstones (index_store.clear_on_rebuild),
+            # so the footer row count is the live vector count
+            n = model_row_count(spark, f"{args.index}/vectors.parquet")
             kind = "OPQ-IVF-PQ" if args.opq else (
                 "IVF-PQ" if args.pq else "IVF"
             )
             print(
-                f"built {kind} index: {n} vectors / {cents.count()} cells "
+                f"built {kind} index: {n} vectors / {len(cell_rows)} cells "
                 f"-> {args.index}"
             )
             return 0

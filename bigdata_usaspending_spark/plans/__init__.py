@@ -4,8 +4,8 @@ Session confs are applied at one boundary: every callable ``all_queries()``
 returns runs ``session.apply_runtime_confs(spark)`` before its body, so a
 registry query gives the same result on a bare ``SparkSession`` as on one
 from ``session.get_spark``. The plan functions themselves do not apply
-confs; a caller that uses one directly (the tests, the ``stress_*``
-scripts) passes a ``get_spark`` session.
+confs; a caller that uses one directly (the tests, ``scripts/stress.py``)
+passes a ``get_spark`` session.
 """
 
 from __future__ import annotations

@@ -13,6 +13,10 @@ defaults:
   host-independent.
 - shuffle partitions sized for the local harness; on a real cluster AQE
   coalesces from a deliberately-high initial number.
+- the package's root on the Python workers' path: UDF and ``mapInPandas``
+  closures reach package functions by module reference, so a worker must
+  be able to import the package even when the driver found it only
+  through its own ``sys.path``.
 """
 
 from __future__ import annotations
@@ -23,6 +27,9 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# The directory holding the package, as a Python-path entry.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Runtime-settable confs every entry point should agree on. Kept separate so
 # they can also be applied to an externally-provided session (the driver
@@ -84,4 +91,17 @@ def get_spark(app_name: str = "bigdata-usaspending-spark") -> SparkSession:
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)
-    return apply_runtime_confs(builder.getOrCreate())
+    spark = builder.getOrCreate()
+    _ship_package_root(spark)
+    return apply_runtime_confs(spark)
+
+
+def _ship_package_root(spark: SparkSession) -> None:
+    """Put ``PACKAGE_ROOT`` first on the PYTHONPATH the context hands
+    every Python function it ships (``SparkContext.environment``, seeded
+    from ``spark.executorEnv.*``); entries already there are kept, and
+    Spark merges the result with the workers' own path."""
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([PACKAGE_ROOT, *paths])

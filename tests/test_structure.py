@@ -29,6 +29,9 @@
 - Every package name ``scripts/*.py`` and ``bench.py`` import or reach
   through an attribute exists (nothing in the default test run executes
   them, so a rename would otherwise break them silently).
+- One stress harness (``scripts/stress.py``): one warm-trial timer, one
+  copy-dataset builder, one exponent computation, no stream runner of
+  its own, and every row the ten scripts it replaced measured.
 """
 
 from __future__ import annotations
@@ -303,3 +306,90 @@ def test_one_temp_index_lifetime():
 
 def test_catalog_sets_no_session_conf():
     assert "spark.conf.set(" not in _source("catalog.py")
+
+
+# Row names of the ten scripts ``scripts/stress.py`` replaced.
+_OLD_STRESS_ROWS = {
+    "stress_sf1": [
+        "dedup_exact", "dedup_minhash_lsh", "dedup_simhash", "near_dedup_pipeline",
+        "dedup_embedding_blocked", "ann_brute_force", "ann_rp_lsh", "ann_quantized",
+        "ann_pq", "knn_join", "ann_ivf_knn_join", "maxsim", "repeated_passages",
+        "heavy_hitter_tokens", "cms_token_counts", "dedup_incremental_minhash",
+        "fuzzy_pairs", "fuzzy_pairs_k2", "semantic_decontaminate", "quota_mix",
+        "psi_drift", "split_grouped", "contamination_report",
+        "contamination_report_ngram", "skew_profile", "commonness_scorer",
+        "training_pipeline_v2", "bm25_topk", "bm25_batch", "bm25_inverted",
+        "lm_perplexity", "dedup_clusters_cc", "hll_distinct", "interval_overlap",
+        "hybrid_rrf", "rerank_topk", "dsir_resample", "rrf_grouped_ensemble",
+        "langid_trained", "training_pipeline_v3", "url_dedup", "rerank_trained",
+        "corpus_build_mini", "corpus_datasheet", "fuzzy_k3_passjoin", "ann_ivf_pq",
+        "sequence_manifest",
+    ],
+    "stress_sketches": ["tdigest_groups", "dedup_incremental_bloom"],
+    "stress_sf10": [
+        "dedup_exact", "ann_brute_force", "ann_quantized", "maxsim",
+        "heavy_hitter_tokens", "semantic_decontaminate", "bm25_topk", "bm25_batch",
+        "bm25_inverted", "lm_perplexity", "hll_distinct", "hybrid_rrf", "rerank_topk",
+        "dsir_resample", "rrf_grouped_ensemble", "langid_trained",
+        "training_pipeline_v3",
+    ],
+    "stress_ivfpq": [
+        "centroids", "assign", "residual", "pq_train", "pq_train_capped", "encode",
+        "index_write", "probe", "probe_live",
+    ],
+    "stress_r12": [
+        "winnow_robust_fold", "winnow_match_spans", "winnow_pairs_capped",
+        "ivfpq_probe_plain", "ivfpq_probe_adc_prune",
+    ],
+    "stress_r12b": [
+        "winnow_spans_incremental_probe", "ivfpq_probe_adaptive",
+        "_adaptive_cells_scanned",
+    ],
+    "stress_r13": [
+        "winnow_robust_fold", "winnow_spans_probe", "winnow_spans_probe_pairs",
+        "ivfpq_probe_fragmented", "ivfpq_probe_compacted", "ivfpq_probe_adaptive",
+    ],
+    "stress_r14": [
+        "against_index_dedup", "against_index_dedup_survivors",
+        "corpus_build_incremental", "winnow_remove_sec", "against_index_tombstoned",
+        "against_index_after_compact", "ivf_probe", "ivf_probe_tombstoned",
+        "ivf_probe_after_compact",
+    ],
+}
+# Entries that were counts or one-shot setup timings, not timed rows: the
+# harness prints them with their row (n_<scale>, the probe note, the
+# remove line).
+_FOLDED_STRESS_ENTRIES = {
+    "_adaptive_cells_scanned", "winnow_spans_probe_pairs",
+    "against_index_dedup_survivors", "winnow_remove_sec",
+}
+
+
+def _stress_source() -> str:
+    return (_REPO / "scripts" / "stress.py").read_text(encoding="utf-8")
+
+
+def test_one_stress_harness():
+    assert sorted(p.name for p in _REPO.glob("scripts/stress*.py")) == ["stress.py"]
+    src = _stress_source()
+    assert src.count("for _ in range(2)") == 1  # the warm-trial timer
+    assert src.count(".crossJoin(") == 1  # the copy builder
+    exponents = [
+        node for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call) and getattr(node.func, "attr", "").startswith("log")
+    ]
+    assert len(exponents) == 1
+    assert ".foreachBatch(" not in src
+
+
+def test_stress_families_keep_every_old_row():
+    from test_stress import load_stress
+
+    families = load_stress().FAMILIES
+    names = {r.name for f in families.values() for r in getattr(f, "rows", ())}
+    old = {n for rows in _OLD_STRESS_ROWS.values() for n in rows}
+    assert names == old - _FOLDED_STRESS_ENTRIES
+    assert [r.name for r in families["sf10"].rows] == _OLD_STRESS_ROWS["stress_sf10"]
+    assert families["sf10"].scales == (1, 100)
+    assert {r.name for r in families["sf1"].rows} == {
+        *_OLD_STRESS_ROWS["stress_sf1"], *_OLD_STRESS_ROWS["stress_sketches"]}

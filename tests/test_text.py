@@ -1014,7 +1014,7 @@ def test_winnow_xxhash64_kernel_matches_hof_expression(spark, sf_small):
     """Round 16: the PRODUCTION (xxhash64) winnowing path now runs the
     numpy-vectorized Arrow kernel — it must be value-identical to the
     relational HOF chain it replaced (kept verbatim as
-    text._winnow_hof_expression), across both selection modes, two (k, w)
+    tests/_text_reference.py), across both selection modes, two (k, w)
     settings, real documents, and the normalization/unicode corner set."""
     from pyspark.sql import functions as F
 
