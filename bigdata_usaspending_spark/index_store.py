@@ -46,6 +46,7 @@ from .io import (
     local_rows_of,
     model_distinct_count,
     model_row_count,
+    parquet_read_schema,
     write_model_parquet,
 )
 
@@ -79,7 +80,7 @@ def read(spark, path: str, component: str) -> DataFrame:
     only, so a healthy read costs no extra filesystem call."""
     target = f"{path}/{component}"
     try:
-        return spark.read.parquet(target)
+        return _scan(spark, target)
     except AnalysisException as err:
         leftover = hadoop_swap_leftover(spark, target)
         if leftover is None:
@@ -90,6 +91,15 @@ def read(spark, path: str, component: str) -> DataFrame:
             "the index (ann_index_compact / winnow_index_compact, or the "
             "CLI's compact action) to restore it."
         ) from err
+
+
+def _scan(spark, target: str) -> DataFrame:
+    """``spark.read.parquet(target)`` with the schema read from a file
+    footer on local filesystems (io.parquet_read_schema), so the read
+    schedules no schema-inference job; elsewhere Spark infers it."""
+    schema = parquet_read_schema(spark, target)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(target)
 
 
 def read_live(spark, path: str, component: str, prepare=None) -> DataFrame:
@@ -104,7 +114,7 @@ def read_live(spark, path: str, component: str, prepare=None) -> DataFrame:
         data = prepare(data)
     if not has(spark, path, TOMBSTONES):
         return data
-    tomb = spark.read.parquet(f"{path}/{TOMBSTONES}")
+    tomb = _scan(spark, f"{path}/{TOMBSTONES}")
     tcol = tomb.columns[0]
     return data.join(tomb.select(tcol).distinct(), on=tcol, how="left_anti")
 
@@ -185,7 +195,7 @@ def refuse_tombstoned(
     re-add."""
     if not has(spark, path, TOMBSTONES):
         return
-    tomb = spark.read.parquet(f"{path}/{TOMBSTONES}")
+    tomb = _scan(spark, f"{path}/{TOMBSTONES}")
     tcol = tomb.columns[0]
     n_hit = (
         df.select(F.col(id_col).alias(tcol))
@@ -277,9 +287,9 @@ def compact(spark, path: str, component: str, verb: str, rewrite) -> dict:
         if not has(spark, path, TOMBSTONES):
             n_physical = n_rows = model_row_count(spark, target)
         else:
-            tomb = spark.read.parquet(f"{path}/{TOMBSTONES}")
+            tomb = _scan(spark, f"{path}/{TOMBSTONES}")
             tcol = tomb.columns[0]
-            marked = spark.read.parquet(target).join(
+            marked = _scan(spark, target).join(
                 tomb.select(tcol).distinct().withColumn("_t", F.lit(1)),
                 on=tcol, how="left",
             )

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -174,6 +175,105 @@ def read_model_rows(spark: SparkSession, path: str, what: str, max_rows: int):
             "a driver-side model load needs bounded state"
         )
     return rows, df.schema
+
+
+def _footer_spark_schema(file: str):
+    """The Spark schema one parquet file's footer describes, as Spark's
+    own inference reads it: the schema Spark stored in the footer when
+    Spark wrote the file, else the arrow schema of a pyarrow-written
+    file when every field is a plain atomic type or an array of one.
+    None for anything else (let Spark infer)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import (
+        ArrayType, AtomicType, DateType, DecimalType, StructType,
+        TimestampNTZType, TimestampType,
+    )
+
+    arrow = pq.read_schema(file)
+    stored = (arrow.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if stored is not None:
+        return StructType.fromJson(json.loads(stored))
+    schema = from_arrow_schema(arrow)
+
+    def plain(dt) -> bool:
+        if isinstance(dt, ArrayType):
+            return plain(dt.elementType)
+        return isinstance(dt, AtomicType) and not isinstance(
+            dt, (DateType, DecimalType, TimestampType, TimestampNTZType)
+        )
+
+    return schema if all(plain(f.dataType) for f in schema.fields) else None
+
+
+def _as_nullable(dt):
+    """``dt`` with every field and element nullable — what Spark's file
+    sources report for any schema they read."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
+
+
+def parquet_read_schema(spark: SparkSession, path: str):
+    """The schema ``spark.read.parquet(path)`` would infer, taken
+    driver-side from one file footer, or None to let Spark infer it.
+    Spark's inference is a job of its own (~0.15-0.2 s per read of a
+    small index component); ``spark.read.schema(s).parquet(path)`` with
+    this schema runs none. Local filesystems only. A layout partitioned
+    one level deep by integer values (the ANN ``cell=N`` directories)
+    gets that column appended as ``int``, as Spark's partition type
+    inference gives it; any other layout, an empty component or an
+    unreadable footer returns None."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    local = _driver_local_path(path)
+    if local is None or not os.path.isdir(local):
+        return None
+
+    def visible(d):
+        return [e for e in os.listdir(d) if not e.startswith(("_", "."))]
+
+    entries = visible(local)
+    part = None
+    if any(os.path.isdir(os.path.join(local, e)) for e in entries):
+        # one level of key=<int> directories holding files only; at most
+        # 9 digits, so every value fits the int Spark infers
+        keys = {e.partition("=")[0] for e in entries}
+        if len(keys) != 1 or spark.conf.get(
+            "spark.sql.sources.partitionColumnTypeInference.enabled", "true"
+        ).lower() != "true" or not all(
+            re.fullmatch(r"[^=]+=-?[0-9]{1,9}", e)
+            and os.path.isdir(os.path.join(local, e))
+            and not any(
+                os.path.isdir(os.path.join(local, e, f))
+                for f in visible(os.path.join(local, e))
+            )
+            for e in entries
+        ):
+            return None
+        part = StructField(keys.pop(), IntegerType(), True)
+    files = _arrow_table_files(local)
+    if not files:
+        return None
+    try:
+        schema = _footer_spark_schema(files[0])
+    except _arrow_fallback_errors():
+        return None
+    if schema is None or (part is not None and part.name in schema.names):
+        return None
+    schema = _as_nullable(schema)
+    return schema if part is None else StructType([*schema.fields, part])
 
 
 def model_row_count(spark: SparkSession, path: str) -> int:

@@ -29,6 +29,8 @@ SURVEY.md §7.4 extension — first-class 100-TB component:
   ivf_pq_index_topk, ann_index_search_many's loop, the in-memory
   ivf_pq_topk) — coarse cells + exact cosine on plain IVF; ADC tables,
   adaptive / adc_prune cell pruning and the exact rerank on IVF-PQ.
+- _adc_shortlist_topk: THE ADC shortlist + exact rerank kernel of every
+  IVF-PQ probe mode and of the flat pq_topk.
 
 Determinism: float32 x float32 products are exact in double (<= 48-bit
 mantissa), and the dot product is a sequential left fold over the array —
@@ -44,6 +46,11 @@ Execution tiers (deliberate, per kernel):
   and flat literal unrolling blows up Py4J build time and codegen compile;
   the numpy kernels replicate the SQL fold order bit-for-bit (see
   _fold_sum_cols) so the DuckDB oracle still hash-matches;
+- one ``mapInPandas`` pass where the per-row work feeds a cut: every
+  PQ / IVF-PQ probe (_adc_shortlist_topk) scores by ADC, keeps each
+  partition's k*rerank best and exact-reranks only those in the same
+  Python pass, then two JVM top-N operators finish the cut — one job
+  per probe, no range-sort sample re-running the Python input;
 - driver-side training on bounded samples (pq_train_driver): quantizer
   codebooks are model state trained on ~1e5-1e6 vectors in production
   regardless of corpus size.
@@ -58,6 +65,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from .. import index_store
 from ..io import local_frame
@@ -1298,82 +1306,20 @@ def pq_topk(
     The m x k query-to-centroid distance table is computed DRIVER-side with
     the same left-fold binary64 arithmetic the JVM fold performed
     (float32 operands widen exactly; (x-y)^2 accumulated left-to-right), so
-    every table entry is bit-identical to the former DataFrame computation —
-    while the ADC pass becomes a single scan job instead of scan + distance
-    aggregation + two broadcasts."""
+    every table entry is bit-identical to the former DataFrame computation.
+    The scan, shortlist and rerank are the IVF-PQ probe's kernel
+    (_adc_shortlist_topk) with the whole frame as one cell: one Python
+    pass, one job on collect. A code past its subspace table raises
+    ValueError; a code on a dropped cell's NaN slot scores NULL, which
+    sorts first."""
     cb_rows = _collect_codebooks(codebooks)
     if dsub is None:
         dsub = len(cb_rows[0][2])
     qvec = _as_qvec(query)
-
-    def _l2sq_py(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
-    dtab = _nest_by_sub(
-        (sub, cell, _l2sq_py(qvec[sub * dsub : (sub + 1) * dsub], centroid))
-        for sub, cell, centroid in cb_rows
+    tables = _adc_tables(_nest_by_sub(cb_rows), qvec, dsub)
+    return _adc_shortlist_topk(
+        encoded, {0: tables}, qvec, k, rerank_factor, id_col, vec_col, None
     )
-    # vectorized ADC: per subspace a dense cell->distance lookup (indexed by
-    # cell ID, so dropped cells simply leave unused NaN slots that no code
-    # references); accumulated sub-ascending — the fold order the relational
-    # aggregate used, elementwise over the batch.
-    lookups = []
-    for sub, ds in dtab:
-        arr = np.full(max(cell for cell, _ in ds) + 1, np.nan)
-        for cell, d in ds:
-            arr[cell] = d
-        lookups.append(arr)
-
-    @F.pandas_udf("double")
-    def _adc(codes: pd.Series) -> pd.Series:
-        if codes.empty:
-            return pd.Series([], dtype=np.float64)
-        c = np.array(codes.tolist(), dtype=np.int64)
-        acc = np.zeros(c.shape[0])
-        for j, arr in enumerate(lookups):
-            cj = c[:, j]
-            # Stale-code guard: codes encoded against a codebook whose tail
-            # cells were later dropped by refinement would index past the
-            # table (IndexError) — fail with a diagnosable message instead.
-            if cj.size and (cj.min() < 0 or cj.max() >= len(arr)):
-                bad = int(cj[(cj < 0) | (cj >= len(arr))][0])
-                raise ValueError(
-                    f"PQ code {bad} out of range for subspace {j} distance "
-                    f"table of {len(arr)} cells — codes were encoded against "
-                    "a different (larger) codebook; re-encode after training"
-                )
-            acc += arr[cj]
-        # In-range codes whose cell was dropped (NaN slot) behave like the
-        # former relational NULL lookup: the distance becomes NULL, which
-        # sorts FIRST under Spark's ASC NULLS FIRST — deliberately surfacing
-        # stale encodings at the head of the candidate list rather than
-        # letting IEEE NaN ordering hide them at the tail.
-        if np.isnan(acc).any():
-            return pd.Series(acc).astype("Float64")
-        return pd.Series(acc)
-
-    q64 = np.array(qvec, dtype=np.float64)
-
-    @F.pandas_udf("double")
-    def _l2sq_to_query(v: pd.Series) -> pd.Series:
-        if v.empty:
-            return pd.Series([], dtype=np.float64)
-        x = np.array(v.tolist(), dtype=np.float64)
-        diff = x - q64[None, :]
-        return pd.Series(_fold_sum_cols(diff * diff))
-
-    candidates = (
-        encoded.select(F.col(id_col), F.col(vec_col), _adc(F.col("codes")).alias("_ad"))
-        .orderBy(F.asc("_ad"), F.asc(id_col))
-        .limit(k * rerank_factor)
-    )
-    reranked = candidates.select(
-        F.col(id_col), _l2sq_to_query(F.col(vec_col)).alias("l2sq")
-    )
-    return reranked.orderBy(F.asc("l2sq"), F.asc(id_col)).limit(k)
 
 
 def random_projection_lsh_neighbors(
@@ -1796,9 +1742,16 @@ def _probe_ann(
     - IVF-PQ: per-cell ADC tables (``_ivf_pq_probe_tables``; every cell
       when adaptive), then the adaptive Best-Bin-First rounds
       (``_adaptive_pruned_tables``) or the adc_prune phase
-      (``_adc_pruned_tables``), then the ADC scan and exact rerank —
-      ``(id, l2sq)``. ``probe_stats`` receives the scanned/pruned
-      cells."""
+      (``_adc_pruned_tables``), then the ADC scan and exact rerank
+      (``_adc_shortlist_topk``) over the kept cells — ``(id, l2sq)``;
+      after the adaptive rounds the scan is first filtered to their
+      shortlist ids. ``probe_stats`` receives the scanned/pruned cells.
+
+    The returned frame is lazy and collects in ONE Spark job: one scan
+    of the kept cells and one Python pass, whose per-partition cut hands
+    the JVM at most ``k*rerank_factor`` rows per scan partition. Only
+    the adc_prune phase-1 and the adaptive rounds run jobs before the
+    frame is returned (one k*rerank-bounded collect each)."""
     if adaptive_nprobe and adc_prune:
         raise ValueError(
             "adaptive_nprobe subsumes adc_prune — pass one or the other"
@@ -1840,9 +1793,11 @@ def _probe_ann(
             cells_ranked=list(cells0), cells_scanned=list(cells0),
             pruned_cells=[], threshold=None,
         )
-    return _ivf_pq_rerank(
-        scan(list(cell_tables)), cell_tables, short_ids, qvec, k,
-        rerank_factor, id_col, vec_col, cell_col,
+    cands = scan(list(cell_tables))
+    if short_ids is not None:
+        cands = cands.filter(F.col(id_col).isin(short_ids))
+    return _adc_shortlist_topk(
+        cands, cell_tables, qvec, k, rerank_factor, id_col, vec_col, cell_col
     )
 
 
@@ -1880,62 +1835,160 @@ def _ivf_pq_probe_tables(cent_rows, cb_rows, qvec, nprobe, dsub):
     scored.sort(key=lambda t: (-t[1], t[0]))
     probed = scored[: max(1, int(nprobe))]
     nested = _nest_by_sub(cb_rows)
-
-    def _tables_for(qr):
-        lookups = []
-        for sub, cents in nested:
-            ds = []
-            for cell, centroid in cents:
-                acc = 0.0
-                for x, y in zip(qr[sub * dsub : (sub + 1) * dsub], centroid):
-                    acc = acc + (x - y) * (x - y)
-                ds.append((cell, acc))
-            arr = np.full(max(c for c, _ in ds) + 1, np.nan)
-            for cell, d in ds:
-                arr[cell] = d
-            lookups.append(arr)
-        return lookups
-
     return {
-        c: _tables_for([qx - cx for qx, cx in zip(qvec, cv)])
+        c: _adc_tables(nested, [qx - cx for qx, cx in zip(qvec, cv)], dsub)
         for c, _, cv in probed
     }
 
 
+def _adc_tables(nested, qr, dsub) -> list:
+    """The per-sub ADC lookup arrays of one query (or query residual)
+    ``qr`` against the ``_nest_by_sub`` codebook rows: slot ``cell`` of
+    array ``sub`` holds the left-fold squared L2 between ``qr``'s
+    sub-vector and that codebook centroid. A cell missing from the
+    codebook (dropped by refinement) leaves a NaN slot."""
+    lookups = []
+    for sub, cents in nested:
+        ds = []
+        for cell, centroid in cents:
+            acc = 0.0
+            for x, y in zip(qr[sub * dsub : (sub + 1) * dsub], centroid):
+                acc = acc + (x - y) * (x - y)
+            ds.append((cell, acc))
+        arr = np.full(max(c for c, _ in ds) + 1, np.nan)
+        for cell, d in ds:
+            arr[cell] = d
+        lookups.append(arr)
+    return lookups
+
+
+def _adc_distances(c, cl, cell_tables: dict):
+    """ADC distances of a batch: ``c`` is the (n, m) code matrix, ``cl``
+    each row's cell, ``cell_tables`` ``{cell: per-sub lookup arrays}``.
+    A row's distance is its cell's table entries selected by its codes,
+    folded sub-ascending. A code past its table raises ValueError (codes
+    encoded against a larger codebook); a NaN slot yields NaN, which the
+    callers hand to Spark as NULL."""
+    acc = np.zeros(c.shape[0])
+    for j in range(c.shape[1]):
+        cj = c[:, j]
+        for cc, lookups in cell_tables.items():
+            mask = cl == cc
+            if not mask.any():
+                continue
+            arr = lookups[j]
+            sel = cj[mask]
+            if sel.min() < 0 or sel.max() >= len(arr):
+                bad = int(sel[(sel < 0) | (sel >= len(arr))][0])
+                raise ValueError(
+                    f"PQ code {bad} out of range for subspace {j} distance "
+                    f"table of {len(arr)} cells — codes were encoded against "
+                    "a different (larger) codebook; re-encode after training"
+                )
+            acc[mask] += arr[sel]
+    return acc
+
+
 def _adc_kernel(cell_tables: dict):
-    """The Arrow ADC scan kernel over ``{cell: per-sub lookup arrays}``
-    tables: approximate distance = the row's cell-table entries selected
-    by its codes, folded sub-ascending. Shared by the rerank path and the
-    adc-prune phase-1 threshold scan."""
+    """The ADC column as a pandas UDF over ``(codes, cell)`` — the
+    driver-collected threshold scans of the adc_prune phase and the
+    adaptive rounds (_adc_distances; NaN → NULL)."""
 
     @F.pandas_udf("double")
     def _adc(codes: pd.Series, cell: pd.Series) -> pd.Series:
         if codes.empty:
             return pd.Series([], dtype=np.float64)
-        c = np.array(codes.tolist(), dtype=np.int64)
-        cl = cell.to_numpy()
-        acc = np.zeros(c.shape[0])
-        for j in range(c.shape[1]):
-            cj = c[:, j]
-            for cc, lookups in cell_tables.items():
-                mask = cl == cc
-                if not mask.any():
-                    continue
-                arr = lookups[j]
-                sel = cj[mask]
-                if sel.size and (sel.min() < 0 or sel.max() >= len(arr)):
-                    bad = int(sel[(sel < 0) | (sel >= len(arr))][0])
-                    raise ValueError(
-                        f"PQ code {bad} out of range for subspace {j} "
-                        f"table of {len(arr)} cells — re-encode after "
-                        "training"
-                    )
-                acc[mask] += arr[sel]
+        acc = _adc_distances(
+            np.array(codes.tolist(), dtype=np.int64), cell.to_numpy(),
+            cell_tables,
+        )
         if np.isnan(acc).any():
             return pd.Series(acc).astype("Float64")
         return pd.Series(acc)
 
     return _adc
+
+
+def _adc_shortlist_topk(
+    cands: DataFrame,
+    cell_tables: dict,
+    qvec: list,
+    k: int,
+    rerank_factor: int,
+    id_col: str,
+    vec_col: str,
+    cell_col: "str | None",
+) -> DataFrame:
+    """THE ADC shortlist and exact rerank of every IVF-PQ probe mode and
+    of the flat ``pq_topk`` (one cell, ``cell_col=None``): the top-k of
+    ``cands`` by exact squared L2 among its ``need = k*rerank_factor``
+    best rows by ADC distance. Returns ``(id_col, l2sq)`` ascending.
+
+    One ``mapInPandas`` pass over ``cands``; per partition it scores
+    every row by ADC (_adc_distances), keeps that partition's ``need``
+    best under Spark's own order — ``(_ad ASC NULLS FIRST, id ASC)``, a
+    NaN table slot being the NULL that sorts first — and computes the
+    exact left-fold L2 (_fold_sum_cols) of those rows only. The global
+    cut is two JVM top-N operators over at most ``need`` rows per scan
+    partition: the ``need`` best by ``(_ad, id)`` (the same rows a
+    global sort would keep, since each of them is within its own
+    partition's ``need`` best), then the ``k`` best by ``(l2sq, id)``.
+    Both plan as ``TakeOrderedAndProject``, so a collect is one Spark
+    job with no range-partitioning sample and the Python pass runs once.
+    (An ``orderBy().limit()`` placed below a Python UDF projection plans
+    as a global range sort instead, whose sampling job runs the UDF's
+    input a second time — the shape this kernel replaced.)"""
+    need = k * rerank_factor
+    q64 = np.array(qvec, dtype=np.float64)
+    cols = [F.col(id_col), F.col(vec_col), F.col("codes")]
+    if cell_col is not None:
+        cols.append(F.col(cell_col).cast("long").alias("_cell"))
+    out_schema = StructType([
+        cands.schema[id_col],
+        StructField("_ad", DoubleType()),
+        StructField("l2sq", DoubleType()),
+    ])
+
+    def _shortlist(batches):
+        top = None
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            cl = (
+                pdf["_cell"].to_numpy() if cell_col is not None
+                else np.zeros(len(pdf), dtype=np.int64)
+            )
+            ad = _adc_distances(
+                np.array(pdf["codes"].tolist(), dtype=np.int64), cl,
+                cell_tables,
+            )
+            scored = pd.DataFrame(
+                {id_col: pdf[id_col], "_ad": ad, "_v": pdf[vec_col]}
+            )
+            if top is not None:
+                scored = pd.concat([top, scored], ignore_index=True)
+            top = scored.sort_values(
+                ["_ad", id_col], na_position="first", kind="mergesort"
+            ).head(need)
+        if top is None or top.empty:
+            return
+        diff = np.array(top["_v"].tolist(), dtype=np.float64) - q64[None, :]
+        ad = pd.Series(top["_ad"].to_numpy())
+        yield pd.DataFrame({
+            id_col: top[id_col].to_numpy(),
+            "_ad": ad.astype("Float64") if ad.isna().any() else ad,
+            "l2sq": _fold_sum_cols(diff * diff),
+        })
+
+    return (
+        cands.select(*cols)
+        .mapInPandas(_shortlist, out_schema)
+        .orderBy(F.asc("_ad"), F.asc(id_col))
+        .limit(need)
+        .orderBy(F.asc("l2sq"), F.asc(id_col))
+        .limit(k)
+        .select(id_col, "l2sq")
+    )
 
 
 def _adc_pruned_tables(
@@ -2046,11 +2099,11 @@ def _adaptive_pruned_tables(
     under the (adc, id) total order IS the global ADC shortlist over
     every scanned cell (a row in the global top-need always ranks
     within its own round's top-need under the same order), so the
-    caller's closing pass is an id-semi-joined EXACT rerank only — the
-    full second ADC scan the two-phase adc_prune form pays was already
-    done by the rounds. ``shortlist_ids`` is None on the NaN degrade
-    (no sound merge; fall back to the classic ADC+rerank over the
-    scanned tables)."""
+    caller's closing pass filters the scan to those ids (an ``isin``
+    predicate, no job of its own) before the one shortlist kernel:
+    every surviving row is within the cut, so the pass is the exact
+    rerank. ``shortlist_ids`` is None on the NaN degrade (no sound
+    merge; the kernel runs over every scanned cell)."""
     cells = [int(c) for c in cell_tables]
     need = k * rerank_factor
     lb = {c: float(sum(np.nanmin(a) for a in cell_tables[c])) for c in cells}
@@ -2121,58 +2174,6 @@ def _adaptive_pruned_tables(
     if degraded:
         return tables, None
     return tables, [i for _, i in best]
-
-
-def _ivf_pq_rerank(
-    cands: DataFrame,
-    cell_tables: dict,
-    short_ids: "list | None",
-    qvec: list,
-    k: int,
-    rerank_factor: int,
-    id_col: str,
-    vec_col: str,
-    cell_col: str,
-) -> DataFrame:
-    """Steps 3–4 of the IVF-PQ query path over an already cell-pruned
-    candidate frame: the ``k*rerank_factor`` ADC shortlist (the Arrow
-    ADC scan, _adc_kernel), re-scored by exact squared L2 on the original
-    vectors; top-k ascending. When the adaptive rounds already produced
-    the exact ADC shortlist (``short_ids``), the candidates are
-    semi-joined down to those ids (k*rerank-bounded broadcast) instead —
-    no second ADC scan."""
-    if short_ids is not None:
-        ids_df = local_frame(
-            cands.sparkSession, [(i,) for i in short_ids],
-            cands.select(id_col).schema,
-        )
-        shortlist = cands.join(F.broadcast(ids_df), on=id_col, how="semi")
-    else:
-        _adc = _adc_kernel(cell_tables)
-        shortlist = (
-            cands.select(
-                F.col(id_col), F.col(vec_col),
-                _adc(F.col("codes"), F.col(cell_col).cast("long")).alias("_ad"),
-            )
-            .orderBy(F.asc("_ad"), F.asc(id_col))
-            .limit(k * rerank_factor)
-        )
-
-    q64 = np.array(qvec, dtype=np.float64)
-
-    @F.pandas_udf("double")
-    def _l2sq_exact(v: pd.Series) -> pd.Series:
-        if v.empty:
-            return pd.Series([], dtype=np.float64)
-        x = np.array(v.tolist(), dtype=np.float64)
-        diff = x - q64[None, :]
-        return pd.Series(_fold_sum_cols(diff * diff))
-
-    return (
-        shortlist.select(F.col(id_col), _l2sq_exact(F.col(vec_col)).alias("l2sq"))
-        .orderBy(F.asc("l2sq"), F.asc(id_col))
-        .limit(k)
-    )
 
 
 def opq_train_driver(
@@ -2633,8 +2634,8 @@ def ann_index_remove(spark, path: str, ids, id_col: str = "vec_id") -> dict:
             "the index was built with"
         )
     if index_store.has(spark, path, index_store.TOMBSTONES):
-        existing_col = spark.read.parquet(
-            f"{path}/{index_store.TOMBSTONES}"
+        existing_col = index_store.read(
+            spark, path, index_store.TOMBSTONES
         ).columns[0]
         if existing_col != id_col:
             raise ValueError(
@@ -3172,6 +3173,13 @@ def ivf_pq_index_topk(
     a single row is read. Result is identical to running ivf_pq_topk over
     the index's live frames with the same model state. A plain-IVF index
     is refused (probe it with ivf_index_topk).
+
+    The fixed-nprobe probe is lazy: the open reads the model and the
+    component schemas driver-side, and collecting the result is one
+    Spark job — the scan and one Python pass that scores, cuts each scan
+    partition to its k*rerank_factor best and exact-reranks them, so
+    the JVM's global cut sees at most k*rerank_factor x (scan
+    partitions) rows (_adc_shortlist_topk).
 
     ``adc_prune=True`` adds residual-aware cell pruning (the faiss
     IVF-pruning idea, VERDICT r11 #6) with an EXACTNESS guarantee —

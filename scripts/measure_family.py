@@ -2,7 +2,8 @@
 protocol — the r10 fuzzy-closure discipline): fresh process, the bench
 harness's warmups, then each query best-of-N back-to-back, with a
 flat-session CONTROL set measured in the same session so box drift is
-separable from per-query movement.
+separable from per-query movement. Each run also reports its Spark job
+count (the jobs tagged with that run's job group).
 
 Usage: python scripts/measure_family.py q_rerank_topk q_hybrid_rrf ...
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -39,17 +40,25 @@ def main() -> int:
     warm_up(spark, sf_dir)
 
     registry = all_queries()
+    sc = spark.sparkContext
     out: dict[str, dict] = {}
     for name in controls + targets:
         fn = registry[name]
-        times = []
-        for _ in range(runs):
-            start = time.perf_counter()
-            fn(spark, sf_dir).count()
-            times.append(round(time.perf_counter() - start, 3))
+        times, jobs = [], []
+        for i in range(runs):
+            group = f"measure_family/{name}/{i}"
+            sc.setJobGroup(group, name)
+            try:
+                start = time.perf_counter()
+                fn(spark, sf_dir).count()
+                times.append(round(time.perf_counter() - start, 3))
+                jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            finally:
+                sc.setJobGroup("", "")
         out[name] = {
             "best": min(times),
             "runs": times,
+            "jobs": jobs,
             "role": "target" if name in targets else "control",
         }
     print(json.dumps({"sf_dir": sf_dir, "results": out}, indent=1))

@@ -159,3 +159,38 @@ def test_half_swapped_index_names_leftover_until_compact(spark, tmp_path, family
     assert idx.compact()["rows"] == 3
     assert idx.live() == (3, 0)
     assert not os.path.exists(f"{data}__old_deadbeef")
+
+
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_index_reads_take_the_footer_schema_without_a_job(spark, tmp_path, family):
+    """Index reads supply the schema from a parquet footer (plus the ANN
+    ``cell`` partition column): no schema-inference job, and the schema
+    — types and nullability — Spark would infer, after a build, an add,
+    a remove (the tombstone read) and a compact."""
+    from bigdata_usaspending_spark import index_store
+
+    path = str(tmp_path / "idx")
+    idx = _FAMILIES[family](spark, path)
+    sc = spark.sparkContext
+
+    def check(stage):
+        group = f"footer-schema-{family}-{stage}"
+        sc.setJobGroup(group, "index read")
+        try:
+            data = index_store.read(spark, path, idx.data)
+            live = index_store.read_live(spark, path, idx.data)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setJobGroup("", "")
+        assert jobs == [], stage
+        assert data.schema == spark.read.parquet(f"{path}/{idx.data}").schema, stage
+        assert live.schema == data.schema, stage
+
+    idx.build([1, 2, 3, 4])
+    check("build")
+    idx.add_batch([5, 6], 0)
+    check("add")
+    idx.remove([2])
+    check("remove")
+    idx.compact()
+    check("compact")

@@ -1850,3 +1850,164 @@ def test_plain_ivf_index_refused_by_ivf_pq_probe_and_stale_rotation(
     similarity._write_index_rotation(spark, _signed_permutation(8), path)
     with pytest.raises(ValueError, match="rotation"):
         similarity.semantic_dedup_against_index(spark, path, data.limit(2))
+
+
+# --------------------------------------------------------------------------
+# the one-pass ADC shortlist kernel, pinned against the sort-based reference
+# --------------------------------------------------------------------------
+_HAND_CENTS = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0],
+               [0.0, 0.0, 1.0, 0.0], [0.0, 0.0, 0.0, 1.0]]
+_HAND_CB = [[0.0, 0.0], [1.0, 0.0], [0.0, 1.0], [1.0, 1.0]]
+
+
+def _hand_ivf_pq_index(spark, path, gap=False, stale=False):
+    """A tiny IVF-PQ layout written file by file: 4-d vectors, 2
+    subspaces of width 2, 4 codebook entries per subspace, cells 0-2
+    populated with two 3-row files each and cell 3 empty. Codes come from
+    a small set, so ADC distances tie within and across cells and files,
+    and equal codes with equal jitter give equal exact distances.
+    ``gap`` drops codebook entry 2 of subspace 1 (a NaN table slot, so
+    NULL ADC distances); ``stale`` gives one row the out-of-range code 5."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bigdata_usaspending_spark.io import write_model_parquet
+
+    rng = np.random.default_rng(7)
+    ids = rng.permutation(18)
+    n = 0
+    for cell in range(3):
+        for part in range(2):
+            rows = []
+            for _ in range(3):
+                codes = [int(rng.integers(0, 2)), int(rng.choice([0, 2]))]
+                jitter = float(rng.choice([0.0, 0.25]))
+                decoded = _HAND_CB[codes[0]] + _HAND_CB[codes[1]]
+                vec = [c + jitter + x for c, x in zip(_HAND_CENTS[cell], decoded)]
+                rows.append((int(ids[n]), vec, codes))
+                n += 1
+            if stale and n == 18:
+                rows[-1][2][0] = 5
+            d = f"{path}/vectors.parquet/cell={cell}"
+            os.makedirs(d, exist_ok=True)
+            pq.write_table(pa.table({
+                "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+                "embedding": pa.array([r[1] for r in rows], pa.list_(pa.float32())),
+                "codes": pa.array([r[2] for r in rows], pa.list_(pa.int32())),
+            }), f"{d}/part-0000{part}.parquet")
+    write_model_parquet(
+        spark, [(c, v) for c, v in enumerate(_HAND_CENTS)],
+        "cell int, centroid array<double>", f"{path}/centroids.parquet",
+    )
+    write_model_parquet(
+        spark,
+        [(s, j, v) for s in range(2) for j, v in enumerate(_HAND_CB)
+         if not (gap and s == 1 and j == 2)],
+        "sub int, cell int, centroid array<double>",
+        f"{path}/codebooks.parquet",
+    )
+    return path
+
+
+_HAND_QUERIES = [
+    [0.5, 0.5, 0.5, 0.4], [1.2, 0.3, 0.9, 0.1], [0.0, 0.0, 0.0, 1.0],
+    [1.21, 0.32, 0.19, 0.36],
+]
+
+
+def _probe_rows(spark, path, q, mode, nprobe=4, k=2, rerank=3):
+    kw = {"adc_prune": mode == "adc_prune", "adaptive_nprobe": mode == "adaptive"}
+    return [tuple(r) for r in similarity.ivf_pq_index_topk(
+        spark, path, q, k=k, nprobe=nprobe, rerank_factor=rerank, **kw
+    ).collect()]
+
+
+def test_adc_shortlist_matches_sort_reference(spark, tmp_path):
+    """Every probe mode returns what the sort-based two-phase shortlist
+    returns (tests/_ann_reference.py): ADC ties across cells, files and
+    scan partitions, partitions holding fewer and more than k*rerank
+    rows (so the per-partition cut breaks ADC ties by id), an empty
+    probed cell (3), a probe of that cell alone, and tombstoned ids. The
+    adaptive probe equals the reference over every cell."""
+    from _ann_reference import reference_probe
+
+    path = _hand_ivf_pq_index(spark, str(tmp_path / "hand"))
+    ix = similarity._open_ann_index(spark, path, layout="ivf-pq")
+    for mode, qi, nprobe, k, rerank in [
+        ("fixed", 0, 4, 2, 3), ("fixed", 2, 1, 2, 3), ("fixed", 3, 4, 2, 1),
+        ("adc_prune", 1, 4, 2, 3), ("adaptive", 1, 4, 2, 3),
+    ]:
+        want = reference_probe(ix, _HAND_QUERIES[qi], k, nprobe, rerank)
+        got = _probe_rows(spark, path, _HAND_QUERIES[qi], mode, nprobe, k, rerank)
+        assert got == want, (mode, qi, k, rerank)
+    top = [r[0] for r in _probe_rows(spark, path, _HAND_QUERIES[0], "fixed", k=4)]
+    similarity.ann_index_remove(spark, path, top[:2])
+    ix = similarity._open_ann_index(spark, path, layout="ivf-pq")
+    got = _probe_rows(spark, path, _HAND_QUERIES[0], "fixed", k=4)
+    assert got == reference_probe(ix, _HAND_QUERIES[0], 4, 4, 3)
+    assert not {r[0] for r in got} & set(top[:2])
+
+
+def test_adc_shortlist_null_slots_sort_first_and_stale_codes_raise(spark, tmp_path):
+    """A code on a NaN table slot scores NULL, which Spark sorts first:
+    the per-partition cut must keep those rows as the global sort does.
+    A code past its table raises the stale-code ValueError."""
+    from _ann_reference import reference_probe
+
+    path = _hand_ivf_pq_index(spark, str(tmp_path / "gap"), gap=True)
+    ix = similarity._open_ann_index(spark, path, layout="ivf-pq")
+    for q in _HAND_QUERIES[:2]:
+        want = reference_probe(ix, q, 2, 4, 1)
+        assert _probe_rows(spark, path, q, "fixed", rerank=1) == want
+        assert _probe_rows(spark, path, q, "adc_prune", rerank=1) == want
+    stale = _hand_ivf_pq_index(spark, str(tmp_path / "stale"), stale=True)
+    with pytest.raises(Exception, match="PQ code 5 out of range"):
+        _probe_rows(spark, stale, _HAND_QUERIES[0], "fixed")
+
+
+def test_flat_pq_topk_is_the_one_cell_shortlist(spark, tmp_path):
+    """pq_topk scores the whole frame as one cell through the same
+    kernel: equal to the reference over a constant cell column."""
+    from _ann_reference import sort_shortlist_topk
+
+    path = _hand_ivf_pq_index(spark, str(tmp_path / "flat"))
+    enc = spark.read.parquet(f"{path}/vectors.parquet").drop("cell")
+    cb = spark.read.parquet(f"{path}/codebooks.parquet")
+    tables = similarity._adc_tables(
+        similarity._nest_by_sub(similarity._collect_codebooks(cb)),
+        _HAND_QUERIES[1], 2,
+    )
+    want = sort_shortlist_topk(
+        enc.withColumn("cell", F.lit(0)), {0: tables}, _HAND_QUERIES[1], 3, 2
+    ).collect()
+    got = similarity.pq_topk(enc, cb, _HAND_QUERIES[1], k=3, rerank_factor=2)
+    assert got.collect() == want
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan
+
+
+def test_ann_probe_plans_without_range_sort_in_one_job(spark, tmp_path):
+    """No probe mode plans a range-partitioned sort (its sampling job
+    would run the Python pass twice), and a fixed-nprobe probe — the
+    open, the lazy frame and its collect — runs at most one Spark job."""
+    path = _hand_ivf_pq_index(spark, str(tmp_path / "plan"))
+    sc = spark.sparkContext
+    for mode in ("fixed", "adc_prune", "adaptive"):
+        df = similarity.ivf_pq_index_topk(
+            spark, path, _HAND_QUERIES[0], k=2, nprobe=3, rerank_factor=3,
+            adc_prune=mode == "adc_prune", adaptive_nprobe=mode == "adaptive",
+        )
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "rangepartitioning" not in plan, (mode, plan)
+    group = "ann-probe-job-count"
+    sc.setJobGroup(group, "fixed-nprobe probe")
+    try:
+        similarity.ivf_pq_index_topk(
+            spark, path, _HAND_QUERIES[0], k=2, nprobe=3, rerank_factor=3
+        ).collect()
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setJobGroup("", "")
+    assert len(jobs) <= 1, jobs

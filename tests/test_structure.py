@@ -11,7 +11,9 @@
 - The ANN index surfaces: one persisted-index open (``_open_ann_index``:
   the only layout check on ``codebooks.parquet`` besides the stats
   report, the only stale-rotation refusal) and one per-query probe
-  (``_probe_ann``: the only call of each probe step).
+  (``_probe_ann``: the only call of each probe step), whose IVF-PQ
+  modes and the flat ``pq_topk`` share one ADC shortlist kernel
+  (``_adc_shortlist_topk``) and one stale-code check.
 - The winnow text tier: one batch fingerprint in the streaming jobs
   (``_fingerprint_batch``), one per-doc span union (``_scrub_spans``),
   one persisted winnow-index read (inside ``_WinnowIndex``, which
@@ -122,6 +124,23 @@ def test_one_ann_probe_sequence():
         "_adc_pruned_tables", "_ivf_probe_cells",
     ):
         assert _package_calls(step) == 1, step
+
+
+def test_one_adc_shortlist_kernel():
+    src = _source("operators/similarity.py")
+    callers = sorted(
+        fn.name
+        for fn in ast.walk(ast.parse(src))
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "_adc_shortlist_topk"
+    )
+    assert callers == ["_probe_ann", "pq_topk"]
+    assert _package_calls("_adc_shortlist_topk") == 2
+    assert _package_count("def _adc_shortlist_topk(") == 1
+    assert _package_count("out of range for subspace") == 1
+    assert "_ivf_pq_rerank" not in src
 
 
 def test_one_persisted_ann_index_open():
