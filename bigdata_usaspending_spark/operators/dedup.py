@@ -32,9 +32,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from .. import index_store
-from ..io import num_partitions
+from ..io import local_frame, local_rows_of, num_partitions
 from .text import fingerprint, ngram_occurrences, tokens
 
 # Mersenne prime 2^31-1 for the minhash affine family; base hashes are < p
@@ -284,9 +285,17 @@ def _stop_grams(max_df: int, key: str, *frames: DataFrame) -> DataFrame:
     return (
         keys.groupBy(key)
         .agg(F.count(F.lit(1)).alias("_df"))
-        .filter(F.col("_df") > max_df)
+        .filter(_over_cap(F.col("_df"), max_df))
         .select(key)
     )
+
+
+def _over_cap(df, max_df: int):
+    """THE stop-gram predicate: a document frequency above the cap. One
+    expression for a Spark ``Column`` (_stop_grams) and a numpy count
+    array (_winnow_probe's driver finish), so the two cap paths cannot
+    drift apart."""
+    return df > max_df
 
 
 def ngram_jaccard_pairs(
@@ -762,32 +771,38 @@ def winnow_dedup_against_index(
     fingerprint for any shared substring of length >= w+k-1), then the
     exact-Jaccard verify makes precision exact.
 
-    Probe inversion, same as near_dedup_against_index: every join
-    broadcasts the BATCH side, the corpus-sized index is only ever
-    scanned — exploded index fingerprints join broadcast(batch
-    fingerprints), the verify joins each side's sets back (index side
-    via broadcast of candidate ids), survivors = batch ANTI
-    broadcast(matched ids). Batch docs with no fingerprints (below ``k``
-    normalized chars) always survive.
+    One scan of the index (_winnow_probe): the batch's fingerprint sets
+    are collected on the driver, one ``mapInArrow`` pass over the index
+    verifies every (index doc, batch doc) pair that shares a
+    fingerprint, and the driver applies the cap to the verified pairs.
+    The probe runs when this function is CALLED, so the matched ids are
+    driver-side rows by the time it returns; the returned frame is
+    ``batch`` minus those ids, an ``isin`` filter with no join. Batch
+    docs with no fingerprints (below ``k`` normalized chars) and NULL
+    ids always survive.
 
     ``max_fingerprint_df``: stop-gram cap over the COMBINED (index ∪
-    batch) document frequency — fingerprints above it are dropped from
-    candidate generation only (a fingerprint in d docs contributes up to
-    d² candidate rows; boilerplate-heavy corpora degenerate toward
-    all-pairs without the cap). The verify re-joins the FULL fingerprint
-    sets, so every surviving pair's Jaccard — and thus the drop decision
-    — is value-exact; the only trade-off is recall for pairs whose every
-    shared fingerprint is capped (the family's documented one).
+    batch) document frequency. A verified pair whose every shared
+    fingerprint is above the cap does not match (a fingerprint in d
+    docs is boilerplate, and would be d² candidate rows in a join).
+    Jaccard is always over the FULL fingerprint sets, so every match —
+    and thus the drop decision — is value-exact; the only trade-off is
+    recall for pairs whose every shared fingerprint is capped (the
+    family's documented one).
 
     ``batch_fps`` (optional): a precomputed ``(_id, fps)`` frame for the
     batch (winnow_index's shape; empty sets allowed — they drop out
     here) so callers that already fingerprinted the batch skip the
-    re-hash; the caller owns its persistence."""
+    re-hash."""
     matched = _winnow_matched_ids(
         batch, index, id_col, text_col, k, w, threshold, portable,
         max_fingerprint_df, batch_fps,
     )
-    return batch.join(F.broadcast(matched), on=id_col, how="anti")
+    ids = [r[0] for r in local_rows_of(matched)]
+    if not ids:
+        return batch
+    c = F.col(id_col)
+    return batch.filter(c.isNull() | ~c.isin(ids))
 
 
 def _winnow_matched_ids(
@@ -803,43 +818,386 @@ def _winnow_matched_ids(
     batch_fps: "DataFrame | None" = None,
 ) -> DataFrame:
     """The distinct ``id_col`` values of the batch docs that
-    winnow_dedup_against_index drops: the verified near-duplicates of
-    some index doc."""
-    if batch_fps is not None:
-        bfps = batch_fps.filter(F.size("fps") > 0)
-    else:
-        bfps = winnow_index(batch, id_col, text_col, k, w, portable)
-        bfps = bfps.localCheckpoint(eager=False)  # reused by probe + verify
-        # (eager re-measured round 15: q_corpus_build_incremental
-        # 12.6→14.9 s — the blocking materialization loses)
-    b_ex = bfps.select(F.col("_id").alias("_bid"), F.explode("fps").alias("_f"))
-    i_ex = index.select(F.col("_id").alias("_iid"), F.explode("fps").alias("_f"))
-    if max_fingerprint_df is not None:
-        heavy = _stop_grams(max_fingerprint_df, "_f", i_ex, b_ex)
-        i_ex = i_ex.join(heavy, on="_f", how="anti")
-        b_ex = b_ex.join(heavy, on="_f", how="anti")
-    cand = (
-        i_ex.join(F.broadcast(b_ex), on="_f")
-        .select("_bid", "_iid")
-        .dropDuplicates(["_bid", "_iid"])
+    winnow_dedup_against_index drops — the verified near-duplicates of
+    some index doc — as a sorted local frame: _winnow_probe over the
+    value sets (``index`` may be ``(_id, fps)`` or positioned ``(_id,
+    pfps)``; only its values are read)."""
+    if batch_fps is None:
+        batch_fps = winnow_index(batch, id_col, text_col, k, w, portable)
+    pairs = _winnow_probe(
+        batch_fps, index, False, k, threshold, max_fingerprint_df
     )
-    verified = (
-        index.select(F.col("_id").alias("_iid"), F.col("fps").alias("fps_i"))
-        .join(F.broadcast(cand), "_iid")
-        .join(
-            F.broadcast(
-                bfps.select(F.col("_id").alias("_bid"), F.col("fps").alias("fps_b"))
-            ),
-            "_bid",
+    ids = sorted({r.id_batch for r in local_rows_of(pairs)})
+    return local_frame(
+        batch.sparkSession, [(i,) for i in ids],
+        StructType([StructField(id_col, batch_fps.schema["_id"].dataType)]),
+    )
+
+
+def _fp_arrays(arr) -> "tuple[np.ndarray, np.ndarray, np.ndarray | None]":
+    """``(lens, values, positions)`` of an Arrow fingerprint column,
+    flattened row-major: ``list<bigint>`` value sets (positions None) or
+    positioned ``list<struct<fp, pos>>`` sets. A NULL list is empty."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    lens = pc.list_value_length(arr).fill_null(0).to_numpy(zero_copy_only=False)
+    flat = arr.flatten()
+    if not pa.types.is_struct(flat.type):
+        return lens.astype(np.int64), flat.to_numpy(), None
+    fp, pos = (pc.struct_field(flat, f).to_numpy() for f in ("fp", "pos"))
+    return lens.astype(np.int64), fp, pos.astype(np.int64)
+
+
+def _fp_groups(key: np.ndarray, pos: "np.ndarray | None"):
+    """The distinct values of ``key`` (sorted) with their multiplicity
+    and, when ``pos`` is given, their min and max position."""
+    order = np.lexsort((key,) if pos is None else (pos, key))
+    ks = key[order]
+    new = np.ones(len(ks), dtype=bool)
+    new[1:] = ks[1:] != ks[:-1]
+    first = np.flatnonzero(new)
+    last = np.r_[first[1:], len(ks)][: len(first)] - 1
+    lo = hi = None
+    if pos is not None:
+        lo, hi = pos[order][first], pos[order][last]
+    return ks[first], last - first + 1, lo, hi
+
+
+def _distinct_per_row(rows: np.ndarray, vals: np.ndarray, n: int) -> np.ndarray:
+    """The number of distinct values in each of ``n`` rows — the set
+    sizes of a Jaccard (positioned rows repeat a value)."""
+    order = np.lexsort((vals, rows))
+    rs, vs = rows[order], vals[order]
+    new = np.ones(len(rs), dtype=bool)
+    new[1:] = (rs[1:] != rs[:-1]) | (vs[1:] != vs[:-1])
+    return np.bincount(rs[new], minlength=n)
+
+
+def _distinct_pairs(ids, codes: np.ndarray, nu: int):
+    """The distinct ``(i, c)`` rows of ids and fingerprint codes, and
+    the number of distinct ids per code (a positioned document
+    frequency; NULL ids count once, as Spark's ``distinct`` does)."""
+    import pyarrow as pa
+
+    t = pa.table({"i": ids, "c": codes}).group_by(["i", "c"]).aggregate([])
+    return t, np.bincount(t.column("c").to_numpy(), minlength=nu)
+
+
+_PROBE_COLS = (
+    ("_r", "long"), ("_iid", None), ("_b", "int"), ("_c", "int"),
+    ("_n", "long"), ("_lo", "int"), ("_hi", "int"), ("_jac", "double"),
+    ("_ns", "int"),
+)
+
+
+def _probe_rows(id_type, n: int, **cols):
+    """One Arrow batch of _winnow_scan's output: each ``_PROBE_COLS``
+    column from ``cols`` (an Arrow or numpy array, or a scalar for every
+    row), NULL where absent. ``_b`` tags the row: a batch row index on a
+    verified pair row (``_jac`` set) or an unverified candidate pair
+    (``_jac`` NULL), -1 on an ``(_iid, _c)`` document-frequency row, -2
+    on a ``(_c, _n)`` document-frequency count."""
+    import pyarrow as pa
+
+    arrow = {"long": pa.int64(), "int": pa.int32(), "double": pa.float64()}
+    fields = [
+        pa.field(c, id_type if t is None else arrow[t]) for c, t in _PROBE_COLS
+    ]
+    arrays = []
+    for f in fields:
+        v = cols.get(f.name)
+        if v is None:
+            arrays.append(pa.nulls(n, f.type))
+        elif isinstance(v, pa.Array):
+            arrays.append(v)
+        else:
+            arrays.append(pa.array(np.resize(v, n), f.type))
+    return pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
+
+
+def _ranges(starts: np.ndarray, cnts: np.ndarray):
+    """The flat indices of the ranges ``[starts[i], starts[i] +
+    cnts[i])``, each with its range number ``i``."""
+    owner = np.repeat(np.arange(len(cnts)), cnts)
+    return owner, np.repeat(starts - np.cumsum(cnts) + cnts, cnts) + np.arange(
+        cnts.sum()
+    )
+
+
+def _winnow_scan(batch: dict, threshold, positioned, max_df):
+    """The ``mapInArrow`` function of _winnow_probe's one pass over the
+    index ``(_id, fps|pfps)``. ``batch`` holds the batch side: ``uni``
+    its sorted distinct fingerprints (a fingerprint's position in it is
+    its code), ``key`` its sorted distinct ``row * len(uni) + code``
+    groups, ``n`` each batch row's set size, ``csr``/``indptr`` the
+    batch rows holding each code and ``df`` (under a cap) its document
+    frequency per code.
+
+    Candidate pairs come from the codes not already known to be capped
+    — known when this Arrow batch's own index frequency plus the
+    batch's exceeds the cap, a lower bound of the total — so a
+    boilerplate fingerprint costs no pair expansion; each candidate's
+    shared count then adds the capped codes both rows hold, so Jaccard
+    stays over the full sets. A candidate below ``threshold`` is emitted
+    as one ``(_iid, _b)`` row, so the driver can tell when a same-id
+    sibling of a verified row owes that pair its anchors."""
+    uni, bkey, n_b = batch["uni"], batch["key"], batch["n"]
+    nu, nb = len(uni), len(n_b)
+    lookup = pd.Index(uni)  # a hash probe, ~5x a searchsorted of uni
+
+    def scan(batches):
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        # _r: a row key unique across partitions (partition id high bits)
+        base = TaskContext.get().partitionId() << 40
+        dfc = np.zeros(nu, dtype=np.int64)
+        listed = []
+        id_type = None
+        for rb in batches:
+            n, ids = rb.num_rows, rb.column(0)
+            id_type = ids.type
+            lens, vals, pos = _fp_arrays(rb.column(1))
+            rows = np.repeat(np.arange(n), lens)
+            code = lookup.get_indexer(vals)
+            hit = code >= 0
+            gkey, gcnt, glo, ghi = _fp_groups(
+                rows[hit] * nu + code[hit], pos[hit] if positioned else None
+            )
+            g_row, g_code = gkey // nu, gkey % nu
+            hot = np.zeros(nu, dtype=bool)
+            if max_df is not None:
+                if positioned:
+                    t, local = _distinct_pairs(ids.take(g_row), g_code, nu)
+                    listed.append(t)
+                else:
+                    local = np.bincount(g_code, minlength=nu)
+                    dfc += local
+                hot = _over_cap(local + batch["df"], max_df)
+            live = np.flatnonzero(~hot[g_code])
+            # one (index row, batch row, code) triple per shared live code
+            owner, at = _ranges(
+                batch["indptr"][g_code[live]],
+                np.diff(batch["indptr"])[g_code[live]],
+            )
+            g_of, t_b = live[owner], batch["csr"][at]
+            pairs, inv, n_sh = np.unique(
+                g_row[g_of] * nb + t_b, return_inverse=True, return_counts=True
+            )
+            if not len(pairs):
+                base += n
+                continue
+            if len(live) < len(gkey):  # add the shared capped codes
+                hkey = bkey[hot[bkey % nu]]
+                hptr = np.searchsorted(hkey // nu, np.arange(nb + 1))
+                p_of, at = _ranges(hptr[pairs % nb], np.diff(hptr)[pairs % nb])
+                want = (pairs // nb)[p_of] * nu + hkey[at] % nu
+                found = gkey[np.minimum(np.searchsorted(gkey, want), len(gkey) - 1)]
+                n_sh = n_sh + np.bincount(p_of[found == want], minlength=len(pairs))
+            n_i = _distinct_per_row(rows, vals, n)
+            jac = n_sh / (n_i[pairs // nb] + n_b[pairs % nb] - n_sh)
+            ok = jac >= threshold
+            sel = np.flatnonzero(ok[inv])
+            if len(sel):
+                g, p = g_of[sel], inv[sel]
+                yield _probe_rows(
+                    id_type, len(sel), _r=base + g_row[g],
+                    _iid=ids.take(g_row[g]), _b=t_b[sel], _c=g_code[g],
+                    _n=gcnt[g], _jac=jac[p], _ns=n_sh[p],
+                    **({"_lo": glo[g], "_hi": ghi[g]} if positioned else {}),
+                )
+            if not ok.all():  # unverified candidates: one id row each
+                miss = pairs[~ok]
+                yield _probe_rows(
+                    id_type, len(miss), _iid=ids.take(miss // nb), _b=miss % nb
+                )
+            base += n
+        if listed:
+            # positioned frequency = distinct ids: list them up to the
+            # cap, past it only their count (the total is over it anyway)
+            t = pa.concat_tables(listed)
+            t, dfc = _distinct_pairs(t.column("i"), t.column("c"), nu)
+            codes = t.column("c").to_numpy()
+            keep = ~_over_cap(dfc, max_df)[codes]
+            if keep.any():
+                yield _probe_rows(
+                    id_type, int(keep.sum()), _b=-1, _c=codes[keep],
+                    _iid=t.column("i").filter(keep).combine_chunks(),
+                )
+            dfc[~_over_cap(dfc, max_df)] = 0
+        hot = np.flatnonzero(dfc)
+        if len(hot):
+            yield _probe_rows(id_type, len(hot), _b=-2, _c=hot, _n=dfc[hot])
+
+    return scan
+
+
+def _winnow_probe(
+    bfp: DataFrame,
+    index: DataFrame,
+    positioned: bool,
+    k: int,
+    threshold: float,
+    max_df: "int | None",
+) -> DataFrame:
+    """THE committed-side winnow probe of both incremental tiers — the
+    value-set drop tier (_winnow_matched_ids) and the positioned
+    span/scrub/evidence tier (winnow_spans_against_index). Returns the
+    verified (index row, batch row) pairs of the batch fingerprint frame
+    ``bfp`` ``(_id, fps|pfps)`` against ``index`` ``(_id, fps|pfps)`` as
+    a local frame ``(id_index, id_batch, jaccard, n_shared, n_anchors,
+    i_start, i_end, b_start, b_end)``; the positions are NULL unless
+    ``positioned``. It runs when called, in three steps:
+
+    1. The batch's fingerprints are collected on the driver. A batch
+       with none returns no pairs without touching the index.
+    2. One ``mapInArrow`` pass over the index (_winnow_scan): each
+       row's fingerprints are matched against the batch's set, every
+       batch row sharing one is verified by exact Jaccard over the two
+       full distinct sets, and only verified pairs are emitted — one
+       row per shared fingerprint with its count and min/max position
+       in the index row. With a cap, each partition also emits its
+       document frequency of the batch's fingerprints: index rows per
+       fingerprint for value sets, distinct index ids for positioned
+       sets (the definitions the joins this replaced counted by).
+    3. The driver adds the batch's own document frequency, applies the
+       cap (_over_cap, the predicate _stop_grams uses) and, per
+       ``(id_index, id_batch)``, sums ``n_anchors`` (Σ index count ×
+       batch count) and takes the covering spans over the UNCAPPED
+       shared fingerprints of the verified rows; an id pair with none
+       is not reported. One row is returned per verified row pair.
+
+    So a probe is two Spark jobs (the batch collect, the index pass)
+    plus whatever the caller does with the bounded result. NULL ids
+    never pair (the equi-joins this replaced never matched them) but do
+    count towards document frequencies. Anchors aggregate per id pair
+    over EVERY row holding the ids, as the joins did: when a row of a
+    verified id pair has a same-id sibling that is only a candidate
+    (a duplicated ``_id``), the pass also emits that candidate and a
+    third job rescans the rows of those ids for their anchors."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import DoubleType, IntegerType, LongType
+
+    spark = bfp.sparkSession
+    out_schema = StructType([
+        StructField("id_index", index.schema["_id"].dataType),
+        StructField("id_batch", bfp.schema["_id"].dataType),
+        StructField("jaccard", DoubleType()),
+        StructField("n_shared", IntegerType()),
+        StructField("n_anchors", LongType()),
+        *(StructField(c, IntegerType())
+          for c in ("i_start", "i_end", "b_start", "b_end")),
+    ])
+    btab = bfp.select("_id", bfp.columns[1]).toArrow()
+    blens, bvals, bpos = _fp_arrays(btab.column(1))
+    keep = np.flatnonzero(blens > 0)
+    if not len(keep):
+        return local_frame(spark, [], out_schema)
+    bids = btab.column(0).take(keep)
+    brow = np.repeat(np.arange(len(keep)), blens[keep])
+    uni = np.unique(bvals)
+    nu = len(uni)
+    bkey, bcnt, blo, bhi = _fp_groups(
+        brow * nu + np.searchsorted(uni, bvals), bpos if positioned else None
+    )
+    b_row, b_code = bkey // nu, bkey % nu
+    by_code = np.lexsort((b_row, b_code))
+    b_df = None
+    if max_df is not None:  # rows for value sets, distinct ids positioned
+        b_df = (_distinct_pairs(bids.take(b_row), b_code, nu)[1] if positioned
+                else np.bincount(b_code, minlength=nu))
+    id_ddl = index.schema["_id"].dataType.simpleString()
+    ddl = ", ".join(f"{c} {id_ddl if t is None else t}" for c, t in _PROBE_COLS)
+    side = {"uni": uni, "key": bkey, "df": b_df,
+            "n": np.bincount(b_row, minlength=len(keep)),
+            "csr": b_row[by_code],
+            "indptr": np.searchsorted(b_code[by_code], np.arange(nu + 1))}
+    fcol = "pfps" if "pfps" in index.columns else "fps"
+
+    def scan(frame: DataFrame, thr: float):
+        got = frame.select("_id", fcol).mapInArrow(
+            _winnow_scan(side, thr, positioned, max_df), ddl
+        ).toArrow()
+        return got, _pair_rows(got, bids)
+
+    got, found = scan(index, threshold)
+    capped = np.zeros(nu, dtype=bool)
+    if max_df is not None:
+        # the index's: the -2 counts plus the distinct listed ids
+        counts = got.filter(pc.equal(got.column("_b"), -2))
+        listed = got.filter(pc.equal(got.column("_b"), -1))
+        capped = _over_cap(
+            np.bincount(counts.column("_c").to_numpy(), minlength=nu,
+                        weights=counts.column("_n").to_numpy())
+            + _distinct_pairs(listed.column("_iid"), listed.column("_c"), nu)[1]
+            + b_df,
+            max_df,
         )
+
+    keys = ["_iid", "_bid"]
+    verified = found.filter(pc.is_valid(found.column("_jac")))
+    owed = (
+        found.filter(pc.is_null(found.column("_jac"))).select(keys)
+        .join(verified.select(keys), keys, join_type="left semi")
+        .group_by(keys).aggregate([])
     )
-    inter = F.size(F.array_intersect("fps_b", "fps_i")).cast("double")
-    union = F.size(F.array_union("fps_b", "fps_i")).cast("double")
-    return (
-        verified.filter((inter / union) >= threshold)
-        .select(F.col("_bid").alias(id_col))
-        .distinct()
+    sources = verified
+    if owed.num_rows:
+        # an id pair verified by one row and a candidate of another row
+        # with the same id (an index or batch holding a duplicated id):
+        # the id pair's anchors are every row's, so rescan the rows of
+        # those ids with every candidate verified
+        ids = pc.unique(owed.column("_iid")).to_pylist()
+        _, again = scan(index.filter(F.col("_id").isin(ids)), 0.0)
+        sources = pa.concat_tables([
+            t.join(owed, keys, join_type=how).select(found.column_names)
+            for t, how in ((verified, "left anti"), (again, "left semi"))
+        ])
+    b, c = (sources.column(x).to_numpy().astype(np.int64) for x in ("_b", "_c"))
+    bg = np.searchsorted(bkey, b * nu + c)  # the batch (row, code) group
+    acols = {"_iid": sources.column("_iid"), "_bid": sources.column("_bid"),
+             "n_anchors": sources.column("_n").to_numpy() * bcnt[bg]}
+    aggs = [("n_anchors", "sum")]
+    if positioned:
+        acols.update(i_start=sources.column("_lo"), i_end=sources.column("_hi"),
+                     b_start=blo[bg], b_end=bhi[bg])
+        aggs += [("i_start", "min"), ("i_end", "max"),
+                 ("b_start", "min"), ("b_end", "max")]
+    per_pair = pa.table(acols).filter(~capped[c]).group_by(keys).aggregate(aggs)
+    anchors = pa.table({
+        **{x: per_pair.column(x) for x in keys},
+        **{x: per_pair.column(f"{x}_{f}") for x, f in aggs},
+    })
+    out = (
+        verified.select(["_r", "_b", *keys, "_jac", "_ns"])
+        .group_by(["_r", "_b", *keys, "_jac", "_ns"]).aggregate([])
+        .join(anchors, keys, join_type="inner")
+        .sort_by([("_r", "ascending"), ("_b", "ascending")])
     )
+    cols = [out.column(x).to_pylist() for x in (*keys, "_jac", "_ns", "n_anchors")]
+    if positioned:
+        for x in ("i_start", "i_end", "b_start", "b_end"):
+            v = out.column(x).to_numpy().astype(np.int64)
+            cols.append((v + (k - 1) if x.endswith("end") else v).tolist())
+    else:
+        cols += [[None] * out.num_rows] * 4
+    return local_frame(spark, list(zip(*cols)), out_schema)
+
+
+def _pair_rows(got, bids):
+    """The pair rows (``_b >= 0``) of a _winnow_scan output with the
+    batch id of each (``_bid``), minus those whose index or batch id is
+    NULL: the equi-joins this replaced never paired a NULL id."""
+    import pyarrow.compute as pc
+
+    pr = got.filter(pc.greater_equal(got.column("_b"), 0))
+    pr = pr.append_column("_bid", bids.take(pr.column("_b")))
+    return pr.filter(pc.and_(pc.is_valid(pr.column("_iid")),
+                             pc.is_valid(pr.column("_bid"))))
 
 
 def winnow_pos_index(
@@ -912,83 +1270,32 @@ def winnow_spans_against_index(
     covering spans over each side's NORMALIZED text; index side = the
     committed/earlier doc, the match_spans ``a`` side).
 
-    Probe inversion (the incremental family's contract): the exploded
-    index positions join broadcast(batch positions) for anchors, the
-    per-pair aggregate is candidate-bounded, and the verify joins the
-    index's positioned sets against broadcast(candidate pairs) +
-    broadcast(batch sets) — the index is only ever scanned.
+    One scan of the index (_winnow_probe, shared with the drop tier):
+    the batch's positioned fingerprints are collected on the driver,
+    one ``mapInArrow`` pass over the index verifies each pair and emits
+    the shared fingerprints' index counts and positions for verified
+    pairs only, and the driver finishes the cap, ``n_anchors`` and the
+    spans. The probe runs when this function is CALLED; the returned
+    frame is a local frame of the verified pairs.
 
     Cap semantics follow winnow_dedup_against_index, not
     winnow_match_spans: ``max_fingerprint_df`` (combined index ∪ batch
-    DOCUMENT frequency) bounds anchor generation, but the verify
-    re-intersects the FULL distinct-value sets, so ``jaccard`` /
-    ``n_shared`` — and therefore which pairs report — are VALUE-EXACT;
-    only ``n_anchors`` and the covering spans are computed over uncapped
-    anchors (capped fingerprints are boilerplate by definition — their
-    spans are the ones you don't want widening the evidence). A pair
-    whose every shared fingerprint is capped generates no candidate and
-    is not reported — the family's documented recall trade-off.
+    DOCUMENT frequency) bounds the anchors, but ``jaccard`` /
+    ``n_shared`` are over the FULL distinct-value sets, so they — and
+    therefore which pairs report — are VALUE-EXACT; only ``n_anchors``
+    and the covering spans are computed over uncapped anchors (capped
+    fingerprints are boilerplate by definition — their spans are the
+    ones you don't want widening the evidence). A pair whose every
+    shared fingerprint is capped is not reported — the family's
+    documented recall trade-off.
 
     ``batch_pfps`` (optional): a precomputed positioned frame for the
     batch (winnow_pos_index's shape) so callers that already
-    fingerprinted it skip the re-hash; the caller owns its persistence."""
-    if batch_pfps is not None:
-        bpf = batch_pfps.filter(F.size("pfps") > 0)
-    else:
-        bpf = winnow_pos_index(batch, id_col, text_col, k, w, portable)
-        bpf = bpf.localCheckpoint(eager=False)  # probe + verify reuse
-    b_ex = bpf.select(
-        F.col("_id").alias("_bid"), F.explode("pfps").alias("_s")
-    ).select("_bid", F.col("_s.fp").alias("_f"), F.col("_s.pos").alias("_pb"))
-    i_ex = index.select(
-        F.col("_id").alias("_iid"), F.explode("pfps").alias("_s")
-    ).select("_iid", F.col("_s.fp").alias("_f"), F.col("_s.pos").alias("_pi"))
-    if max_fingerprint_df is not None:
-        # combined DOCUMENT frequency (positions collapse to one row per
-        # (doc, fp) before counting, unlike the set-valued tiers where
-        # exploded rows are already distinct)
-        heavy = _stop_grams(
-            max_fingerprint_df, "_f",
-            i_ex.select("_iid", "_f").distinct(),
-            b_ex.select("_bid", "_f").distinct(),
-        )
-        i_ex = i_ex.join(heavy, on="_f", how="anti")
-        b_ex = b_ex.join(heavy, on="_f", how="anti")
-    anchors = i_ex.join(F.broadcast(b_ex), on="_f").select(
-        "_iid", "_bid", "_f", "_pi", "_pb"
-    )
-    agg = anchors.groupBy("_iid", "_bid").agg(
-        F.count(F.lit(1)).cast("long").alias("n_anchors"),
-        F.min("_pi").alias("i_start"),
-        (F.max("_pi") + F.lit(k - 1)).alias("i_end"),
-        F.min("_pb").alias("b_start"),
-        (F.max("_pb") + F.lit(k - 1)).alias("b_end"),
-    )
-    verified = (
-        index.select(F.col("_id").alias("_iid"), _pos_vals("pfps").alias("_vi"))
-        .join(F.broadcast(agg), "_iid")
-        .join(
-            F.broadcast(
-                bpf.select(
-                    F.col("_id").alias("_bid"), _pos_vals("pfps").alias("_vb")
-                )
-            ),
-            "_bid",
-        )
-    )
-    n_shared = F.size(F.array_intersect("_vi", "_vb"))
-    jac = n_shared.cast("double") / F.size(F.array_union("_vi", "_vb")).cast(
-        "double"
-    )
-    return (
-        verified.select(
-            F.col("_iid").alias("id_index"),
-            F.col("_bid").alias("id_batch"),
-            jac.alias("jaccard"),
-            n_shared.alias("n_shared"),
-            "n_anchors", "i_start", "i_end", "b_start", "b_end",
-        )
-        .filter(F.col("jaccard") >= threshold)
+    fingerprinted it skip the re-hash."""
+    if batch_pfps is None:
+        batch_pfps = winnow_pos_index(batch, id_col, text_col, k, w, portable)
+    return _winnow_probe(
+        batch_pfps, index, True, k, threshold, max_fingerprint_df
     )
 
 
@@ -1011,8 +1318,8 @@ def winnow_scrub_against_index(
     ``winnow_dedup_against_index`` when a training doc merely QUOTES a
     benchmark or boilerplate passage and the rest is worth keeping. The
     committed side (the benchmark set, or the already-ingested corpus)
-    is never modified and never re-fingerprinted — only scanned, via
-    winnow_spans_against_index's probe inversion.
+    is never modified and never re-fingerprinted — only scanned, by
+    winnow_spans_against_index's one-pass probe.
 
     Output ``(id, scrubbed, n_cut, n_spans)`` for EVERY batch doc
     (winnow_span_scrub's contract: unmatched docs return their
@@ -1275,7 +1582,8 @@ def winnow_index_spans(
     """Localize a new batch's overlap spans against a persisted
     positioned winnow index (winnow_spans_against_index over the saved
     layout, fingerprint parameters loaded from the index meta). The
-    index parquet is scan-only; the batch broadcasts."""
+    index parquet is scanned once, at the call (_winnow_probe); the
+    result is a local frame of the verified pairs."""
     ix = _open_winnow_index(spark, path)
     return winnow_spans_against_index(
         batch, ix.fps, id_col, text_col, threshold=threshold,
@@ -1314,7 +1622,14 @@ def winnow_index_dedup(
     index: the positioned sets reduce losslessly to the value sets
     (distinct fp — provably the plain winnowed set), so the drop tier
     (winnow_dedup_against_index) runs over the same index the span
-    tiers probe — one persisted artifact serves all three actions."""
+    tiers probe — one persisted artifact serves all three actions.
+
+    One scan of the index, at the call: _winnow_probe collects the
+    batch's fingerprints, verifies every pair in one ``mapInArrow`` pass
+    over the index and applies the cap on the driver (the combined
+    index ∪ batch document frequency, unchanged); the returned frame is
+    the batch filtered by ``isin`` over the matched ids, so its own
+    action re-reads only the batch."""
     ix = _open_winnow_index(spark, path)
     return winnow_dedup_against_index(
         batch, _value_sets(ix.fps), id_col, text_col, threshold=threshold,

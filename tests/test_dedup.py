@@ -681,10 +681,11 @@ def test_winnow_pairs_matches_bruteforce(spark):
     assert got == want and (0, 1) in got and (2, 3) in got
 
 
-def test_winnow_dedup_against_index_semantics_and_plan(spark):
+def test_winnow_dedup_against_index_semantics_and_plan(spark, tmp_path):
     """Incremental winnow tier: near-dup batch docs drop, fresh and
-    below-k docs survive, and the probe-inversion plan broadcasts the
-    batch side (no SortMergeJoin — the index is never shuffled)."""
+    below-k docs survive, the returned frame plans no SortMergeJoin, and
+    each probe verb over a small persisted index — the one-scan kernel
+    plus the caller's collect — runs at most 6 Spark jobs."""
     import pandas as pd
 
     corpus = spark.createDataFrame(
@@ -716,7 +717,29 @@ def test_winnow_dedup_against_index_semantics_and_plan(spark):
     assert sorted(r.doc_id for r in out.collect()) == [2, 4]
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan
+
+    path = str(tmp_path / "widx")
+    dedup.winnow_pos_index_write(corpus, path, "doc_id")
+    for verb in (dedup.winnow_index_dedup, dedup.winnow_index_spans):
+        jobs = _probe_jobs(spark, lambda: verb(
+            spark, path, batch, threshold=0.5, max_fingerprint_df=3
+        ).collect())
+        assert len(jobs) <= 6, (verb.__name__, jobs)
+
+
+def _probe_jobs(spark, action) -> list:
+    """The Spark job ids ``action`` runs, counted by a job group of its
+    own through the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"winnow-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "winnow probe job count")
+    try:
+        action()
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup("", "")
 
 
 @pytest.mark.slow
@@ -863,12 +886,13 @@ def test_winnow_span_scrub_matches_bruteforce(spark):
 
 
 @pytest.mark.slow
-def test_winnow_spans_against_index_matches_batch_and_plan(spark):
+def test_winnow_spans_against_index_matches_batch_and_plan(spark, tmp_path):
     """Incremental span evidence: winnow_spans_against_index over a
     positioned index equals winnow_match_spans over the union restricted
     to (index doc, batch doc) pairs (cap=None, exact on both paths); the
-    probe plan broadcasts the batch side (no SortMergeJoin); value-exact
-    verify under a cap while anchors stay capped."""
+    result plans no SortMergeJoin and winnow_index_spans over the same
+    index persisted runs at most 6 Spark jobs; value-exact verify under
+    a cap while anchors stay capped."""
     base = ("the quick brown fox jumps over the lazy dog near the old "
             "stone bridge by the river today")
     corpus_texts = {
@@ -911,7 +935,12 @@ def test_winnow_spans_against_index_matches_batch_and_plan(spark):
     assert got == want and (1, 10) in got
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan
+    path = str(tmp_path / "widx")
+    dedup.winnow_pos_index_write(corpus, path, "doc_id", portable=True)
+    jobs = _probe_jobs(spark, lambda: dedup.winnow_index_spans(
+        spark, path, batch, threshold=0.5
+    ).collect())
+    assert len(jobs) <= 6, jobs
 
     # under a tiny cap the verify stays VALUE-EXACT (same pairs, same
     # jaccard/n_shared) while anchor evidence shrinks to uncapped fps
@@ -995,6 +1024,207 @@ def test_winnow_scrub_against_index_semantics(spark):
         else:
             assert got[i] == (n, 0, 0), i
     assert got[10][1] > 0 and got[10][0].endswith("again")
+
+
+_PIN_BASE = ("the quick brown fox jumps over the lazy dog near the old "
+             "stone bridge by the river today")
+_PIN_BOILER = "all rights reserved under the terms of use that apply here"
+# committed docs: a near-dup target, two boilerplate carriers, an
+# unrelated doc and a doc repeating one phrase (the same fingerprint at
+# several positions)
+_PIN_CORPUS = {
+    1: _PIN_BASE,
+    2: _PIN_BASE + " " + _PIN_BOILER,
+    3: "fully unrelated text about trains and long rails going far "
+       + _PIN_BOILER,
+    4: _PIN_BOILER + " with other words about weather in the spring",
+    5: "echo chamber of the hills echo chamber of the hills echo chamber "
+       "of the hills",
+}
+_PIN_BATCH = {
+    10: _PIN_BASE + " again",
+    11: "unrelated text about trains and long rails going far away "
+        + _PIN_BOILER,
+    12: _PIN_BOILER + " and fresh words",
+    13: "echo chamber of the hills echo chamber of the hills echo chamber "
+        "of the hills again",
+    14: "zz",
+    15: "fresh content with no committed overlap whatsoever here",
+}
+_PIN_CAPS = (None, 3, 1)
+
+
+def _pin_frames(spark, id_type="long"):
+    """``(corpus, batch, index, batch_pfps)``: the docs, the corpus's
+    positioned index and the batch's positioned fingerprints, the last
+    two as local rows so no probe re-runs the fingerprint UDF."""
+    cast = str if id_type == "string" else int
+    schema = f"doc_id {id_type}, text string"
+    corpus, batch = (
+        spark.createDataFrame([(cast(i), t) for i, t in rows.items()], schema)
+        for rows in (_PIN_CORPUS, _PIN_BATCH)
+    )
+    index, bpf = (
+        spark.createDataFrame(p.collect(), p.schema)
+        for p in (dedup.winnow_pos_index(d, "doc_id", portable=True)
+                  for d in (corpus, batch))
+    )
+    return corpus, batch, index, bpf
+
+
+def _pin_equal(batch, bpf, index, positioned: bool, cap) -> list:
+    """Assert the kernel's rows equal the join-based reference's for one
+    batch (docs ``batch``, positioned fingerprints ``bpf``), index and
+    cap; returns the kernel's rows."""
+    import _winnow_reference as ref
+
+    args = (batch, index, "doc_id")
+    kw = dict(threshold=0.3, portable=True, max_fingerprint_df=cap)
+    if positioned:
+        got = dedup.winnow_spans_against_index(*args, batch_pfps=bpf, **kw)
+        want = ref.spans_against_index(*args, batch_pfps=bpf, **kw)
+        assert sorted(got.collect()) == sorted(want.collect()), cap
+        return got.collect()
+    kw["batch_fps"] = dedup._value_sets(bpf)
+    got = dedup._winnow_matched_ids(*args, **kw).collect()
+    if "pfps" in index.columns:  # the reference reads value sets only
+        args = (batch, dedup._value_sets(index), "doc_id")
+    want = ref.matched_ids(*args, **kw).collect()
+    assert sorted(got) == sorted(want), cap
+    kept = dedup.winnow_dedup_against_index(*args, **kw).collect()
+    assert sorted(kept) == sorted(
+        r for r in batch.collect() if (r.doc_id,) not in want
+    )
+    return got
+
+
+def test_winnow_probe_matches_reference_positioned_and_value_sets(spark):
+    """The one-scan kernel equals the join-based reference
+    (tests/_winnow_reference.py) on positioned and value-set index
+    frames, for no cap, a cap that removes the boilerplate and cap 1;
+    the fixture reaches every cap arm and the n_anchors product of a
+    fingerprint repeated at several positions in both docs."""
+    corpus, batch, pos, bpf = _pin_frames(spark)
+    spans = {cap: _pin_equal(batch, bpf, pos, True, cap) for cap in _PIN_CAPS}
+    for cap in _PIN_CAPS:
+        _pin_equal(batch, bpf, dedup._value_sets(pos), False, cap)
+    _pin_equal(batch, bpf, pos, False, 3)
+    _pin_equal(
+        batch, bpf, dedup.winnow_index(corpus, "doc_id", portable=True),
+        False, None,
+    )
+    pairs = {(r.id_index, r.id_batch): r for r in spans[None]}
+    assert {(1, 10), (2, 10), (3, 11), (5, 13)} <= set(pairs)
+    assert pairs[(5, 13)].n_anchors > pairs[(5, 13)].n_shared
+    assert spans[3] != spans[None] and spans[1] != spans[3]
+
+
+def test_winnow_probe_matches_reference_string_ids_and_duplicate_id(spark):
+    """String ids, and an index holding a duplicated ``_id`` (the same
+    doc appended twice, as a replayed at-least-once add leaves it):
+    anchors aggregate per (index id, batch id) across both rows and each
+    row reports, as the reference's join did; the document frequency of
+    the positioned tier counts the id once, the value tier's each row."""
+    _, batch, pos, bpf = _pin_frames(spark, "string")
+    for cap in (None, 3):
+        _pin_equal(batch, bpf, pos, True, cap)
+        _pin_equal(batch, bpf, pos, False, cap)
+    _, batch, pos, bpf = _pin_frames(spark)
+    doubled = pos.unionByName(pos.filter(F.col("_id").isin(1, 2, 3)))
+    # cap 5 splits the two frequency definitions: the boilerplate is in
+    # 3 index ids + 2 batch docs (positioned: 5, kept) but 5 index rows
+    # + 2 (value sets: 7, capped)
+    spans = {cap: _pin_equal(batch, bpf, doubled, True, cap)
+             for cap in (None, 5)}
+    for cap in (None, 5):
+        _pin_equal(batch, bpf, doubled, False, cap)
+    once = {
+        (r.id_index, r.id_batch): r.n_anchors
+        for r in dedup.winnow_spans_against_index(
+            batch, pos, "doc_id", threshold=0.3, batch_pfps=bpf
+        ).collect()
+    }
+    twice = [r for r in spans[None] if (r.id_index, r.id_batch) == (1, 10)]
+    assert len(twice) == 2 and twice[0].n_anchors == 2 * once[(1, 10)]
+
+
+def test_winnow_probe_tombstoned_persisted_index(spark, tmp_path):
+    """Over a persisted index with adds and tombstones, the probe verbs
+    equal the reference over the same live frame; a removed doc stops
+    matching."""
+    import _winnow_reference as ref
+
+    corpus, batch, _, _ = _pin_frames(spark)
+    path = str(tmp_path / "widx")
+    dedup.winnow_pos_index_write(
+        corpus.filter("doc_id <= 3"), path, "doc_id", portable=True
+    )
+    dedup.winnow_pos_index_add(spark, path, corpus.filter("doc_id > 3"))
+    dedup.winnow_index_remove(spark, path, [1, 4])
+    live = dedup._open_winnow_index(spark, path).fps
+    for cap in _PIN_CAPS:
+        kw = dict(threshold=0.3, max_fingerprint_df=cap)
+        spans = dedup.winnow_index_spans(spark, path, batch, **kw).collect()
+        assert sorted(spans) == sorted(ref.spans_against_index(
+            batch, live, "doc_id", portable=True, **kw
+        ).collect())
+        assert all(r.id_index not in (1, 4) for r in spans)
+        kept = dedup.winnow_index_dedup(spark, path, batch, **kw).collect()
+        assert sorted(kept) == sorted(batch.join(ref.matched_ids(
+            batch, dedup._value_sets(live), "doc_id", portable=True, **kw
+        ), on="doc_id", how="anti").collect())
+
+
+def test_winnow_probe_skips_the_index_for_batches_without_fingerprints(spark):
+    """An empty batch and a batch of only sub-k docs return no pairs and
+    keep every batch doc without scanning the index (its scan would
+    raise)."""
+    _, batch, pos, _ = _pin_frames(spark)
+    boom = pos.withColumn(
+        "pfps", F.udf(lambda v: 1 // 0, pos.schema["pfps"].dataType)("pfps")
+    )
+    for small in (batch.limit(0), batch.filter("doc_id = 14")):
+        for positioned, index in ((True, boom), (False, dedup._value_sets(boom))):
+            kw = dict(threshold=0.3, portable=True)
+            probe = (dedup.winnow_spans_against_index if positioned
+                     else dedup._winnow_matched_ids)
+            assert probe(small, index, "doc_id", **kw).collect() == []
+            assert sorted(dedup.winnow_dedup_against_index(
+                small, dedup._value_sets(boom), "doc_id", **kw
+            ).collect()) == sorted(small.collect())
+
+
+def test_winnow_probe_same_id_row_below_threshold_matches_reference(spark):
+    """A row below the threshold that shares its id with a verified row
+    (an older version of the doc left in the index, or a batch holding
+    the id twice) still adds its anchors to the verified id pair, as the
+    join form summed every row of the id: the kernel's rescan of those
+    ids equals the reference."""
+    _, batch, pos, bpf = _pin_frames(spark)
+    stale_doc = spark.createDataFrame(
+        [(1, "the old stone bridge by the river is all it shares")],
+        "doc_id long, text string",
+    )
+    stale = dedup.winnow_pos_index(stale_doc, "doc_id", portable=True)
+    mixed = pos.unionByName(stale)
+    spans = {cap: _pin_equal(batch, bpf, mixed, True, cap) for cap in (None, 3)}
+    for cap in (None, 3):
+        _pin_equal(batch, bpf, mixed, False, cap)
+    plain = {
+        (r.id_index, r.id_batch): r
+        for r in dedup.winnow_spans_against_index(
+            batch, pos, "doc_id", threshold=0.3, batch_pfps=bpf
+        ).collect()
+    }
+    wide = [r for r in spans[None] if (r.id_index, r.id_batch) == (1, 10)]
+    assert len(wide) == 1 and wide[0].n_anchors > plain[(1, 10)].n_anchors
+    # the batch side: id 10 twice, once as the stale text
+    twice = batch.unionByName(stale_doc.selectExpr("10L AS doc_id", "text"))
+    tbpf = dedup.winnow_pos_index(twice, "doc_id", portable=True)
+    tbpf = spark.createDataFrame(tbpf.collect(), tbpf.schema)
+    for cap in (None, 3):
+        _pin_equal(twice, tbpf, pos, True, cap)
+        _pin_equal(twice, tbpf, pos, False, cap)
 
 
 def test_winnow_pos_index_lifecycle_guards(spark, tmp_path):

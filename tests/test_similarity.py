@@ -1329,7 +1329,7 @@ def test_stale_rotation_on_plain_ivf_raises_both_surfaces(
     assert n_before == data.count(), "refused adds must not append rows"
 
 
-def test_adc_prune_nan_lower_bound_is_unprunable():
+def test_adc_prune_nan_lower_bound_is_unprunable(spark):
     """A cell whose ADC lower bound evaluates to NaN (all-NaN table
     slot, degenerate codebook) must be KEPT for scanning — `nan <= t`
     and `nan > t` are both false, so without the isnan arm the cell

@@ -17,8 +17,10 @@
 - The winnow text tier: one batch fingerprint in the streaming jobs
   (``_fingerprint_batch``), one per-doc span union (``_scrub_spans``),
   one persisted winnow-index read (inside ``_WinnowIndex``, which
-  ``_open_winnow_index`` returns) and one stop-gram cap filter
-  (``_stop_grams``).
+  ``_open_winnow_index`` returns), one stop-gram cap predicate
+  (``_over_cap``, behind ``_stop_grams`` and the probe kernel) and one
+  committed-side probe kernel (``_winnow_probe``) behind the value-set
+  and the positioned wrappers, neither of which checkpoints its batch.
 - No unmarked ``except Exception`` in the package.
 - The session confs are applied at one boundary: no per-module
   ``_prep`` in the plan modules, ``apply_runtime_confs(`` called only by
@@ -185,6 +187,19 @@ def test_one_persisted_winnow_index_read():
 
 def test_one_stop_gram_cap():
     assert _source("operators/dedup.py").count("> max_") == 1
+
+
+def test_one_committed_side_winnow_probe():
+    src = _source("operators/dedup.py")
+    defs = {
+        node.name: ast.get_source_segment(src, node)
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.FunctionDef)
+    }
+    for wrapper in ("_winnow_matched_ids", "winnow_spans_against_index"):
+        assert "_winnow_probe(" in defs[wrapper], wrapper
+        assert "localCheckpoint(" not in defs[wrapper], wrapper
+    assert _package_count("_winnow_probe(") == 3  # the def and the two
 
 
 def test_broad_exception_handlers_are_marked():
